@@ -66,7 +66,7 @@ object Sessions {
     // snapshot table. Affects only plans with a KeyGrouped side —
     // i.e. only tables someone deliberately bucketed, which is the
     // signal the fact is shuffle-dominant. Measured economics
-    // (SpjEconomics, PLANS.md round-7): at sf0.1 the eliminated
+    // (PLANS.md round-7): at sf0.1 the eliminated
     // shuffle is SMALLER than the fixed bucket-parallelism + sort
     // cost (1.58 s vs 0.86 s warm), so bucketing itself stays opt-in
     // per table; once a table IS bucketed, keeping its side pinned is

@@ -103,11 +103,10 @@ private[graft] object FieldIds {
       }).foldLeft(0L)(math.max)
       catch { case _: java.io.FileNotFoundException => 0L }
     val p = if (latest > 0) versionedPath(table, latest) else legacyPath(table)
-    if (!f.exists(p)) return (None, 0L)
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    (Some(parse(txt)), latest)
+    Snapshots.readSide(f, p) match {
+      case Some(txt) => (Some(parse(txt)), latest)
+      case None => (None, 0L)
+    }
   }
 
   private[sources] def parse(txt: String): State = {
@@ -130,22 +129,12 @@ private[graft] object FieldIds {
         .map { case (n, i) => s""""${esc(n)}":$i""" }.mkString(",") + "}}"
 
   /** Attempt to publish `st` as storage version `v` — an ATOMIC CREATE
-    * (tmp write + rename-to-nonexistent), so exactly one of two racers
-    * wins the slot. Returns false on a lost race.
+    * through the side-file seam ([[Snapshots.writeSide]]), so exactly
+    * one of two racers wins the slot. Returns false on a lost race.
     */
   private def casPublish(spark: SparkSession, table: String, v: Long,
-      st: State): Boolean = {
-    val f = fs(spark, table)
-    val tmp = new Path(s"$table/.fieldids.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(render(st).getBytes("UTF-8")) finally out.close()
-    // Snapshots.publishAtomic: fails iff dst exists — POSIX rename(2)
-    // silently REPLACES, so on file: paths the slot is claimed with a
-    // hard link (EEXIST is atomic), same as the manifest publish
-    if (!Snapshots.publishAtomic(f, tmp, versionedPath(table, v))) {
-      f.delete(tmp, false); false
-    } else true
-  }
+      st: State): Boolean =
+    Snapshots.writeSide(fs(spark, table), versionedPath(table, v), render(st))
 
   /** Atomically transform the table's field-id state: load the latest,
     * apply `f`, publish at the next storage version via atomic create;

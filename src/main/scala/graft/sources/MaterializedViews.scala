@@ -111,13 +111,9 @@ object MaterializedViews {
   }
 
   def loadDef(spark: SparkSession, mv: String): MvDef = {
-    val f = fs(spark, mv)
-    val p = defPath(mv)
-    require(f.exists(p), s"$mv is not a materialized view (no mvdef.json)")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parseDef(txt)
+    val txt = Snapshots.readSide(fs(spark, mv), defPath(mv))
+    require(txt.isDefined, s"$mv is not a materialized view (no mvdef.json)")
+    parseDef(txt.get)
   }
 
   /** CREATE: validate the incrementalizable contract, persist the
@@ -151,14 +147,8 @@ object MaterializedViews {
       require(sch.contains(c), s"$c is not a column of $base"))
     Snapshots.requireRefName(new Path(mv).getName)
     val d = MvDef(base, filter, groupBy, aggs)
-    val f = fs(spark, mv)
-    val tmp = new Path(s"$mv/.mvdef.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(render(d).getBytes("UTF-8")) finally out.close()
-    if (!Snapshots.publishAtomic(f, tmp, defPath(mv))) {
-      f.delete(tmp, false)
+    if (!Snapshots.writeSide(fs(spark, mv), defPath(mv), render(d)))
       throw new IllegalStateException(s"materialized view $mv already exists")
-    }
     val head = baseVs.last
     val v = Snapshots.commit(
       fullState(spark, d, head), mv, overwrite = false,
@@ -296,13 +286,8 @@ object MaterializedViews {
   private def registerOnBase(spark: SparkSession, base: String,
       mv: String): Unit = {
     val name = new Path(mv).getName
-    val f = fs(spark, base)
-    val tmp = new Path(s"$base/.ref-mv.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(new Path(mv).toUri.getPath.getBytes("UTF-8"))
-    finally out.close()
-    f.delete(mvRefPath(base, name), false)
-    require(f.rename(tmp, mvRefPath(base, name)),
+    require(Snapshots.writeSide(fs(spark, base), mvRefPath(base, name),
+      new Path(mv).toUri.getPath, replace = true),
       s"failed to register materialized view $name on $base")
   }
 
@@ -315,10 +300,8 @@ object MaterializedViews {
     if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq.flatMap(_.getPath.getName match {
       case MvRefRe(n) =>
-        val in = f.open(mvRefPath(base, n))
-        val p = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        if (fs(spark, p).exists(defPath(p))) Some(n -> p) else None
+        Snapshots.readSide(f, mvRefPath(base, n)).map(_.trim)
+          .filter(p => fs(spark, p).exists(defPath(p))).map(n -> _)
       case _ => None
     }).sortBy(_._1)
   }

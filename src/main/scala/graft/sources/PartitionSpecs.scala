@@ -57,12 +57,7 @@ private[graft] object PartitionSpecs {
     * participates (it records the retirement point in history).
     */
   def epochs(spark: SparkSession, table: String): Seq[Spec] = {
-    val f = fs(spark, table)
-    val p = specPath(table)
-    if (!f.exists(p)) return Seq.empty
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    val txt = Snapshots.readSide(fs(spark, table), specPath(table)).getOrElse("")
     txt.linesIterator.filter(_.nonEmpty).map { line =>
       line.split('\t') match {
         case Array(e, t, c, a) => Spec(e.toInt, t, c, Some(a.toInt))
@@ -105,17 +100,9 @@ private[graft] object PartitionSpecs {
       if (transform == "none") s"$epoch\tnone"
       else s"$epoch\t$transform\t$column${arg.map("\t" + _).getOrElse("")}"
     val body = (prior.map(render) :+ line).mkString("\n") + "\n"
-    val f = fs(spark, table)
-    val p = specPath(table)
-    val tmp = new Path(s"$table/.partitionspec.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    f.delete(p, false)
-    if (!Snapshots.publishAtomic(f, tmp, p)) {
-      f.delete(tmp, false)
+    if (!Snapshots.writeSide(fs(spark, table), specPath(table), body, replace = true))
       throw new IllegalStateException(
         s"concurrent partition-spec update on $table")
-    }
     epoch
   }
 

@@ -8,14 +8,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * load-bearing parts) for sinks that need atomic publish, readers
   * that never see half-written data, and time travel:
   *
-  *   <table>/data/<uuid>/part-*.parquet   immutable data files
-  *   <table>/manifest-v<N>.json           snapshot N's file list
+  * The complete on-disk layout of a table:
   *
-  * A commit writes its data files first (invisible — readers only
-  * follow manifests), then publishes `manifest-v<N>` via an atomic
-  * single-file rename. The rename doubles as the optimistic-concurrency
-  * lock: two writers racing to the same version cannot both win the
-  * rename, and the loser retries against the next version number.
+  *   manifest-v<N>.json        snapshot N: header `v<N>[ <token>]`, then
+  *                             one line per data file, `D <path>` per
+  *                             position-delete and `E <scope> <path>`
+  *                             per equality-delete sidecar
+  *   data/<uuid>/part-*.parquet  immutable data files (bucketed commits
+  *                             nest them under `__graft_bucket=<i>/`)
+  *   deletes/<uuid>/…          position-delete sidecars ([[PositionDeletes]])
+  *   eqdeletes/<uuid>/…        equality-delete sidecars ([[upsertEq]])
+  *   stats/stats-<uuid>.tsv    append-only footer stats ([[FileStats]])
+  *   bucketspec, sortspec, partitionspec, schema.json,
+  *   deletemode, updatemode, mergemode
+  *                             layout side files a [[fork]] carries
+  *                             (`CarriedSideFiles`)
+  *   bloomspec, retention      side files that stay with the table
+  *   fieldids-v<N>.json        field-id state, CAS-versioned ([[FieldIds]])
+  *   ref-tag-<name>.txt        a tag's version
+  *   ref-branch-<name>.txt     a registered branch's path
+  *   ref-mv-<name>.txt         a registered materialized view's path
+  *   mvdef.json                the definition, on a materialized view
+  *   .<file>.<uuid>.tmp        an in-flight write (never read)
+  *
+  * Every manifest goes through one writer ([[claimManifest]]) and every
+  * side file through one reader/writer pair ([[readSide]] /
+  * [[writeSide]]): the content lands in a hidden tmp file, then one
+  * atomic no-overwrite claim publishes it. A commit writes its data
+  * files first (invisible — readers only follow manifests), then claims
+  * `manifest-v<N>`. The claim doubles as the optimistic-concurrency
+  * lock: two writers racing to the same version cannot both win it,
+  * and the loser retries against the next version number.
   *
   * Scale posture: the manifest is one small driver-side JSON per
   * version (file listing comes from the manifest, never from object-
@@ -46,7 +69,7 @@ object Snapshots {
     * the version is claimed with a hard link instead — link(2) fails
     * with EEXIST atomically — and the tmp name is dropped after.
     */
-  private[sources] def publishAtomic(f: FileSystem, tmp: Path, dst: Path): Boolean =
+  private def publishAtomic(f: FileSystem, tmp: Path, dst: Path): Boolean =
     if (f.getScheme == "file") {
       try {
         java.nio.file.Files.createLink(
@@ -61,6 +84,44 @@ object Snapshots {
       }
     } else f.rename(tmp, dst)
 
+  /** The one write protocol of the format: stream `dst`'s content into
+    * a hidden `.<name>.<uuid>.tmp` beside it, then claim `dst` with
+    * [[publishAtomic]]; a lost claim deletes the tmp file. `replace`
+    * deletes the current `dst` first — a concurrent writer racing into
+    * that gap makes this claim fail (loudly, at the caller) instead of
+    * silently overwriting, on `file:` and HDFS alike. Both seams below
+    * ride it.
+    */
+  private def claimFile(f: FileSystem, dst: Path, replace: Boolean)(
+      write: java.io.OutputStream => Unit): Boolean = {
+    val tmp = new Path(dst.getParent,
+      s".${dst.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = new java.io.BufferedOutputStream(f.create(tmp, false), 1 << 16)
+    try write(out) finally out.close()
+    if (replace) f.delete(dst, false)
+    publishAtomic(f, tmp, dst) || { f.delete(tmp, false); false }
+  }
+
+  /** SIDE-FILE SEAM, write half: publish a small table property file
+    * (specs, refs, declared schema, field ids, MV definitions) whole.
+    * False when another writer holds `dst` — the caller decides whether
+    * that is a lost create race or a concurrent replace.
+    */
+  private[sources] def writeSide(f: FileSystem, dst: Path, body: String,
+      replace: Boolean = false): Boolean =
+    claimFile(f, dst, replace)(_.write(body.getBytes("UTF-8")))
+
+  /** SIDE-FILE SEAM, read half: a side file's whole text, None when the
+    * file does not exist.
+    */
+  private[sources] def readSide(f: FileSystem, p: Path): Option[String] =
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+
   /** Committed versions, ascending (empty for a fresh table). */
   def versions(spark: SparkSession, table: String): Seq[Long] = {
     val f = fs(spark, table)
@@ -72,9 +133,11 @@ object Snapshots {
     }).sorted
   }
 
+  private def manifestPath(table: String, v: Long): Path =
+    new Path(s"$table/manifest-v$v.json")
+
   private def manifestText(spark: SparkSession, table: String, v: Long): String = {
-    val f = fs(spark, table)
-    val in = f.open(new Path(s"$table/manifest-v$v.json"))
+    val in = fs(spark, table).open(manifestPath(table, v))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
@@ -155,10 +218,17 @@ object Snapshots {
     manifestDeletes(spark, table, v)
   }
 
-  /** The commit token of version `v` (None for plain commits). */
-  def commitToken(spark: SparkSession, table: String, v: Long): Option[String] =
-    manifestText(spark, table, v).linesIterator
-      .nextOption().flatMap(_.split(' ').lift(1))
+  /** The commit token of version `v` (None for plain commits) — the one
+    * reader of the manifest header. Reads the first line only: replay
+    * checks walk every version's header, never its file list.
+    */
+  def commitToken(spark: SparkSession, table: String, v: Long): Option[String] = {
+    val in = fs(spark, table).open(manifestPath(table, v))
+    val header =
+      try new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8")).readLine()
+      finally in.close()
+    Option(header).flatMap(_.split(' ').lift(1))
+  }
 
   /** True iff version `v` is a ROW-PRESERVING maintenance rewrite
     * (compaction or z-order): by the append-rebase publish contract its
@@ -176,10 +246,7 @@ object Snapshots {
     * check behind exactly-once streaming publish.
     */
   def committedVersionFor(spark: SparkSession, table: String, token: String): Option[Long] =
-    versions(spark, table).find { v =>
-      manifestText(spark, table, v).linesIterator.nextOption()
-        .exists(_.split(' ').lift(1).contains(token))
-    }
+    versions(spark, table).find(commitToken(spark, table, _).contains(token))
 
   /** Table history (DESCRIBE HISTORY), one row per still-retained
     * version, ascending: version, the commit token (None for plain
@@ -192,10 +259,8 @@ object Snapshots {
   def history(spark: SparkSession, table: String): DataFrame = {
     val f = fs(spark, table)
     val rows = versions(spark, table).map { v =>
-      val token = manifestText(spark, table, v).linesIterator
-        .nextOption().flatMap(_.split(' ').lift(1)).orNull
-      val st = f.getFileStatus(new Path(s"$table/manifest-v$v.json"))
-      (v, token, manifestFiles(spark, table, v).size,
+      val st = f.getFileStatus(manifestPath(table, v))
+      (v, commitToken(spark, table, v).orNull, manifestFiles(spark, table, v).size,
         new java.sql.Timestamp(st.getModificationTime))
     }
     import spark.implicits._
@@ -287,8 +352,68 @@ object Snapshots {
     }
   }
 
-  /** The optimistic append/overwrite publish loop shared by [[commit]]
-    * and [[commitBucketed]]: already-written `newFiles` become the next
+  /** One manifest's content: the header's optional commit token, then
+    * its data-file, position-delete and equality-delete lines.
+    */
+  private final case class Manifest(token: Option[String],
+      files: Iterable[String], deletes: Iterable[String] = Nil,
+      eqDeletes: Iterable[(Long, String)] = Nil)
+
+  /** The one manifest header writer: `v<N>[ <token>]` (tokens are single
+    * words — [[commitToken]] splits the header on spaces).
+    */
+  private def manifestHeader(v: Long, token: Option[String]): String =
+    s"v$v${token.map(" " + _).getOrElse("")}"
+
+  /** Stream a manifest body (header line + one line per entry): at 10⁶
+    * entries a mkString would materialize a second ~100 MB copy of the
+    * list the driver already holds.
+    */
+  private def writeManifestBody(out: java.io.OutputStream, v: Long,
+      m: Manifest): Unit = {
+    def line(l: String): Unit = out.write((l + "\n").getBytes("UTF-8"))
+    line(manifestHeader(v, m.token))
+    m.files.foreach(line)
+    m.deletes.foreach(p => line(DeleteLinePrefix + p))
+    m.eqDeletes.foreach { case (scope, p) => line(s"$EqLinePrefix$scope $p") }
+  }
+
+  /** MANIFEST SEAM: the only writer of `manifest-v<N>`. Claims version
+    * `v` of `table` with `m` — false when another writer already holds
+    * it (the optimistic lock every commit rides on).
+    */
+  private def claimManifest(f: FileSystem, table: String, v: Long,
+      m: Manifest): Boolean =
+    claimFile(f, manifestPath(table, v), replace = false)(
+      writeManifestBody(_, v, m))
+
+  /** The claim-head+1 loop of the head-replacing publishes ([[commit]],
+    * CTAS/RTAS, [[restore]]): `next` sees the committed versions and
+    * either answers outright (Left: a token replay or a no-op) or
+    * returns the manifest to claim at head+1; a lost claim re-reads the
+    * head and asks again, up to 5 times. `won` runs once after a win.
+    */
+  private def claimNext(spark: SparkSession, table: String, op: String,
+      won: Seq[Long] => Unit = _ => ())(
+      next: Seq[Long] => Either[Long, Manifest]): Long = {
+    val f = fs(spark, table)
+    var attempt = 0
+    while (attempt < 5) {
+      val prev = versions(spark, table)
+      next(prev) match {
+        case Left(done) => return done
+        case Right(m) =>
+          val v = prev.lastOption.getOrElse(0L) + 1
+          if (claimManifest(f, table, v, m)) { won(prev); return v }
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(
+      s"$op lost the version race 5 times on $table")
+  }
+
+  /** The optimistic append/overwrite publish shared by [[commit]] and
+    * [[commitBucketed]]: already-written `newFiles` become the next
     * manifest version (base + new on append, new alone on overwrite),
     * with the token replay check and the in-lock strict-append schema
     * validation.
@@ -296,71 +421,53 @@ object Snapshots {
   private def publishNewFiles(spark: SparkSession, table: String,
       newFiles: Seq[String], overwrite: Boolean, token: Option[String],
       strictSchema: Option[org.apache.spark.sql.types.StructType],
-      dataDir: Path): Long = {
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < 5) {
-      val prev = versions(spark, table)
-      val v = prev.lastOption.getOrElse(0L) + 1
+      dataDir: Path): Long =
+    // a schema-evolving OVERWRITE re-bases the shape on its new files —
+    // retire any ALTER override (same route as bucketspec)
+    claimNext(spark, table, "snapshot commit", won = prev =>
+        if (overwrite && prev.nonEmpty) retireDeclaredSchema(spark, table)) { prev =>
       // re-check under the race: the same token may have just won
-      token.foreach(t => committedVersionFor(spark, table, t)
-        .foreach(w => return w))
-      val base = if (overwrite || prev.isEmpty) Seq.empty
-        else manifestFiles(spark, table, prev.last)
-      // an append must CARRY the base version's position-delete
-      // sidecars (the deleted rows stay deleted); an overwrite replaces
-      // the file set wholesale, deletes included
-      val baseDeletes = if (overwrite || prev.isEmpty) Seq.empty[String]
-        else manifestDeletes(spark, table, prev.last)
-      // equality-delete lines carry through appends with their ORIGINAL
-      // scopes (the appended files' add-version is v > every scope, so
-      // new rows are exempt by construction); an overwrite replaces the
-      // row set wholesale and drops them like the D lines
-      val baseEq = if (overwrite || prev.isEmpty) Seq.empty[(Long, String)]
-        else manifestEqDeletes(spark, table, prev.last)
-      // strict appends validate against the manifest version BEING
-      // EXTENDED, inside the optimistic lock: a caller-side pre-check is
-      // inherently racy (a schema-evolving overwrite can land between
-      // check and publish, mixing two physical layouts in one manifest).
-      // Here, if publish succeeds at prev.last + 1, no other commit
-      // landed after this validation — exactly the invariant the check
-      // protects. Footer-only driver read; the retry path is rare.
-      strictSchema.foreach { want =>
-        if (base.nonEmpty) {
-          def sig(s: org.apache.spark.sql.types.StructType) =
-            s.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
-          // an ALTER-extended table's committed shape IS the declared
-          // schema (old footers legitimately lack the added columns)
-          val committed = declaredSchema(spark, table)
-            .orElse(FooterSchemas.uniform(spark, base))
-            .getOrElse(
-              spark.read.option("mergeSchema", "true").parquet(base: _*).schema)
-          if (sig(committed) != sig(want)) {
-            f.delete(dataDir, true) // no orphaned layout-mismatched files
-            throw new IllegalStateException(
-              s"graft-snapshot $table: append schema $want does not " +
-                s"match the schema $committed of manifest v${prev.last} at " +
-                "commit time (a concurrent overwrite may have evolved the " +
-                "table; re-read and retry the append)")
+      token.flatMap(committedVersionFor(spark, table, _)).toLeft {
+        // an append CARRIES the base version's position-delete sidecars
+        // (the deleted rows stay deleted) and its equality-delete lines
+        // with their ORIGINAL scopes (the appended files' add-version is
+        // v > every scope, so new rows are exempt by construction); an
+        // overwrite replaces the row set wholesale, sidecars included
+        val carry = !overwrite && prev.nonEmpty
+        val base = if (carry) manifestFiles(spark, table, prev.last) else Seq.empty
+        // strict appends validate against the manifest version BEING
+        // EXTENDED, inside the optimistic lock: a caller-side pre-check is
+        // inherently racy (a schema-evolving overwrite can land between
+        // check and publish, mixing two physical layouts in one manifest).
+        // Here, if publish succeeds at prev.last + 1, no other commit
+        // landed after this validation — exactly the invariant the check
+        // protects. Footer-only driver read; the retry path is rare.
+        strictSchema.foreach { want =>
+          if (base.nonEmpty) {
+            def sig(s: org.apache.spark.sql.types.StructType) =
+              s.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
+            // an ALTER-extended table's committed shape IS the declared
+            // schema (old footers legitimately lack the added columns)
+            val committed = declaredSchema(spark, table)
+              .orElse(FooterSchemas.uniform(spark, base))
+              .getOrElse(
+                spark.read.option("mergeSchema", "true").parquet(base: _*).schema)
+            if (sig(committed) != sig(want)) {
+              // no orphaned layout-mismatched files
+              fs(spark, table).delete(dataDir, true)
+              throw new IllegalStateException(
+                s"graft-snapshot $table: append schema $want does not " +
+                  s"match the schema $committed of manifest v${prev.last} at " +
+                  "commit time (a concurrent overwrite may have evolved the " +
+                  "table; re-read and retry the append)")
+            }
           }
         }
+        Manifest(token, base ++ newFiles,
+          if (carry) manifestDeletes(spark, table, prev.last) else Nil,
+          if (carry) manifestEqDeletes(spark, table, prev.last) else Nil)
       }
-      val header = s"v$v${token.map(" " + _).getOrElse("")}"
-      val tmp = new Path(s"$table/.manifest-v$v.${java.util.UUID.randomUUID}.tmp")
-      writeManifestBody(f, tmp, header, base ++ newFiles, baseDeletes, baseEq)
-      // atomic publish; claim-of-existing fails => optimistic lock
-      if (publishAtomic(f, tmp, new Path(s"$table/manifest-v$v.json"))) {
-        // a schema-evolving OVERWRITE re-bases the shape on its new
-        // files — retire any ALTER override (same route as bucketspec)
-        if (overwrite && prev.nonEmpty) retireDeclaredSchema(spark, table)
-        return v
-      }
-      f.delete(tmp, false)
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"snapshot commit lost the version race 5 times on $table")
-  }
 
   /** Directory-name prefix that carries a data file's bucket id (the
     * hive-style layout `.../__graft_bucket=<i>/part-*.parquet` written
@@ -370,20 +477,12 @@ object Snapshots {
   private[graft] val BucketDir = "__graft_bucket"
 
   /** The table's bucket layout, if any: (column, numBuckets). */
-  def bucketSpec(spark: SparkSession, table: String): Option[(String, Int)] = {
-    val p = new Path(s"$table/bucketspec")
-    val f = fs(spark, table)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      text.split("\t") match {
+  def bucketSpec(spark: SparkSession, table: String): Option[(String, Int)] =
+    readSide(fs(spark, table), new Path(s"$table/bucketspec"))
+      .flatMap(_.trim.split("\t") match {
         case Array(c, n) => Some((c, n.toInt))
         case _           => None
-      }
-    }
-  }
+      })
 
   /** Persist-or-validate the table's bucket spec. The spec is written
     * to a tmp file and claimed with the same atomic no-overwrite
@@ -404,13 +503,8 @@ object Snapshots {
           s"$table is bucketed by ($c, $m); cannot commit with ($column, $n)")
         false
       case None =>
-        val p = new Path(s"$table/bucketspec")
-        val tmp = new Path(s"$table/.bucketspec.${java.util.UUID.randomUUID}.tmp")
-        val out = f.create(tmp, false)
-        try out.write(s"$column\t$n".getBytes("UTF-8")) finally out.close()
-        if (publishAtomic(f, tmp, p)) true
+        if (writeSide(f, new Path(s"$table/bucketspec"), s"$column\t$n")) true
         else {
-          f.delete(tmp, false)
           val got = bucketSpec(spark, table)
           require(got.contains((column, n)),
             s"$table bucket spec race: committed $got, attempted ($column, $n)")
@@ -433,22 +527,14 @@ object Snapshots {
     * (sizes the parquet-native bloom at write). Empty map = no spec.
     * See [[BloomSkip]] for the read-side contract.
     */
-  def bloomSpec(spark: SparkSession, table: String): Map[String, Long] = {
-    val p = new Path(s"$table/bloomspec")
-    val f = fs(spark, table)
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      text.split("\n").map(_.trim).filter(_.nonEmpty).flatMap {
+  def bloomSpec(spark: SparkSession, table: String): Map[String, Long] =
+    readSide(fs(spark, table), new Path(s"$table/bloomspec")).toSeq
+      .flatMap(_.split("\n").map(_.trim).filter(_.nonEmpty).flatMap {
         _.split("\t") match {
           case Array(c, n) => scala.util.Try(c -> n.toLong).toOption
           case _           => None
         }
-      }.toMap
-    }
-  }
+      }).toMap
 
   /** Install (or replace) the table's bloom spec. Applies to files
     * written AFTER the call — existing files carry no bloom and simply
@@ -462,19 +548,10 @@ object Snapshots {
     cols.foreach { case (c, n) =>
       require(n > 0, s"bloom NDV for $c must be positive, got $n")
     }
-    val f = fs(spark, table)
-    val p = new Path(s"$table/bloomspec")
-    val tmp = new Path(s"$table/.bloomspec.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(cols.toSeq.sortBy(_._1)
-      .map { case (c, n) => s"$c\t$n" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    f.delete(p, false)
-    if (!publishAtomic(f, tmp, p)) {
-      f.delete(tmp, false)
-      throw new IllegalStateException(
-        s"concurrent bloomspec update on $table")
-    }
+    if (!writeSide(fs(spark, table), new Path(s"$table/bloomspec"),
+        cols.toSeq.sortBy(_._1).map { case (c, n) => s"$c\t$n" }.mkString("\n"),
+        replace = true))
+      throw new IllegalStateException(s"concurrent bloomspec update on $table")
   }
 
   /** Retire the bloom spec: later writes carry no blooms; files that
@@ -503,17 +580,9 @@ object Snapshots {
     * file skipping comes from: unordered ingestion makes every file
     * span the key domain and a selective scan opens all of them.
     */
-  def sortSpec(spark: SparkSession, table: String): Seq[String] = {
-    val p = new Path(s"$table/sortspec")
-    val f = fs(spark, table)
-    if (!f.exists(p)) Nil
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      if (text.isEmpty) Nil else text.split("\t").toSeq
-    }
-  }
+  def sortSpec(spark: SparkSession, table: String): Seq[String] =
+    readSide(fs(spark, table), new Path(s"$table/sortspec")).map(_.trim)
+      .filter(_.nonEmpty).toSeq.flatMap(_.split("\t"))
 
   /** Install (or replace) the declared write sort order. Applies to
     * writes AFTER the call; existing files keep their layout until
@@ -523,17 +592,9 @@ object Snapshots {
   def setSortSpec(spark: SparkSession, table: String,
       cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "empty sort spec; use dropSortSpec to retire")
-    val f = fs(spark, table)
-    val p = new Path(s"$table/sortspec")
-    val tmp = new Path(s"$table/.sortspec.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(cols.mkString("\t").getBytes("UTF-8"))
-    finally out.close()
-    f.delete(p, false)
-    if (!publishAtomic(f, tmp, p)) {
-      f.delete(tmp, false)
+    if (!writeSide(fs(spark, table), new Path(s"$table/sortspec"),
+        cols.mkString("\t"), replace = true))
       throw new IllegalStateException(s"concurrent sortspec update on $table")
-    }
   }
 
   /** Retire the declared write sort order (later writes land as-is). */
@@ -553,19 +614,14 @@ object Snapshots {
     * consumer outage you intend to tolerate.
     */
   def retention(spark: SparkSession,
-      table: String): Option[(Option[Int], Option[Int])] = {
-    val p = new Path(s"$table/retention")
-    val f = fs(spark, table)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val kv = txt.linesIterator.flatMap(_.split('=') match {
-      case Array(k, v) => Some(k.trim -> v.trim.toInt)
-      case _ => None
-    }).toMap
-    Some((kv.get("versions"), kv.get("days")))
-  }
+      table: String): Option[(Option[Int], Option[Int])] =
+    readSide(fs(spark, table), new Path(s"$table/retention")).map { txt =>
+      val kv = txt.linesIterator.flatMap(_.split('=') match {
+        case Array(k, v) => Some(k.trim -> v.trim.toInt)
+        case _ => None
+      }).toMap
+      (kv.get("versions"), kv.get("days"))
+    }
 
   def setRetention(spark: SparkSession, table: String,
       keepVersions: Option[Int], keepDays: Option[Int]): Unit = {
@@ -576,16 +632,9 @@ object Snapshots {
     keepDays.foreach(d => require(d >= 0, s"retention.days negative: $d"))
     val body = keepVersions.map(n => s"versions=$n").toSeq ++
       keepDays.map(d => s"days=$d")
-    val f = fs(spark, table)
-    val p = new Path(s"$table/retention")
-    val tmp = new Path(s"$table/.retention.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(body.mkString("\n").getBytes("UTF-8")) finally out.close()
-    f.delete(p, false)
-    if (!publishAtomic(f, tmp, p)) {
-      f.delete(tmp, false)
+    if (!writeSide(fs(spark, table), new Path(s"$table/retention"),
+        body.mkString("\n"), replace = true))
       throw new IllegalStateException(s"concurrent retention update on $table")
-    }
   }
 
   def dropRetention(spark: SparkSession, table: String): Unit =
@@ -616,17 +665,10 @@ object Snapshots {
     new Path(s"$table/${kind}mode")
   }
 
-  def dmlMode(spark: SparkSession, table: String, kind: String): String = {
-    val p = modeFile(table, kind)
-    val f = fs(spark, table)
-    if (!f.exists(p)) CowMode
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      if (text == MorMode) MorMode else CowMode
-    }
-  }
+  def dmlMode(spark: SparkSession, table: String, kind: String): String =
+    if (readSide(fs(spark, table), modeFile(table, kind)).exists(_.trim == MorMode))
+      MorMode
+    else CowMode
 
   def setDmlMode(spark: SparkSession, table: String, kind: String,
       mode: String): Unit = {
@@ -634,15 +676,9 @@ object Snapshots {
       s"write.$kind.mode must be '$CowMode' or '$MorMode', got '$mode'")
     val f = fs(spark, table)
     val p = modeFile(table, kind)
-    if (mode == CowMode) { f.delete(p, false); return } // default = no file
-    val tmp = new Path(s"$table/.${kind}mode.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(mode.getBytes("UTF-8")) finally out.close()
-    f.delete(p, false)
-    if (!publishAtomic(f, tmp, p)) {
-      f.delete(tmp, false)
+    if (mode == CowMode) f.delete(p, false): Unit // default = no file
+    else if (!writeSide(f, p, mode, replace = true))
       throw new IllegalStateException(s"concurrent ${kind}mode update on $table")
-    }
   }
 
   def deleteMode(spark: SparkSession, table: String): String =
@@ -842,34 +878,19 @@ object Snapshots {
     * contract). The caller reclaims staged files on failure.
     */
   private[sources] def publishStaged(spark: SparkSession, table: String,
-      files: Seq[String], replace: Boolean, orCreate: Boolean): Long = {
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < 5) {
-      val prev = versions(spark, table)
+      files: Seq[String], replace: Boolean, orCreate: Boolean): Long =
+    // RTAS re-bases the table's shape on the replacement files: a stale
+    // ALTER override must not ghost columns onto them
+    claimNext(spark, table, "staged publish", won = prev =>
+        if (replace && prev.nonEmpty) retireDeclaredSchema(spark, table)) { prev =>
       if (!replace && prev.nonEmpty)
         throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
           Seq(table))
       if (replace && !orCreate && prev.isEmpty)
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           Seq(table))
-      val v = prev.lastOption.getOrElse(0L) + 1
-      val tmp = new Path(s"$table/.manifest-v$v.${java.util.UUID.randomUUID}.tmp")
-      val out = f.create(tmp, false)
-      try out.write((s"v$v\n" + files.mkString("\n")).getBytes("UTF-8"))
-      finally out.close()
-      if (publishAtomic(f, tmp, new Path(s"$table/manifest-v$v.json"))) {
-        // RTAS re-bases the table's shape on the replacement files: a
-        // stale ALTER override must not ghost columns onto them
-        if (replace && prev.nonEmpty) retireDeclaredSchema(spark, table)
-        return v
-      }
-      f.delete(tmp, false)
-      attempt += 1
+      Right(Manifest(None, files))
     }
-    throw new IllegalStateException(
-      s"staged publish lost the version race 5 times on $table")
-  }
 
   /** RESTORE TO VERSION AS OF `v` (Delta's RESTORE): publish version
     * `v`'s file list as a NEW version at head+1. Metadata-only — the
@@ -886,11 +907,8 @@ object Snapshots {
     * REPLACES the current set by definition, so there is nothing to
     * rebase; interleaved commits stay in history, un-restored).
     */
-  def restore(spark: SparkSession, table: String, v: Long): Long = {
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < 5) {
-      val vs = versions(spark, table)
+  def restore(spark: SparkSession, table: String, v: Long): Long =
+    claimNext(spark, table, "restore") { vs =>
       require(vs.contains(v), s"version $v not in $vs")
       val head = vs.last
       val files = manifestFiles(spark, table, v)
@@ -905,6 +923,7 @@ object Snapshots {
       // nothing. Restoring across a MOR delete carries v's own D lines
       // verbatim: the restored view is exactly v's resolved view.
       def norm(p: String) = normPath(p)
+      val token = s"restore-of-v$v-over-v$head"
       if (head == v ||
           (manifestFiles(spark, table, head).map(norm).toSet ==
             files.map(norm).toSet &&
@@ -912,19 +931,10 @@ object Snapshots {
             dels.map(norm).toSet &&
            manifestEqDeletes(spark, table, head).map { case (s0, p) =>
              (s0, norm(p)) }.toSet ==
-            eqs.map { case (s0, p) => (s0, norm(p)) }.toSet)) return head
-      val token = s"restore-of-v$v-over-v$head"
-      committedVersionFor(spark, table, token).foreach(w => return w)
-      val next = head + 1
-      val tmp = new Path(s"$table/.manifest-v$next.${java.util.UUID.randomUUID}.tmp")
-      writeManifestBody(f, tmp, s"v$next $token", files, dels, eqs)
-      if (publishAtomic(f, tmp, new Path(s"$table/manifest-v$next.json"))) return next
-      f.delete(tmp, false)
-      attempt += 1
+            eqs.map { case (s0, p) => (s0, norm(p)) }.toSet)) Left(head)
+      else committedVersionFor(spark, table, token)
+        .toLeft(Manifest(Some(token), files, dels, eqs))
     }
-    throw new IllegalStateException(
-      s"restore lost the version race 5 times on $table")
-  }
 
   /** Transactional small-file compaction: rewrite the CURRENT snapshot
     * into `numFiles` files and publish as a new (overwrite) version —
@@ -939,10 +949,8 @@ object Snapshots {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"nothing to compact in $table")
     val src = vs.last
-    val latestToken = manifestText(spark, table, src).linesIterator
-      .nextOption().flatMap(_.split(' ').lift(1))
     // latest version already is a compaction → nothing new to fold
-    if (latestToken.exists(_.startsWith("compact-of-"))) src
+    if (commitToken(spark, table, src).exists(_.startsWith("compact-of-"))) src
     else {
       val srcFiles = manifestFiles(spark, table, src)
       def norm(p: String) = normPath(p)
@@ -1089,10 +1097,8 @@ object Snapshots {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"nothing to optimize in $table")
     val src = vs.last
-    val latestToken = manifestText(spark, table, src).linesIterator
-      .nextOption().flatMap(_.split(' ').lift(1))
     // latest version already is this clustering → nothing new to lay out
-    if (latestToken.exists(t => t.startsWith("zorder-of-v") &&
+    if (commitToken(spark, table, src).exists(t => t.startsWith("zorder-of-v") &&
         t.endsWith(s":$xCol,$yCol"))) src
     else {
       val df = read(spark, table, Some(src))
@@ -1176,11 +1182,6 @@ object Snapshots {
     manifestFiles(spark, table, v)
   }
 
-  /** Read a snapshot (latest, or AS OF `asOf`). The file list is pinned
-    * here, at plan time — concurrent commits are invisible.
-    * `mergeSchema` unions the footers' schemas when commits evolved the
-    * schema (added columns read as null in older files).
-    */
   /** One manifest read resolving every line kind — the shared first
     * step of every read path (data files, position-delete sidecars,
     * equality-delete sidecars with their scopes).
@@ -1224,6 +1225,11 @@ object Snapshots {
           .schema(FieldIds.strip(raw.schema)).parquet(files: _*)
     }
 
+  /** Read a snapshot (latest, or AS OF `asOf`). The file list is pinned
+    * here, at plan time — concurrent commits are invisible.
+    * `mergeSchema` unions the footers' schemas when commits evolved the
+    * schema (added columns read as null in older files).
+    */
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
     val (v, files, dels, eqs) = resolvedLists(spark, table, asOf)
@@ -1991,43 +1997,6 @@ object Snapshots {
       files.partition(hit)
     }
 
-  /** Stream a manifest body (header line + one absolute path per
-    * line): at 10⁶ entries a mkString would materialize a second
-    * ~100 MB copy of the list the driver already holds.
-    */
-  private def writeManifestBody(f: FileSystem, tmp: Path, header: String,
-      files: Iterable[String], deletes: Iterable[String] = Nil,
-      eqDeletes: Iterable[(Long, String)] = Nil): Unit = {
-    val out = new java.io.BufferedOutputStream(f.create(tmp, false), 1 << 16)
-    try {
-      out.write((header + "\n").getBytes("UTF-8"))
-      files.foreach(p => out.write((p + "\n").getBytes("UTF-8")))
-      deletes.foreach(p =>
-        out.write((DeleteLinePrefix + p + "\n").getBytes("UTF-8")))
-      eqDeletes.foreach { case (scope, p) =>
-        out.write((EqLinePrefix + scope + " " + p + "\n").getBytes("UTF-8")) }
-    } finally out.close()
-  }
-
-  /** Optimistic publish with append-rebase (the Delta/Iceberg conflict-
-    * resolution shape): attempt at `src`+1; when a concurrent commit
-    * wins the version race, re-read the head and REBASE — the expensive
-    * data work is never redone, only the manifest metadata:
-    *  - a file this writer removes has itself been removed → a
-    *    concurrent writer rewrote rows this writer read: true conflict,
-    *    reclaim the new data files and abort (the caller re-reads);
-    *  - `conflictsWith(appendedFiles)` (op-specific: merge checks the
-    *    interleaved appends for its own update keys) → abort likewise;
-    *  - otherwise the interleaved commits were benign appends: publish
-    *    (head files − removed + added) at head+1.
-    * Without the rebase, a merge whose data pass is slower than the
-    * table's commit cadence loses EVERY race and starves — the
-    * metadata-only retry makes the contention window microseconds.
-    * Shared by merge, deleteWhere, and compact — one copy of the
-    * tmp-write/claim/lost-race sequence, one cleanup contract: data
-    * files this writer created are reclaimed on abort (no manifest
-    * references them; vacuum could never free them).
-    */
   /** Group-replacement commit for the SQL row-level write path (UPDATE /
     * MERGE INTO / subquery DELETE, which Spark plans as a group-based
     * ReplaceData over the V2 table): swap the files the rewrite read for
@@ -2065,6 +2034,26 @@ object Snapshots {
       requireDataPresentNorm = targeted)
   }
 
+  /** Optimistic publish with append-rebase (the Delta/Iceberg conflict-
+    * resolution shape): attempt at `src`+1; when a concurrent commit
+    * wins the version race, re-read the head and REBASE — the expensive
+    * data work is never redone, only the manifest metadata:
+    *  - a file this writer removes has itself been removed → a
+    *    concurrent writer rewrote rows this writer read: true conflict,
+    *    reclaim the new data files and abort (the caller re-reads);
+    *  - `conflictsWith(appendedFiles)` (op-specific: merge checks the
+    *    interleaved appends for its own update keys) → abort likewise;
+    *  - otherwise the interleaved commits were benign appends: publish
+    *    (head files − removed + added) at head+1.
+    * Without the rebase, a merge whose data pass is slower than the
+    * table's commit cadence loses EVERY race and starves — the
+    * metadata-only retry makes the contention window microseconds.
+    * Shared by every file-rewriting and delta commit (merge, the
+    * deletes, purges, compaction, the SQL row-level writes) — one rebase
+    * loop claiming through [[claimManifest]], one cleanup contract: data
+    * files this writer created are reclaimed on abort (no manifest
+    * references them; vacuum could never free them).
+    */
   private def publishRebase(spark: SparkSession, table: String, src: Long,
       srcFiles: Seq[String], removedNorm: Set[String], added: Seq[String],
       op: String, reclaimOnAbort: Seq[Path], token: Option[String] = None,
@@ -2136,11 +2125,8 @@ object Snapshots {
       val eqList = curEq
         .filterNot { case (_, p) => removedEqNorm(norm(p)) } ++
         addedEqDeletes.map(p => (v - 1, p))
-      val header = s"v$v${token.map(" " + _).getOrElse("")}"
-      val tmp = new Path(s"$table/.manifest-v$v.${java.util.UUID.randomUUID}.tmp")
-      writeManifestBody(f, tmp, header, fileList, deleteList, eqList)
-      if (publishAtomic(f, tmp, new Path(s"$table/manifest-v$v.json"))) return v
-      f.delete(tmp, false)
+      if (claimManifest(f, table, v, Manifest(token, fileList, deleteList, eqList)))
+        return v
       base = versions(spark, table).lastOption.getOrElse(base)
       attempt += 1
     }
@@ -2864,6 +2850,14 @@ object Snapshots {
 
   private def schemaPath(table: String) = new Path(s"$table/schema.json")
 
+  /** The side files a [[fork]] carries to its branch, so branch writes
+    * route, cluster and resolve like the parent's (field ids carry
+    * through [[FieldIds.copyTo]]'s CAS instead).
+    */
+  private val CarriedSideFiles: Seq[String] =
+    Seq("bucketspec", "schema.json", "partitionspec", "sortspec") ++
+      DmlKinds.map(k => s"${k}mode")
+
   /** The declared (ALTER-extended) schema, if any. When it carries
     * field ids (any post-rename/drop declaration does), Spark's parquet
     * id-matching is switched on for the session here — the single
@@ -2872,33 +2866,22 @@ object Snapshots {
     */
   def declaredSchema(spark: SparkSession,
       table: String): Option[org.apache.spark.sql.types.StructType] = {
-    val f = fs(spark, table)
-    val p = schemaPath(table)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    readSide(fs(spark, table), schemaPath(table)).map { txt =>
       val sch = org.apache.spark.sql.types.DataType.fromJson(txt)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       if (FieldIds.hasIds(sch)) FieldIds.enableRead(spark)
-      Some(sch)
+      sch
     }
   }
 
-  /** Install/replace the declared schema (ALTER TABLE's commit): tmp
-    * write + rename-over. Alters are admin-rare; last writer wins.
+  /** Install/replace the declared schema (ALTER TABLE's commit): a
+    * side-file replace, so a concurrent ALTER racing into the replace
+    * window fails loudly instead of silently winning or losing.
     */
   private[graft] def declareSchema(spark: SparkSession, table: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val f = fs(spark, table)
-    val tmp = new Path(s"$table/.schema.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    f.delete(schemaPath(table), false)
-    require(f.rename(tmp, schemaPath(table)),
-      s"failed to publish declared schema for $table")
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    require(writeSide(fs(spark, table), schemaPath(table), schema.json,
+      replace = true), s"failed to publish declared schema for $table")
 
   /** Retire the override — a schema-evolving OVERWRITE re-bases the
     * table's shape on its new files, exactly like the bucket-spec
@@ -2949,12 +2932,7 @@ object Snapshots {
       case Some(w) => throw new IllegalStateException(
         s"tag '$name' already points at v$w (tags are immutable)")
       case None =>
-        val f = fs(spark, table)
-        val tmp = new Path(s"$table/.ref-tag-$name.${java.util.UUID.randomUUID}.tmp")
-        val out = f.create(tmp, false)
-        try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-        if (!publishAtomic(f, tmp, tagPath(table, name))) {
-          f.delete(tmp, false)
+        if (!writeSide(fs(spark, table), tagPath(table, name), s"$v\n")) {
           // lost a create race: accept iff the winner tagged the same v
           if (!tagVersion(spark, table, name).contains(v))
             throw new IllegalStateException(
@@ -2964,16 +2942,8 @@ object Snapshots {
   }
 
   /** The version tag `name` points at, if the tag exists. */
-  def tagVersion(spark: SparkSession, table: String, name: String): Option[Long] = {
-    val f = fs(spark, table)
-    val p = tagPath(table, name)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
-  }
+  def tagVersion(spark: SparkSession, table: String, name: String): Option[Long] =
+    readSide(fs(spark, table), tagPath(table, name)).map(_.trim.toLong)
 
   /** All tags of the table, (name, version), name-ascending. */
   def tags(spark: SparkSession, table: String): Seq[(String, Long)] = {
@@ -2986,21 +2956,6 @@ object Snapshots {
     }).sortBy(_._1)
   }
 
-  /** Fork the parent's head into a NEW table at `branch` (the WAP
-    * staging branch) — metadata-only at any data size: the branch's
-    * first manifest references the parent's data files by absolute
-    * path, the stats sidecars are copied (KBs) so manifest pruning
-    * keeps working on the branch, and the bucket layout carries so
-    * writes route identically. Every table operation (commit/merge/
-    * deleteWhere/DML/audit reads) then works on the branch unchanged,
-    * invisible to parent readers, until [[fastForward]] publishes it.
-    *
-    * Lifecycle contract: while a fork is open, do not [[vacuum]]/[[gc]]
-    * the parent below the fork point (the branch references those
-    * files by path). [[fastForward]]'s head-must-equal-fork-point rule
-    * makes a parent advance impossible to miss; expiry discipline is
-    * the operator's, exactly as in Iceberg's WAP.
-    */
   // ---- long-lived NAMED BRANCHES over the fork mechanism ------------
   // A branch is a fork directory REGISTERED in its parent under
   // `ref-branch-<name>.txt` (name = the branch dir's basename). The ref
@@ -3027,11 +2982,7 @@ object Snapshots {
     if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq.flatMap { st =>
       st.getPath.getName match {
-        case BranchFileRe(name) =>
-          val in = f.open(st.getPath)
-          val p = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-          Some(name -> p)
+        case BranchFileRe(name) => readSide(f, st.getPath).map(p => name -> p.trim)
         case _ => None
       }
     }.sortBy(_._1)
@@ -3050,12 +3001,8 @@ object Snapshots {
       branch: String): Unit = {
     val name = new Path(branch).getName
     requireRefName(name)
-    val f = fs(spark, parent)
-    val tmp = new Path(s"$parent/.ref-branch.${java.util.UUID.randomUUID}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(normPath(branch).getBytes("UTF-8")) finally out.close()
-    f.delete(branchRefPath(parent, name), false)
-    require(f.rename(tmp, branchRefPath(parent, name)),
+    require(writeSide(fs(spark, parent), branchRefPath(parent, name),
+      normPath(branch), replace = true),
       s"failed to register branch $name on $parent")
   }
 
@@ -3077,6 +3024,21 @@ object Snapshots {
       }
     }.map(normPath).toSet
 
+  /** Fork the parent's head into a NEW table at `branch` (the WAP
+    * staging branch) — metadata-only at any data size: the branch's
+    * first manifest references the parent's data files by absolute
+    * path, the stats sidecars are copied (KBs) so manifest pruning
+    * keeps working on the branch, and the bucket layout carries so
+    * writes route identically. Every table operation (commit/merge/
+    * deleteWhere/DML/audit reads) then works on the branch unchanged,
+    * invisible to parent readers, until [[fastForward]] publishes it.
+    *
+    * Lifecycle contract: while a fork is open, do not [[vacuum]]/[[gc]]
+    * the parent below the fork point (the branch references those
+    * files by path). [[fastForward]]'s head-must-equal-fork-point rule
+    * makes a parent advance impossible to miss; expiry discipline is
+    * the operator's, exactly as in Iceberg's WAP.
+    */
   def fork(spark: SparkSession, parent: String, branch: String): Long = {
     // the branch registers under its basename, so validate it BEFORE
     // any filesystem work — failing after the branch dir is created
@@ -3099,40 +3061,20 @@ object Snapshots {
     val f = fs(spark, branch)
     f.mkdirs(new Path(branch))
     val pf = fs(spark, parent)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val spec = new Path(s"$parent/bucketspec")
-    if (pf.exists(spec))
-      org.apache.hadoop.fs.FileUtil.copy(pf, spec, f,
-        new Path(s"$branch/bucketspec"), false, conf): Unit
-    val sch = schemaPath(parent)
-    if (pf.exists(sch))
-      org.apache.hadoop.fs.FileUtil.copy(pf, sch, f,
-        schemaPath(branch), false, conf): Unit
-    val pspec = new Path(s"$parent/partitionspec")
-    if (pf.exists(pspec))
-      org.apache.hadoop.fs.FileUtil.copy(pf, pspec, f,
-        new Path(s"$branch/partitionspec"), false, conf): Unit
-    val sspec = new Path(s"$parent/sortspec")
-    if (pf.exists(sspec))
-      org.apache.hadoop.fs.FileUtil.copy(pf, sspec, f,
-        new Path(s"$branch/sortspec"), false, conf): Unit
+    // the layout side files and the stats sidecars (KBs) carry verbatim
+    val stats = new Path(s"$parent/stats")
+    val statsFiles =
+      if (pf.exists(stats)) pf.listStatus(stats).toSeq.map(st => s"stats/${st.getPath.getName}")
+      else Nil
+    (CarriedSideFiles ++ statsFiles).foreach { name =>
+      readSide(pf, new Path(s"$parent/$name")).foreach(body =>
+        writeSide(f, new Path(s"$branch/$name"), body, replace = true))
+    }
     // the field-id assignment forks with the table: branch writes stamp
     // the SAME ids as the parent's files, so a fast-forward publishes
     // id-consistent footers (branch-side ALTERs extend the branch copy;
     // fastForward adopts them back via FieldIds.syncFromCarried)
     FieldIds.copyTo(spark, parent, branch)
-    DmlKinds.foreach { kind =>
-      val dm = new Path(s"$parent/${kind}mode")
-      if (pf.exists(dm))
-        org.apache.hadoop.fs.FileUtil.copy(pf, dm, f,
-          new Path(s"$branch/${kind}mode"), false, conf): Unit
-    }
-    val stats = new Path(s"$parent/stats")
-    if (pf.exists(stats)) pf.listStatus(stats).foreach { st =>
-      org.apache.hadoop.fs.FileUtil.copy(pf, st.getPath, f,
-        new Path(s"$branch/stats/${st.getPath.getName}"), false, conf): Unit
-    }
-    val tmp = new Path(s"$branch/.manifest-v1.${java.util.UUID.randomUUID}.tmp")
     // the token embeds the PARENT'S IDENTITY, not just its version:
     // fast_forward against the wrong parent whose head happens to equal
     // the fork point would otherwise publish foreign absolute paths into
@@ -3140,12 +3082,10 @@ object Snapshots {
     // table's data files. Scheme-free normalized path; tokens are
     // single-word (commitToken splits the header on spaces). Outstanding
     // position-delete sidecars carry by path like the data files.
-    writeManifestBody(f, tmp, s"v1 fork-of-v$head@${normPath(parent)}",
-      files, manifestDeletes(spark, parent, head))
-    if (!publishAtomic(f, tmp, new Path(s"$branch/manifest-v1.json"))) {
-      f.delete(tmp, false)
+    if (!claimManifest(f, branch, 1L, Manifest(
+        Some(s"fork-of-v$head@${normPath(parent)}"), files,
+        manifestDeletes(spark, parent, head))))
       throw new IllegalStateException(s"fork target $branch was concurrently created")
-    }
     // register the branch on its parent: reads resolve it by name and
     // the parent's vacuum/gc keep its head's references alive
     writeBranchRef(spark, parent, branch)
@@ -3354,10 +3294,8 @@ object Snapshots {
     // added columns as typed NULLs)
     carried.foreach(declareSchema(spark, parent, _))
     val next = fp + 1
-    val tmp = new Path(s"$parent/.manifest-v$next.${java.util.UUID.randomUUID}.tmp")
-    writeManifestBody(f, tmp, s"v$next wap-of-v$bHead", newFiles, newDels)
-    if (!publishAtomic(f, tmp, new Path(s"$parent/manifest-v$next.json"))) {
-      f.delete(tmp, false)
+    if (!claimManifest(f, parent, next, Manifest(Some(s"wap-of-v$bHead"),
+        newFiles, newDels))) {
       // a concurrent commit won v(next): undo the carried declare and
       // roll the staged dirs back under the branch so the branch stays
       // inspectable and a re-fork + re-stage starts clean

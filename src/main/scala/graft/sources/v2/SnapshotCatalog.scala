@@ -984,15 +984,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     fs.mkdirs(stage)
     val srcRoot = src.toUri.getPath
     val dstRoot = dst.toUri.getPath
-    def readText(pth: Path): String = {
-      val in = fs.open(pth)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    def writeText(pth: Path, text: String): Unit = {
-      val out = fs.create(pth, true)
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-    }
+    def readText(pth: Path): String = Snapshots.readSide(fs, pth).getOrElse(
+      throw new java.io.FileNotFoundException(s"$pth vanished during rename"))
+    def writeText(pth: Path, text: String): Unit =
+      require(Snapshots.writeSide(fs, pth, text, replace = true),
+        s"concurrent rename of $src")
     val mtimes = new StringBuilder
     Snapshots.versions(spark, src.toString).foreach { v =>
       val mf = new Path(s"$src/manifest-v$v.json")
@@ -1042,18 +1038,15 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(stage)) return
     val mtimeFile = new Path(stage, "mtimes.tsv")
     val mtimes: Map[String, Long] =
-      if (!fs.exists(mtimeFile)) Map.empty
-      else {
-        val in = fs.open(mtimeFile)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split("\n").filter(_.nonEmpty).map { line =>
+      Snapshots.readSide(fs, mtimeFile).toSeq.flatMap(_.split("\n").filter(_.nonEmpty))
+        .map { line =>
           val Array(n, t) = line.split("\t", 2)
           n -> t.toLong
         }.toMap
-      }
-    fs.listStatus(stage).filter(_.getPath.getName != "mtimes.tsv").foreach { s0 =>
-      val name = s0.getPath.getName
+    // hidden names are the side-file writer's in-flight tmp files
+    fs.listStatus(stage).map(_.getPath.getName)
+      .filter(n => n != "mtimes.tsv" && !n.startsWith(".")).foreach { name =>
+      val staged = new Path(stage, name)
       val target =
         if (name.startsWith("manifest-")) new Path(table, name)
         else new Path(new Path(table, "stats"), name)
@@ -1065,10 +1058,10 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       fs.delete(target, false)
       if (fs.getScheme == "file")
         java.nio.file.Files.move(
-          java.nio.file.Paths.get(s0.getPath.toUri.getPath),
+          java.nio.file.Paths.get(staged.toUri.getPath),
           java.nio.file.Paths.get(target.toUri.getPath),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else require(fs.rename(s0.getPath, target),
+      else require(fs.rename(staged, target),
         s"rename promotion failed for $name")
       mtimes.get(name).foreach(t => fs.setTimes(target, t, -1))
     }

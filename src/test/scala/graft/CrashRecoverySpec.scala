@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *
   * The sweep advances the allowed-mutation budget one step at a time
   * until the operation completes with budget left over, so every
-  * prefix of the mutation sequence is exercised — append, equality-
-  * delete upsert, MOR delete (the delta-commit protocol), purge,
-  * compact, restore, fork+fastForward (WAP publish), and gc. Data-job
+  * prefix of the mutation sequence is exercised — every manifest
+  * writer (append, a first bucketed commit with its spec claim,
+  * CTAS/RTAS, restore, fork+fastForward, and the rebase publishes:
+  * equality-delete upsert, MOR delete, merge, purge, compact), a side-
+  * file replace, vacuum and gc. Data-job
   * staging churn (`_temporary`/`_SUCCESS`) is excluded from the budget:
   * Spark's committer owns those crash windows, and a crash anywhere in
   * them is equivalent to the budget point at the job boundary (no
@@ -36,17 +38,33 @@ class CrashRecoverySpec extends SparkTestBase {
   private def df(ids: Range) =
     ids.map(i => (i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
 
-  /** Full observable state: committed versions + live rows. */
-  private def stateOf(root: String): (Seq[Long], Seq[(Long, String)]) =
-    (Snapshots.versions(spark, root),
-      Snapshots.read(spark, root).select("id", "v").as[(Long, String)]
+  /** Full observable state: committed versions + live rows (none
+    * before the table's first commit).
+    */
+  private def stateOf(root: String): (Seq[Long], Seq[(Long, String)]) = {
+    val vs = Snapshots.versions(spark, root)
+    (vs, if (vs.isEmpty) Nil
+      else Snapshots.read(spark, root).select("id", "v").as[(Long, String)]
         .collect().sortBy(_._1).toSeq)
+  }
 
   /** Sweep crash points over `op` on a fresh `build`-built table per
     * point. Returns the number of distinct crash points exercised.
     */
   private def sweep(tag: String, maxSteps: Int = 80,
       finalCheck: String => Unit = _ => ())(build: String => Unit)(
+      op: String => Unit): Int =
+    sweepBy[(Seq[Long], Seq[(Long, String)])](tag, maxSteps, finalCheck,
+      stateOf, _ => Set.empty)(build)(op)
+
+  /** [[sweep]] over a custom observed state: `transient(before)` names
+    * the states a crash may additionally leave mid-operation (a side-
+    * file replace's delete-then-claim gap) — a retry must still heal
+    * them to the clean-run end state.
+    */
+  private def sweepBy[S](tag: String, maxSteps: Int,
+      finalCheck: String => Unit, observe: String => S,
+      transient: S => Set[S])(build: String => Unit)(
       op: String => Unit): Int = {
     val parent = Files.createTempDirectory(s"crash-$tag").toString
     // clean reference run pins the expected end state (versions are
@@ -54,7 +72,7 @@ class CrashRecoverySpec extends SparkTestBase {
     val ref = s"crash:$parent/ref"
     build(ref)
     op(ref)
-    val after = stateOf(ref)
+    val after = observe(ref)
     val filter = (p: String) =>
       p.contains(parent) && !p.contains("_temporary") && !p.contains("_SUCCESS")
     var k = 0
@@ -64,7 +82,7 @@ class CrashRecoverySpec extends SparkTestBase {
       val root = s"crash:$parent/t$k"
       CrashFsHook.disable()
       build(root)
-      val before = stateOf(root)
+      val before = observe(root)
       CrashFsHook.arm(k, filter)
       // a fired hook counts as a crash point even when the op RETURNED:
       // best-effort walks (gc) swallow per-dir IO failures by design,
@@ -80,13 +98,13 @@ class CrashRecoverySpec extends SparkTestBase {
       CrashFsHook.disable()
       if (crashed) crashPoints += 1 else completed = true
       // invariant 1: never a torn read — old state or new state
-      val now = stateOf(root)
-      assert(now == before || now == after,
+      val now = observe(root)
+      assert(now == before || now == after || transient(before)(now),
         s"$tag crash@$k: torn state\n  before=$before\n  after=$after\n  now=$now")
       // invariant 2: retry heals to the clean-run end state
       if (now != after) {
         op(root)
-        val healed = stateOf(root)
+        val healed = observe(root)
         assert(healed == after, s"$tag crash@$k: retry did not heal\n" +
           s"  healed=$healed\n  after=$after")
       }
@@ -156,6 +174,69 @@ class CrashRecoverySpec extends SparkTestBase {
       Snapshots.commit(df(5 to 8), b)
       Snapshots.fastForward(spark, r, b): Unit
     }
+    assert(pts > 0)
+  }
+
+  test("merge (rebase publish with a conflict check) survives a crash at every step") {
+    val pts = sweep("merge")(r => Snapshots.commit(df(1 to 4), r): Unit) {
+      r => Snapshots.merge(spark, r,
+        Seq((2L, "B!"), (9L, "i")).toDF("id", "v"), "id"): Unit
+    }
+    assert(pts > 0)
+  }
+
+  /** A snapshot catalog whose warehouse is the sweep's crash-scheme
+    * parent dir, so `<cat>.<name>` resolves to the sweep's table root.
+    */
+  private def catalogOf(root: String): String = {
+    val parent = new org.apache.hadoop.fs.Path(root).getParent.toString
+    val cat = s"crashcat${math.abs(parent.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", parent)
+    s"$cat.${new org.apache.hadoop.fs.Path(root).getName}"
+  }
+
+  test("CTAS (staged create publish) survives a crash at every step") {
+    val pts = sweep("ctas")(_ => ()) { r =>
+      spark.sql(s"CREATE TABLE ${catalogOf(r)} AS SELECT /*+ COALESCE(1) */ " +
+        "id, concat('v', id) AS v FROM range(1, 5)"): Unit
+    }
+    assert(pts > 0)
+  }
+
+  test("RTAS (staged replace publish) survives a crash at every step") {
+    val pts = sweep("rtas")(r => Snapshots.commit(df(1 to 4), r): Unit) { r =>
+      spark.sql(s"CREATE OR REPLACE TABLE ${catalogOf(r)} AS SELECT " +
+        "/*+ COALESCE(1) */ id, concat('v', id) AS v FROM range(10, 13)"): Unit
+    }
+    assert(pts > 0)
+  }
+
+  test("a first commitBucketed (bucketspec claim + retire) survives a crash at every step") {
+    // a crash after the spec claim leaves the spec without a manifest
+    // (its retire-on-failure delete is blocked like every later write);
+    // the retry must accept that same-spec leftover and publish
+    val pts = sweep("bucketed", finalCheck = r =>
+        assert(Snapshots.bucketSpec(spark, r) === Some(("id", 2)))
+      )(_ => ()) {
+      r => Snapshots.commitBucketed(df(1 to 4), r, "id", 2): Unit
+    }
+    assert(pts > 0)
+  }
+
+  test("a side-file replace (setSortSpec) survives a crash at every step") {
+    def observe(r: String) = (stateOf(r), Snapshots.sortSpec(spark, r))
+    val pts = sweepBy[((Seq[Long], Seq[(Long, String)]), Seq[String])](
+        "sortspec", 80, _ => (), observe,
+        // the replace deletes the old spec before claiming the new one:
+        // a crash in between reads as no declared order (writes then
+        // land unclustered — never a torn spec) until the retry
+        before => Set((before._1, Nil)))(
+      r => {
+        Snapshots.commit(df(1 to 4), r)
+        Snapshots.setSortSpec(spark, r, Seq("v"))
+      }) { r => Snapshots.setSortSpec(spark, r, Seq("id")) }
     assert(pts > 0)
   }
 
