@@ -53,11 +53,6 @@ object Incremental {
     root
   }
 
-  /** The shared two-version documents table (v1 = even doc_ids, v2
-    * appends the odds) — q68 (time-travel roundtrip) and q69 (CDC)
-    * exercise different read paths of the SAME committed table; one
-    * build, one copy on disk.
-    */
   private val buildLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
@@ -78,18 +73,17 @@ object Incremental {
       }
     }
 
+  /** The shared two-version documents table (v1 = even doc_ids, v2
+    * appends the odds) — q68 (time-travel roundtrip) and q69 (CDC)
+    * exercise different read paths of the SAME committed table; one
+    * build, one copy on disk.
+    */
   private[operators] def evenOddDocsTable(s: SparkSession, dir: String): String = {
     val root = snapRoot(s, dir, "evenodd")
-    // q68 and q69 share this table; serialize the check-then-act rebuild
-    // so concurrent planning of both queries cannot interleave commits
-    buildLocks.getOrElseUpdate(root, new Object).synchronized {
-      if (Snapshots.versions(s, root).length < 2) {
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val docs = Tables.documents(s, dir)
-        Snapshots.commit(docs.filter(col("doc_id") % 2 === 0), root)
-        Snapshots.commit(docs.filter(col("doc_id") % 2 =!= 0), root)
-      }
+    ensureBuilt(s, root, 2) {
+      val docs = Tables.documents(s, dir)
+      Snapshots.commit(docs.filter(col("doc_id") % 2 === 0), root)
+      Snapshots.commit(docs.filter(col("doc_id") % 2 =!= 0), root)
     }
     root
   }
@@ -466,15 +460,11 @@ object Incremental {
        |  AND doc_id NOT IN (SELECT bid FROM batch_exact)
        |GROUP BY lang""".stripMargin) { (s, dir) =>
     val root = snapRoot(s, dir, "dsink")
-    buildLocks.getOrElseUpdate(root, new Object).synchronized {
-      if (Snapshots.versions(s, root).length < 2) {
-        val p = new org.apache.hadoop.fs.Path(root)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val docs = Tables.documents(s, dir)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-        Dedup.ingestBatch(root, docs.filter(col("doc_id") % 5 =!= 4), "seed")
-        Dedup.ingestBatch(root, docs.filter(col("doc_id") % 5 === 4), "ingest1")
-      }
+    ensureBuilt(s, root, 2) {
+      val docs = Tables.documents(s, dir)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+      Dedup.ingestBatch(root, docs.filter(col("doc_id") % 5 =!= 4), "seed")
+      Dedup.ingestBatch(root, docs.filter(col("doc_id") % 5 === 4), "ingest1")
     }
     Snapshots.read(s, root)
       .filter(col("doc_id") % 5 === 4)

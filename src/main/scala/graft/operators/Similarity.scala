@@ -860,9 +860,7 @@ object Similarity {
        |SELECT query_id, neighbor_id, rank, ROUND(c, 4) AS cosine
        |FROM ranked WHERE rank <= 5""".stripMargin) { (s, dir) =>
     val root = Incremental.snapRoot(s, dir, "ivf")
-    if (graft.sources.Snapshots.versions(s, root).length < 2) {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    Incremental.ensureBuilt(s, root, 2) {
       val e = vecs(s, dir)
       val base = e.filter(col("vec_id") % 5 =!= 4)
       val cents = seedSample(base, 16)

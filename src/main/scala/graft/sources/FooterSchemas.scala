@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * files involved are the engine's OWN immutable outputs, so their
   * schemas can be read once, driver-side, from the footer — the same
   * per-file loop a commit's stats collection already does — and served
-  * from a memo forever.
+  * from a [[graft.Memo]].
   *
   * Exactness: [[of]] reproduces what Spark's inference returns for a
   * single file — the footer's serialized Spark schema when present
@@ -31,27 +31,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * inference path, preserving its semantics bit-for-bit.
   */
 object FooterSchemas {
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private[graft] def invalidate(tableNorm: String): Unit =
-    memo.keySet.removeIf(p =>
-      new Path(p).toUri.getPath.startsWith(tableNorm + "/"))
-
-  /** Memo ceiling with PARTIAL eviction: crossing it drops ~1/8 of the
-    * entries (arbitrary victims — every entry is a pure cache of an
-    * immutable file) instead of wiping the whole memo, so a table just
-    * above the ceiling stops re-paying every footer on every read
-    * (round-11 advice: `clear()` made 64 Ki+ file tables thrash).
-    */
-  private val MaxEntries = 65536
-
-  private def evictIfFull(): Unit = {
-    if (memo.size <= MaxEntries) return
-    val it = memo.keySet.iterator
-    var n = MaxEntries >> 3
-    while (n > 0 && it.hasNext) { it.next(); it.remove(); n -= 1 }
-  }
+  private[graft] val memo = graft.Memo[String, StructType](65536)(Seq(_))
 
   private def fromMetadata(spark: SparkSession,
       md: org.apache.parquet.hadoop.metadata.FileMetaData): StructType = {
@@ -72,26 +52,18 @@ object FooterSchemas {
     */
   private[sources] def seed(spark: SparkSession, file: String,
       md: org.apache.parquet.hadoop.metadata.FileMetaData): Unit =
-    try {
-      evictIfFull()
-      memo.put(file, fromMetadata(spark, md)): Unit
-    } catch { case scala.util.control.NonFatal(_) => () }
+    try memo.put(file, fromMetadata(spark, md))
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** Per-file inferred schema, driver-side, memoized (data/sidecar
     * files are immutable and their UUID-dir paths never reused).
     */
-  def of(spark: SparkSession, file: String): StructType = {
-    val hit = memo.get(file)
-    if (hit != null) return hit
+  def of(spark: SparkSession, file: String): StructType = memo(file) {
     val conf = spark.sparkContext.hadoopConfiguration
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(file), conf))
-    val sch =
-      try fromMetadata(spark, reader.getFooter.getFileMetaData)
-      finally reader.close()
-    evictIfFull()
-    memo.put(file, sch)
-    sch
+    try fromMetadata(spark, reader.getFooter.getFileMetaData)
+    finally reader.close()
   }
 
   /** Above this many UN-memoized footers, [[uniform]] declines and the
@@ -113,7 +85,7 @@ object FooterSchemas {
     try {
       if (files.isEmpty) None
       else {
-        val missing = files.filterNot(memo.containsKey)
+        val missing = files.filterNot(memo.contains)
         if (missing.size > maxDriverReads(spark)) return None
         // parallel cold opens: footer round-trips dominate on remote
         // storage, and they are independent — a bounded pool fetches

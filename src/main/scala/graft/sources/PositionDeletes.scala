@@ -49,53 +49,33 @@ private[graft] object PositionDeletes {
     * equality-sidecar key sets (sidecar files are immutable, and the
     * change feed probes per micro-batch).
     */
-  private val kindMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private[graft] val kindMemo = graft.Memo[String, Boolean](4096)(Seq(_))
 
-  private[graft] def isDvSidecar(spark: SparkSession, path: String): Boolean = {
-    val hit = kindMemo.get(path)
-    if (hit != null) return hit.booleanValue()
-    // driver-side footer read — a schema-less spark.read pays a job
-    val isDv = scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq)
-      .contains(DeleteVectors.DvCol)
-    if (kindMemo.size > 4096) kindMemo.clear()
-    kindMemo.put(path, java.lang.Boolean.valueOf(isDv))
-    isDv
-  }
-
-  private[graft] def invalidateKindMemo(tableNorm: String): Unit = {
-    kindMemo.keySet.removeIf(p =>
-      new Path(p).toUri.getPath.startsWith(tableNorm + "/"))
-    cardMemo.keySet.removeIf(p =>
-      new Path(p).toUri.getPath.startsWith(tableNorm + "/"))
-    sideMemo.keySet.removeIf(k => k._2.exists(p =>
-      new Path(p).toUri.getPath.startsWith(tableNorm + "/")))
-    invalidateRefFilesMemo(tableNorm)
-  }
+  private[graft] def isDvSidecar(spark: SparkSession, path: String): Boolean =
+    kindMemo(path) {
+      // driver-side footer read — a schema-less spark.read pays a job
+      scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
+        .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq)
+        .contains(DeleteVectors.DvCol)
+    }
 
   /** Exact decoded cardinality of a v2 DV sidecar: Σ of its `card`
     * column — one row per touched data file, written by the encoder
     * (the sidecar knows precisely how many positions it holds, so the
     * routing estimate never trusts the COMPRESSED byte size, which a
     * RUN container understates by 100-1000×). Metadata-class read,
-    * memoized forever: sidecar files are immutable.
+    * memoized: sidecar files are immutable.
     */
-  private val cardMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] val cardMemo = graft.Memo[String, Long](4096)(Seq(_))
 
-  private def dvCardinality(spark: SparkSession, path: String): Long = {
-    val hit = cardMemo.get(path)
-    if (hit != null) return hit.longValue()
-    import org.apache.spark.sql.functions.sum
-    val card = spark.read
-      .schema(new StructType().add(DeleteVectors.CardCol, LongType, nullable = false))
-      .parquet(path)
-      .agg(sum(col(DeleteVectors.CardCol))).head.getLong(0)
-    if (cardMemo.size > 4096) cardMemo.clear()
-    cardMemo.put(path, java.lang.Long.valueOf(card))
-    card
-  }
+  private def dvCardinality(spark: SparkSession, path: String): Long =
+    cardMemo(path) {
+      import org.apache.spark.sql.functions.sum
+      spark.read
+        .schema(new StructType().add(DeleteVectors.CardCol, LongType, nullable = false))
+        .parquet(path)
+        .agg(sum(col(DeleteVectors.CardCol))).head.getLong(0)
+    }
 
   /** ~bytes one decoded (file, pos) row costs on the broadcast/driver
     * route: an 8 B ordinal plus per-row object/path-reference overhead.
@@ -149,19 +129,15 @@ private[graft] object PositionDeletes {
   // list inside a single query (the per-commit feed resolves the same
   // sidecars on both sides of a step pair). The routing bit is in the
   // key so a conf flip (tests toggle deleteBroadcastBytes) rebuilds.
-  private val sideMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Seq[String], Boolean), DataFrame]()
+  private[graft] val sideMemo =
+    graft.Memo[(SparkSession, Seq[String], Boolean), DataFrame](1024)(_._2)
 
   def deleteSide(spark: SparkSession, table: String,
       deleteFiles: Seq[String]): DataFrame = {
     val route = exceedsBroadcast(spark, table, deleteFiles)
-    val key = (spark, deleteFiles.sorted, route)
-    val hit = sideMemo.get(key)
-    if (hit != null) return hit
-    val out = buildDeleteSide(spark, deleteFiles, route)
-    if (sideMemo.size > 1024) sideMemo.clear()
-    sideMemo.put(key, out)
-    out
+    sideMemo((spark, deleteFiles.sorted, route)) {
+      buildDeleteSide(spark, deleteFiles, route)
+    }
   }
 
   private def buildDeleteSide(spark: SparkSession,
@@ -216,33 +192,19 @@ private[graft] object PositionDeletes {
   // stable for the life of the JVM; the read path resolves it on EVERY
   // read of a table with outstanding sidecars and the feed walk once
   // per step, each a full (small) Spark job whose ~0.2 s is pure
-  // overhead on repeat plans. invalidateKindMemo clears a dropped
-  // table's entries with the other per-sidecar memos.
-  private val refFilesMemo =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], Seq[String]]()
-
-  private[graft] def invalidateRefFilesMemo(tableNorm: String): Unit =
-    refFilesMemo.keySet.removeIf(k => k.exists(p =>
-      new Path(p).toUri.getPath.startsWith(tableNorm + "/")))
+  // overhead on repeat plans.
+  private[graft] val refFilesMemo = graft.Memo[Seq[String], Seq[String]](4096)(identity)
 
   def referencedDataFiles(spark: SparkSession,
       deleteFiles: Seq[String]): Seq[String] =
     if (deleteFiles.isEmpty) Seq.empty
-    else {
-      val key = deleteFiles.sorted
-      val hit = refFilesMemo.get(key)
-      if (hit != null) hit
-      else {
-        // file_path-only projection reads BOTH sidecar layouts (v1 rows
-        // and v2 deletion vectors share the column) without decoding
-        val out = spark.read
-          .schema(new StructType().add(FileCol, StringType, nullable = false))
-          .parquet(deleteFiles: _*)
-          .select(FileCol).distinct().collect().map(_.getString(0)).toSeq
-        if (refFilesMemo.size > 4096) refFilesMemo.clear()
-        refFilesMemo.put(key, out)
-        out
-      }
+    else refFilesMemo(deleteFiles.sorted) {
+      // file_path-only projection reads BOTH sidecar layouts (v1 rows
+      // and v2 deletion vectors share the column) without decoding
+      spark.read
+        .schema(new StructType().add(FileCol, StringType, nullable = false))
+        .parquet(deleteFiles: _*)
+        .select(FileCol).distinct().collect().map(_.getString(0)).toSeq
     }
 
   /** Append the `_metadata`-derived (file, pos) identity columns to a

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Memo.normPath
+
 /** Minimal snapshot-isolated table format over plain parquet — the
   * manifest-pointer pattern (Iceberg/Delta's core idea, reduced to its
   * load-bearing parts) for sinks that need atomic publish, readers
@@ -53,11 +55,6 @@ object Snapshots {
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val ManifestRe = "manifest-v([0-9]+)\\.json".r
-
-  /** Scheme-free path for set comparisons — one definition so every
-    * operation's manifest set algebra normalizes identically.
-    */
-  private def normPath(p: String): String = new Path(p).toUri.getPath
 
   /** Atomically publish `tmp` as `dst`, failing iff `dst` already
     * exists — the optimistic-concurrency claim every commit rides on.
@@ -162,7 +159,8 @@ object Snapshots {
     manifestLines(spark, table, v).filterNot(l =>
       l.startsWith(DeleteLinePrefix) || l.startsWith(EqLinePrefix))
 
-  private def manifestDeletes(spark: SparkSession, table: String, v: Long): Seq[String] =
+  private[graft] def manifestDeletes(spark: SparkSession, table: String,
+      v: Long): Seq[String] =
     manifestLines(spark, table, v).collect {
       case l if l.startsWith(DeleteLinePrefix) => l.drop(DeleteLinePrefix.length)
     }
@@ -1267,71 +1265,48 @@ object Snapshots {
   // manifest FILE's identity (mtime+len — a recreated manifest is a new
   // write), and [[drop]]/renameTable invalidate the table's entries
   // in-JVM. The versions Seq itself is in the key (not its Int hash) so
-  // a hash collision can never alias two histories. Bounded: a
-  // per-commit CDC window walk would otherwise be steps x history
-  // manifest reads (review finding, round 8).
-  private val addVMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Seq[Long], (Long, Long)), Map[String, Long]]()
+  // a hash collision can never alias two histories. A per-commit CDC
+  // window walk would otherwise be steps x history manifest reads
+  // (review finding, round 8).
+  private[graft] val addVMemo = graft.Memo[
+    (String, Long, Seq[Long], (Long, Long)), Map[String, Long]](64)(k => Seq(k._1))
 
   /** Memo of each equality sidecar's sorted key-column names. Sidecar
     * files are immutable and live under UUID dirs, so the path is a
-    * sound key; [[invalidateMemos]] clears a dropped table's entries
-    * anyway. Saves a driver footer read per sidecar per probe — the
+    * sound key. Saves a driver footer read per sidecar per probe — the
     * streaming CDF source and changeFeedByVersion probe per
     * step/micro-batch (round-8 review finding).
     */
-  private val eqKeySetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private[graft] val eqKeySetMemo = graft.Memo[String, Seq[String]](4096)(Seq(_))
 
-  private def eqSidecarKeys(spark: SparkSession, path: String): Seq[String] = {
-    val hit = eqKeySetMemo.get(path)
-    if (hit != null) return hit
-    // driver-side footer read — a schema-less spark.read pays a job
-    val ks = scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
-      .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq).sorted
-    if (eqKeySetMemo.size > 4096) eqKeySetMemo.clear()
-    eqKeySetMemo.put(path, ks)
-    ks
-  }
-
-  /** Drop this table's entries from the in-JVM metadata memos — called
-    * by [[drop]] and the catalog's renameTable so a DROP + re-CREATE at
-    * the same path can never be served a dead table's cached map.
-    */
-  private[graft] def invalidateMemos(table: String): Unit = {
-    val n = normPath(table)
-    addVMemo.keySet.removeIf(k => normPath(k._1) == n)
-    eqKeySetMemo.keySet.removeIf(p => normPath(p).startsWith(n + "/"))
-    eqHitMemo.keySet.removeIf(k => normPath(k._1) == n)
-    PositionDeletes.invalidateKindMemo(n)
-    FooterSchemas.invalidate(n)
-  }
+  private def eqSidecarKeys(spark: SparkSession, path: String): Seq[String] =
+    eqKeySetMemo(path) {
+      // driver-side footer read — a schema-less spark.read pays a job
+      scala.util.Try(FooterSchemas.of(spark, path).fieldNames.toSeq)
+        .getOrElse(spark.read.parquet(path).schema.fieldNames.toSeq).sorted
+    }
 
   private def fileAddVersions(spark: SparkSession, table: String,
       v: Long): Map[String, Long] = {
     val vs = versions(spark, table)
     val st = fs(spark, table).getFileStatus(new Path(s"$table/manifest-v$v.json"))
-    val key = (table, v, vs, (st.getModificationTime, st.getLen))
-    val hit = addVMemo.get(key)
-    if (hit != null) return hit
-    val m = scala.collection.mutable.HashMap.empty[String, Long]
-    vs.filter(_ <= v).sorted.foreach { w =>
-      manifestFiles(spark, table, w).foreach { p =>
-        val n = normPath(p)
-        if (!m.contains(n)) m(n) = w
+    addVMemo((table, v, vs, (st.getModificationTime, st.getLen))) {
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      vs.filter(_ <= v).sorted.foreach { w =>
+        manifestFiles(spark, table, w).foreach { p =>
+          val n = normPath(p)
+          if (!m.contains(n)) m(n) = w
+        }
       }
+      // only the latest history state of a table can be live: any
+      // commit / vacuum / restore changed `vs`, so drop this table's
+      // entries (under any spelling of its path) under other version
+      // lists (a long-lived streaming-CDF JVM probing per micro-batch
+      // would otherwise accrete one dead full-size Map per commit)
+      val n = normPath(table)
+      addVMemo.removeWhere(k => k._3 != vs && normPath(k._1) == n)
+      m.toMap
     }
-    val out = m.toMap
-    // only the latest history state of a table can be live: any commit /
-    // vacuum / restore changed `vs`, so drop this table's entries under
-    // other version lists before inserting (a long-lived streaming-CDF
-    // JVM probing per micro-batch would otherwise accrete one dead
-    // full-size Map per commit until the global clear)
-    addVMemo.keySet.removeIf(k => k._1 == table && k._3 != vs)
-    if (addVMemo.size > 64) addVMemo.clear()
-    addVMemo.put(key, out)
-    out
   }
 
   /** The key-column names every outstanding equality sidecar uses —
@@ -2556,10 +2531,9 @@ object Snapshots {
     * walk re-runs on every plan of the same range — a streaming CDF
     * consumer polls it per micro-batch, q112 re-probes exactly q111's
     * step — so repeat plans should pay a map lookup, not a scan.
-    * [[invalidateMemos]] clears a dropped/renamed table's entries.
     */
-  private val eqHitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String), Seq[String]]()
+  private[graft] val eqHitMemo =
+    graft.Memo[(String, Long, String), Seq[String]](1024)(k => Seq(k._1))
 
   /** SHA-256 over the joined sorted input lists — the memo key carries
     * this digest instead of the Seq values themselves: each retained
@@ -2583,20 +2557,17 @@ object Snapshots {
       versions(spark, table).map(_.toString) ++ Seq("|") ++
         candidates.sorted ++ Seq("|") ++ dels.sorted ++ Seq("|") ++
         eqs.sortBy(_._2).map(e => s"${e._1}:${e._2}")))
-    val hit = eqHitMemo.get(key)
-    if (hit != null) return hit
     // sidecars in ONE probe can carry DIFFERENT key sets — legal when
     // the probe spans a purge boundary (upsertEq's shared-key invariant
     // holds per VERSION, not per feed range): a blind union of their
     // frames would throw on mismatched columns and key on the wrong
     // set. Probe each key set independently; union the hits.
-    val out = eqs.groupBy(e => eqSidecarKeys(spark, e._2))
-      .values.flatMap(g =>
-        eqHitFilesOneKeySet(spark, table, v, candidates, dels, g))
-      .toSeq.distinct
-    if (eqHitMemo.size > 1024) eqHitMemo.clear()
-    eqHitMemo.put(key, out)
-    out
+    eqHitMemo(key) {
+      eqs.groupBy(e => eqSidecarKeys(spark, e._2))
+        .values.flatMap(g =>
+          eqHitFilesOneKeySet(spark, table, v, candidates, dels, g))
+        .toSeq.distinct
+    }
   }
 
   private def eqHitFilesOneKeySet(spark: SparkSession, table: String,
@@ -3522,6 +3493,6 @@ object Snapshots {
       catch { case scala.util.control.NonFatal(_) => () }
       require(f.delete(root, true), s"failed to drop snapshot table $table")
     }
-    invalidateMemos(table)
+    graft.Memo.invalidateTable(table)
   }
 }

@@ -315,16 +315,13 @@ private[graft] object RowIdentityScan {
     * JVM-global var so a concurrent scan of another table (parallel
     * suites, background queries) can never overwrite the observation
     * between a DML statement and its assertion (round-9 review
-    * finding). Bounded: a test-observability map must never be a leak.
+    * finding).
     */
-  private val routes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def recordRoute(tablePath: String, route: String): Unit = {
-    if (routes.size > 256) routes.clear()
-    routes.put(new Path(tablePath).toUri.getPath, route)
-  }
+  private[graft] val routes = graft.Memo[String, String](256)(Seq(_))
+  private[graft] def recordRoute(tablePath: String, route: String): Unit =
+    routes.put(graft.Memo.normPath(tablePath), route)
   private[graft] def routeFor(tablePath: String): String =
-    Option(routes.get(new Path(tablePath).toUri.getPath)).getOrElse("none")
+    routes.get(graft.Memo.normPath(tablePath)).getOrElse("none")
 }
 
 private[v2] final class RowIdentityBatch(

@@ -963,6 +963,19 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       s"graft-snapshot: cannot rename $src — it has registered " +
         s"branch(es) ${liveBranches.map(_._1).mkString(", ")}; publish or " +
         "drop them first (fast_forward / DROP on the branch table)")
+    // position-delete sidecars hold ABSOLUTE data-file paths in their
+    // rows, out of the manifest rewrite's reach: after the move every
+    // retained version that references one would silently serve its
+    // deleted rows again. Refuse until purge + vacuum have folded them.
+    val srcVersions = Snapshots.versions(spark, src.toString)
+    val withDeletes = srcVersions
+      .filter(v => Snapshots.manifestDeletes(spark, src.toString, v).nonEmpty)
+    require(withDeletes.isEmpty,
+      s"graft-snapshot: cannot rename $src — version(s) " +
+        s"${withDeletes.mkString(", ")} reference position-delete sidecars; " +
+        "fold them first (CALL purge_deletes, then vacuum — vacuum expires " +
+        "the versions that reference the sidecars, so time travel to them " +
+        "is lost)")
     fs.mkdirs(dst.getParent)
     // Manifests (and the stats sidecars' path keys) hold ABSOLUTE file
     // paths, so a rename must rewrite them against the new root. The
@@ -990,7 +1003,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       require(Snapshots.writeSide(fs, pth, text, replace = true),
         s"concurrent rename of $src")
     val mtimes = new StringBuilder
-    Snapshots.versions(spark, src.toString).foreach { v =>
+    srcVersions.foreach { v =>
       val mf = new Path(s"$src/manifest-v$v.json")
       // each manifest's mtime IS its commit time (TIMESTAMP AS OF
       // resolves on it) — record it in the stage so promotion can
@@ -1023,7 +1036,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     require(fs.rename(src, dst), s"rename $src -> $dst failed")
     // the source path may be re-created later with the same version
     // numbers — its cached metadata memos must not survive the rename
-    Snapshots.invalidateMemos(src.toString)
+    graft.Memo.invalidateTable(src.toString)
     promoteRenameStage(dst)
   }
 

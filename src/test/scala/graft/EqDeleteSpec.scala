@@ -584,23 +584,59 @@ class EqDeleteSpec extends SparkTestBase {
     assert(got === Seq((1L, "x", 10.0), (1L, "y", 99.0), (2L, "x", 30.0)))
   }
 
+  /** A table history: what it commits at a path, its live rows after,
+    * and its change feed from v1 to its last version.
+    */
+  private case class History(build: String => Unit, rows: Seq[(Long, String)],
+      feed: Set[(Long, String, String)])
+
   test("DROP + re-CREATE at the same path never serves a stale add-version memo") {
-    // the recreated table reproduces the same version NUMBERS (1, 2) —
-    // a memo keyed only on (table, version, versions-hash) would serve
-    // the DEAD table's file→add-version map, under which the new
-    // upsert's own data file falls back to add-version 0 (in scope for
-    // its own sidecar) and the upserted row silently vanishes
-    // (round-8 review finding: addVMemo never invalidated by drop)
+    // each history follows the one it is paired with. `reupserted`
+    // reproduces `upserted`'s version NUMBERS (1, 2) — a memo keyed only
+    // on (table, version, versions-hash) would serve the DEAD table's
+    // file→add-version map, under which the new upsert's own data file
+    // falls back to add-version 0 (in scope for its own sidecar) and the
+    // upserted row silently vanishes (round-8 review finding: addVMemo
+    // never invalidated by drop). `morDeleted` then follows a table with
+    // the same versions, and `morThenUpserted` follows a MOR-deleted
+    // table whose sidecar memos it must not be served.
+    val upserted = History(t => {
+        base(t)
+        Snapshots.upsertEq(spark, t, Seq((2L, "B!")).toDF("id", "v"), Seq("id"))
+      },
+      Seq((1L, "a"), (2L, "B!"), (3L, "c"), (4L, "d")),
+      Set((2L, "b", "delete"), (2L, "B!", "insert")))
+    val morDeleted = History(t => {
+        Snapshots.commit(Seq((1L, "m1"), (2L, "m2"), (3L, "m3")).toDF("id", "v"), t)
+        Snapshots.deleteWhereMor(spark, t, col("id") === 2L)
+      },
+      Seq((1L, "m1"), (3L, "m3")),
+      Set((2L, "m2", "delete")))
+    val morThenUpserted = History(t => {
+        Snapshots.commit(Seq((1L, "p1"), (2L, "p2"), (3L, "p3")).toDF("id", "v"), t)
+        Snapshots.deleteWhereMor(spark, t, col("id") === 3L)
+        Snapshots.upsertEq(spark, t, Seq((1L, "P!")).toDF("id", "v"), Seq("id"))
+      },
+      Seq((1L, "P!"), (2L, "p2")),
+      Set((3L, "p3", "delete"), (1L, "p1", "delete"), (1L, "P!", "insert")))
+    val reupserted = History(t => {
+        Snapshots.commit(Seq((1L, "n1"), (2L, "n2")).toDF("id", "v"), t)
+        Snapshots.upsertEq(spark, t, Seq((2L, "UP")).toDF("id", "v"), Seq("id"))
+      },
+      Seq((1L, "n1"), (2L, "UP")),
+      Set((2L, "n2", "delete"), (2L, "UP", "insert")))
     val t = freshDir("recreate")
-    base(t)
-    Snapshots.upsertEq(spark, t, Seq((2L, "B!")).toDF("id", "v"), Seq("id"))
-    // this read memoizes fileAddVersions for (t, v2, [1, 2])
-    assert(rows(t) === Seq((1L, "a"), (2L, "B!"), (3L, "c"), (4L, "d")))
-    Snapshots.drop(spark, t)
-    // same path, same version numbers, different files
-    Snapshots.commit(Seq((1L, "n1"), (2L, "n2")).toDF("id", "v"), t)
-    Snapshots.upsertEq(spark, t, Seq((2L, "UP")).toDF("id", "v"), Seq("id"))
-    assert(rows(t) === Seq((1L, "n1"), (2L, "UP")),
-      "recreated table must resolve its own files' add-versions, not the dead table's")
+    Seq(upserted, reupserted, morDeleted, morThenUpserted).zipWithIndex.foreach {
+      case (h, i) =>
+        // same path, different files
+        Snapshots.drop(spark, t)
+        h.build(t)
+        // these reads fill the add-version, sidecar and probe memos
+        assert(rows(t) === h.rows,
+          s"history $i: the table must resolve its own files, not a dead table's")
+        val feed = Snapshots.changeFeed(spark, t, 1L, Snapshots.versions(spark, t).last)
+          .select("id", "v", "_change_type").as[(Long, String, String)].collect()
+        assert(feed.toSet === h.feed && feed.length === h.feed.size, s"history $i")
+    }
   }
 }
