@@ -10,16 +10,17 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import graft.sources.Snapshots
 
 /** Analysis-time MERGE-ON-READ rewrite: a snapshot relation whose
-  * pinned version carries outstanding position-delete sidecars is
-  * replaced by its LIVE VIEW — the same parquet scan with the deleted
-  * (file, row-ordinal) pairs subtracted by an anti-join over exactly
-  * the sidecar-touched files ([[Snapshots.read]] builds it; files no
-  * sidecar references scan unchanged). The replacement projects back
-  * onto the original relation's attribute ids, so everything above —
-  * filters, joins, aggregates — resolves identically and Catalyst
-  * optimizes the spliced plan natively: predicates still push into the
-  * parquet scan under the anti-join, the delete side broadcasts while
-  * sidecars are small.
+  * pinned version carries outstanding delete sidecars (position or
+  * equality) is replaced by its LIVE VIEW — the same parquet scan with
+  * the deleted rows subtracted from exactly the sidecar-touched files
+  * ([[Snapshots.read]] builds it; files no sidecar references scan
+  * unchanged). The replacement projects back onto the original
+  * relation's attribute ids, so everything above — filters, joins,
+  * aggregates — resolves identically and Catalyst optimizes the spliced
+  * plan natively: predicates still push into the parquet scan. While
+  * the sidecars fit the delete bounds the subtraction is a predicate on
+  * that scan (no exchange, no extra job); above them it is an
+  * anti-join.
   *
   * Tables without sidecars never match (the resolution is memoized
   * per-table, so the check is a driver-side manifest field). DML

@@ -144,7 +144,7 @@ class GraftPlannerExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => SemiJoinRewrite)
     e.injectOptimizerRule(_ => TopKRewrite)
     // merge-on-read live view: snapshot relations with outstanding
-    // position deletes splice in their anti-join read at analysis time
+    // delete sidecars splice in their live read at analysis time
     e.injectResolutionRule(s => new MorDeleteRewrite(s))
     // pre-CBO: must run AFTER the analyzer's RewriteMergeIntoTable has
     // produced the ReplaceData plan but BEFORE early scan pushdown

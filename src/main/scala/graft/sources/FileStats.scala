@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, SparkSession}
@@ -90,8 +88,7 @@ object FileStats {
     */
   private def fileLines(conf: Configuration, file: String,
       seedSchemas: Option[SparkSession] = None): Seq[String] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
+    val reader = FooterSchemas.open(conf, file)
     try {
       import scala.jdk.CollectionConverters._
       // this loop already holds every fresh file's footer — seed the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -55,13 +56,23 @@ object FooterSchemas {
     try memo.put(file, fromMetadata(spark, md))
     catch { case scala.util.control.NonFatal(_) => () }
 
+  /** Open a parquet file's footer on the driver. The options come from
+    * `conf`: the one-argument `ParquetFileReader.open` builds its codec
+    * factory on a fresh Hadoop `Configuration`, which re-parses the
+    * default resources (~10 ms a call, more than the footer read).
+    */
+  private[graft] def open(conf: org.apache.hadoop.conf.Configuration,
+      file: String): ParquetFileReader = {
+    val path = new Path(file)
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+  }
+
   /** Per-file inferred schema, driver-side, memoized (data/sidecar
     * files are immutable and their UUID-dir paths never reused).
     */
   def of(spark: SparkSession, file: String): StructType = memo(file) {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
+    val reader = open(spark.sparkContext.hadoopConfiguration, file)
     try fromMetadata(spark, reader.getFooter.getFileMetaData)
     finally reader.close()
   }

@@ -1320,17 +1320,19 @@ object Snapshots {
   /** Resolve the EQUALITY-DELETE view: rows of files ADDED AT OR BEFORE
     * an outstanding sidecar's scope whose key columns match one of its
     * key rows are subtracted; files appended after every scope read
-    * clean. One anti-join: the data side carries its file's add-version
-    * (broadcast file→version map over `_metadata.file_path`), the
-    * delete side the union of sidecars with their scopes (broadcast
-    * while small — the accumulated upsert keys since the last purge,
-    * the same envelope class as [[PositionDeletes.deleteSide]]).
-    * Position deletes are applied first (the two forms compose).
+    * clean. The data side carries its file's add-version (a
+    * file→version map over `_metadata.file_path`). While the sidecars
+    * fit `graft.snapshot.eqDeleteBroadcastBytes` and the keys have
+    * JVM-exact equality, the key rows are read on the driver and the
+    * subtraction is one predicate on the scan ([[eqKeySet]]); otherwise
+    * it is one anti-join against the union of sidecars with their
+    * scopes, broadcast within the bound. Position deletes are applied
+    * first (the two forms compose).
     */
   private def applyEqDeletes(spark: SparkSession, table: String, v: Long,
       files: Seq[String], dels: Seq[String], eqs: Seq[(Long, String)],
       reader: Seq[String] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.broadcast
     val addV = fileAddVersions(spark, table, v)
     val maxScope = eqs.map(_._1).max
     // unknown files (never in a retained manifest — impossible outside
@@ -1346,23 +1348,97 @@ object Snapshots {
     require(keys.forall(sample.columns.contains),
       s"equality-delete keys $keys not all present in the table schema")
     val withV = withAddVersions(spark, table, affected, dels, reader, addV)
-    val eqFrame = eqs.map { case (scope, p) =>
-      readInferred(spark, Seq(p)).withColumn(EqScopeCol, lit(scope)) }
-      .reduce(_ unionByName _)
-    val fsys = fs(spark, table)
-    val eqBytes = eqs.map { case (_, p) =>
-      try fsys.getFileStatus(new Path(p)).getLen
-      catch { case scala.util.control.NonFatal(_) => Long.MaxValue / 1024 }
-    }.sum
-    val threshold = spark.conf
-      .get("graft.snapshot.eqDeleteBroadcastBytes", (64L << 20).toString).toLong
-    val eqSide = if (eqBytes <= threshold) broadcast(eqFrame) else eqFrame
-    val cond = keys.map(k => withV(k) === eqSide(k)).reduce(_ && _) &&
-      withV(EqAddVCol) <= eqSide(EqScopeCol)
-    val resolved = withV.join(eqSide, cond, "left_anti")
-      .drop(EqFileCol, EqAddVCol)
+    val resolved = (eqKeySet(spark, eqs, keys, withV.schema) match {
+      case Some(set) => withV.filter(!eqKeyDeleted(keys, set))
+      case None =>
+        val eqFrame = eqSideFrame(spark, eqs)
+        val eqSide = if (eqFits(spark, eqs)) broadcast(eqFrame) else eqFrame
+        withV.join(eqSide, eqJoinCond(withV, eqSide, keys), "left_anti")
+    }).drop(EqFileCol, EqAddVCol)
     if (clean.isEmpty) resolved
     else liveView(spark, table, clean, dels, reader).unionByName(resolved)
+  }
+
+  /** The union of the equality sidecars with their scopes — the delete
+    * side of the anti-join route.
+    */
+  private def eqSideFrame(spark: SparkSession, eqs: Seq[(Long, String)]): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    eqs.map { case (scope, p) =>
+      readInferred(spark, Seq(p)).withColumn(EqScopeCol, lit(scope)) }
+      .reduce(_ unionByName _)
+  }
+
+  private def eqJoinCond(data: DataFrame, side: DataFrame,
+      keys: Seq[String]): org.apache.spark.sql.Column =
+    keys.map(k => data(k) === side(k)).reduce(_ && _) &&
+      data(EqAddVCol) <= side(EqScopeCol)
+
+  /** True when the equality sidecars' bytes on disk fit
+    * `graft.snapshot.eqDeleteBroadcastBytes` (64 MB default). An
+    * unstat-able sidecar counts as over.
+    */
+  private def eqFits(spark: SparkSession, eqs: Seq[(Long, String)]): Boolean = {
+    val threshold = spark.conf
+      .get("graft.snapshot.eqDeleteBroadcastBytes", (64L << 20).toString).toLong
+    var bytes = 0L
+    eqs.foreach { case (_, p) =>
+      val len =
+        try new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(new Path(p)).getLen
+        catch { case scala.util.control.NonFatal(_) => return false }
+      bytes += len
+      if (bytes > threshold) return false
+    }
+    true
+  }
+
+  /** The key rows of `eqs`, read on the driver (no Spark job), each
+    * with the largest scope any sidecar gives it — the scan-predicate
+    * route of the equality delete. None, so the caller keeps the
+    * anti-join, when the sidecars exceed the bound, when a key's type
+    * differs between `dataSchema` and a sidecar or lacks JVM-exact
+    * equality ([[EqKeySet.supports]]), or when a sidecar cannot be read
+    * there. Key rows with a NULL component are dropped: they match
+    * nothing in the join either.
+    */
+  private def eqKeySet(spark: SparkSession, eqs: Seq[(Long, String)],
+      keys: Seq[String], dataSchema: org.apache.spark.sql.types.StructType)
+      : Option[EqKeySet] = {
+    val fields = keys.flatMap(k => dataSchema.find(_.name == k))
+    if (fields.size != keys.size || !fields.forall(f => EqKeySet.supports(f.dataType)) ||
+        !eqFits(spark, eqs)) return None
+    try {
+      val sideSchemas = eqs.map { case (_, p) => FooterSchemas.of(spark, p) }
+      if (!sideSchemas.forall(s => fields.forall(f =>
+          s.find(_.name == f.name).exists(_.dataType == f.dataType)))) return None
+      val types = fields.map(_.dataType)
+      val scopes = new java.util.HashMap[Any, java.lang.Long]()
+      eqs.foreach { case (scope, p) =>
+        PositionDeletes.readOnDriver(spark, p)(PositionDeletes.eachRow(_, keys) { g =>
+          val parts = types.indices.map(i => EqKeySet.value(types(i), g, i))
+          if (!parts.contains(null)) {
+            val key: Any = if (parts.size == 1) parts.head else parts.toList
+            val had = scopes.get(key)
+            if (had == null || had.longValue < scope) scopes.put(key, scope)
+          }
+        })
+      }
+      Some(new EqKeySet(eqs.sortBy(e => (e._2, e._1)), scopes.size,
+        spark.sparkContext.broadcast(scopes)))
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** [[EqKeyDeleted]] over the `keys` columns and an add-version column
+    * (the scanned file's, or a constant below every scope when the
+    * scope test is vacuous).
+    */
+  private def eqKeyDeleted(keys: Seq[String], set: EqKeySet,
+      addV: org.apache.spark.sql.Column =
+        org.apache.spark.sql.functions.col(EqAddVCol)): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.GraftShim
+    GraftShim.column(EqKeyDeleted(
+      (keys.map(org.apache.spark.sql.functions.col) :+ addV).map(GraftShim.expression), set))
   }
 
   /** The live view of `files` with each row's source file
@@ -1399,11 +1475,13 @@ object Snapshots {
     * any position-delete sidecar read exactly as before (the hot path —
     * zero overhead when `dels` is empty or names other files); files
     * the sidecars reference read with their deleted positions
-    * subtracted by an anti-join on (`_metadata.file_path`,
-    * `_metadata.row_index`), broadcast while the sidecars are small.
-    * `fileColumn` optionally retains each row's source path (the DML
-    * probes need it) — taken from the same `_metadata` column on BOTH
-    * branches so path formats always agree.
+    * subtracted on (`_metadata.file_path`, `_metadata.row_index`) by
+    * [[PositionDeletes.live]]: a predicate on their scan while the
+    * decoded positions fit `graft.snapshot.deleteBroadcastBytes` (the
+    * sidecars are read on the driver, no job), a shuffle anti-join
+    * above it. `fileColumn` optionally retains each row's source path
+    * (the DML probes need it) — taken from the same `_metadata` column
+    * on BOTH branches so path formats always agree.
     */
   private def liveView(spark: SparkSession, table: String,
       files: Seq[String], dels: Seq[String],
@@ -1421,9 +1499,8 @@ object Snapshots {
       val (hit, plain) = files.partition(p => touched(normPath(p)))
       if (hit.isEmpty) withFile(reader(files))
       else {
-        val resolved0 = PositionDeletes.subtract(
-          PositionDeletes.withRowIdentity(reader(hit)),
-          PositionDeletes.deleteSide(spark, table, dels),
+        val resolved0 = PositionDeletes.live(spark,
+          PositionDeletes.withRowIdentity(reader(hit)), dels,
           keepIdentity = fileColumn.isDefined)
         val resolved = fileColumn match {
           case Some(c) => resolved0
@@ -1732,11 +1809,8 @@ object Snapshots {
         readTableFiles(spark, table, affected))
       val fromLive =
         if (fromDeletes.isEmpty) scan
-        else PositionDeletes.subtract(scan,
-          PositionDeletes.deleteSide(spark, table, fromDeletes),
-          keepIdentity = true)
-      return PositionDeletes.matched(fromLive,
-          PositionDeletes.deleteSide(spark, table, newSidecars))
+        else PositionDeletes.live(spark, scan, fromDeletes, keepIdentity = true)
+      return PositionDeletes.matched(spark, fromLive, newSidecars)
         .withColumn("_change_type", lit("delete"))
     }
     // both sides resolve their add-versions at `to` ON PURPOSE: a
@@ -1804,14 +1878,19 @@ object Snapshots {
           else {
             val fromLive = resolved(affectedEq, fromDeletes, fromEqDeletes)
             val keys = eqKeyColumns(spark, newEq)
-            val newEqFrame = newEq.map { case (_, p) => readInferred(spark, Seq(p)) }
-              .reduce(_ unionByName _)
             // scope predicate vacuous by the driver-side proof above;
             // keys are NULL-free by upsertEq's contract, so === is exact
-            Some(fromLive.join(
-              org.apache.spark.sql.functions.broadcast(newEqFrame),
-              keys.map(k => fromLive(k) === newEqFrame(k)).reduce(_ && _),
-              "left_semi"))
+            Some(eqKeySet(spark, newEq, keys, fromLive.schema) match {
+              case Some(set) =>
+                fromLive.filter(eqKeyDeleted(keys, set, lit(Long.MinValue)))
+              case None =>
+                val newEqFrame = newEq.map { case (_, p) => readInferred(spark, Seq(p)) }
+                  .reduce(_ unionByName _)
+                fromLive.join(
+                  org.apache.spark.sql.functions.broadcast(newEqFrame),
+                  keys.map(k => fromLive(k) === newEqFrame(k)).reduce(_ && _),
+                  "left_semi")
+            })
           }
         val addedRows =
           if (added.isEmpty) None
@@ -2299,8 +2378,9 @@ object Snapshots {
     * a single data file. The matched rows' (file, row-ordinal)
     * identities are written to a small parquet sidecar and the new
     * manifest references it alongside the untouched data files; reads
-    * of this and later versions subtract the positions with an
-    * anti-join over exactly the touched files ([[PositionDeletes]]).
+    * of this and later versions subtract the positions from exactly the
+    * touched files ([[PositionDeletes.live]]: a scan predicate while the
+    * positions fit the delete bound, an anti-join above it).
     *
     * Scale posture (the reason this exists next to the COW
     * [[deleteWhere]]): COW's commit cost is ∝ the BYTES of every file
@@ -2337,8 +2417,7 @@ object Snapshots {
     val scan = PositionDeletes.withRowIdentity(
       readTableFiles(spark, table, candidates))
     val live = if (dels.isEmpty) scan
-      else PositionDeletes.subtract(scan,
-        PositionDeletes.deleteSide(spark, table, dels), keepIdentity = true)
+      else PositionDeletes.live(spark, scan, dels, keepIdentity = true)
     // SQL delete semantics: predicate NULL = survive, so only TRUE rows
     // are recorded
     val matched = live
@@ -2348,8 +2427,8 @@ object Snapshots {
     // ONE pass: encode + write the sidecar straight off the probe scan.
     // The former localCheckpoint + distinct-collect pair re-materialized
     // the matched set just to learn the touched-file list — which the
-    // written sidecar itself records, readable back in one tiny
-    // (memoizing) job. 5 jobs → 3 per MOR delete.
+    // written sidecar itself records, readable back on the driver. The
+    // delete runs the write's 2 jobs and no other.
     val f = fs(spark, table)
     val delDir = new Path(s"$table/deletes/${java.util.UUID.randomUUID}")
     // DELETION-VECTOR sidecar (default): one row per touched data file,
@@ -2378,9 +2457,9 @@ object Snapshots {
       .filter(_.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
     // the touched-file set (the publish conflict guard + the read
-    // path's anti-join scope) reads back from the sidecar just written
-    // — file_path-only projection of a KB-scale file, and the call
-    // itself populates the referenced-files memo the first read needs
+    // path's delete scope) reads back from the sidecar just written —
+    // a driver read of a KB-scale file, no job, and the call itself
+    // fills the sidecar-summary memo the first read needs
     val touchedFiles = PositionDeletes.referencedDataFiles(spark, sidecars)
     if (touchedFiles.isEmpty) { // nothing matched: no version bump
       f.delete(delDir, true)
@@ -2573,7 +2652,7 @@ object Snapshots {
   private def eqHitFilesOneKeySet(spark: SparkSession, table: String,
       v: Long, candidates: Seq[String], dels: Seq[String],
       eqs: Seq[(Long, String)]): Seq[String] = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
+    import org.apache.spark.sql.functions.broadcast
     def norm(p: String) = normPath(p)
     val addV = fileAddVersions(spark, table, v)
     val maxScope = eqs.map(_._1).max
@@ -2581,9 +2660,7 @@ object Snapshots {
     if (inScope0.isEmpty) return Nil
     val fsys = fs(spark, table)
     val keys = eqKeyColumns(spark, eqs)
-    val eqFrame = eqs.map { case (scope, p) =>
-      readInferred(spark, Seq(p)).withColumn(EqScopeCol, lit(scope)) }
-      .reduce(_ unionByName _)
+    val eqFrame = eqSideFrame(spark, eqs)
     // STATS-PRUNED probe: the sidecar key sets are broadcast-size by
     // the read path's own envelope, so when they stay under the IN-list
     // cap an IN predicate per key column prunes the in-scope candidates
@@ -2619,9 +2696,12 @@ object Snapshots {
     if (inScope.isEmpty) return Nil
     val withV = withAddVersions(spark, table, inScope, dels,
       readTableFiles(spark, table, _), addV)
-    val cond = keys.map(c => withV(c) === eqFrame(c)).reduce(_ && _) &&
-      withV(EqAddVCol) <= eqFrame(EqScopeCol)
-    val hitStrs = withV.join(broadcast(eqFrame), cond, "left_semi")
+    val hits = eqKeySet(spark, eqs, keys, withV.schema) match {
+      case Some(set) => withV.filter(eqKeyDeleted(keys, set))
+      case None =>
+        withV.join(broadcast(eqFrame), eqJoinCond(withV, eqFrame, keys), "left_semi")
+    }
+    val hitStrs = hits
       .select(EqFileCol).distinct().collect().map(_.getString(0)).toSet
     val byQualified = inScope.map(p =>
       fsys.makeQualified(new Path(p)).toString -> p).toMap
@@ -3346,13 +3426,13 @@ object Snapshots {
     }
     // 2. position sidecars vs the decoded-envelope threshold — the SAME
     // estimate the read path routes on (PositionDeletes.
-    // decodedBytesEstimate: v1 by file length, v2 by the sidecar's
+    // decodedBytesEstimate: v1 by footer row count, v2 by the sidecar's
     // exact per-file `card` column, saturating to Long.MaxValue on any
-    // stat/read failure so a failure FORCES the purge rather than
-    // silently skipping it)
+    // read failure so a failure FORCES the purge rather than silently
+    // skipping it)
     val dels = deleteFiles(spark, table)
     if (dels.nonEmpty) {
-      val decoded = PositionDeletes.decodedBytesEstimate(spark, table, dels)
+      val decoded = PositionDeletes.decodedBytesEstimate(spark, dels)
       val threshold = spark.conf
         .get("graft.snapshot.deleteBroadcastBytes", (64L << 20).toString).toLong
       // decoded > threshold/2, written overflow-free (decoded saturates)

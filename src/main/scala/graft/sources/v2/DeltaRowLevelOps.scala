@@ -151,14 +151,15 @@ private[v2] final case class RowIdentityPartition(
   * surviving file are exactly the file's live rows.
   *
   * Delete application routes on [[PositionDeletes.exceedsBroadcast]]
-  * (the read path's own broadcast threshold): below it the driver loads
-  * the outstanding positions once and ships each file's sorted ordinals
-  * in its partition (one pass, no per-task sidecar reads); above it the
-  * driver holds NOTHING row-scale — it collects only the distinct
-  * (data-file, sidecar) reference pairs (metadata-class: sidecar count
-  * × files touched per sidecar) and each partition reader opens the
-  * sidecars that reference ITS file task-side, the way Iceberg readers
-  * apply delete files. A delete-churn-heavy table with billions of
+  * (the read path's own threshold): below it the driver reads the
+  * outstanding positions once, with no Spark job, and ships each file's
+  * sorted ordinals in its partition (no per-task sidecar reads); above
+  * it the driver holds NOTHING row-scale — it takes only the distinct
+  * (data-file, sidecar) reference pairs from the sidecar summaries
+  * (metadata-class: sidecar count × files touched per sidecar) and each
+  * partition reader opens the sidecars that reference ITS file
+  * task-side, the way Iceberg readers apply delete files. A
+  * delete-churn-heavy table with billions of
   * unpurged positions costs executor memory ∝ one file's deletions,
   * never driver memory (round-8 judge finding: the unconditional driver
   * map OOM'd this path's envelope).
@@ -210,60 +211,34 @@ private[v2] final class RowIdentityScan(
       hadoopConf = spark.sessionState.newHadoopConfWithOptions(options))
     val fsys = new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val taskSide = deletes.nonEmpty &&
-      PositionDeletes.exceedsBroadcast(spark, tablePath, deletes)
-    // BELOW the threshold: deleted ordinals grouped per kept file
-    // driver-side (scheme-insensitive match), shipped in the partitions.
-    // Both sidecar layouts feed the same map — v1 rows collect and
-    // group; v2 deletion vectors collect one (file, dv) row per touched
-    // file and decode driver-side (the threshold already scaled their
-    // bytes by the expansion factor, so this route only runs when the
-    // decoded positions fit comfortably)
-    val deletedByFile: Map[String, Array[Long]] =
-      if (deletes.isEmpty || taskSide) Map.empty
-      else {
-        import org.apache.spark.sql.functions.col
-        val (dvSc, v1Sc) =
-          deletes.partition(PositionDeletes.isDvSidecar(spark, _))
-        val v1Pairs: Array[(String, Long)] =
-          if (v1Sc.isEmpty) Array.empty
-          else spark.read.schema(PositionDeletes.schema).parquet(v1Sc: _*)
-            .select(col(PositionDeletes.FileCol), col(PositionDeletes.PosCol))
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-        val dvPairs: Array[(String, Long)] =
-          if (dvSc.isEmpty) Array.empty
-          else spark.read.schema(graft.sources.DeleteVectors.schema)
-            .parquet(dvSc: _*)
-            .select(col(PositionDeletes.FileCol),
-              col(graft.sources.DeleteVectors.DvCol))
-            .collect().flatMap { r =>
-              val f = r.getString(0)
-              graft.sources.DeleteVectors.decode(r.getAs[Array[Byte]](1))
-                .map(p => (f, p))
-            }
-        (v1Pairs ++ dvPairs)
-          .groupBy(r => new Path(r._1).toUri.getPath)
-          .map { case (k, rs) => k -> rs.map(_._2).sorted.distinct }
-      }
-    // ABOVE the threshold: prune sidecars to the data files they
-    // reference with a DISTRIBUTED distinct over the file_path column —
-    // the collect is (sidecar, touched-file) PAIRS, metadata-class, and
-    // carries the raw spellings each task matches against
+    // BELOW the threshold: the sidecars are read on the driver (no
+    // Spark job) and each kept file's sorted ordinals ship in its
+    // partition (scheme-insensitive match); both layouts arrive as
+    // deletion vectors. ABOVE it (or when the driver read cannot serve
+    // a sidecar) the partitions name the sidecars that reference their
+    // file, from the sidecar summaries — (sidecar, touched-file) pairs,
+    // metadata-class — and each task reads them itself
+    val positions =
+      if (deletes.isEmpty) None else PositionDeletes.positionSet(spark, deletes)
+    val taskSide = deletes.nonEmpty && positions.isEmpty
+    val deletedByFile: Map[String, Array[Long]] = positions match {
+      case None => Map.empty
+      case Some(set) =>
+        set.byFile.toSeq.groupBy { case (raw, _) => new Path(raw).toUri.getPath }
+          .map { case (norm, dvs) =>
+            norm -> graft.sources.PositionSet.ordinals(dvs.flatMap(_._2)) }
+    }
     val sidecarsByFile: Map[String, Array[SidecarSlice]] =
       if (!taskSide) Map.empty
       else {
-        import org.apache.spark.sql.functions.{col, input_file_name}
-        val refs = spark.read.schema(PositionDeletes.schema).parquet(deletes: _*)
-          .select(col(PositionDeletes.FileCol).as("f"),
-            input_file_name().as("sc"))
-          .distinct().collect()
-          .map(r => (r.getString(0), r.getString(1)))
-        val lenOf: Map[String, Long] = refs.map(_._2).distinct.map(p =>
+        val refs = deletes.flatMap(sc =>
+          PositionDeletes.summary(spark, sc).perFile.keys.map(raw => (raw, sc)))
+        val lenOf: Map[String, Long] = deletes.distinct.map(p =>
           p -> fsys.getFileStatus(new Path(p)).getLen).toMap
         refs.groupBy { case (raw, _) => new Path(raw).toUri.getPath }
           .map { case (norm, pairs) =>
             norm -> pairs.groupBy(_._2).map { case (sc, ps) =>
-              SidecarSlice(sc, lenOf(sc), ps.map(_._1).distinct,
+              SidecarSlice(sc, lenOf(sc), ps.map(_._1).distinct.toArray,
                 PositionDeletes.isDvSidecar(spark, sc))
             }.toArray.sortBy(_.path)
           }

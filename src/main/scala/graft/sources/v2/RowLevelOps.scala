@@ -381,8 +381,7 @@ private[v2] final class SnapshotReplaceBatchWrite(
     val conf = spark.sparkContext.hadoopConfiguration
     files.iterator.map { f =>
       try {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
+        val r = graft.sources.FooterSchemas.open(conf, f)
         try r.getRecordCount finally r.close()
       } catch { case scala.util.control.NonFatal(_) => 1L }
     }.sum

@@ -366,31 +366,27 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
                   // only) the version scope the keys subtract under
                   val fsys = new Path(parentPath).getFileSystem(
                     sp.sparkContext.hadoopConfiguration)
-                  def info(p: String): (Long, Long) =
+                  def info(p: String, position: Boolean): (Long, Long) =
                     try {
                       val st = fsys.getFileStatus(new Path(p))
-                      // a v1 sidecar's row count IS its position count;
-                      // a v2 deletion vector reports the recorded
-                      // cardinality sum (one row per touched file)
+                      // a position sidecar reports its decoded position
+                      // count (v1: one row per position; v2: the deletion
+                      // vectors' recorded cardinality sum)
                       val n =
-                        if (graft.sources.PositionDeletes.isDvSidecar(sp, p))
-                          sp.read.parquet(p)
-                            .agg(org.apache.spark.sql.functions.sum(
-                              graft.sources.DeleteVectors.CardCol))
-                            .head.getLong(0)
+                        if (position) graft.sources.PositionDeletes.summary(sp, p).positions
                         else sp.read.parquet(p).count()
                       (n, st.getLen)
                     } catch {
                       case scala.util.control.NonFatal(_) => (-1L, -1L)
                     }
                   val pos = Snapshots.deleteFiles(sp, parentPath, asOf).map { p =>
-                    val (n, size) = info(p)
+                    val (n, size) = info(p, position = true)
                     InternalRow.fromSeq(Seq(UTF8String.fromString(p), n, size,
                       UTF8String.fromString("position"), null))
                   }
                   val eqs = Snapshots.eqDeleteFiles(sp, parentPath, asOf).map {
                     case (scope, p) =>
-                      val (n, size) = info(p)
+                      val (n, size) = info(p, position = false)
                       InternalRow.fromSeq(Seq(UTF8String.fromString(p), n, size,
                         UTF8String.fromString("equality"), scope))
                   }

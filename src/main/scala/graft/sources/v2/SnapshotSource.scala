@@ -1113,8 +1113,8 @@ private[graft] class SnapshotTable(path: String, tableSchema: StructType,
   private[graft] def morState: Option[(String, Long)] = {
     val r = resolveTable()
     // either sidecar kind routes the read through the live-view rewrite
-    // (Snapshots.read resolves both: position anti-join + scoped
-    // equality anti-join)
+    // (Snapshots.read resolves both: position deletes + scoped equality
+    // deletes)
     if (r.deletes.nonEmpty || r.eqDeletes.nonEmpty) Some((r.path, r.version))
     else None
   }

@@ -77,18 +77,18 @@ class MemoSpec extends SparkTestBase {
   /** The engine's memos, each filled by [[populate]]. */
   private def engineMemos: Seq[(String, Memo[_, _])] = Seq(
     "footer schemas" -> FooterSchemas.memo,
-    "sidecar kind" -> PositionDeletes.kindMemo,
-    "DV cardinality" -> PositionDeletes.cardMemo,
+    "sidecar summaries" -> PositionDeletes.summaryMemo,
     "delete side" -> PositionDeletes.sideMemo,
-    "referenced files" -> PositionDeletes.refFilesMemo,
     "add versions" -> Snapshots.addVMemo,
     "eq key sets" -> Snapshots.eqKeySetMemo,
     "eq hits" -> Snapshots.eqHitMemo,
     "delta scan routes" -> RowIdentityScan.routes)
 
   /** A catalog table with an append, a MOR delete (DV sidecar), a
-    * merge-on-read UPDATE, an equality upsert, a read and a change feed
-    * behind it: every engine memo holds entries under its root.
+    * merge-on-read UPDATE, an equality upsert, a read (also one above
+    * the delete bound, whose anti-join memoizes its delete side) and a
+    * change feed behind it: every engine memo holds entries under its
+    * root.
     */
   private def populate(name: String): String = {
     wh
@@ -101,6 +101,10 @@ class MemoSpec extends SparkTestBase {
     Snapshots.upsertEq(spark, t, Seq((4L, "E")).toDF("id", "v"), Seq("id"))
     assert(Snapshots.read(spark, t).select("id", "v").as[(Long, String)]
       .collect().sortBy(_._1).toSeq === Seq((1L, "a"), (3L, "u"), (4L, "E")))
+    try {
+      spark.conf.set("graft.snapshot.deleteBroadcastBytes", "0")
+      assert(Snapshots.read(spark, t).count() === 3L)
+    } finally spark.conf.unset("graft.snapshot.deleteBroadcastBytes")
     assert(Snapshots.changeFeed(spark, t, 2L, Snapshots.versions(spark, t).last)
       .count() === 5L)
     val root = Memo.normPath(t)

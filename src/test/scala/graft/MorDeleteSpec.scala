@@ -405,7 +405,7 @@ class MorDeleteSpec extends SparkTestBase {
     // of KB and would have broadcast 250k decoded rows)
     try {
       spark.conf.set("graft.snapshot.deleteBroadcastBytes", (1L << 20).toString)
-      assert(PositionDeletes.exceedsBroadcast(spark, t, dels),
+      assert(PositionDeletes.exceedsBroadcast(spark, dels),
         "cardinality-based estimate must exceed a 1 MB envelope")
       assert(idsOf(Snapshots.read(spark, t)) === (250001L to 300000L))
       // maintain's step-2 estimate is the same number: the purge fires
@@ -418,7 +418,7 @@ class MorDeleteSpec extends SparkTestBase {
     // under the default 64 MB envelope the same decoded size fits the
     // broadcast route comfortably — a fresh range delete stays cheap
     Snapshots.deleteWhereMor(spark, t, col("id") <= 299000L)
-    assert(!PositionDeletes.exceedsBroadcast(spark, t,
+    assert(!PositionDeletes.exceedsBroadcast(spark,
       Snapshots.deleteFiles(spark, t)))
     assert(idsOf(Snapshots.read(spark, t)) === (299001L to 300000L))
   }
