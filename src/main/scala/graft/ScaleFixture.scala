@@ -120,8 +120,8 @@ object ScaleFixture {
     // (nor may dst live under src, where the stamp walk would see the
     // fixture and endlessly self-invalidate)
     locally {
-      val srcP = new Path(srcDir).toUri.getPath.stripSuffix("/")
-      val dstP = new Path(dstDir).toUri.getPath.stripSuffix("/")
+      val srcP = Memo.normPath(srcDir).stripSuffix("/")
+      val dstP = Memo.normPath(dstDir).stripSuffix("/")
       require(srcP != dstP && !srcP.startsWith(dstP + "/") &&
         !dstP.startsWith(srcP + "/"),
         s"dstDir '$dstDir' overlaps srcDir '$srcDir' — refusing to delete")
@@ -141,7 +141,7 @@ object ScaleFixture {
       val st = srcFs.getFileStatus(p)
       if (st.isDirectory)
         srcFs.listStatus(p).iterator.flatMap(s => walk(s.getPath))
-      else Iterator(s"${p.toUri.getPath}|${st.getModificationTime}|${st.getLen}")
+      else Iterator(s"${Memo.normPath(p.toString)}|${st.getModificationTime}|${st.getLen}")
     }
     val srcStamp = {
       val md = java.security.MessageDigest.getInstance("MD5")

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Memo.normPath
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -40,8 +41,6 @@ object FileStats {
 
   private def fs(spark: SparkSession, table: String) =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[sources] def norm(p: String): String = new Path(p).toUri.getPath
 
   /** Pseudo-column name of the row-count-only sentinel line (a space
     * is illegal in a real field name, so it can never shadow one).
@@ -141,7 +140,7 @@ object FileStats {
         }
       }
       val lines = acc.toSeq.collect { case (name, (tag, mn, mx, nulls, true)) =>
-        Seq(b64(norm(file)), b64(name), tag.toString, rows.toString,
+        Seq(b64(normPath(file)), b64(name), tag.toString, rows.toString,
           nulls.toString,
           Option(mn).map(v => b64(v.toString)).getOrElse(""),
           Option(mx).map(v => b64(v.toString)).getOrElse("")
@@ -153,7 +152,7 @@ object FileStats {
       // real field can have), so COUNT(*) metadata answers and
       // row-count statistics keep covering it
       if (lines.nonEmpty) lines
-      else Seq(Seq(b64(norm(file)), b64(RowsSentinel), "I", rows.toString,
+      else Seq(Seq(b64(normPath(file)), b64(RowsSentinel), "I", rows.toString,
         "0", "", "").mkString("\t"))
     } finally reader.close()
   }
@@ -296,7 +295,7 @@ object FileStats {
       }
     } catch { case scala.util.control.NonFatal(_) => return files }
     val ranged = files.filter { f =>
-      stats.get(norm(f)) match {
+      stats.get(normPath(f)) match {
         case None         => true
         case Some(ranges) => mayMatch(ranges, expr)
       }
@@ -330,7 +329,7 @@ object FileStats {
     val ranged =
       if (stats.isEmpty || filters.isEmpty) files
       else files.filter { f =>
-        stats.get(norm(f)) match {
+        stats.get(normPath(f)) match {
           case None         => true
           case Some(ranges) => filters.forall(mayMatch(ranges, _))
         }

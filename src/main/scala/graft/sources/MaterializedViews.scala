@@ -287,7 +287,7 @@ object MaterializedViews {
       mv: String): Unit = {
     val name = new Path(mv).getName
     require(Snapshots.writeSide(fs(spark, base), mvRefPath(base, name),
-      new Path(mv).toUri.getPath, replace = true),
+      graft.Memo.normPath(mv), replace = true),
       s"failed to register materialized view $name on $base")
   }
 

@@ -274,9 +274,9 @@ private[graft] object PositionDeletes {
   }
 
   /** Exactly the scan rows whose (file, pos) identity `deleteFiles`
-    * record — the change feed's fast path for a pure MOR-delete step
-    * (the deleted pre-images): a scan predicate within the bound, a
-    * semi-join above it. Drops the identity columns.
+    * record — the rows a change-feed step's position sidecars kill or
+    * bring back: a scan predicate within the bound, a semi-join above
+    * it. Drops the identity columns.
     */
   def matched(spark: SparkSession, withIdentity: DataFrame,
       deleteFiles: Seq[String]): DataFrame =

@@ -152,30 +152,34 @@ object Snapshots {
   private val DeleteLinePrefix = "D "
   private val EqLinePrefix = "E "
 
-  private def manifestLines(spark: SparkSession, table: String, v: Long): Seq[String] =
-    manifestText(spark, table, v).linesIterator.drop(1).filter(_.nonEmpty).toSeq
+  /** The one manifest reader: version `v`'s token and every line kind,
+    * from one read of the file.
+    */
+  private def manifest(spark: SparkSession, table: String, v: Long): Manifest = {
+    val lines = manifestText(spark, table, v).linesIterator
+    val token = if (lines.hasNext) lines.next().split(' ').lift(1) else None
+    val body = lines.filter(_.nonEmpty).toVector
+    Manifest(token,
+      body.filterNot(l => l.startsWith(DeleteLinePrefix) || l.startsWith(EqLinePrefix)),
+      body.collect { case l if l.startsWith(DeleteLinePrefix) =>
+        l.drop(DeleteLinePrefix.length) },
+      body.collect { case l if l.startsWith(EqLinePrefix) =>
+        val rest = l.drop(EqLinePrefix.length)
+        val sp = rest.indexOf(' ')
+        (rest.take(sp).toLong, rest.drop(sp + 1))
+      })
+  }
 
   private def manifestFiles(spark: SparkSession, table: String, v: Long): Seq[String] =
-    manifestLines(spark, table, v).filterNot(l =>
-      l.startsWith(DeleteLinePrefix) || l.startsWith(EqLinePrefix))
+    manifest(spark, table, v).files
 
   private[graft] def manifestDeletes(spark: SparkSession, table: String,
       v: Long): Seq[String] =
-    manifestLines(spark, table, v).collect {
-      case l if l.startsWith(DeleteLinePrefix) => l.drop(DeleteLinePrefix.length)
-    }
-
-  private def parseEqLine(l: String): (Long, String) = {
-    val rest = l.drop(EqLinePrefix.length)
-    val sp = rest.indexOf(' ')
-    (rest.take(sp).toLong, rest.drop(sp + 1))
-  }
+    manifest(spark, table, v).deletes
 
   private def manifestEqDeletes(spark: SparkSession, table: String,
       v: Long): Seq[(Long, String)] =
-    manifestLines(spark, table, v).collect {
-      case l if l.startsWith(EqLinePrefix) => parseEqLine(l)
-    }
+    manifest(spark, table, v).eqDeletes
 
   /** The (scope, path) equality-delete sidecars the snapshot AS OF
     * `asOf` references — empty except between an [[upsertEq]] and the
@@ -235,7 +239,10 @@ object Snapshots {
     * skip the O(moved-bytes) diff that would prove it.
     */
   def isMaintenanceCommit(spark: SparkSession, table: String, v: Long): Boolean =
-    commitToken(spark, table, v).exists(t =>
+    isMaintenanceToken(commitToken(spark, table, v))
+
+  private def isMaintenanceToken(token: Option[String]): Boolean =
+    token.exists(t =>
       t.startsWith("compact-of-v") || t.startsWith("zorder-of-v") ||
         t.startsWith("purge-of-v") || t.startsWith("purge-eq-of-v") ||
         t.startsWith("binpack-of-v"))
@@ -354,8 +361,8 @@ object Snapshots {
     * its data-file, position-delete and equality-delete lines.
     */
   private final case class Manifest(token: Option[String],
-      files: Iterable[String], deletes: Iterable[String] = Nil,
-      eqDeletes: Iterable[(Long, String)] = Nil)
+      files: Seq[String], deletes: Seq[String] = Nil,
+      eqDeletes: Seq[(Long, String)] = Nil)
 
   /** The one manifest header writer: `v<N>[ <token>]` (tokens are single
     * words — [[commitToken]] splits the header on spaces).
@@ -909,29 +916,19 @@ object Snapshots {
     claimNext(spark, table, "restore") { vs =>
       require(vs.contains(v), s"version $v not in $vs")
       val head = vs.last
-      val files = manifestFiles(spark, table, v)
-      val dels = manifestDeletes(spark, table, v)
-      // equality lines restore verbatim too: their scopes are absolute
-      // versions <= v over exactly v's file set, so the restored view
-      // is v's resolved view bit-for-bit
-      val eqs = manifestEqDeletes(spark, table, v)
       // semantic no-op: the head already carries exactly v's file AND
       // sidecar sets (v == head, or a restore to v already landed) —
       // re-issuing the restore after a success or a crash publishes
-      // nothing. Restoring across a MOR delete carries v's own D lines
-      // verbatim: the restored view is exactly v's resolved view.
-      def norm(p: String) = normPath(p)
+      // nothing. Otherwise v's data, position (D) and equality (E)
+      // lines restore verbatim: E scopes are absolute versions <= v over
+      // exactly v's file set, so the restored view is v's resolved view
+      // bit-for-bit.
+      val (m, h) = (manifest(spark, table, v), manifest(spark, table, head))
+      def same[A, K](a: Seq[A], b: Seq[A])(key: A => K) = a.map(key).toSet == b.map(key).toSet
       val token = s"restore-of-v$v-over-v$head"
-      if (head == v ||
-          (manifestFiles(spark, table, head).map(norm).toSet ==
-            files.map(norm).toSet &&
-           manifestDeletes(spark, table, head).map(norm).toSet ==
-            dels.map(norm).toSet &&
-           manifestEqDeletes(spark, table, head).map { case (s0, p) =>
-             (s0, norm(p)) }.toSet ==
-            eqs.map { case (s0, p) => (s0, norm(p)) }.toSet)) Left(head)
-      else committedVersionFor(spark, table, token)
-        .toLeft(Manifest(Some(token), files, dels, eqs))
+      if (same(h.files, m.files)(normPath) && same(h.deletes, m.deletes)(normPath) &&
+          same(h.eqDeletes, m.eqDeletes)(e => (e._1, normPath(e._2)))) Left(head)
+      else committedVersionFor(spark, table, token).toLeft(m.copy(token = Some(token)))
     }
 
   /** Transactional small-file compaction: rewrite the CURRENT snapshot
@@ -1184,19 +1181,14 @@ object Snapshots {
     * step of every read path (data files, position-delete sidecars,
     * equality-delete sidecars with their scopes).
     */
-  private def resolvedLists(spark: SparkSession, table: String,
+  private[sources] def resolvedLists(spark: SparkSession, table: String,
       asOf: Option[Long]): (Long, Seq[String], Seq[String], Seq[(Long, String)]) = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val v = asOf.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    val lines = manifestLines(spark, table, v)
-    (v,
-      lines.filterNot(l =>
-        l.startsWith(DeleteLinePrefix) || l.startsWith(EqLinePrefix)),
-      lines.collect { case l if l.startsWith(DeleteLinePrefix) =>
-        l.drop(DeleteLinePrefix.length) },
-      lines.collect { case l if l.startsWith(EqLinePrefix) => parseEqLine(l) })
+    val m = manifest(spark, table, v)
+    (v, m.files, m.deletes, m.eqDeletes)
   }
 
   /** Schema-less parquet read of the engine's OWN immutable files,
@@ -1332,7 +1324,6 @@ object Snapshots {
   private def applyEqDeletes(spark: SparkSession, table: String, v: Long,
       files: Seq[String], dels: Seq[String], eqs: Seq[(Long, String)],
       reader: Seq[String] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
     val addV = fileAddVersions(spark, table, v)
     val maxScope = eqs.map(_._1).max
     // unknown files (never in a retained manifest — impossible outside
@@ -1347,16 +1338,32 @@ object Snapshots {
     val keys = eqKeyColumns(spark, eqs)
     require(keys.forall(sample.columns.contains),
       s"equality-delete keys $keys not all present in the table schema")
-    val withV = withAddVersions(spark, table, affected, dels, reader, addV)
-    val resolved = (eqKeySet(spark, eqs, keys, withV.schema) match {
-      case Some(set) => withV.filter(!eqKeyDeleted(keys, set))
+    val withV = withAddVersions(spark, table,
+      liveView(spark, table, affected, dels, reader, fileColumn = Some(EqFileCol)),
+      EqFileCol, affected, addV)
+    val resolved = eqRows(spark, withV, eqs, deleted = false).drop(EqFileCol, EqAddVCol)
+    if (clean.isEmpty) resolved
+    else liveView(spark, table, clean, dels, reader).unionByName(resolved)
+  }
+
+  /** The rows of `view` (carrying [[EqAddVCol]]) that `eqs` delete, or
+    * with `deleted = false` the rows they keep: the scan predicate when
+    * the key rows fit on the driver ([[eqKeySet]]), otherwise a join
+    * against the sidecars with their scopes, broadcast within the bound.
+    */
+  private def eqRows(spark: SparkSession, view: DataFrame,
+      eqs: Seq[(Long, String)], deleted: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    val keys = eqKeyColumns(spark, eqs)
+    eqKeySet(spark, eqs, keys, view.schema) match {
+      case Some(set) =>
+        view.filter(if (deleted) eqKeyDeleted(keys, set) else !eqKeyDeleted(keys, set))
       case None =>
         val eqFrame = eqSideFrame(spark, eqs)
         val eqSide = if (eqFits(spark, eqs)) broadcast(eqFrame) else eqFrame
-        withV.join(eqSide, eqJoinCond(withV, eqSide, keys), "left_anti")
-    }).drop(EqFileCol, EqAddVCol)
-    if (clean.isEmpty) resolved
-    else liveView(spark, table, clean, dels, reader).unionByName(resolved)
+        view.join(eqSide, eqJoinCond(view, eqSide, keys),
+          if (deleted) "left_semi" else "left_anti")
+    }
   }
 
   /** The union of the equality sidecars with their scopes — the delete
@@ -1441,33 +1448,31 @@ object Snapshots {
       (keys.map(org.apache.spark.sql.functions.col) :+ addV).map(GraftShim.expression), set))
   }
 
-  /** The live view of `files` with each row's source file
-    * ([[EqFileCol]]) and that file's ADD VERSION ([[EqAddVCol]]) — the
-    * inputs of every equality-scope comparison. The add-version map is
-    * driver-held; under `graft.snapshot.addVMapLiteralMaxFiles` entries
-    * it attaches as a MAP-LITERAL lookup (one projection, zero extra
-    * exchanges — the former per-read broadcast of a tiny file→version
-    * frame was a whole AQE stage job of pure overhead), above it as the
-    * broadcast join (a map literal over 10⁵ files would bloat the plan).
+  /** `base`, a scan of `files` whose `fileCol` holds each row's
+    * `_metadata.file_path`, with that file's ADD VERSION
+    * ([[EqAddVCol]]) — the input of every equality-scope comparison.
+    * The add-version map is driver-held; under
+    * `graft.snapshot.addVMapLiteralMaxFiles` entries it attaches as a
+    * MAP-LITERAL lookup (one projection, zero extra exchanges — the
+    * former per-read broadcast of a tiny file→version frame was a whole
+    * AQE stage job of pure overhead), above it as the broadcast join (a
+    * map literal over 10⁵ files would bloat the plan).
     */
   private def withAddVersions(spark: SparkSession, table: String,
-      affected: Seq[String], dels: Seq[String],
-      reader: Seq[String] => DataFrame,
+      base: DataFrame, fileCol: String, files: Seq[String],
       addV: Map[String, Long]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, element_at, typedLit}
     val fsys = fs(spark, table)
-    val entries = affected.map(p =>
+    val entries = files.map(p =>
       fsys.makeQualified(new Path(p)).toString -> addV(normPath(p)))
-    val base = liveView(spark, table, affected, dels, reader,
-      fileColumn = Some(EqFileCol))
     val cap = spark.conf
       .get("graft.snapshot.addVMapLiteralMaxFiles", "4096").toInt
     if (entries.size <= cap)
       base.withColumn(EqAddVCol,
-        element_at(typedLit(entries.toMap), col(EqFileCol)))
+        element_at(typedLit(entries.toMap), col(fileCol)))
     else {
       import spark.implicits._
-      base.join(broadcast(entries.toDF(EqFileCol, EqAddVCol)), Seq(EqFileCol))
+      base.join(broadcast(entries.toDF(fileCol, EqAddVCol)), Seq(fileCol))
     }
   }
 
@@ -1538,6 +1543,63 @@ object Snapshots {
       fs0 => readInferred(spark, fs0)).filter(predicate)
   }
 
+  /** The committed versions `from`..`to` of `table`, ascending: the
+    * chain every feed walks. Both bounds must be retained.
+    */
+  private def chainOf(spark: SparkSession, table: String, from: Long,
+      to: Long): Seq[Long] = {
+    val vs = versions(spark, table)
+    require(vs.contains(from) && vs.contains(to) && from <= to,
+      s"need committed versions $from <= $to in $vs")
+    vs.filter(v => v >= from && v <= to)
+  }
+
+  /** One step of the version walk, `from` -> `to`: the data files the
+    * step removed, added and carried (paths compared normalized), both
+    * ends' position and equality sidecar lists, and whether `to` is a
+    * row-preserving maintenance commit (compact / z-order / bin-pack /
+    * either purge, by its commit token).
+    */
+  private[sources] final case class Step(from: Long, to: Long,
+      maintenance: Boolean,
+      removed: Seq[String], added: Seq[String], carried: Seq[String],
+      fromDeletes: Seq[String], toDeletes: Seq[String],
+      fromEqDeletes: Seq[(Long, String)], toEqDeletes: Seq[(Long, String)]) {
+    private def eqKey(e: (Long, String)) = (e._1, normPath(e._2))
+    def deletesOnlyFrom: Seq[String] = onlyIn(fromDeletes, toDeletes)(normPath)
+    def deletesOnlyTo: Seq[String] = onlyIn(toDeletes, fromDeletes)(normPath)
+    def eqOnlyFrom: Seq[(Long, String)] = onlyIn(fromEqDeletes, toEqDeletes)(eqKey)
+    def eqOnlyTo: Seq[(Long, String)] = onlyIn(toEqDeletes, fromEqDeletes)(eqKey)
+    def deletesChanged: Boolean = deletesOnlyFrom.nonEmpty || deletesOnlyTo.nonEmpty
+    def eqChanged: Boolean = eqOnlyFrom.nonEmpty || eqOnlyTo.nonEmpty
+    /** No data file removed and no sidecar changed: the step only appended. */
+    def appendOnly: Boolean = removed.isEmpty && !deletesChanged && !eqChanged
+  }
+
+  private def onlyIn[A, K](xs: Seq[A], ys: Seq[A])(key: A => K): Seq[A] = {
+    val other = ys.map(key).toSet
+    xs.filterNot(x => other(key(x)))
+  }
+
+  /** THE VERSION-STEP WALK: each adjacent pair of `chain` as a [[Step]],
+    * every manifest read once. [[changes]], [[changeFeed]] (one
+    * from -> to step), [[changeFeedByVersion]] and both streaming
+    * sources consume it, each with its own skip policy.
+    */
+  private[sources] def steps(spark: SparkSession, table: String,
+      chain: Seq[Long]): Seq[Step] = {
+    val ms = chain.distinct.map(v => v -> manifest(spark, table, v)).toMap
+    val normed = ms.map { case (v, m) => v -> m.files.map(normPath).toSet }
+    chain.sliding(2).collect { case Seq(a, b) =>
+      val (ma, mb) = (ms(a), ms(b))
+      Step(a, b, isMaintenanceToken(mb.token),
+        removed = ma.files.filterNot(p => normed(b)(normPath(p))),
+        added = mb.files.filterNot(p => normed(a)(normPath(p))),
+        carried = ma.files.filter(p => normed(b)(normPath(p))),
+        ma.deletes, mb.deletes, ma.eqDeletes, mb.eqDeletes)
+    }.toSeq
+  }
+
   /** File-granular change-data-feed: the rows ADDED between committed
     * versions `from` and `to`, read directly from the data files each
     * APPEND step introduced. No anti-join, no full-table diff — at
@@ -1556,36 +1618,21 @@ object Snapshots {
     * that's [[changeFeed]]'s job.
     */
   def changes(spark: SparkSession, table: String, from: Long, to: Long): DataFrame = {
-    val vs = versions(spark, table)
-    require(vs.contains(from) && vs.contains(to) && from <= to,
-      s"need committed versions $from <= $to in $vs")
-    val chain = vs.filter(v => v >= from && v <= to)
-    val filesOf = chain.map(v => v -> manifestFiles(spark, table, v)).toMap
-    val deletesOf = chain.map(v =>
-      v -> manifestDeletes(spark, table, v).map(normPath)).toMap
-    val eqOf = chain.map(v =>
-      v -> manifestEqDeletes(spark, table, v).map(e => (e._1, normPath(e._2)))).toMap
-    val added = chain.sliding(2).flatMap {
-      case Seq(a, b) =>
-        val beforeN = filesOf(a).map(normPath).toSet
-        val after = filesOf(b)
-        if (beforeN.subsetOf(after.map(normPath).toSet) &&
-            deletesOf(a) == deletesOf(b) && eqOf(a) == eqOf(b))
-          after.filterNot(p => beforeN(normPath(p)))
-        else if (isMaintenanceCommit(spark, table, b)) Seq.empty
-        else if (deletesOf(a) != deletesOf(b))
-          throw new IllegalArgumentException(
-            s"history v$a -> v$b includes a merge-on-read DELETE — not " +
-              "append-only; use changeFeed")
-        else if (eqOf(a) != eqOf(b))
-          throw new IllegalArgumentException(
-            s"history v$a -> v$b includes an equality-delete upsert — " +
-              "not append-only; use changeFeed (it feeds the upsert as " +
-              "insert + pre-image delete pairs)")
-        else throw new IllegalArgumentException(
-          s"history v$a -> v$b is not append-only (files were removed)")
-      case _ => Seq.empty
-    }.toSeq
+    val added = steps(spark, table, chainOf(spark, table, from, to)).flatMap { s =>
+      if (s.appendOnly) s.added
+      else if (s.maintenance) Seq.empty
+      else if (s.deletesChanged)
+        throw new IllegalArgumentException(
+          s"history v${s.from} -> v${s.to} includes a merge-on-read DELETE — not " +
+            "append-only; use changeFeed")
+      else if (s.eqChanged)
+        throw new IllegalArgumentException(
+          s"history v${s.from} -> v${s.to} includes an equality-delete upsert — " +
+            "not append-only; use changeFeed (it feeds the upsert as " +
+            "insert + pre-image delete pairs)")
+      else throw new IllegalArgumentException(
+        s"history v${s.from} -> v${s.to} is not append-only (files were removed)")
+    }
     // read() carries the empty-manifest guard (an empty-DataFrame commit
     // lists no files, and zero-path spark.read.parquet cannot infer schema)
     if (added.isEmpty) read(spark, table, Some(to)).limit(0)
@@ -1625,23 +1672,33 @@ object Snapshots {
     * files). An equality-delete UPSERT feeds its exact CDC semantics:
     * batch rows as inserts, the replaced pre-images as deletes.
     *
-    * Scale posture: the diff NEVER reads carried files it doesn't have
-    * to. A file in both manifests whose applicable sidecars did not
-    * change contributes identical rows to both sides of the multiset
-    * difference and cancels algebraically — (C ⊎ A) ∖ (C ⊎ R) = A ∖ R —
-    * so the scan set is: files the DML removed (R) or added (A), plus
-    * carried files a CHANGED sidecar actually touches (position: the
-    * sidecar's referenced files; equality: the key-hit probe over
-    * in-scope candidates). On a 100 TB table a small merge or upsert
-    * touches a handful of files and the feed costs exactly those files,
-    * not a two-snapshot anti-join over the table. The EXCEPT ALL itself
-    * is one hash-partitioned count-compare over the touched rows.
+    * The algebra, one for every step shape. Split the data files into
+    * R (removed), A (added) and C (carried). A carried file holds the
+    * same physical rows at both ends; only their liveness can differ,
+    * and only if a sidecar in the symmetric difference of the two ends'
+    * sidecar sets reaches it — the TOUCHED files T ⊆ C (position: the
+    * changed sidecars' referenced files; equality: the key-hit probe
+    * over in-scope carried files). With
+    *   gone = the from-live rows of T that a sidecar only at `to` kills,
+    *   back = the to-live rows of T that a sidecar only at `from` kills,
+    * and U the rows live at both ends,
+    *   live(from) = U ⊎ live_from(R) ⊎ gone,
+    *   live(to)   = U ⊎ live_to(A) ⊎ back,
+    * so U cancels in the multiset difference and the feed is the
+    * tagged diff of live_to(A) ⊎ back against live_from(R) ⊎ gone.
+    * Position kills match the row identity (`_metadata.file_path`,
+    * `row_index`), equality kills the key and the file's add-version,
+    * through the same predicate and anti-join routes as a read. When
+    * one side is empty by its file and sidecar lists, the other is
+    * tagged directly, with no aggregation: a MOR delete step is its
+    * killed pre-images, a restore across one the rows it brings back.
+    * Untouched carried files are never read, so a small DML on a large
+    * table costs the files it touched; a COW merge's rewritten files
+    * still enter the diff whole (R and A).
     */
   def changeFeed(spark: SparkSession, table: String, from: Long,
       to: Long): DataFrame = {
-    val vs = versions(spark, table)
-    require(vs.contains(from) && vs.contains(to) && from <= to,
-      s"need committed versions $from <= $to in $vs")
+    val chain = chainOf(spark, table, from, to)
     // a range covered entirely by consecutive maintenance rewrites
     // (compact/z-order) is row-preserving end to end — skip the
     // O(moved-bytes) diff that would prove the feed empty. The gap
@@ -1649,26 +1706,10 @@ object Snapshots {
     // history (retained versions are always contiguous), but a future
     // non-prefix retention policy must not turn this skip into a
     // silently swallowed DML commit.
-    val between = vs.filter(v => v > from && v <= to)
-    val gapFree = (from +: between).sliding(2).forall {
-      case Seq(a, b) => b == a + 1
-      case _         => true
-    }
-    if (between.nonEmpty && gapFree &&
-        between.forall(isMaintenanceCommit(spark, table, _)))
-      return emptyFeed(spark, table, to)
-    val before = manifestFiles(spark, table, from)
-    val after  = manifestFiles(spark, table, to)
-    val beforeN = before.map(normPath).toSet
-    val afterN  = after.map(normPath).toSet
-    diffFeed(spark, table, to,
-      removed = before.filterNot(p => afterN(normPath(p))),
-      added   = after.filterNot(p => beforeN(normPath(p))),
-      fromDeletes = manifestDeletes(spark, table, from),
-      toDeletes   = manifestDeletes(spark, table, to),
-      carried     = before.filter(p => afterN(normPath(p))),
-      fromEqDeletes = manifestEqDeletes(spark, table, from),
-      toEqDeletes   = manifestEqDeletes(spark, table, to))
+    if (chain.size > 1 && chain.last - chain.head == chain.size - 1 &&
+        chain.tail.forall(isMaintenanceCommit(spark, table, _)))
+      emptyFeed(spark, table, to)
+    else diffFeed(spark, table, steps(spark, table, Seq(from, to)).head)
   }
 
   /** PER-COMMIT change feed (Delta's `table_changes` shape): the union
@@ -1684,10 +1725,7 @@ object Snapshots {
   def changeFeedByVersion(spark: SparkSession, table: String, from: Long,
       to: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val vs = versions(spark, table)
-    require(vs.contains(from) && vs.contains(to) && from <= to,
-      s"need committed versions $from <= $to in $vs")
-    val chain = vs.filter(v => v >= from && v <= to)
+    val chain = chainOf(spark, table, from, to)
     // plan-size envelope: one unioned subplan per step — a poll-window
     // range (the streaming source's shape) is fine, a whole-history
     // walk is a driver-plan explosion. Consume wide ranges in windows.
@@ -1697,126 +1735,56 @@ object Snapshots {
       s"changeFeedByVersion v$from -> v$to spans ${chain.size - 1} " +
         s"commits (> $maxCommits) — consume the range in windows, or " +
         "raise graft.snapshot.feedMaxCommits")
-    // one manifest read per version (the streaming source's pattern),
-    // not two per adjacent pair; add-version walks are memoized
-    def norm(p: String) = normPath(p)
-    val filesOf = chain.map(v => v -> manifestFiles(spark, table, v)).toMap
-    val delsOf  = chain.map(v => v -> manifestDeletes(spark, table, v)).toMap
-    val eqOf    = chain.map(v => v -> manifestEqDeletes(spark, table, v)).toMap
-    val steps = chain.sliding(2).flatMap {
-      case Seq(a, b) if b == a + 1 && isMaintenanceCommit(spark, table, b) =>
-        None
-      case Seq(a, b) =>
-        val beforeN = filesOf(a).map(norm).toSet
-        val afterN  = filesOf(b).map(norm).toSet
-        Some(diffFeed(spark, table, b,
-          removed = filesOf(a).filterNot(p => afterN(norm(p))),
-          added   = filesOf(b).filterNot(p => beforeN(norm(p))),
-          fromDeletes = delsOf(a), toDeletes = delsOf(b),
-          carried = filesOf(a).filter(p => afterN(norm(p))),
-          fromEqDeletes = eqOf(a), toEqDeletes = eqOf(b))
-          .withColumn("_commit_version", lit(b)))
-      case _ => None
-    }.toSeq
-    if (steps.isEmpty)
-      emptyFeed(spark, table, to).withColumn("_commit_version", lit(to)).limit(0)
-    else steps.reduce(_ unionByName _)
+    stepFeeds(spark, table, chain)
+      .map { case (v, df) => df.withColumn("_commit_version", lit(v)) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(emptyFeed(spark, table, to)
+        .withColumn("_commit_version", lit(to)).limit(0))
   }
 
+  /** Each step of `chain` with its feed, tagged by the step's version —
+    * what [[changeFeedByVersion]] and the streaming change-feed source
+    * union. A maintenance step directly after its parent is
+    * row-preserving and skipped (the +1 check is defensive against a
+    * future non-prefix retention hiding a DML commit in the gap).
+    */
+  private[sources] def stepFeeds(spark: SparkSession, table: String,
+      chain: Seq[Long]): Seq[(Long, DataFrame)] =
+    steps(spark, table, chain).collect {
+      case s if !(s.maintenance && s.to == s.from + 1) =>
+        s.to -> diffFeed(spark, table, s)
+    }
+
   /** Empty feed frame carrying the `to`-snapshot's schema (+ tag). */
-  private[sources] def emptyFeed(spark: SparkSession, table: String,
+  private def emptyFeed(spark: SparkSession, table: String,
       to: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
     read(spark, table, Some(to)).limit(0)
       .withColumn("_change_type", lit("insert")).limit(0)
   }
 
-  /** The multiset diff of two file sets, tagged insert/delete — the
-    * core of [[changeFeed]], exposed on precomputed file lists so the
-    * streaming CDF source can walk a version chain with ONE manifest
-    * read per version instead of two per adjacent pair.
-    */
-  private[sources] def diffFeed(spark: SparkSession, table: String, to: Long,
-      removed: Seq[String], added: Seq[String],
-      fromDeletes: Seq[String] = Nil, toDeletes: Seq[String] = Nil,
-      carried: Seq[String] = Nil,
-      fromEqDeletes: Seq[(Long, String)] = Nil,
-      toEqDeletes: Seq[(Long, String)] = Nil): DataFrame = {
+  /** The feed of one [[Step]]: the [[changeFeed]] algebra. */
+  private def diffFeed(spark: SparkSession, table: String, s: Step): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    // MERGE-ON-READ awareness, exact at touched-files cost: each side
-    // is resolved under ITS OWN sidecar set, and a CARRIED data file
-    // whose applicable sidecars changed across the range (a MOR delete
-    // landed, or a restore took one back) re-reads on BOTH sides — its
-    // unchanged rows cancel in the multiset diff and exactly the
-    // position-subtracted (or resurrected) rows surface as
-    // delete/insert. Files untouched by any sidecar change still never
-    // read.
-    val fromDelN = fromDeletes.map(normPath).toSet
-    val toDelN = toDeletes.map(normPath).toSet
-    val changedSidecars =
-      fromDeletes.filterNot(p => toDelN(normPath(p))) ++
-        toDeletes.filterNot(p => fromDelN(normPath(p)))
+    val changedDeletes = s.deletesOnlyFrom ++ s.deletesOnlyTo
     val affected =
-      if (changedSidecars.isEmpty || carried.isEmpty) Seq.empty[String]
+      if (changedDeletes.isEmpty || s.carried.isEmpty) Seq.empty[String]
       else {
-        val tgt = PositionDeletes.referencedDataFiles(spark, changedSidecars)
+        val tgt = PositionDeletes.referencedDataFiles(spark, changedDeletes)
           .map(normPath).toSet
-        carried.filter(p => tgt(normPath(p)))
+        s.carried.filter(p => tgt(normPath(p)))
       }
-    // EQUALITY-delete awareness, same algebra, keyed probe: a carried
-    // file's live rows can only differ across the range if a sidecar
-    // in the symmetric difference SUBTRACTS from it — it is in the
-    // changed sidecar's scope AND contains a matching live key (the
-    // purge probe, at key-column-scan cost over in-scope candidates).
-    // An upsert step then feeds exactly its CDC semantics: the batch's
-    // files surface as inserts, the replaced pre-images as deletes; a
-    // purge cancels algebraically (rewritten hit files appear on both
-    // sides fully resolved).
-    val eqFromSet = fromEqDeletes.map(e => (e._1, normPath(e._2))).toSet
-    val eqToSet = toEqDeletes.map(e => (e._1, normPath(e._2))).toSet
-    val changedEq =
-      fromEqDeletes.filterNot(e => eqToSet((e._1, normPath(e._2)))) ++
-        toEqDeletes.filterNot(e => eqFromSet((e._1, normPath(e._2))))
+    val changedEq = s.eqOnlyFrom ++ s.eqOnlyTo
     val affectedEq =
-      if (changedEq.isEmpty || carried.isEmpty) Seq.empty[String]
+      if (changedEq.isEmpty || s.carried.isEmpty) Seq.empty[String]
       else {
-        val already = (affected ++ removed).map(normPath).toSet
-        eqHitFiles(spark, table, to,
-          carried.filterNot(p => already(normPath(p))), toDeletes, changedEq)
+        val already = affected.map(normPath).toSet
+        eqHitFiles(spark, table, s.to,
+          s.carried.filterNot(p => already(normPath(p))), s.toDeletes, changedEq)
       }
-    // FAST PATH — a pure position-delete step (the MOR DELETE commit
-    // shape): no files added or removed, no equality sidecars anywhere
-    // in the pair, and every from-side sidecar still present at `to`
-    // (sidecars were only ADDED). Then live(to) ⊆ live(from) as
-    // multisets, so the generic two-sided EXCEPT ALL reduces EXACTLY
-    // to "the from-live rows the NEW sidecars kill": inserts are
-    // impossible, and the deletes are a (file,pos) semi-join of the
-    // from-live view against the new sidecars' decoded positions.
-    // Row position is a unique identity, so this emits the same value
-    // rows at the same multiplicities as the EXCEPT ALL algebra —
-    // while scanning the affected files ONCE (vs four times) and
-    // paying zero aggregation exchanges (vs two), the difference the
-    // per-commit feed walk and the streaming CDF source pay per MOR
-    // delete in the chain. Pinned equivalent to the generic algebra by
-    // MorDeleteSpec ("fast path == generic EXCEPT ALL algebra").
-    if (removed.isEmpty && added.isEmpty && changedSidecars.nonEmpty &&
-        fromEqDeletes.isEmpty && toEqDeletes.isEmpty &&
-        fromDelN.subsetOf(toDelN) &&
-        spark.conf.get("graft.snapshot.feedFastPath", "true").toBoolean) {
-      if (affected.isEmpty) return emptyFeed(spark, table, to)
-      val newSidecars = toDeletes.filterNot(p => fromDelN(normPath(p)))
-      val scan = PositionDeletes.withRowIdentity(
-        readTableFiles(spark, table, affected))
-      val fromLive =
-        if (fromDeletes.isEmpty) scan
-        else PositionDeletes.live(spark, scan, fromDeletes, keepIdentity = true)
-      return PositionDeletes.matched(spark, fromLive, newSidecars)
-        .withColumn("_change_type", lit("delete"))
-    }
-    // both sides resolve their add-versions at `to` ON PURPOSE: a
-    // file's add version is its FIRST manifest appearance, identical
-    // whether walked to `from` or `to` for any file present at either
-    // endpoint — and one walk (memoized) serves both sides
+    val touched = affected ++ affectedEq
+    // add-versions resolve at `to` for both ends: a file's add version
+    // is its first manifest appearance, the same from either end
     def resolved(files: Seq[String], dels: Seq[String],
         eqs: Seq[(Long, String)]): DataFrame =
       // table-aware read (not raw readFiles): across a RENAME COLUMN
@@ -1825,88 +1793,23 @@ object Snapshots {
       // instead of mis-aligning two epochs' physical labels
       if (eqs.isEmpty)
         liveView(spark, table, files, dels, readTableFiles(spark, table, _))
-      else applyEqDeletes(spark, table, to, files, dels, eqs,
+      else applyEqDeletes(spark, table, s.to, files, dels, eqs,
         readTableFiles(spark, table, _))
-    // FAST PATH 2 — a pure EQUALITY-UPSERT step (the upsertEq commit
-    // shape): no files removed, position sidecars unchanged, equality
-    // sidecars only ADDED. Then live(to) = (live(from) ∖ killed) ⊎
-    // added-rows, where killed = the from-live rows of the key-hit
-    // files whose keys a NEW sidecar records — so the generic
-    // two-sided EXCEPT ALL over the two fully-resolved views reduces
-    // EXACTLY to
-    //   inserts = added-rows ∖ killed, deletes = killed ∖ added-rows
-    // (multiset identities (A∖K ⊎ B) ∖ A = B ∖ K and
-    // A ∖ ((A∖K) ⊎ B) = K ∖ B, both for K ⊆ A). The affected files
-    // scan ONCE (into the semi-join) instead of twice through two
-    // resolved views, the EXCEPT ALL pair runs over batch-plus-killed
-    // rows instead of every live row of the affected files, and the
-    // to-side addV/eq broadcasts drop out entirely. Guards: one key
-    // set across the new sidecars (multi-upsert endpoint ranges can
-    // mix sets across a purge boundary — but a purge removes files,
-    // failing `removed.isEmpty`, so this is belt-and-braces), and a
-    // driver-side proof that every affected file sits inside every new
-    // sidecar's scope (true for any file carried from `from`, since a
-    // sidecar published inside the range has scope ≥ from ≥ addV;
-    // exotic histories fall back to the generic algebra). Equivalence
-    // pinned by EqDeleteSpec's fast-path-vs-generic case.
-    val eqFastPath = removed.isEmpty && changedSidecars.isEmpty &&
-      changedEq.nonEmpty &&
-      fromEqDeletes.forall(e => eqToSet((e._1, normPath(e._2)))) &&
-      spark.conf.get("graft.snapshot.feedFastPath", "true").toBoolean && {
-        val newEq = toEqDeletes.filterNot(e => eqFromSet((e._1, normPath(e._2))))
-        newEq.map(e => eqSidecarKeys(spark, e._2)).distinct.size == 1 && {
-          val addV = fileAddVersions(spark, table, to)
-          val minScope = newEq.map(_._1).min
-          val maxScope = newEq.map(_._1).max
-          affectedEq.forall(p =>
-            addV.getOrElse(normPath(p), Long.MaxValue) <= minScope) &&
-          // every ADDED file must be exempt from every new sidecar, or
-          // "inserts = added rows" would resurrect rows an in-range
-          // later upsert killed (a multi-upsert endpoint range: the
-          // second sidecar's scope covers the first batch's files) —
-          // single steps always pass (addV = to > scope = to-1)
-          added.forall(p => addV.getOrElse(normPath(p), 0L) > maxScope)
-        }
-      }
-    val remAll = removed ++ affected ++ affectedEq
-    val addAll = added ++ affected ++ affectedEq
-    val (remDf, addDf) =
-      if (eqFastPath) {
-        val newEq = toEqDeletes.filterNot(e => eqFromSet((e._1, normPath(e._2))))
-        val killed =
-          if (affectedEq.isEmpty) None
-          else {
-            val fromLive = resolved(affectedEq, fromDeletes, fromEqDeletes)
-            val keys = eqKeyColumns(spark, newEq)
-            // scope predicate vacuous by the driver-side proof above;
-            // keys are NULL-free by upsertEq's contract, so === is exact
-            Some(eqKeySet(spark, newEq, keys, fromLive.schema) match {
-              case Some(set) =>
-                fromLive.filter(eqKeyDeleted(keys, set, lit(Long.MinValue)))
-              case None =>
-                val newEqFrame = newEq.map { case (_, p) => readInferred(spark, Seq(p)) }
-                  .reduce(_ unionByName _)
-                fromLive.join(
-                  org.apache.spark.sql.functions.broadcast(newEqFrame),
-                  keys.map(k => fromLive(k) === newEqFrame(k)).reduce(_ && _),
-                  "left_semi")
-            })
-          }
-        val addedRows =
-          if (added.isEmpty) None
-          else Some(readTableFiles(spark, table, added))
-        (killed, addedRows)
-      } else {
-        (if (remAll.isEmpty) None
-         else Some(resolved(remAll, fromDeletes, fromEqDeletes)),
-         if (addAll.isEmpty) None
-         else Some(resolved(addAll, toDeletes, toEqDeletes)))
-      }
+    def side(files: Seq[String], dels: Seq[String], eqs: Seq[(Long, String)],
+        killDels: Seq[String], killEqs: Seq[(Long, String)]): Option[DataFrame] =
+      (Option.when(files.nonEmpty)(resolved(files, dels, eqs)) ++
+        Option.when(touched.nonEmpty && (killDels.nonEmpty || killEqs.nonEmpty))(
+          flipped(spark, table, s.to, touched, dels, eqs, killDels, killEqs)))
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+    val remDf = side(s.removed, s.fromDeletes, s.fromEqDeletes,
+      s.deletesOnlyTo, s.eqOnlyTo)
+    val addDf = side(s.added, s.toDeletes, s.toEqDeletes,
+      s.deletesOnlyFrom, s.eqOnlyFrom)
     (remDf, addDf) match {
       case (None, None) =>
         // untouched range (from == to, or pure-metadata history): empty
         // feed with the to-snapshot's schema
-        emptyFeed(spark, table, to)
+        emptyFeed(spark, table, s.to)
       case _ =>
         // union schema in to-side order; absent columns NULL-fill, but
         // a column present on BOTH sides with a changed type is
@@ -1922,15 +1825,40 @@ object Snapshots {
               "evolution is not well-defined — read the two snapshots " +
               "directly instead")
         val union = addS ++ remS.filterNot(f => addS.exists(_.name == f.name))
-        val add = addDf.map(alignTo(_, union))
-        val rem = remDf.map(alignTo(_, union))
-        (rem, add) match {
+        (remDf.map(alignTo(_, union)), addDf.map(alignTo(_, union))) match {
           case (Some(r), Some(a)) => diffTagged(a, r)
           case (None, Some(a)) => a.withColumn("_change_type", lit("insert"))
           case (Some(r), None) => r.withColumn("_change_type", lit("delete"))
           case _ => throw new IllegalStateException("unreachable")
         }
     }
+  }
+
+  /** The rows of `files`' live view under (`dels`, `eqs`) that the
+    * position sidecars `killDels` or the equality sidecars `killEqs`
+    * subtract: a touched carried file's liveness flip (the feed's
+    * `gone` and `back`). A row both would subtract counts once.
+    */
+  private def flipped(spark: SparkSession, table: String, v: Long,
+      files: Seq[String], dels: Seq[String], eqs: Seq[(Long, String)],
+      killDels: Seq[String], killEqs: Seq[(Long, String)]): DataFrame = {
+    import PositionDeletes.{MetaFile, MetaPos}
+    val scan = PositionDeletes.withRowIdentity(readTableFiles(spark, table, files))
+    val withV =
+      if (eqs.isEmpty && killEqs.isEmpty) scan
+      else withAddVersions(spark, table, scan, MetaFile, files,
+        fileAddVersions(spark, table, v))
+    val posLive =
+      if (dels.isEmpty) withV
+      else PositionDeletes.live(spark, withV, dels, keepIdentity = true)
+    val live = if (eqs.isEmpty) posLive else eqRows(spark, posLive, eqs, deleted = false)
+    val byPos = Option.when(killDels.nonEmpty)(
+      PositionDeletes.matched(spark, live, killDels))
+    val byEq = Option.when(killEqs.nonEmpty)(eqRows(spark,
+      if (killDels.isEmpty) live
+      else PositionDeletes.live(spark, live, killDels, keepIdentity = true),
+      killEqs, deleted = true))
+    (byPos ++ byEq).map(_.drop(MetaFile, MetaPos, EqAddVCol)).reduce(_ unionByName _)
   }
 
   /** The two-sided EXCEPT ALL of the feed algebra in ONE aggregation:
@@ -2042,7 +1970,7 @@ object Snapshots {
     } else {
       import spark.implicits._
       import org.apache.spark.sql.functions.{col, udf}
-      val normU = udf((p: String) => new Path(p).toUri.getPath)
+      val normU = udf((p: String) => normPath(p))
       val hit = files.toDF("orig")
         .withColumn("__n", normU(col("orig")))
         .join(probe.select(normU(col("__file")).as("__n")).distinct(),
@@ -2694,8 +2622,10 @@ object Snapshots {
         }
       } catch { case scala.util.control.NonFatal(_) => inScope0 }
     if (inScope.isEmpty) return Nil
-    val withV = withAddVersions(spark, table, inScope, dels,
-      readTableFiles(spark, table, _), addV)
+    val withV = withAddVersions(spark, table,
+      liveView(spark, table, inScope, dels, readTableFiles(spark, table, _),
+        fileColumn = Some(EqFileCol)),
+      EqFileCol, inScope, addV)
     val hits = eqKeySet(spark, eqs, keys, withV.schema) match {
       case Some(set) => withV.filter(eqKeyDeleted(keys, set))
       case None =>

@@ -224,7 +224,7 @@ private[v2] final class RowIdentityScan(
     val deletedByFile: Map[String, Array[Long]] = positions match {
       case None => Map.empty
       case Some(set) =>
-        set.byFile.toSeq.groupBy { case (raw, _) => new Path(raw).toUri.getPath }
+        set.byFile.toSeq.groupBy { case (raw, _) => graft.Memo.normPath(raw) }
           .map { case (norm, dvs) =>
             norm -> graft.sources.PositionSet.ordinals(dvs.flatMap(_._2)) }
     }
@@ -235,7 +235,7 @@ private[v2] final class RowIdentityScan(
           PositionDeletes.summary(spark, sc).perFile.keys.map(raw => (raw, sc)))
         val lenOf: Map[String, Long] = deletes.distinct.map(p =>
           p -> fsys.getFileStatus(new Path(p)).getLen).toMap
-        refs.groupBy { case (raw, _) => new Path(raw).toUri.getPath }
+        refs.groupBy { case (raw, _) => graft.Memo.normPath(raw) }
           .map { case (norm, pairs) =>
             norm -> pairs.groupBy(_._2).map { case (sc, ps) =>
               SidecarSlice(sc, lenOf(sc), ps.map(_._1).distinct.toArray,
@@ -271,7 +271,7 @@ private[v2] final class RowIdentityScan(
         hadoopConf = spark.sessionState.newHadoopConfWithOptions(options))
     val parts: Array[InputPartition] = files.map { f =>
       val len = fsys.getFileStatus(new Path(f)).getLen
-      val norm = new Path(f).toUri.getPath
+      val norm = graft.Memo.normPath(f)
       RowIdentityPartition(f, RowIdentity.filePathString(fsys, f), len,
         deletedByFile.getOrElse(norm, Array.emptyLongArray),
         sidecarsByFile.getOrElse(norm, Array.empty))

@@ -333,8 +333,6 @@ private[v2] final class SnapshotReplaceBatchWrite(
 
   private val dataDir = s"${op.path}/data/${UUID.randomUUID}"
 
-  private def norm(p: String): String = new Path(p).toUri.getPath
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     // DML-rewritten files carry the table's field-id assignment like
     // every other write (the invariant RENAME/DROP COLUMN rides on)
@@ -362,7 +360,7 @@ private[v2] final class SnapshotReplaceBatchWrite(
     if (added.isEmpty && removedRowCount(spark, removed) == 0L) return
     FileStats.record(spark, op.path, added)
     Snapshots.replaceFiles(spark, op.path, op.pin().version,
-      removed.map(norm).toSet, added,
+      removed.map(graft.Memo.normPath).toSet, added,
       s"sql-${op.command.toString.toLowerCase}", Seq(new Path(dataDir)))
     ()
   }

@@ -396,7 +396,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
                 val fsys = new Path(parentPath).getFileSystem(
                   sp.sparkContext.hadoopConfiguration)
                 Snapshots.dataFiles(sp, parentPath, asOf).map { f =>
-                  val norm = new Path(f).toUri.getPath
+                  val norm = graft.Memo.normPath(f)
                   val nRows: Any = detail.get(norm)
                     .flatMap(_.values.headOption).map(d => Long.box(d.rows)).orNull
                   val size: Long =
@@ -991,8 +991,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     val stage = new Path(src, RenameStageDir)
     fs.delete(stage, true)
     fs.mkdirs(stage)
-    val srcRoot = src.toUri.getPath
-    val dstRoot = dst.toUri.getPath
+    val srcRoot = graft.Memo.normPath(src.toString)
+    val dstRoot = graft.Memo.normPath(dst.toString)
     def readText(pth: Path): String = Snapshots.readSide(fs, pth).getOrElse(
       throw new java.io.FileNotFoundException(s"$pth vanished during rename"))
     def writeText(pth: Path, text: String): Unit =

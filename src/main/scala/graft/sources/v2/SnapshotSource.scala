@@ -224,7 +224,8 @@ class SnapshotProvider extends org.apache.spark.sql.connector.catalog.TableProvi
     val version = asOf.orElse(asOfTs).orElse(asOfTag).getOrElse(
       Snapshots.versions(spark, path).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no committed snapshot in $path")))
-    val files = Snapshots.dataFiles(spark, path, Some(version))
+    val (_, files, deletes, eqDeletes) =
+      Snapshots.resolvedLists(spark, path, Some(version))
     require(files.nonEmpty, s"snapshot v$version of $path lists no data files")
     // ALTER-extended tables read under their declared superset schema
     // (absent columns = typed NULLs; parquet resolves by name)
@@ -240,9 +241,7 @@ class SnapshotProvider extends org.apache.spark.sql.connector.catalog.TableProvi
         spark, options, files,
         Some(graft.sources.FieldIds.strip(t0.schema)),
         classOf[ParquetFileFormat])
-    val r = ResolvedSnapshot(path, version, files, t,
-      Snapshots.deleteFiles(spark, path, Some(version)),
-      Snapshots.eqDeleteFiles(spark, path, Some(version)))
+    val r = ResolvedSnapshot(path, version, files, t, deletes, eqDeletes)
     cached = (key, r)
     r
   }
@@ -399,76 +398,47 @@ private[v2] class SnapshotStreamSource(spark: SparkSession, path: String,
     // merge-on-read sidecars subtract their positions (Snapshots.read),
     // re-tagged streaming via the InternalRow RDD route because the
     // anti-join plan is not a bare relation asStreamingScan can re-tag
-    if (start.isEmpty &&
-        (Snapshots.deleteFiles(spark, path, Some(to)).nonEmpty ||
-          Snapshots.eqDeleteFiles(spark, path, Some(to)).nonEmpty)) {
-      val live = Snapshots.read(spark, path, Some(to))
-        .select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
-          .toIndexedSeq: _*)
-      return org.apache.spark.sql.GraftShim.internalCreateStreamingDataFrame(
-        spark, org.apache.spark.sql.GraftShim.toRdd(live).map(_.copy()), schema)
-    }
     val files = start match {
-      case None => Snapshots.dataFiles(spark, path, Some(to))
+      case None =>
+        val (_, pinned, dels, eqs) = Snapshots.resolvedLists(spark, path, Some(to))
+        if (dels.nonEmpty || eqs.nonEmpty) {
+          val live = Snapshots.read(spark, path, Some(to))
+            .select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
+              .toIndexedSeq: _*)
+          return org.apache.spark.sql.GraftShim.internalCreateStreamingDataFrame(
+            spark, org.apache.spark.sql.GraftShim.toRdd(live).map(_.copy()), schema)
+        }
+        pinned
       case Some(s) =>
         val from = StreamRetention.baseline(spark, path, ver(s), to, failOnDataLoss)
-        // walk the retained version chain pairwise: each step is an
-        // append (before ⊆ after — stream exactly its appended files)
-        // or a change commit (a rewrite replaced files: those rows are
-        // not an append and silently streaming them would re-deliver
-        // every carried row — same refusal contract as
-        // Snapshots.changes(), unless skipChangeCommits opts out).
-        // One manifest read per version: the per-pair before/after
-        // lists come from this map, not re-reads (a catch-up batch
-        // over a long history pays N reads, not 2N).
+        // walk the retained version chain step by step: each step is an
+        // append (stream exactly its appended files) or a change commit
+        // (a rewrite replaced files: those rows are not an append and
+        // silently streaming them would re-deliver every carried row —
+        // same refusal contract as Snapshots.changes(), unless
+        // skipChangeCommits opts out). A MERGE-ON-READ delete (either
+        // sidecar kind) changes no data file, but it is a change commit
+        // all the same, so it is not append-only either.
         val chain = from +: Snapshots.versions(spark, path)
           .filter(v => v > from && v <= to)
-        val filesOf = chain.map(v =>
-          v -> Snapshots.dataFiles(spark, path, Some(v))).toMap
-        val deletesOf = chain.map(v =>
-          v -> Snapshots.deleteFiles(spark, path, Some(v))).toMap
-        val eqOf = chain.map(v =>
-          v -> Snapshots.eqDeleteFiles(spark, path, Some(v))).toMap
-        chain.sliding(2).flatMap {
-          case Seq(a, b) =>
-            // normalized paths (the changeFeed/compact convention):
-            // manifests can carry differently-qualified forms of one
-            // file, and a raw-string compare would make a pure append
-            // look non-append-only and kill the stream spuriously
-            def norm(p: String): String =
-              new org.apache.hadoop.fs.Path(p).toUri.getPath
-            val before = filesOf(a).map(norm).toSet
-            val after = filesOf(b)
-            // a MERGE-ON-READ delete (either sidecar kind) changes no
-            // data file, but it is a change commit all the same —
-            // streaming the step as "zero appended files" would
-            // silently drop the deletion, so the sidecar sets must
-            // match for the append fast path too. An upsertEq step
-            // fails BOTH checks (it adds files AND an E line), so its
-            // appended rows never stream as a plain append.
-            if (before.subsetOf(after.map(norm).toSet) &&
-                deletesOf(a).map(norm).toSet == deletesOf(b).map(norm).toSet &&
-                eqOf(a).map(e => (e._1, norm(e._2))).toSet ==
-                  eqOf(b).map(e => (e._1, norm(e._2))).toSet)
-              after.filterNot(f => before(norm(f)))
-            // a ROW-PRESERVING maintenance rewrite (compact / z-order /
-            // bin-pack / either purge, identified by its commit token)
-            // moved rows between files without changing any — the step
-            // streams nothing, and earlier appends' ORIGINAL files stay
-            // readable because their manifests are retained. A mid-
-            // stream compaction no longer kills every incremental
-            // consumer.
-            else if (Snapshots.isMaintenanceCommit(spark, path, b))
-              Seq.empty
-            else if (skipChangeCommits) Seq.empty
-            else throw new IllegalStateException(
-              s"graft-snapshot stream $path: history v$a -> v$b is not " +
-                "append-only (an overwrite, merge, delete, or compaction " +
-                "landed); restart the stream from the current snapshot, or " +
-                "set .option(\"skipChangeCommits\", \"true\") to stream " +
-                "appends only")
-          case _ => Seq.empty // single-element chain: nothing new
-        }.toSeq
+        Snapshots.steps(spark, path, chain).flatMap { st =>
+          if (st.appendOnly) st.added
+          // a ROW-PRESERVING maintenance rewrite (compact / z-order /
+          // bin-pack / either purge, identified by its commit token)
+          // moved rows between files without changing any — the step
+          // streams nothing, and earlier appends' ORIGINAL files stay
+          // readable because their manifests are retained. A mid-
+          // stream compaction no longer kills every incremental
+          // consumer.
+          else if (st.maintenance) Seq.empty
+          else if (skipChangeCommits) Seq.empty
+          else throw new IllegalStateException(
+            s"graft-snapshot stream $path: history v${st.from} -> v${st.to} is not " +
+              "append-only (an overwrite, merge, delete, or compaction " +
+              "landed); restart the stream from the current snapshot, or " +
+              "set .option(\"skipChangeCommits\", \"true\") to stream " +
+              "appends only")
+        }
     }
     if (files.isEmpty) // a version that appended zero files (empty commit)
       org.apache.spark.sql.GraftShim.internalCreateStreamingDataFrame(
@@ -500,9 +470,10 @@ private[v2] class SnapshotStreamSource(spark: SparkSession, path: String,
   * deleted between polls still surfaces as both events, not as
   * nothing (per-commit granularity, Delta's contract).
   *
-  * The per-step diff reads only each commit's removed/added files
-  * (carried files cancel — changeFeed's contract), so the stream's
-  * cost tracks what each commit touched, never table size. Each batch
+  * The per-step diff reads only each commit's removed and added files
+  * and the carried files whose rows' liveness it flipped (the rest
+  * cancel — changeFeed's contract), so the stream's cost tracks what
+  * each commit touched, never table size. Each batch
   * plan is re-tagged streaming via its InternalRow RDD — computed
   * distributed and lazily when the micro-batch executes (rows copied:
   * the scan reuses row objects).
@@ -538,36 +509,9 @@ private[v2] class SnapshotChangeFeedSource(spark: SparkSession, path: String,
         val from = StreamRetention.baseline(spark, path, ver(s), to, failOnDataLoss)
         val chain = from +: Snapshots.versions(spark, path)
           .filter(v => v > from && v <= to)
-        // one manifest read per version (not two per adjacent pair):
-        // the per-step diffs run on precomputed file lists
-        def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
-        val filesOf = chain.map(v =>
-          v -> Snapshots.dataFiles(spark, path, Some(v))).toMap
-        val deletesOf = chain.map(v =>
-          v -> Snapshots.deleteFiles(spark, path, Some(v))).toMap
-        val eqOf = chain.map(v =>
-          v -> Snapshots.eqDeleteFiles(spark, path, Some(v))).toMap
-        chain.sliding(2).flatMap {
-          // a compaction/z-order/purge step is row-preserving by the
-          // rebase contract — skip the O(moved-bytes) diff that would
-          // prove its feed empty (the +1 check is defensive against any
-          // future non-prefix retention hiding a DML commit in the gap)
-          case Seq(a, b) if b == a + 1 &&
-              Snapshots.isMaintenanceCommit(spark, path, b) => None
-          case Seq(a, b) =>
-            // an equality-delete upsert inside the step feeds through
-            // the keyed diff: batch rows as inserts, replaced
-            // pre-images as deletes (diffFeed's eq-aware probe)
-            val beforeN = filesOf(a).map(norm).toSet
-            val afterN  = filesOf(b).map(norm).toSet
-            Some(Snapshots.diffFeed(spark, path, b,
-              removed = filesOf(a).filterNot(p => afterN(norm(p))),
-              added   = filesOf(b).filterNot(p => beforeN(norm(p))),
-              fromDeletes = deletesOf(a), toDeletes = deletesOf(b),
-              carried = filesOf(a).filter(p => afterN(norm(p))),
-              fromEqDeletes = eqOf(a), toEqDeletes = eqOf(b)))
-          case _ => None
-        }.reduceOption(_ unionByName _)
+        // maintenance steps skip; an equality-delete upsert feeds its
+        // batch rows as inserts and the replaced pre-images as deletes
+        Snapshots.stepFeeds(spark, path, chain).map(_._2).reduceOption(_ unionByName _)
     }
     feed match {
       case Some(df) =>
@@ -1342,7 +1286,7 @@ private[v2] object MetadataAgg {
   def exactRowCount(spark: SparkSession, table: String,
       files: Seq[String]): java.util.OptionalLong = {
     val detail = FileStats.loadDetail(spark, table)
-    val normed = files.map(FileStats.norm)
+    val normed = files.map(graft.Memo.normPath)
     if (normed.forall(detail.contains))
       java.util.OptionalLong.of(
         normed.map(f => detail(f).values.headOption.map(_.rows).getOrElse(0L)).sum)
@@ -1360,7 +1304,7 @@ private[v2] object MetadataAgg {
     if (funcs.isEmpty) return None
     val schema = resolved.table.schema
     val detail = FileStats.loadDetail(spark, resolved.path)
-    val normed = resolved.files.map(FileStats.norm)
+    val normed = resolved.files.map(graft.Memo.normPath)
     if (!normed.forall(detail.contains)) return None
     val perFile = normed.map(detail)
 

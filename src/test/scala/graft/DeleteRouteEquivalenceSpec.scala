@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.Snapshots
+import graft.sources.{PositionDeletes, Snapshots}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
@@ -11,12 +11,15 @@ import org.scalacheck.rng.Seed
 /** The small-delete-file route (sidecars read on the driver, applied as
   * scan predicates) against its oracle, the anti-join route (forced by
   * setting `graft.snapshot.deleteBroadcastBytes` and
-  * `eqDeleteBroadcastBytes` to 0). Each generated history mixes appends,
-  * MOR deletes in both sidecar layouts (stacked on one file, spread over
-  * several, leaving others untouched), equality upserts on a long, a
-  * string and a composite key over data rows with NULL keys, merges and
-  * both purges; every read surface must return the same multiset under
-  * both routes.
+  * `eqDeleteBroadcastBytes` to 0, with the add-version map joined
+  * instead of inlined by `addVMapLiteralMaxFiles` 0). Each generated
+  * history mixes appends, MOR deletes in both sidecar layouts (stacked
+  * on one file, spread over several, leaving others untouched),
+  * equality upserts on a long, a string and a composite key over data
+  * rows with NULL keys, merges, both purges and restores; every read
+  * surface must return the same multiset under both routes, and on
+  * each route every change feed must equal the naive diff of two whole
+  * snapshot reads ([[NaiveFeed]]), which shares none of its algebra.
   */
 class DeleteRouteEquivalenceSpec extends SparkTestBase {
 
@@ -35,7 +38,7 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   }
 
   private val Bounds = Seq("graft.snapshot.deleteBroadcastBytes",
-    "graft.snapshot.eqDeleteBroadcastBytes")
+    "graft.snapshot.eqDeleteBroadcastBytes", "graft.snapshot.addVMapLiteralMaxFiles")
 
   private def antiJoinRoute[A](body: => A): A =
     try { Bounds.foreach(spark.conf.set(_, "0")); body }
@@ -78,12 +81,19 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
 
   private val merge: Gen[Op] = keyedRows(Seq("k1")).map(Merge)
 
-  private val op: Gen[Op] = Gen.frequency(3 -> append, 4 -> morDelete, 4 -> upsert,
-    2 -> merge, 1 -> Gen.const(PurgeDeletes), 1 -> Gen.const(PurgeEq))
+  /** Which earlier commit a restore undoes (see `play`). */
+  private val restore: Gen[Op] = Gen.chooseNum(1, 4).map(Restore)
 
+  private val op: Gen[Op] = Gen.frequency(3 -> append, 4 -> morDelete, 4 -> upsert,
+    2 -> merge, 1 -> Gen.const(PurgeDeletes), 1 -> Gen.const(PurgeEq), 1 -> restore)
+
+  /** Half the histories end by undoing their latest sidecar commit, so
+    * the final step brings the rows it killed back to life.
+    */
   private val history: Gen[Seq[Op]] = for {
     first <- append; n <- Gen.chooseNum(4, 7); rest <- Gen.listOfN(n, op)
-  } yield first +: rest
+    undo <- Gen.oneOf(Seq.empty[Op], Seq(Restore(1)))
+  } yield (first +: rest) ++ undo
 
   private def frame(rows: Rows): DataFrame =
     rows.toDF("k1", "k2", "v")
@@ -117,6 +127,17 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
         if (eqKeys.nonEmpty) Snapshots.purgeEqDeletes(spark, t)
         Snapshots.purgeDeletes(spark, t)
       case PurgeEq => Snapshots.purgeEqDeletes(spark, t)
+      case Restore(back) =>
+        // undo the back-th latest commit that added a sidecar (the
+        // oldest, when there are fewer), so the rows its sidecar killed
+        // come back; with none, go back `back` versions, never to v1,
+        // the CREATE TABLE's empty file
+        val vs = Snapshots.versions(spark, t)
+        val sidecars = vs.map(v => Snapshots.deleteFiles(spark, t, Some(v)).size +
+          Snapshots.eqDeleteFiles(spark, t, Some(v)).size)
+        val undo = vs.indices.drop(1).filter(i => sidecars(i) > sidecars(i - 1)).reverse
+        Snapshots.restore(spark, t, undo.lift(back - 1).orElse(undo.lastOption)
+          .map(i => vs(i - 1)).getOrElse(vs(math.max(1, vs.size - 1 - back))))
     }
     t
   }
@@ -135,17 +156,38 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
         s"feed $a..$b" -> multiset(Snapshots.changeFeed(spark, t, a, b)) }
   }
 
+  /** Every change feed of `t` that differs from the naive diff of its
+    * two snapshots: the whole range, each step, and the whole-range
+    * per-commit feed against the per-step naive diffs.
+    */
+  private def feedsOffNaive(t: String): Seq[String] = {
+    val vs = Snapshots.versions(spark, t)
+    val pairs = (vs.head, vs.last) +: vs.zip(vs.tail)
+    pairs.collect { case (a, b) if multiset(Snapshots.changeFeed(spark, t, a, b)) !=
+        multiset(NaiveFeed(spark, t, a, b)) => s"changeFeed $a..$b" } ++
+      Seq(s"changeFeedByVersion ${vs.head}..${vs.last}").filter { _ =>
+        val cols = Seq("_commit_version", "_change_type", "k1", "k2", "v").map(col)
+        multiset(Snapshots.changeFeedByVersion(spark, t, vs.head, vs.last).select(cols: _*)) !=
+          multiset(NaiveFeed.byVersion(spark, t, vs.head, vs.last).select(cols: _*))
+      }
+  }
+
   test("every read surface agrees between the scan-predicate and the anti-join route") {
     val histories = samples(history, 6, 4100L)
     // the sample covers every op kind and ends with both kinds outstanding
     val kinds = histories.flatten.map(_.getClass.getSimpleName).toSet
-    assert(kinds === Set("Append", "MorDelete", "Upsert", "Merge", "PurgeDeletes$", "PurgeEq$"))
+    assert(kinds === Set("Append", "MorDelete", "Upsert", "Merge", "PurgeDeletes$", "PurgeEq$",
+      "Restore"))
     assert(histories.flatten.collect { case d: MorDelete => d.v1 }.toSet === Set(true, false))
     var outstanding = (0, 0)
     histories.zipWithIndex.foreach { case (ops, i) =>
       val name = s"h$i"
       val t = play(name, ops)
-      val dels = Snapshots.deleteFiles(spark, t)
+      // a position sidecar counts while it references a live file: a
+      // COW merge carries one whose files it rewrote away
+      val live = Snapshots.dataFiles(spark, t).map(Memo.normPath).toSet
+      val dels = Snapshots.deleteFiles(spark, t).filter(d =>
+        PositionDeletes.referencedDataFiles(spark, Seq(d)).exists(f => live(Memo.normPath(f))))
       val eqs = Snapshots.eqDeleteFiles(spark, t)
       outstanding = (outstanding._1 + dels.size.sign, outstanding._2 + eqs.size.sign)
       val predicate = surfaces(name, t)
@@ -153,6 +195,8 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
       predicate.zip(oracle).foreach { case ((what, got), (_, want)) =>
         assert(got === want, s"history $i ($ops): $what differs")
       }
+      assert(feedsOffNaive(t).isEmpty, s"history $i ($ops), predicate route")
+      assert(antiJoinRoute(feedsOffNaive(t)).isEmpty, s"history $i ($ops), anti-join route")
       // each route really ran: the default read plans the predicates,
       // the forced one none
       val plan = planOf(Snapshots.read(spark, t))
@@ -216,4 +260,5 @@ object DeleteRouteEquivalenceSpec {
   private final case class Merge(rows: Rows) extends Op
   private case object PurgeDeletes extends Op
   private case object PurgeEq extends Op
+  private final case class Restore(back: Int) extends Op
 }

@@ -476,13 +476,13 @@ class EqDeleteSpec extends SparkTestBase {
     } finally pool.shutdownNow()
   }
 
-  test("eq feed fast path == generic EXCEPT ALL algebra on upsert steps") {
-    // the fast path reduces an upsert step to inserts = batch ∖ killed,
-    // deletes = killed ∖ batch; the generic path diffs the two fully
-    // resolved views. They must agree — INCLUDING the cancellation case
-    // where a batch row's FULL VALUE equals the pre-image it replaces
-    // (the EXCEPT ALL pair then emits nothing for that row).
-    val t = freshDir("eqfast")
+  test("eq upsert feed == the naive two-snapshot diff on upsert steps") {
+    // the feed finds an upsert step's replaced pre-images by key and
+    // add-version; the reference diffs the two whole snapshots. They
+    // must agree — INCLUDING the cancellation case where a batch row's
+    // FULL VALUE equals the pre-image it replaces (the multiset diff
+    // then emits nothing for that row).
+    val t = freshDir("eqnaive")
     Snapshots.commit((1L to 60L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(3), t)                                          // v1
     Snapshots.deleteWhereMor(spark, t, col("id") > 55)             // v2
@@ -494,32 +494,26 @@ class EqDeleteSpec extends SparkTestBase {
     // stacked: second upsert overlaps the first (key 2) and key 10
     Snapshots.upsertEq(spark, t,
       Seq((2L, "up2b"), (10L, "up10")).toDF("id", "v"), Seq("id"))  // v4
-    def feedRows(from: Long, to: Long, fast: Boolean) = {
-      spark.conf.set("graft.snapshot.feedFastPath", fast.toString)
-      try Snapshots.changeFeedByVersion(spark, t, from, to)
-        .select("_commit_version", "_change_type", "id", "v")
+    def byVersion(df: org.apache.spark.sql.DataFrame) =
+      df.select("_commit_version", "_change_type", "id", "v")
         .as[(Long, String, Long, String)].collect().sorted.toSeq
-      finally spark.conf.unset("graft.snapshot.feedFastPath")
-    }
+    def feedRows(from: Long, to: Long) =
+      byVersion(Snapshots.changeFeedByVersion(spark, t, from, to))
     for ((f, s) <- Seq((2L, 3L), (3L, 4L), (1L, 4L))) {
-      assert(feedRows(f, s, fast = true) === feedRows(f, s, fast = false),
+      assert(feedRows(f, s) === byVersion(NaiveFeed.byVersion(spark, t, f, s)),
         s"range v$f->v$s")
     }
     // the cancellation row never surfaces; a replaced row surfaces as
     // its delete+insert pair
-    val step = feedRows(2L, 3L, fast = true)
+    val step = feedRows(2L, 3L)
     assert(!step.exists(r => r._3 == 3L))
     assert(step.count(r => r._3 == 1L) === 2)
     // endpoint CHANGE FEED (non-adjacent range collapses the chain)
     // agrees too
-    def endpoint(fast: Boolean) = {
-      spark.conf.set("graft.snapshot.feedFastPath", fast.toString)
-      try Snapshots.changeFeed(spark, t, 1L, 4L)
-        .select("_change_type", "id", "v")
-        .as[(String, Long, String)].collect().sorted.toSeq
-      finally spark.conf.unset("graft.snapshot.feedFastPath")
-    }
-    assert(endpoint(fast = true) === endpoint(fast = false))
+    def endpoint(df: org.apache.spark.sql.DataFrame) =
+      df.select("_change_type", "id", "v").as[(String, Long, String)].collect().sorted.toSeq
+    assert(endpoint(Snapshots.changeFeed(spark, t, 1L, 4L)) ===
+      endpoint(NaiveFeed(spark, t, 1L, 4L)))
   }
 
   test("changeFeedByVersion is the audit view: intermediates attributed, not canceled") {

@@ -92,4 +92,42 @@ class JobBudgetSpec extends SparkTestBase {
     val (_, merge) = jobs(Snapshots.merge(spark, t, updates, "id"))
     assert(merge <= 8, s"merge ran $merge jobs")
   }
+
+  // Feed budgets. The upsert and endpoint feeds each spend two jobs on
+  // the key-hit probe (which carried files an equality sidecar reaches)
+  // and two on the diff.
+
+  test("a per-step MOR-delete feed runs at most 1 job") {
+    val t = table("feedmor")
+    Snapshots.deleteWhereMor(spark, t, col("id") % 11 === 0)
+    val v = Snapshots.deleteWhereMor(spark, t, col("id") % 13 === 0)
+    val (rows, n) = jobs(Snapshots.changeFeed(spark, t, v - 1, v).collect())
+    assert(rows.length ===
+      ((1L to 20000L) ++ (30001L to 30500L)).count(i => i % 13 == 0 && i % 11 != 0))
+    assert(n <= 1, s"MOR-delete feed ran $n jobs")
+  }
+
+  test("a per-step equality-upsert feed runs at most 4 jobs") {
+    val t = table("feedeq")
+    val v = Snapshots.upsertEq(spark, t,
+      (1L to 2000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
+    val (rows, n) = jobs(Snapshots.changeFeedByVersion(spark, t, v - 1, v).collect())
+    assert(rows.length === 4000)
+    assert(n <= 4, s"upsert feed ran $n jobs")
+  }
+
+  test("an endpoint feed across append, MOR delete, merge and upsert runs at most 4 jobs") {
+    val t = table("feedmix")
+    val from = Snapshots.versions(spark, t).last
+    Snapshots.commit((50001L to 50500L).map(i => (i, "A", i)).toDF("id", "st", "v")
+      .coalesce(1), t)
+    Snapshots.deleteWhereMor(spark, t, col("id") % 7 === 0 && col("st") === "O")
+    Snapshots.merge(spark, t,
+      ((1L to 1000L) ++ (40001L to 40200L)).map(i => (i, "M", i)).toDF("id", "st", "v"), "id")
+    val to = Snapshots.upsertEq(spark, t,
+      (19001L to 21000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
+    val (rows, n) = jobs(Snapshots.changeFeed(spark, t, from, to).collect())
+    assert(rows.nonEmpty)
+    assert(n <= 4, s"endpoint feed ran $n jobs")
+  }
 }

@@ -8,7 +8,9 @@ import graft.SourceLint.{codeLines, sites}
   * [[graft.Memo]]: one bound policy, and one table-scoped invalidation
   * that DROP and RENAME reach through `Memo.invalidateTable`. A
   * hand-rolled concurrent map or clear-all eviction elsewhere in
-  * `src/main` fails here: build a `Memo` instead.
+  * `src/main` fails here: build a `Memo` instead. Memo keys and
+  * invalidation compare paths through `Memo.normPath`, so it is also
+  * the one path normalizer.
   */
 class MemoLintSpec extends AnyFunSuite {
 
@@ -29,6 +31,14 @@ class MemoLintSpec extends AnyFunSuite {
       case (f, d, l) if ClearAll.findFirstIn(l).isDefined => s"$f:$d"
     }
     assert(hits.isEmpty)
+  }
+
+  test("paths are normalized only by Memo.normPath") {
+    // a java.nio path is built from the scheme-free path too
+    val hits = codeLines.collect {
+      case (f, d, l) if l.contains(".toUri.getPath") && !l.contains("Paths.get(") => s"$f:$d"
+    }
+    assert(hits.toSet === Set("Memo.scala:normPath"))
   }
 
   test("only DROP and RENAME invalidate, through the one table-scoped call") {

@@ -147,32 +147,32 @@ class MorDeleteSpec extends SparkTestBase {
     assert(e.getMessage.contains("merge-on-read"))
   }
 
-  test("feed fast path == generic EXCEPT ALL algebra on stacked MOR deletes") {
-    // duplicate VALUES on purpose: the fast path joins by (file, pos)
-    // identity while the generic path diffs value multisets — they must
-    // agree even when distinct positions hold identical rows
-    val t = freshDir("fastpath")
-    Snapshots.commit((1L to 300L).toDF("id")
-      .withColumn("v", col("id") % 10), t)          // v1
-    Snapshots.deleteWhereMor(spark, t, col("id") > 250)          // v2
+  test("MOR-delete feed == the naive two-snapshot diff on stacked MOR deletes") {
+    // duplicate ROWS on purpose: the feed finds the killed rows by
+    // (file, pos) identity while the reference diffs value multisets —
+    // they must agree when distinct positions hold identical rows, and
+    // when a later append brings one copy of a killed row back
+    val t = freshDir("stacked")
+    Snapshots.commit((1L to 300L).toDF("i")
+      .select((col("i") % 100).as("id"), (col("i") % 10).as("v")), t)  // v1: 3 copies each
+    Snapshots.deleteWhereMor(spark, t, col("id") > 83)           // v2
     Snapshots.deleteWhereMor(spark, t, col("id") % 7 === 0)      // v3 (stacked)
-    def rows(from: Long, to: Long, fast: Boolean) = {
-      spark.conf.set("graft.snapshot.feedFastPath", fast.toString)
-      try Snapshots.changeFeed(spark, t, from, to)
-        .select("_change_type", "id", "v").as[(String, Long, Long)]
-        .collect().sorted.toSeq
-      finally spark.conf.unset("graft.snapshot.feedFastPath")
-    }
+    Snapshots.commit((90L to 95L).toDF("id").withColumn("v", col("id") % 10), t) // v4
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("_change_type", "id", "v").as[(String, Long, Long)].collect().sorted.toSeq
     // step with empty from-side sidecars, step with stacked sidecars,
-    // and the two-step endpoint range
-    for ((f, s) <- Seq((1L, 2L), (2L, 3L), (1L, 3L))) {
-      val fastRows = rows(f, s, fast = true)
-      assert(fastRows === rows(f, s, fast = false), s"range v$f->v$s")
-      assert(fastRows.nonEmpty && fastRows.forall(_._1 == "delete"))
+    // the two-step endpoint range, and ranges across the append
+    for ((f, s) <- Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L), (3L, 4L))) {
+      val feed = sorted(Snapshots.changeFeed(spark, t, f, s))
+      assert(feed === sorted(NaiveFeed(spark, t, f, s)), s"range v$f->v$s")
+      if (s < 4) assert(feed.nonEmpty && feed.forall(_._1 == "delete"))
     }
-    // exact content of the stacked step: %7 rows still live at v2
-    assert(rows(2L, 3L, fast = true).map(_._2) ===
-      (1L to 250L).filter(_ % 7 == 0).sorted)
+    // exact content of the stacked step: every copy of the %7 rows
+    // still live at v2
+    assert(sorted(Snapshots.changeFeed(spark, t, 2L, 3L)).map(_._2) ===
+      (0L to 83L).filter(_ % 7 == 0).flatMap(Seq.fill(3)(_)))
+    // across the append one copy of each of 90-95 cancels
+    assert(sorted(Snapshots.changeFeed(spark, t, 1L, 4L)).count(_._2 == 90L) === 2)
   }
 
   test("restore across a MOR delete resurrects; feed reports the inserts") {
