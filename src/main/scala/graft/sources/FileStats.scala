@@ -1,7 +1,5 @@
 package graft.sources
 
-import graft.Memo.normPath
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -13,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions._
   * Delta/Iceberg stats-pruning shape): per-file column min/max/null
   * stats, collected from the parquet FOOTERS the writer already
   * produced — no second pass over the data — and stored as sidecar
-  * lines under `<table>/stats/`, keyed by file path. Readers prune the
+  * lines under `<table>/stats/`, keyed by the file's entry
+  * ([[TablePaths]]: root-relative under the table root). Readers prune the
   * manifest's file list against a predicate BEFORE the scan, so a
   * selective query on a 100 TB table opens only the files whose ranges
   * can match; row-group pruning inside the surviving files is then the
@@ -47,11 +46,9 @@ object FileStats {
     */
   private[graft] val RowsSentinel = " rows"
 
-  // private[sources]: SnapshotCatalog.renameTable rewrites the sidecar
-  // path keys with the SAME codec (a second copy could drift)
-  private[sources] def b64(s: String): String =
+  private def b64(s: String): String =
     java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private[sources] def unb64(s: String): String =
+  private def unb64(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
 
   /** Read footers of freshly-written `files` and append one stats
@@ -63,12 +60,13 @@ object FileStats {
   def record(spark: SparkSession, table: String, files: Seq[String]): Unit =
     try {
       if (files.isEmpty) return
-      val conf = spark.sparkContext.hadoopConfiguration
       // a footer that cannot be read yields no stats for that file (it
       // will simply never prune) — stats collection must NEVER fail the
       // write that triggered it
+      val tp = TablePaths(spark, table)
       val lines = files.flatMap { f =>
-        try fileLines(conf, f, Some(spark))
+        val entry = tp.relativize(f)
+        try fileLines(spark, f, entry, tp.resolve(entry))
         catch { case scala.util.control.NonFatal(_) => Seq.empty }
       }
       if (lines.isEmpty) return
@@ -82,18 +80,18 @@ object FileStats {
     }
 
   /** One TSV line per (file, supported top-level column):
-    * b64(path) \t b64(col) \t tag \t rows \t nulls \t b64(min) \t b64(max)
+    * b64(entry) \t b64(col) \t tag \t rows \t nulls \t b64(min) \t b64(max)
     * (min/max empty when all values are NULL).
     */
-  private def fileLines(conf: Configuration, file: String,
-      seedSchemas: Option[SparkSession] = None): Seq[String] = {
-    val reader = FooterSchemas.open(conf, file)
+  private def fileLines(spark: SparkSession, file: String, entry: String,
+      readAs: String): Seq[String] = {
+    val reader = FooterSchemas.open(spark.sparkContext.hadoopConfiguration, file)
     try {
       import scala.jdk.CollectionConverters._
       // this loop already holds every fresh file's footer — seed the
-      // FooterSchemas memo so the table's first read never re-opens it
-      seedSchemas.foreach(s =>
-        FooterSchemas.seed(s, file, reader.getFooter.getFileMetaData))
+      // FooterSchemas memo under the path readers resolve the entry to,
+      // so the table's first read never re-opens it
+      FooterSchemas.seed(spark, readAs, reader.getFooter.getFileMetaData)
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
       // (tag, min, max, nulls, statsOk) accumulated across row groups
@@ -140,7 +138,7 @@ object FileStats {
         }
       }
       val lines = acc.toSeq.collect { case (name, (tag, mn, mx, nulls, true)) =>
-        Seq(b64(normPath(file)), b64(name), tag.toString, rows.toString,
+        Seq(b64(entry), b64(name), tag.toString, rows.toString,
           nulls.toString,
           Option(mn).map(v => b64(v.toString)).getOrElse(""),
           Option(mx).map(v => b64(v.toString)).getOrElse("")
@@ -152,7 +150,7 @@ object FileStats {
       // real field can have), so COUNT(*) metadata answers and
       // row-count statistics keep covering it
       if (lines.nonEmpty) lines
-      else Seq(Seq(b64(normPath(file)), b64(RowsSentinel), "I", rows.toString,
+      else Seq(Seq(b64(entry), b64(RowsSentinel), "I", rows.toString,
         "0", "", "").mkString("\t"))
     } finally reader.close()
   }
@@ -176,7 +174,7 @@ object FileStats {
 
   // a null endpoint means an ALL-NULL row group — it contributes no
   // non-null values, so the merge SKIPS it rather than poisoning the
-  // file's range to null (which parseLine would read back as
+  // file's range to null (which parseDetail would read back as
   // allNulls=true and wrongly prune a file that has real values)
   private def minOf(tag: Char, a: Any, b: Any): Any =
     if (a == null) b else if (b == null) a
@@ -185,27 +183,9 @@ object FileStats {
     if (a == null) b else if (b == null) a
     else if (cmp(tag, a, b) >= 0) a else b
 
-  /** All recorded stats for `table`: normalized path → column → range. */
-  def load(spark: SparkSession, table: String): Map[String, Map[String, ColRange]] = {
-    val f = fs(spark, table)
-    val dir = new Path(s"$table/stats")
-    if (!f.exists(dir)) return Map.empty
-    val lines = f.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("stats-"))
-      .flatMap { p =>
-        val in = f.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-    lines.flatMap { line =>
-      try parseLine(line)
-      catch { case scala.util.control.NonFatal(_) => None } // torn line: no stats
-    }.groupBy(_._1)
-      .map { case (p, xs) => p -> xs.map(x => x._2 -> x._3).toMap }
-  }
-
-  private def parseLine(line: String): Option[(String, String, ColRange)] =
-    parseDetail(line).map { case (p, c, _, _, r) => (p, c, r) }
+  /** All recorded stats for `table`: resolved path → column → range. */
+  def load(spark: SparkSession, table: String): Map[String, Map[String, ColRange]] =
+    loadDetail(spark, table).map { case (p, cols) => p -> cols.map { case (c, d) => c -> d.range } }
 
   /** One column's exact footer counters alongside its range: `rows` is
     * the file's total row count (identical across the file's lines),
@@ -216,27 +196,50 @@ object FileStats {
     */
   final case class ColDetail(rows: Long, nulls: Long, range: ColRange)
 
-  /** All recorded stats with exact counters: normalized path → column →
-    * detail. Same sidecar lines as [[load]]; torn lines yield nothing.
+  /** All recorded stats with exact counters: resolved path → column →
+    * detail, each key resolved once ([[TablePaths.resolve]]); torn
+    * lines yield nothing.
     */
   def loadDetail(spark: SparkSession, table: String): Map[String, Map[String, ColDetail]] = {
-    val f = fs(spark, table)
-    val dir = new Path(s"$table/stats")
-    if (!f.exists(dir)) return Map.empty
-    val lines = f.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("stats-"))
-      .flatMap { p =>
-        val in = f.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-    lines.flatMap { line =>
+    val tp = TablePaths(spark, table)
+    statsLines(spark, table).flatMap { case (_, line) =>
       try parseDetail(line)
       catch { case scala.util.control.NonFatal(_) => None }
     }.groupBy(_._1)
       .map { case (p, xs) =>
-        p -> xs.map(x => x._2 -> ColDetail(x._3, x._4, x._5)).toMap
+        tp.resolve(p) -> xs.map(x => x._2 -> ColDetail(x._3, x._4, x._5)).toMap
       }
+  }
+
+  /** Every stats line of `table`, with the name of the file holding it. */
+  private def statsLines(spark: SparkSession, table: String): Seq[(String, String)] = {
+    val f = fs(spark, table)
+    val dir = new Path(s"$table/stats")
+    if (!f.exists(dir)) return Seq.empty
+    f.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("stats-"))
+      .flatMap { p =>
+        val in = f.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(p.getName -> _).toList
+        finally in.close()
+      }
+  }
+
+  /** Carry `from`'s stats to a fork at `to`: each line re-keyed from
+    * `from`'s spelling to `to`'s (the parent's files become absolute
+    * entries of the branch), so pruning keeps working there.
+    */
+  private[sources] def carry(spark: SparkSession, from: String, to: String): Unit = {
+    val (src, dst) = (TablePaths(spark, from), TablePaths(spark, to))
+    val f = fs(spark, to)
+    statsLines(spark, from).groupBy(_._1).foreach { case (name, lines) =>
+      val body = lines.map { case (_, line) =>
+        val cols = line.split("\t", -1)
+        if (cols.length > 1) cols(0) = b64(dst.relativize(src.resolve(unb64(cols(0)))))
+        cols.mkString("\t")
+      }.mkString("", "\n", "\n")
+      Snapshots.writeSide(f, new Path(s"$to/stats/$name"), body, replace = true)
+    }
   }
 
   private def parseDetail(line: String): Option[(String, String, Long, Long, ColRange)] =
@@ -295,7 +298,7 @@ object FileStats {
       }
     } catch { case scala.util.control.NonFatal(_) => return files }
     val ranged = files.filter { f =>
-      stats.get(normPath(f)) match {
+      stats.get(f) match {
         case None         => true
         case Some(ranges) => mayMatch(ranges, expr)
       }
@@ -329,7 +332,7 @@ object FileStats {
     val ranged =
       if (stats.isEmpty || filters.isEmpty) files
       else files.filter { f =>
-        stats.get(normPath(f)) match {
+        stats.get(f) match {
           case None         => true
           case Some(ranges) => filters.forall(mayMatch(ranges, _))
         }

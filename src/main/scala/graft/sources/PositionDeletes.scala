@@ -7,16 +7,18 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** Position-delete sidecars: the MERGE-ON-READ half of the snapshot
   * format's DML (the copy-on-write half is `Snapshots.deleteWhere`).
   *
   * A MOR delete never rewrites a data file. It writes a small parquet
-  * sidecar of `(file_path, pos)` pairs — the absolute data-file path and
-  * the row's ordinal within that file, both taken from Spark's parquet
-  * `_metadata` columns — and publishes a manifest whose `D `-prefixed
+  * sidecar of `(file_path, pos)` pairs — the data file's entry and the
+  * row's ordinal within that file, both taken from Spark's parquet
+  * `_metadata` columns; the entry is relative to the root of the table
+  * whose `deletes/` dir holds the sidecar (`TablePaths.ofSidecar`) —
+  * and publishes a manifest whose `D `-prefixed
   * lines reference the sidecar. Readers subtract the positions from
   * ONLY the data files the sidecars name; every other file reads
   * exactly as before. At 100 TB this is the difference between a
@@ -84,11 +86,11 @@ private[graft] object PositionDeletes {
   /** What one sidecar holds, short of its positions: its layout (v2
     * DELETION VECTOR, one row per data file — [[DeleteVectors]] — or
     * the v1 one-row-per-position layout), its decoded position count,
-    * and how many positions it records per data file, keyed by the raw
-    * `file_path` spelling it recorded.
+    * how many positions it records per data file, keyed by the file's
+    * resolved path, and the distinct `file_path` entries as recorded.
     */
   private[graft] final case class Summary(dv: Boolean, positions: Long,
-      perFile: Map[String, Long])
+      perFile: Map[String, Long], recorded: Seq[String])
 
   /** The one memo of sidecar metadata. Sidecars are immutable under
     * UUID dirs, so the path is a sound key; entries hold counts, never
@@ -117,9 +119,19 @@ private[graft] object PositionDeletes {
           val f = g.getString(0, 0)
           counts(f) = counts.getOrElse(f, 0L) + 1L
         }
-        Summary(dv, if (dv) counts.values.sum else reader.getRecordCount, counts.toMap)
+        val tp = TablePaths.ofSidecar(spark, path)
+        Summary(dv, if (dv) counts.values.sum else reader.getRecordCount,
+          counts.toSeq.groupMapReduce(e => tp.resolve(e._1))(_._2)(_ + _),
+          counts.keys.toSeq)
       }
     }
+
+  /** True when `sidecar` records a row of a file under `tp`'s root by
+    * an absolute path (rows written before the relative rule).
+    */
+  private[graft] def recordsAbsoluteUnder(spark: SparkSession, sidecar: String,
+      tp: TablePaths): Boolean =
+    summary(spark, sidecar).recorded.exists(tp.absoluteUnderRoot)
 
   private[graft] def isDvSidecar(spark: SparkSession, path: String): Boolean =
     summary(spark, path).dv
@@ -161,11 +173,11 @@ private[graft] object PositionDeletes {
     decodedBytesEstimate(spark, deleteFiles) > threshold
   }
 
-  /** The deleted positions of `deleteFiles`, read on the driver — None
-    * above the bound or when a sidecar cannot be read there (the caller
-    * then takes the anti-join). v1 positions are grouped per file and
-    * re-encoded as deletion vectors, so the set ships compact either
-    * way.
+  /** The deleted positions of `deleteFiles`, read on the driver and
+    * keyed by each file's `_metadata.file_path` — None above the bound
+    * or when a sidecar cannot be read there (the caller then takes the
+    * anti-join). v1 positions are grouped per file and re-encoded as
+    * deletion vectors, so the set ships compact either way.
     */
   private[graft] def positionSet(spark: SparkSession,
       deleteFiles: Seq[String]): Option[PositionSet] =
@@ -176,9 +188,10 @@ private[graft] object PositionDeletes {
       def add(f: String, dv: Array[Byte]): Unit =
         dvs.getOrElseUpdate(f, scala.collection.mutable.ArrayBuffer.empty) += dv
       deleteFiles.foreach { p =>
+        val tp = TablePaths.ofSidecar(spark, p)
         if (isDvSidecar(spark, p))
           readOnDriver(spark, p)(eachRow(_, Seq(FileCol, DeleteVectors.DvCol)) { g =>
-            add(g.getString(0, 0), g.getBinary(1, 0).getBytes) })
+            add(tp.idOf(g.getString(0, 0)), g.getBinary(1, 0).getBytes) })
         else {
           val byFile = scala.collection.mutable.HashMap
             .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
@@ -186,7 +199,7 @@ private[graft] object PositionDeletes {
             byFile.getOrElseUpdate(g.getString(0, 0),
               new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong(1, 0)
           })
-          byFile.foreach { case (f, b) => add(f, DeleteVectors.encode(b.result())) }
+          byFile.foreach { case (f, b) => add(tp.idOf(f), DeleteVectors.encode(b.result())) }
         }
       }
       Some(new PositionSet(deleteFiles.sorted, dvs.map { case (f, b) => f -> b.toArray }.toMap))
@@ -209,22 +222,25 @@ private[graft] object PositionDeletes {
 
   private def deleteSide(spark: SparkSession, deleteFiles: Seq[String]): DataFrame =
     sideMemo((spark, deleteFiles.sorted)) {
-      val (dvFiles, v1Files) = deleteFiles.partition(isDvSidecar(spark, _))
-      val v1 = if (v1Files.isEmpty) None
-        else Some(spark.read.schema(schema).parquet(v1Files: _*)
-          .select(col(FileCol).as("__dd_file"), col(PosCol).as("__dd_pos")))
-      val v2 = if (dvFiles.isEmpty) None
-        else {
-          import spark.implicits._
-          Some(spark.read.schema(DeleteVectors.schema).parquet(dvFiles: _*)
-            .select(col(FileCol), col(DeleteVectors.DvCol))
-            .as[(String, Array[Byte])]
-            .flatMap { case (f, b) =>
-              DeleteVectors.decode(b).iterator.map(p => (f, p)) }
-            .toDF("__dd_file", "__dd_pos"))
+      import spark.implicits._
+      // one scan per layout and table root: each sidecar's rows resolve
+      // to `_metadata.file_path` against the root that holds it
+      val frames = deleteFiles.groupBy(p => (isDvSidecar(spark, p), TablePaths.ofSidecar(spark, p)))
+        .toSeq.sortBy(_._2.head).map { case ((dv, tp), files) =>
+          if (!dv) {
+            val id = udf((e: String) => tp.idOf(e))
+            spark.read.schema(schema).parquet(files: _*)
+              .select(id(col(FileCol)).as("__dd_file"), col(PosCol).as("__dd_pos"))
+          } else
+            spark.read.schema(DeleteVectors.schema).parquet(files: _*)
+              .select(col(FileCol), col(DeleteVectors.DvCol))
+              .as[(String, Array[Byte])]
+              .flatMap { case (f, b) =>
+                val id = tp.idOf(f)
+                DeleteVectors.decode(b).iterator.map(p => (id, p)) }
+              .toDF("__dd_file", "__dd_pos")
         }
-      (v1 ++ v2).reduceOption(_ union _).getOrElse {
-        import spark.implicits._
+      frames.reduceOption(_ union _).getOrElse {
         spark.emptyDataset[(String, Long)].toDF("__dd_file", "__dd_pos")
       }
     }
@@ -239,7 +255,9 @@ private[graft] object PositionDeletes {
     deleteFiles.flatMap(summary(spark, _).perFile.keys).distinct
 
   /** Append the `_metadata`-derived (file, pos) identity columns to a
-    * parquet scan — the input of [[live]] and [[matched]].
+    * parquet scan — the input of [[live]] and [[matched]]. The file
+    * column is `_metadata.file_path`, the spelling the delete predicates
+    * key on; a sidecar records it through [[TablePaths.relativizeId]].
     */
   def withRowIdentity(scan: DataFrame): DataFrame = {
     require(!scan.columns.contains(MetaFile) && !scan.columns.contains(MetaPos),

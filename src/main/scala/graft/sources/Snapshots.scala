@@ -33,6 +33,13 @@ import graft.Memo.normPath
   *   mvdef.json                the definition, on a materialized view
   *   .<file>.<uuid>.tmp        an in-flight write (never read)
   *
+  * Every recorded path — manifest lines, position-sidecar rows, stats
+  * keys — is relative to the table root for a file under it
+  * (`data/<uuid>/part-….parquet`) and absolute for a file outside it (a
+  * fork's parent files, and lines written before the relative rule,
+  * which resolve to themselves); [[TablePaths]] owns the spelling. So a
+  * table's directory moves as a whole: RENAME is one directory move.
+  *
   * Every manifest goes through one writer ([[claimManifest]]) and every
   * side file through one reader/writer pair ([[readSide]] /
   * [[writeSide]]): the content lands in a hidden tmp file, then one
@@ -139,8 +146,12 @@ object Snapshots {
     finally in.close()
   }
 
-  // manifest body: one absolute file path per line after the header line
-  // "v<N>[ <token>]" — deliberately line-oriented, no JSON lib. A line
+  // manifest body: one file entry per line after the header line
+  // "v<N>[ <token>]" — deliberately line-oriented, no JSON lib. Entries
+  // follow [[TablePaths]]: a file under the table root is written
+  // root-relative, one outside it (a fork's parent files) absolute, and
+  // an absolute line (every line written before the relative rule)
+  // resolves to itself. A line
   // prefixed "D " references a POSITION-DELETE sidecar (merge-on-read
   // DELETE, see [[PositionDeletes]]); a line prefixed "E <scope> "
   // references an EQUALITY-DELETE sidecar (streaming upsert,
@@ -153,21 +164,44 @@ object Snapshots {
   private val EqLinePrefix = "E "
 
   /** The one manifest reader: version `v`'s token and every line kind,
-    * from one read of the file.
+    * from one read of the file, each entry resolved to its qualified
+    * path ([[TablePaths.resolve]]).
     */
-  private def manifest(spark: SparkSession, table: String, v: Long): Manifest = {
+  private def manifest(spark: SparkSession, table: String, v: Long): Manifest =
+    manifestEntries(spark, table, v, TablePaths(spark, table).resolve)
+
+  /** Version `v`'s lines with `entry` applied to each recorded path. */
+  private def manifestEntries(spark: SparkSession, table: String, v: Long,
+      entry: String => String): Manifest = {
     val lines = manifestText(spark, table, v).linesIterator
     val token = if (lines.hasNext) lines.next().split(' ').lift(1) else None
     val body = lines.filter(_.nonEmpty).toVector
     Manifest(token,
-      body.filterNot(l => l.startsWith(DeleteLinePrefix) || l.startsWith(EqLinePrefix)),
+      body.collect { case l if !l.startsWith(DeleteLinePrefix) &&
+          !l.startsWith(EqLinePrefix) => entry(l) },
       body.collect { case l if l.startsWith(DeleteLinePrefix) =>
-        l.drop(DeleteLinePrefix.length) },
+        entry(l.drop(DeleteLinePrefix.length)) },
       body.collect { case l if l.startsWith(EqLinePrefix) =>
         val rest = l.drop(EqLinePrefix.length)
         val sp = rest.indexOf(' ')
-        (rest.take(sp).toLong, rest.drop(sp + 1))
+        (rest.take(sp).toLong, entry(rest.drop(sp + 1)))
       })
+  }
+
+  /** The retained versions of `table` that record an ABSOLUTE path
+    * under its own root — in a manifest line or in a referenced
+    * position sidecar's rows (lines written before the relative rule).
+    * A directory move would strand them, so RENAME refuses while any
+    * exist.
+    */
+  private[graft] def absoluteUnderRoot(spark: SparkSession,
+      table: String): Seq[Long] = {
+    val tp = TablePaths(spark, table)
+    versions(spark, table).filter { v =>
+      val m = manifestEntries(spark, table, v, identity)
+      (m.files ++ m.deletes ++ m.eqDeletes.map(_._2)).exists(tp.absoluteUnderRoot) ||
+        manifest(spark, table, v).deletes.exists(PositionDeletes.recordsAbsoluteUnder(spark, _, tp))
+    }
   }
 
   private def manifestFiles(spark: SparkSession, table: String, v: Long): Seq[String] =
@@ -370,17 +404,19 @@ object Snapshots {
   private def manifestHeader(v: Long, token: Option[String]): String =
     s"v$v${token.map(" " + _).getOrElse("")}"
 
-  /** Stream a manifest body (header line + one line per entry): at 10⁶
-    * entries a mkString would materialize a second ~100 MB copy of the
-    * list the driver already holds.
+  /** Stream a manifest body (header line + one line per entry, each
+    * path recorded through [[TablePaths.relativize]]): at 10⁶ entries a
+    * mkString would materialize a second ~100 MB copy of the list the
+    * driver already holds.
     */
   private def writeManifestBody(out: java.io.OutputStream, v: Long,
-      m: Manifest): Unit = {
+      m: Manifest, tp: TablePaths): Unit = {
     def line(l: String): Unit = out.write((l + "\n").getBytes("UTF-8"))
     line(manifestHeader(v, m.token))
-    m.files.foreach(line)
-    m.deletes.foreach(p => line(DeleteLinePrefix + p))
-    m.eqDeletes.foreach { case (scope, p) => line(s"$EqLinePrefix$scope $p") }
+    m.files.foreach(p => line(tp.relativize(p)))
+    m.deletes.foreach(p => line(DeleteLinePrefix + tp.relativize(p)))
+    m.eqDeletes.foreach { case (scope, p) =>
+      line(s"$EqLinePrefix$scope ${tp.relativize(p)}") }
   }
 
   /** MANIFEST SEAM: the only writer of `manifest-v<N>`. Claims version
@@ -390,7 +426,7 @@ object Snapshots {
   private def claimManifest(f: FileSystem, table: String, v: Long,
       m: Manifest): Boolean =
     claimFile(f, manifestPath(table, v), replace = false)(
-      writeManifestBody(_, v, m))
+      writeManifestBody(_, v, m, TablePaths(f, table)))
 
   /** The claim-head+1 loop of the head-replacing publishes ([[commit]],
     * CTAS/RTAS, [[restore]]): `next` sees the committed versions and
@@ -924,10 +960,9 @@ object Snapshots {
       // exactly v's file set, so the restored view is v's resolved view
       // bit-for-bit.
       val (m, h) = (manifest(spark, table, v), manifest(spark, table, head))
-      def same[A, K](a: Seq[A], b: Seq[A])(key: A => K) = a.map(key).toSet == b.map(key).toSet
       val token = s"restore-of-v$v-over-v$head"
-      if (same(h.files, m.files)(normPath) && same(h.deletes, m.deletes)(normPath) &&
-          same(h.eqDeletes, m.eqDeletes)(e => (e._1, normPath(e._2)))) Left(head)
+      if (h.files.toSet == m.files.toSet && h.deletes.toSet == m.deletes.toSet &&
+          h.eqDeletes.toSet == m.eqDeletes.toSet) Left(head)
       else committedVersionFor(spark, table, token).toLeft(m.copy(token = Some(token)))
     }
 
@@ -948,7 +983,6 @@ object Snapshots {
     if (commitToken(spark, table, src).exists(_.startsWith("compact-of-"))) src
     else {
       val srcFiles = manifestFiles(spark, table, src)
-      def norm(p: String) = normPath(p)
       // a whole-table compaction rewrites EVERY live file, so it is a
       // field-id ADOPTION point for tables that predate the assignment
       // (writeData stamps once state exists) — after it, metadata-only
@@ -965,12 +999,10 @@ object Snapshots {
         // EVERY src file rewrites through the fully-resolved read(), so
         // position AND equality sidecars fold in and their lines drop —
         // compaction doubles as both purges
-        publishRebase(spark, table, src, srcFiles, srcFiles.map(norm).toSet,
+        publishRebase(spark, table, src, srcFiles, srcFiles.toSet,
           newFiles, "compact", Seq(dataDir), token = Some(s"compact-of-v$src"),
-          removedDeletesNorm =
-            manifestDeletes(spark, table, src).map(norm).toSet,
-          removedEqNorm =
-            manifestEqDeletes(spark, table, src).map(e => norm(e._2)).toSet)
+          removedDeletes = manifestDeletes(spark, table, src).toSet,
+          removedEq = manifestEqDeletes(spark, table, src).map(_._2).toSet)
       } catch {
         // the ADOPTION init must not outlive a failed rewrite: the old
         // unstamped files stayed live, so a surviving state file would
@@ -1066,8 +1098,7 @@ object Snapshots {
         .map(_.getPath.toString).sorted
     }
     FileStats.record(spark, table, added)
-    val removedNorm = groups.flatMap(_._2.map(m => normPath(m._1))).toSet
-    publishRebase(spark, table, src, srcFiles, removedNorm, added,
+    publishRebase(spark, table, src, srcFiles, groups.flatMap(_._2.map(_._1)).toSet, added,
       "binpack", Seq(dataDir), token = Some(s"binpack-of-v$src"))
   }
 
@@ -1123,7 +1154,6 @@ object Snapshots {
         graft.functions.ZOrder.zorder2(scale(xCol, 0), scale(yCol, 2)),
         lit(-1L))
       val srcFiles = manifestFiles(spark, table, src)
-      def norm(p: String) = normPath(p)
       // the Morton layout IS this rewrite's point: a declared write
       // order must not re-cluster it away
       val (newFiles, dataDir) = writeData(
@@ -1131,13 +1161,11 @@ object Snapshots {
         table, applyDeclaredSort = false)
       // df came from read() = the resolved live view; the folded-in
       // sidecars drop with the files they referenced
-      publishRebase(spark, table, src, srcFiles, srcFiles.map(norm).toSet,
+      publishRebase(spark, table, src, srcFiles, srcFiles.toSet,
         newFiles, "zorder", Seq(dataDir),
         token = Some(s"zorder-of-v$src:$xCol,$yCol"),
-        removedDeletesNorm =
-          manifestDeletes(spark, table, src).map(norm).toSet,
-        removedEqNorm =
-          manifestEqDeletes(spark, table, src).map(e => norm(e._2)).toSet)
+        removedDeletes = manifestDeletes(spark, table, src).toSet,
+        removedEq = manifestEqDeletes(spark, table, src).map(_._2).toSet)
     }
   }
 
@@ -1286,8 +1314,7 @@ object Snapshots {
       val m = scala.collection.mutable.HashMap.empty[String, Long]
       vs.filter(_ <= v).sorted.foreach { w =>
         manifestFiles(spark, table, w).foreach { p =>
-          val n = normPath(p)
-          if (!m.contains(n)) m(n) = w
+          if (!m.contains(p)) m(p) = w
         }
       }
       // only the latest history state of a table can be live: any
@@ -1329,7 +1356,7 @@ object Snapshots {
     // unknown files (never in a retained manifest — impossible outside
     // corruption) fall conservatively IN scope
     val (affected, clean) =
-      files.partition(p => addV.getOrElse(normPath(p), 0L) <= maxScope)
+      files.partition(p => addV.getOrElse(p, 0L) <= maxScope)
     if (affected.isEmpty) return liveView(spark, table, files, dels, reader)
     val sample = reader(affected.take(1))
     require(!sample.columns.exists(c =>
@@ -1462,9 +1489,7 @@ object Snapshots {
       base: DataFrame, fileCol: String, files: Seq[String],
       addV: Map[String, Long]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, element_at, typedLit}
-    val fsys = fs(spark, table)
-    val entries = files.map(p =>
-      fsys.makeQualified(new Path(p)).toString -> addV(normPath(p)))
+    val entries = files.map(p => TablePaths.fileId(p) -> addV(p))
     val cap = spark.conf
       .get("graft.snapshot.addVMapLiteralMaxFiles", "4096").toInt
     if (entries.size <= cap)
@@ -1499,9 +1524,8 @@ object Snapshots {
     }
     if (dels.isEmpty) withFile(reader(files))
     else {
-      val touched = PositionDeletes.referencedDataFiles(spark, dels)
-        .map(normPath).toSet
-      val (hit, plain) = files.partition(p => touched(normPath(p)))
+      val touched = PositionDeletes.referencedDataFiles(spark, dels).toSet
+      val (hit, plain) = files.partition(touched)
       if (hit.isEmpty) withFile(reader(files))
       else {
         val resolved0 = PositionDeletes.live(spark,
@@ -1555,7 +1579,7 @@ object Snapshots {
   }
 
   /** One step of the version walk, `from` -> `to`: the data files the
-    * step removed, added and carried (paths compared normalized), both
+    * step removed, added and carried, both
     * ends' position and equality sidecar lists, and whether `to` is a
     * row-preserving maintenance commit (compact / z-order / bin-pack /
     * either purge, by its commit token).
@@ -1565,21 +1589,17 @@ object Snapshots {
       removed: Seq[String], added: Seq[String], carried: Seq[String],
       fromDeletes: Seq[String], toDeletes: Seq[String],
       fromEqDeletes: Seq[(Long, String)], toEqDeletes: Seq[(Long, String)]) {
-    private def eqKey(e: (Long, String)) = (e._1, normPath(e._2))
-    def deletesOnlyFrom: Seq[String] = onlyIn(fromDeletes, toDeletes)(normPath)
-    def deletesOnlyTo: Seq[String] = onlyIn(toDeletes, fromDeletes)(normPath)
-    def eqOnlyFrom: Seq[(Long, String)] = onlyIn(fromEqDeletes, toEqDeletes)(eqKey)
-    def eqOnlyTo: Seq[(Long, String)] = onlyIn(toEqDeletes, fromEqDeletes)(eqKey)
+    def deletesOnlyFrom: Seq[String] = onlyIn(fromDeletes, toDeletes)
+    def deletesOnlyTo: Seq[String] = onlyIn(toDeletes, fromDeletes)
+    def eqOnlyFrom: Seq[(Long, String)] = onlyIn(fromEqDeletes, toEqDeletes)
+    def eqOnlyTo: Seq[(Long, String)] = onlyIn(toEqDeletes, fromEqDeletes)
     def deletesChanged: Boolean = deletesOnlyFrom.nonEmpty || deletesOnlyTo.nonEmpty
     def eqChanged: Boolean = eqOnlyFrom.nonEmpty || eqOnlyTo.nonEmpty
     /** No data file removed and no sidecar changed: the step only appended. */
     def appendOnly: Boolean = removed.isEmpty && !deletesChanged && !eqChanged
   }
 
-  private def onlyIn[A, K](xs: Seq[A], ys: Seq[A])(key: A => K): Seq[A] = {
-    val other = ys.map(key).toSet
-    xs.filterNot(x => other(key(x)))
-  }
+  private def onlyIn[A](xs: Seq[A], ys: Seq[A]): Seq[A] = xs.filterNot(ys.toSet)
 
   /** THE VERSION-STEP WALK: each adjacent pair of `chain` as a [[Step]],
     * every manifest read once. [[changes]], [[changeFeed]] (one
@@ -1589,13 +1609,13 @@ object Snapshots {
   private[sources] def steps(spark: SparkSession, table: String,
       chain: Seq[Long]): Seq[Step] = {
     val ms = chain.distinct.map(v => v -> manifest(spark, table, v)).toMap
-    val normed = ms.map { case (v, m) => v -> m.files.map(normPath).toSet }
+    val sets = ms.map { case (v, m) => v -> m.files.toSet }
     chain.sliding(2).collect { case Seq(a, b) =>
       val (ma, mb) = (ms(a), ms(b))
       Step(a, b, isMaintenanceToken(mb.token),
-        removed = ma.files.filterNot(p => normed(b)(normPath(p))),
-        added = mb.files.filterNot(p => normed(a)(normPath(p))),
-        carried = ma.files.filter(p => normed(b)(normPath(p))),
+        removed = ma.files.filterNot(sets(b)),
+        added = mb.files.filterNot(sets(a)),
+        carried = ma.files.filter(sets(b)),
         ma.deletes, mb.deletes, ma.eqDeletes, mb.eqDeletes)
     }.toSeq
   }
@@ -1770,17 +1790,14 @@ object Snapshots {
     val affected =
       if (changedDeletes.isEmpty || s.carried.isEmpty) Seq.empty[String]
       else {
-        val tgt = PositionDeletes.referencedDataFiles(spark, changedDeletes)
-          .map(normPath).toSet
-        s.carried.filter(p => tgt(normPath(p)))
+        s.carried.filter(PositionDeletes.referencedDataFiles(spark, changedDeletes).toSet)
       }
     val changedEq = s.eqOnlyFrom ++ s.eqOnlyTo
     val affectedEq =
       if (changedEq.isEmpty || s.carried.isEmpty) Seq.empty[String]
       else {
-        val already = affected.map(normPath).toSet
         eqHitFiles(spark, table, s.to,
-          s.carried.filterNot(p => already(normPath(p))), s.toDeletes, changedEq)
+          s.carried.filterNot(affected.toSet), s.toDeletes, changedEq)
       }
     val touched = affected ++ affectedEq
     // add-versions resolve at `to` for both ends: a file's add version
@@ -1943,8 +1960,8 @@ object Snapshots {
     spark.conf.get("graft.snapshot.distributedProbeThreshold", "65536").toInt
 
   /** Split the manifest's `files` into (hit, keep) by the probe's
-    * `__file` column (absolute `input_file_name` paths of rows the
-    * operation must rewrite). Driver-memory envelope, stated once for
+    * `__file` column (the `_metadata.file_path` of each row the
+    * operation must rewrite, matched against [[TablePaths.fileId]]). Driver-memory envelope, stated once for
     * the whole manifest algebra: every table operation holds the
     * CURRENT FILE LIST on the driver (the manifest is a driver-written
     * file — ~150 B/path, so a 100 TB table at 128 MB/file is ~10⁶
@@ -1965,16 +1982,12 @@ object Snapshots {
       import spark.implicits._
       val touched = probe.as[String]
         .mapPartitions(it => it.toSet.iterator)
-        .collect().iterator.map(normPath).toSet
-      files.partition(f => touched.contains(normPath(f)))
+        .collect().toSet
+      files.partition(f => touched(TablePaths.fileId(f)))
     } else {
       import spark.implicits._
-      import org.apache.spark.sql.functions.{col, udf}
-      val normU = udf((p: String) => normPath(p))
-      val hit = files.toDF("orig")
-        .withColumn("__n", normU(col("orig")))
-        .join(probe.select(normU(col("__file")).as("__n")).distinct(),
-          Seq("__n"), "left_semi")
+      val hit = files.map(f => (f, TablePaths.fileId(f))).toDF("orig", "__file")
+        .join(probe.distinct(), Seq("__file"), "left_semi")
         .select("orig").collect().map(_.getString(0)).toSet
       files.partition(hit)
     }
@@ -1989,10 +2002,10 @@ object Snapshots {
     * the replaced files aborts (it rewrote rows this writer read).
     */
   private[graft] def replaceFiles(spark: SparkSession, table: String,
-      src: Long, removedNorm: Set[String], added: Seq[String], op: String,
+      src: Long, removed: Set[String], added: Seq[String], op: String,
       reclaimOnAbort: Seq[Path]): Long =
     publishRebase(spark, table, src, manifestFiles(spark, table, src),
-      removedNorm, added, op, reclaimOnAbort)
+      removed, added, op, reclaimOnAbort)
 
   /** Delta (merge-on-read) commit for the SQL row-level write path
     * (UPDATE / MERGE INTO / subquery DELETE on a `merge-on-read`-mode
@@ -2007,13 +2020,9 @@ object Snapshots {
   private[graft] def publishDelta(spark: SparkSession, table: String,
       src: Long, dataFiles: Seq[String], sidecars: Seq[String], op: String,
       reclaimOnAbort: Seq[Path]): Long = {
-    val targeted =
-      if (sidecars.isEmpty) Set.empty[String]
-      else PositionDeletes.referencedDataFiles(spark, sidecars)
-        .map(normPath).toSet
     publishRebase(spark, table, src, manifestFiles(spark, table, src),
       Set.empty, dataFiles, op, reclaimOnAbort, addedDeletes = sidecars,
-      requireDataPresentNorm = targeted)
+      requireDataPresent = PositionDeletes.referencedDataFiles(spark, sidecars).toSet)
   }
 
   /** Optimistic publish with append-rebase (the Delta/Iceberg conflict-
@@ -2037,18 +2046,17 @@ object Snapshots {
     * references them; vacuum could never free them).
     */
   private def publishRebase(spark: SparkSession, table: String, src: Long,
-      srcFiles: Seq[String], removedNorm: Set[String], added: Seq[String],
+      srcFiles: Seq[String], removed: Set[String], added: Seq[String],
       op: String, reclaimOnAbort: Seq[Path], token: Option[String] = None,
       conflictsWith: Seq[String] => Boolean = _ => false,
-      removedDeletesNorm: Set[String] = Set.empty,
+      removedDeletes: Set[String] = Set.empty,
       addedDeletes: Seq[String] = Nil,
-      requireDataPresentNorm: Set[String] = Set.empty,
-      removedEqNorm: Set[String] = Set.empty,
+      requireDataPresent: Set[String] = Set.empty,
+      removedEq: Set[String] = Set.empty,
       addedEqDeletes: Seq[String] = Nil): Long = {
     val f = fs(spark, table)
-    def norm(p: String) = normPath(p)
-    val srcNorm = srcFiles.map(norm).toSet
-    val srcDeletesNorm = manifestDeletes(spark, table, src).map(norm).toSet
+    val srcSet = srcFiles.toSet
+    val srcDeletes = manifestDeletes(spark, table, src).toSet
     def abort(msg: String): Nothing = {
       reclaimOnAbort.foreach(f.delete(_, true))
       throw new IllegalStateException(msg)
@@ -2060,36 +2068,34 @@ object Snapshots {
       token.foreach(t => committedVersionFor(spark, table, t).foreach { w =>
         reclaimOnAbort.foreach(f.delete(_, true)); return w })
       val cur = manifestFiles(spark, table, base)
-      val curNorm = cur.map(norm).toSet
-      if (!removedNorm.subsetOf(curNorm))
+      val curSet = cur.toSet
+      if (!removed.subsetOf(curSet))
         abort(s"concurrent writer removed files read by $op on $table")
       // a MOR delete's positions are keyed by data-file path: if a
       // concurrent writer rewrote one of the files this delete targets,
       // its entries would silently become no-ops for already-replaced
       // rows — abort and let the caller recompute against the new head
-      if (!requireDataPresentNorm.subsetOf(curNorm))
+      if (!requireDataPresent.subsetOf(curSet))
         abort(s"concurrent writer rewrote files targeted by $op on $table")
       if (base != src &&
-          conflictsWith(cur.filterNot(p => srcNorm(norm(p)))))
+          conflictsWith(cur.filterNot(srcSet)))
         abort(s"concurrent append touches rows read by $op on $table")
       val curDeletes = manifestDeletes(spark, table, base)
-      // a file-REWRITING op (removedNorm nonempty) read its victims at
+      // a file-REWRITING op (`removed` nonempty) read its victims at
       // `src` and replaces them resolved against src's delete set: an
       // interleaved MOR delete whose positions target one of those
       // victims would be silently dropped by the replacement — abort
       // iff such an interleave exists (reading the few new sidecars is
       // metadata-class). MOR deletes interleaved on OTHER files rebase
       // freely, as do two concurrent MOR deletes (their sidecars union).
-      if (base != src && removedNorm.nonEmpty) {
-        val newDeletes = curDeletes.filterNot(p => srcDeletesNorm(norm(p)))
+      if (base != src && removed.nonEmpty) {
+        val newDeletes = curDeletes.filterNot(srcDeletes)
         if (newDeletes.nonEmpty &&
-            PositionDeletes.referencedDataFiles(spark, newDeletes)
-              .exists(p => removedNorm(norm(p))))
+            PositionDeletes.referencedDataFiles(spark, newDeletes).exists(removed))
           abort(s"concurrent MOR delete targets files rewritten by $op on $table")
       }
-      val fileList = cur.filterNot(p => removedNorm(norm(p))) ++ added
-      val deleteList =
-        curDeletes.filterNot(p => removedDeletesNorm(norm(p))) ++ addedDeletes
+      val fileList = cur.filterNot(removed) ++ added
+      val deleteList = curDeletes.filterNot(removedDeletes) ++ addedDeletes
       val v = base + 1
       // a NEW equality delete's scope is pinned at publish time to the
       // version it lands over: after a rebase past interleaved appends,
@@ -2100,12 +2106,10 @@ object Snapshots {
       // every outstanding equality-delete scope — the subtracted rows
       // would resurrect. Rewriting ops refuse up front; this guards the
       // INTERLEAVED case (an upsertEq landing mid-rebase).
-      if (removedNorm.nonEmpty &&
-          curEq.exists { case (_, p) => !removedEqNorm(norm(p)) })
+      if (removed.nonEmpty && curEq.exists { case (_, p) => !removedEq(p) })
         abort(s"$op rewrites files while equality deletes are outstanding " +
           s"on $table — run purgeEqDeletes first")
-      val eqList = curEq
-        .filterNot { case (_, p) => removedEqNorm(norm(p)) } ++
+      val eqList = curEq.filterNot { case (_, p) => removedEq(p) } ++
         addedEqDeletes.map(p => (v - 1, p))
       if (claimManifest(f, table, v, Manifest(token, fileList, deleteList, eqList)))
         return v
@@ -2197,7 +2201,6 @@ object Snapshots {
         s"merge updates schema ${u.schema} does not match the table's " +
           s"committed schema $committed")
     }
-    def norm(p: String) = normPath(p)
     // touched-file probe: restrict the scan to the updates' key RANGE
     // first — parquet row-group min/max stats then skip files whose key
     // span cannot contain a match — and collect only file paths
@@ -2241,7 +2244,7 @@ object Snapshots {
           .join(broadcast(u.select(col(key))), Seq(key), "left_semi")
           .limit(1).count() > 0
       }
-    publishRebase(spark, table, src, files, hit.map(norm).toSet, newFiles,
+    publishRebase(spark, table, src, files, hit.toSet, newFiles,
       "merge", Seq(dataDir), conflictsWith = appendsConflict)
   }
 
@@ -2266,7 +2269,6 @@ object Snapshots {
     // delete; readFiles on an empty list cannot infer a schema, so
     // short-circuit the no-op (TRUNCATE on an empty table lands here)
     if (files.isEmpty) return src
-    def norm(p: String) = normPath(p)
     // probe and rewrite on the LIVE view: a file whose only matches
     // were already MOR-deleted must not rewrite, and a rewrite must
     // not resurrect subtracted rows
@@ -2297,7 +2299,7 @@ object Snapshots {
     // appends interleaved with the delete rebase freely: rows committed
     // after the delete's read survive it under the append-after-delete
     // serialization — exactly what a serial schedule would produce
-    publishRebase(spark, table, src, files, hit.map(norm).toSet, newFiles,
+    publishRebase(spark, table, src, files, hit.toSet, newFiles,
       "delete", reclaim)
   }
 
@@ -2326,7 +2328,7 @@ object Snapshots {
     */
   def deleteWhereMor(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, udf}
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val src = vs.last
@@ -2347,10 +2349,12 @@ object Snapshots {
     val live = if (dels.isEmpty) scan
       else PositionDeletes.live(spark, scan, dels, keepIdentity = true)
     // SQL delete semantics: predicate NULL = survive, so only TRUE rows
-    // are recorded
+    // are recorded, each under its file's recorded entry
+    val tp = TablePaths(spark, table)
+    val entry = udf((id: String) => tp.relativizeId(id))
     val matched = live
       .filter(coalesce(predicate, lit(false)))
-      .select(col(PositionDeletes.MetaFile).as(PositionDeletes.FileCol),
+      .select(entry(col(PositionDeletes.MetaFile)).as(PositionDeletes.FileCol),
         col(PositionDeletes.MetaPos).as(PositionDeletes.PosCol))
     // ONE pass: encode + write the sidecar straight off the probe scan.
     // The former localCheckpoint + distinct-collect pair re-materialized
@@ -2393,10 +2397,9 @@ object Snapshots {
       f.delete(delDir, true)
       return src
     }
-    val targeted = touchedFiles.map(normPath).toSet
     publishRebase(spark, table, src, files, Set.empty, Seq.empty,
       "mor-delete", Seq(delDir), addedDeletes = sidecars,
-      requireDataPresentNorm = targeted)
+      requireDataPresent = touchedFiles.toSet)
   }
 
   /** Fold outstanding position-delete sidecars back into plain data
@@ -2505,14 +2508,12 @@ object Snapshots {
     val sidecars = f.listStatus(eqDir).toSeq
       .filter(_.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
-    def norm(p: String) = normPath(p)
     // interleaved appends rebase (the publish-time scope covers them —
     // the serial upsert-after-append schedule); an interleaved REWRITE
     // would let rows escape the scope, so their absence is required
     publishRebase(spark, table, src, files, Set.empty, newFiles,
       "upsert-eq", Seq(dataDir, eqDir), token = token,
-      addedEqDeletes = sidecars,
-      requireDataPresentNorm = files.map(norm).toSet)
+      addedEqDeletes = sidecars, requireDataPresent = files.toSet)
   }
 
   /** Fold outstanding EQUALITY deletes back into plain data files: an
@@ -2581,12 +2582,10 @@ object Snapshots {
       v: Long, candidates: Seq[String], dels: Seq[String],
       eqs: Seq[(Long, String)]): Seq[String] = {
     import org.apache.spark.sql.functions.broadcast
-    def norm(p: String) = normPath(p)
     val addV = fileAddVersions(spark, table, v)
     val maxScope = eqs.map(_._1).max
-    val inScope0 = candidates.filter(p => addV.getOrElse(norm(p), 0L) <= maxScope)
+    val inScope0 = candidates.filter(p => addV.getOrElse(p, 0L) <= maxScope)
     if (inScope0.isEmpty) return Nil
-    val fsys = fs(spark, table)
     val keys = eqKeyColumns(spark, eqs)
     val eqFrame = eqSideFrame(spark, eqs)
     // STATS-PRUNED probe: the sidecar key sets are broadcast-size by
@@ -2631,11 +2630,9 @@ object Snapshots {
       case None =>
         withV.join(broadcast(eqFrame), eqJoinCond(withV, eqFrame, keys), "left_semi")
     }
-    val hitStrs = hits
+    val hitIds = hits
       .select(EqFileCol).distinct().collect().map(_.getString(0)).toSet
-    val byQualified = inScope.map(p =>
-      fsys.makeQualified(new Path(p)).toString -> p).toMap
-    hitStrs.toSeq.flatMap(byQualified.get)
+    inScope.filter(p => hitIds(TablePaths.fileId(p)))
   }
 
   def purgeEqDeletes(spark: SparkSession, table: String): Long = {
@@ -2646,7 +2643,6 @@ object Snapshots {
     if (eqs.isEmpty) return src
     val files = manifestFiles(spark, table, src)
     val dels = manifestDeletes(spark, table, src)
-    def norm(p: String) = normPath(p)
     // exact hit probe: in-scope files whose LIVE rows match a key under
     // that key's scope (semi-join twin of the read path's anti-join)
     val hit: Seq[String] = eqHitFiles(spark, table, src, files, dels, eqs)
@@ -2655,14 +2651,14 @@ object Snapshots {
       // upserts): drop the E lines, rewrite nothing — row-preserving
       return publishRebase(spark, table, src, files, Set.empty, Seq.empty,
         "purge-eq", Seq.empty, token = Some(s"purge-eq-of-v$src"),
-        removedEqNorm = eqs.map(e => norm(e._2)).toSet)
+        removedEq = eqs.map(_._2).toSet)
     // rewrite ONLY the hit files, fully resolved (position + equality)
     val resolvedHit = applyEqDeletes(spark, table, src, hit, dels, eqs,
       readTableFiles(spark, table, _))
     val (newFiles, dataDir) = writeData(resolvedHit, table)
-    publishRebase(spark, table, src, files, hit.map(norm).toSet, newFiles,
+    publishRebase(spark, table, src, files, hit.toSet, newFiles,
       "purge-eq", Seq(dataDir), token = Some(s"purge-eq-of-v$src"),
-      removedEqNorm = eqs.map(e => norm(e._2)).toSet)
+      removedEq = eqs.map(_._2).toSet)
   }
 
   def purgeDeletes(spark: SparkSession, table: String): Long = {
@@ -2673,25 +2669,22 @@ object Snapshots {
     val dels = manifestDeletes(spark, table, src)
     if (dels.isEmpty) return src
     val files = manifestFiles(spark, table, src)
-    def norm(p: String) = normPath(p)
-    val targeted = PositionDeletes.referencedDataFiles(spark, dels)
-      .map(norm).toSet
     // entries can reference files a later COW rewrite already replaced
     // (stale, matching nothing) — purge only what still exists
-    val hit = files.filter(p => targeted(norm(p)))
+    val hit = files.filter(PositionDeletes.referencedDataFiles(spark, dels).toSet)
     if (hit.isEmpty)
       // every entry is stale: drop the sidecar lines, rewrite nothing
       return publishRebase(spark, table, src, files, Set.empty, Seq.empty,
         "purge-deletes", Seq.empty, token = Some(s"purge-of-v$src"),
-        removedDeletesNorm = dels.map(norm).toSet)
+        removedDeletes = dels.toSet)
     val (newFiles, dataDir) = writeData(
       liveView(spark, table, hit, dels, readTableFiles(spark, table, _)),
       table)
     // row-preserving on RESOLVED views (the purge materializes exactly
     // the live rows) — the token lets changeFeed skip the proof
-    publishRebase(spark, table, src, files, hit.map(norm).toSet, newFiles,
+    publishRebase(spark, table, src, files, hit.toSet, newFiles,
       "purge-deletes", Seq(dataDir), token = Some(s"purge-of-v$src"),
-      removedDeletesNorm = dels.map(norm).toSet)
+      removedDeletes = dels.toSet)
   }
 
   /** Reclaim ORPHANED data files: files under `<table>/data/` that no
@@ -2712,11 +2705,10 @@ object Snapshots {
     val roots = Seq(new Path(s"$table/data"), new Path(s"$table/deletes"),
       new Path(s"$table/eqdeletes")).filter(f.exists)
     if (roots.isEmpty) return 0
-    def norm(p: String) = normPath(p)
     val referenced = versions(spark, table)
       .flatMap(v => manifestFiles(spark, table, v) ++
         manifestDeletes(spark, table, v) ++
-        manifestEqDeletes(spark, table, v).map(_._2)).map(norm).toSet ++
+        manifestEqDeletes(spark, table, v).map(_._2)).toSet ++
       branchHeadRefs(spark, table) // registered branches hold references
     val cutoff = System.currentTimeMillis() - graceMs
     var deleted = 0
@@ -2730,7 +2722,7 @@ object Snapshots {
       val parts = f.listStatus(dir.getPath).filter(
         _.getPath.getName.startsWith("part-"))
       val orphaned = parts.filter(st =>
-        !referenced.contains(norm(st.getPath.toString)) &&
+        !referenced.contains(st.getPath.toString) &&
           st.getModificationTime < cutoff)
       orphaned.foreach { st =>
         if (f.delete(st.getPath, false)) deleted += 1
@@ -2743,7 +2735,7 @@ object Snapshots {
       // reclaim the whole dir when nothing in it is referenced and
       // it is past the grace period
       if (parts.isEmpty) {
-        val prefix = norm(dir.getPath.toString) + "/"
+        val prefix = dir.getPath.toString + "/"
         val dirReferenced = referenced.exists(_.startsWith(prefix))
         if (!dirReferenced) {
           // grace-gate on the NEWEST nested file, not the parent dir's
@@ -2800,9 +2792,8 @@ object Snapshots {
     // registered branch HEADS hold references into this table by
     // absolute path (a fork copies no data) — their files are as live
     // as a tagged version's
-    val live = keep.flatMap(refs).map(normPath).toSet ++
-      branchHeadRefs(spark, table)
-    val dead = expire.flatMap(refs).filterNot(p => live(normPath(p))).toSet
+    val live = keep.flatMap(refs).toSet ++ branchHeadRefs(spark, table)
+    val dead = expire.flatMap(refs).filterNot(live).toSet
     dead.foreach(p => f.delete(new Path(p), false))
     expire.foreach(v => f.delete(new Path(s"$table/manifest-v$v.json"), false))
     // sweep now-empty data/sidecar dirs (cosmetic; correctness never
@@ -3003,7 +2994,7 @@ object Snapshots {
         manifestFiles(spark, bp, v) ++ manifestDeletes(spark, bp, v) ++
           manifestEqDeletes(spark, bp, v).map(_._2)
       }
-    }.map(normPath).toSet
+    }.toSet
 
   /** Fork the parent's head into a NEW table at `branch` (the WAP
     * staging branch) — metadata-only at any data size: the branch's
@@ -3042,15 +3033,13 @@ object Snapshots {
     val f = fs(spark, branch)
     f.mkdirs(new Path(branch))
     val pf = fs(spark, parent)
-    // the layout side files and the stats sidecars (KBs) carry verbatim
-    val stats = new Path(s"$parent/stats")
-    val statsFiles =
-      if (pf.exists(stats)) pf.listStatus(stats).toSeq.map(st => s"stats/${st.getPath.getName}")
-      else Nil
-    (CarriedSideFiles ++ statsFiles).foreach { name =>
+    // the layout side files carry verbatim, the stats sidecars (KBs)
+    // keyed by the parent files' absolute paths
+    CarriedSideFiles.foreach { name =>
       readSide(pf, new Path(s"$parent/$name")).foreach(body =>
         writeSide(f, new Path(s"$branch/$name"), body, replace = true))
     }
+    FileStats.carry(spark, parent, branch)
     // the field-id assignment forks with the table: branch writes stamp
     // the SAME ids as the parent's files, so a fast-forward publishes
     // id-consistent footers (branch-side ALTERs extend the branch copy;
@@ -3060,11 +3049,12 @@ object Snapshots {
     // fast_forward against the wrong parent whose head happens to equal
     // the fork point would otherwise publish foreign absolute paths into
     // that parent's manifest — and its vacuum would later delete another
-    // table's data files. Scheme-free normalized path; tokens are
-    // single-word (commitToken splits the header on spaces). Outstanding
+    // table's data files. Scheme-free normalized path, URI-encoded:
+    // tokens are single-word (commitToken splits the header on spaces,
+    // and a root may hold one). Outstanding
     // position-delete sidecars carry by path like the data files.
     if (!claimManifest(f, branch, 1L, Manifest(
-        Some(s"fork-of-v$head@${normPath(parent)}"), files,
+        Some(s"fork-of-v$head@${new Path(normPath(parent)).toUri.getRawPath}"), files,
         manifestDeletes(spark, parent, head))))
       throw new IllegalStateException(s"fork target $branch was concurrently created")
     // register the branch on its parent: reads resolve it by name and
@@ -3084,14 +3074,15 @@ object Snapshots {
         t.stripPrefix("fork-of-v").takeWhile(_ != '@').toLong
     }
 
-  /** The parent table a fork was cut from (scheme-free path), when the
+  /** The parent table a fork was cut from (scheme-free path, recorded
+    * URI-encoded: a token is one word), when the
     * fork token recorded it.
     */
   def forkParent(spark: SparkSession, branch: String): Option[String] =
     if (versions(spark, branch).isEmpty) None
     else commitToken(spark, branch, 1L).collect {
       case t if t.startsWith("fork-of-v") && t.contains('@') =>
-        t.dropWhile(_ != '@').drop(1)
+        new java.net.URI(t.dropWhile(_ != '@').drop(1)).getPath
     }
 
   /** PUBLISH a fork: make the branch's head the parent's next version
@@ -3100,7 +3091,8 @@ object Snapshots {
     * parent stays self-contained so its gc/vacuum lifecycle owns every
     * file it references), their footer stats re-recorded under the
     * parent, and the published manifest is the branch head's file list
-    * with those paths rewritten. Conflict rule: the parent head must
+    * — its branch-relative entries name the moved files under the
+    * parent unchanged ([[TablePaths]]). Conflict rule: the parent head must
     * still be the fork point — if the parent advanced, this fails
     * loudly and the caller re-forks and re-stages (rebase-by-redo, the
     * same discipline as a lost optimistic commit). The branch is
@@ -3178,97 +3170,49 @@ object Snapshots {
     // the contract. A branch-side ALTER is still metadata the parent
     // must inherit (ALTER alone never bumps versions, so this stays a
     // no-op commit).
-    if (bFiles.map(normPath).toSet ==
-        manifestFiles(spark, parent, fp).map(normPath).toSet &&
-        bDels.map(normPath).toSet ==
-        manifestDeletes(spark, parent, fp).map(normPath).toSet) {
+    if (bFiles.toSet == manifestFiles(spark, parent, fp).toSet &&
+        bDels.toSet == manifestDeletes(spark, parent, fp).toSet) {
       carried.foreach(declareSchema(spark, parent, _))
       if (dropBranch) drop(spark, branch)
       return fp
     }
     val f = fs(spark, parent)
-    val branchNorm = normPath(branch)
-    val parentNorm = normPath(parent)
-    val branchDataPrefix = branchNorm + "/data/"
-    val branchDelPrefix = branchNorm + "/deletes/"
-    // a sidecar staged ON THE BRANCH whose positions target data files
-    // ALSO staged on the branch would go stale the moment this publish
-    // renames those data dirs (positions are keyed by absolute path) —
-    // refuse before anything moves; purging on the branch folds the
-    // deletes into plain files and clears the hazard. Sidecars that
-    // target fork-carried PARENT files stay valid across their own
-    // relocation (their content references parent paths).
-    val stagedSidecars = bDels.filter(p => normPath(p).startsWith(branchDelPrefix))
-    if (stagedSidecars.nonEmpty &&
-        PositionDeletes.referencedDataFiles(spark, stagedSidecars)
-          .exists(t => normPath(t).startsWith(branchDataPrefix)))
-      throw new IllegalStateException(
-        s"fast-forward $branch -> $parent: a staged merge-on-read DELETE " +
-          "targets data files staged on the same branch; run " +
-          "Snapshots.purgeDeletes on the branch before publishing")
-    // branch-local dirs to relocate, per write root: <branch>/<root>/<uuid>
-    def localDirs(paths: Seq[String], prefix: String): Seq[String] =
-      paths.map(normPath).filter(_.startsWith(prefix))
-        .map(p => p.drop(prefix.length).takeWhile(_ != '/'))
-        .distinct
-    val moves: Seq[(String, String, Map[String, String])] =
-      Seq(("data", branchDataPrefix, localDirs(bFiles, branchDataPrefix)),
-        ("deletes", branchDelPrefix, localDirs(bDels, branchDelPrefix)))
-        .map { case (root, prefix, dirs) =>
-          val dirMap = dirs.map { u =>
-            var dst = u
-            // uuid collision with an existing parent dir is ~impossible;
-            // if it ever happens, suffix rather than merge into a
-            // foreign dir
-            while (f.exists(new Path(s"$parentNorm/$root/$dst"))) dst = s"$dst-ff"
-            u -> dst
-          }.toMap
-          if (dirMap.nonEmpty) f.mkdirs(new Path(s"$parentNorm/$root"))
-          (root, prefix, dirMap)
-        }
+    // the branch's OWN files are recorded branch-relative
+    // (`data/<uuid>/…`, `deletes/<uuid>/…`): each staged dir moves under
+    // the parent with its name, so the same relative entry names the
+    // moved file there, and a staged sidecar's relative rows follow the
+    // staged data files they target
+    val (bTp, pTp) = (TablePaths(spark, branch), TablePaths(spark, parent))
+    val dirs = (bFiles ++ bDels).flatMap(bTp.within)
+      .map(_.split('/').take(2).mkString("/")).distinct
+    // a UUID-named dir colliding with one of the parent's is practically
+    // impossible; refuse rather than merge into a foreign dir
+    dirs.foreach(d => require(!f.exists(new Path(s"$parent/$d")),
+      s"fast-forward $branch -> $parent: staged dir $d already exists in the parent"))
+    dirs.map(_.takeWhile(_ != '/')).distinct.foreach(d => f.mkdirs(new Path(s"$parent/$d")))
     // every successfully relocated dir is tracked so a FAILED rename
     // mid-loop (or a concurrent fast-forward racing the same branch)
     // rolls the already-moved dirs back under the branch — without it a
     // partial move leaves the branch's manifests referencing relocated
     // paths with no published parent version and no healing path
-    val relocated = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+    val relocated = scala.collection.mutable.ArrayBuffer.empty[String]
     def rollbackDirs(): Unit =
-      relocated.reverseIterator.foreach { case (root, u, dst) =>
+      relocated.reverseIterator.foreach { d =>
         // best effort — an unmovable dir is left for the parent's gc,
         // which sees it as unreferenced
-        try f.rename(new Path(s"$parentNorm/$root/$dst"),
-          new Path(s"$branchNorm/$root/$u")): Unit
+        try f.rename(new Path(s"$parent/$d"), new Path(s"$branch/$d")): Unit
         catch { case scala.util.control.NonFatal(_) => () }
       }
-    try moves.foreach { case (root, _, dirMap) =>
-      dirMap.foreach { case (u, dst) =>
-        require(f.rename(new Path(s"$branchNorm/$root/$u"),
-          new Path(s"$parentNorm/$root/$dst")),
-          s"failed to move staged $root dir $u into $parent")
-        relocated += ((root, u, dst))
-      }
+    try dirs.foreach { d =>
+      require(f.rename(new Path(s"$branch/$d"), new Path(s"$parent/$d")),
+        s"failed to move staged ${d.replaceFirst("/", " dir ")} into $parent")
+      relocated += d
     } catch { case scala.util.control.NonFatal(e) =>
       rollbackDirs()
       throw e
     }
-    def rewritePaths(paths: Seq[String], root: String, prefix: String,
-        dirMap: Map[String, String],
-        onMoved: String => Unit): Seq[String] = paths.map { p =>
-      val n = normPath(p)
-      if (n.startsWith(prefix)) {
-        val rest = n.drop(prefix.length)
-        val u = rest.takeWhile(_ != '/')
-        val np = f.makeQualified(new Path(
-          s"$parentNorm/$root/${dirMap(u)}/${rest.drop(u.length + 1)}")).toString
-        onMoved(np)
-        np
-      } else p
-    }
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val newFiles = rewritePaths(bFiles, "data", branchDataPrefix,
-      moves(0)._3, moved += _)
-    val newDels = rewritePaths(bDels, "deletes", branchDelPrefix,
-      moves(1)._3, _ => ())
+    val newFiles = bFiles.map(bTp.movedTo(pTp))
+    val newDels = bDels.map(bTp.movedTo(pTp))
     // a carried branch-side ALTER must be visible BEFORE the manifest
     // that first mixes old- and new-shape files is readable (the brief
     // declare-without-commit window is additive-only: readers see the
@@ -3290,7 +3234,7 @@ object Snapshots {
     // race would permanently append dead lines for rolled-back paths
     // (readers tolerate missing stats conservatively — worst case one
     // un-pruned read between publish and this record)
-    FileStats.record(spark, parent, moved.toSeq)
+    FileStats.record(spark, parent, bFiles.filter(bTp.within(_).isDefined).map(bTp.movedTo(pTp)))
     if (dropBranch) drop(spark, branch)
     else {
       // LONG-LIVED branch: re-base it onto the published head in place
@@ -3398,7 +3342,7 @@ object Snapshots {
       if (files.length > 1) {
         val stats = FileStats.load(spark, table)
         val ranges = files.flatMap(p =>
-          stats.get(normPath(p)).flatMap(_.get(sortCol))
+          stats.get(p).flatMap(_.get(sortCol))
             .filter(r => r.min.isDefined && r.max.isDefined))
         // only judge drift when every file carries a range — partial
         // stats would understate overlap and misfire either way

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import java.util.UUID
 
-import graft.sources.{FileStats, PositionDeletes, Snapshots}
+import graft.sources.{FileStats, PositionDeletes, Snapshots, TablePaths}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -83,7 +83,8 @@ private[graft] object RowIdentity {
       override def name: String = FileCol
       override def dataType: DataType = StringType
       override def isNullable: Boolean = false
-      override def comment: String = "absolute data-file path of the row"
+      override def comment: String =
+        "data-file entry of the row, as a position sidecar records it (TablePaths)"
     },
     new MetadataColumn {
       override def name: String = PosCol
@@ -91,18 +92,6 @@ private[graft] object RowIdentity {
       override def isNullable: Boolean = false
       override def comment: String = "row ordinal within its data file"
     })
-
-  /** The exact string `_metadata.file_path` yields for a manifest path —
-    * sidecar entries must compare EQUAL to the V1 metadata column on the
-    * live-view anti-join side, so the emitted string is the FULLY
-    * QUALIFIED path (manifest entries may be scheme-less: the V2 task
-    * writers record raw `dir/part-...` strings, while V1 `listStatus`
-    * qualifies — an unqualified sidecar entry would silently never
-    * match and the deleted row would resurrect).
-    */
-  def filePathString(fs: org.apache.hadoop.fs.FileSystem,
-      manifestPath: String): String =
-    fs.makeQualified(new Path(manifestPath)).toString
 
   /** Source-filter translations of the pushable subset of `filters` —
     * everything referencing an identity column (parquet cannot resolve
@@ -118,17 +107,18 @@ private[graft] object RowIdentity {
 }
 
 /** One position-delete sidecar referencing a partition's data file:
-  * its path/length (for the task-side parquet read) and the RAW
-  * `file_path` spellings under which that sidecar records the file
-  * (manifest entries may be scheme-less — the reader matches raw
-  * strings, no per-row Path parsing).
+  * its path/length and layout, for the task-side parquet read, and the
+  * spelling its rows resolve under.
   */
 private[v2] final case class SidecarSlice(
-    path: String, length: Long, raw: Array[String],
-    isDv: Boolean = false)
+    path: String, length: Long, isDv: Boolean, paths: TablePaths) {
+  /** True when a row recording `entry` deletes from `file`. */
+  def names(entry: String, file: String): Boolean = paths.resolve(entry) == file
+}
 
 /** One whole data file per partition: the reader needs file-stable row
   * ordinals, and a per-file partition keeps the delete-skip set local.
+  * `entry` is the file as a sidecar records it (the `__gr_file` value).
   * `deleted` is the sorted ordinals already subtracted by outstanding
   * sidecars (empty on sidecar-free tables) when the sidecars fit the
   * driver threshold; above it `sidecars` names the (file-pruned)
@@ -136,7 +126,7 @@ private[v2] final case class SidecarSlice(
   * positions.
   */
 private[v2] final case class RowIdentityPartition(
-    file: String, emitPath: String, length: Long,
+    file: String, entry: String, length: Long,
     deleted: Array[Long],
     sidecars: Array[SidecarSlice] = Array.empty) extends InputPartition
 
@@ -213,36 +203,21 @@ private[v2] final class RowIdentityScan(
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // BELOW the threshold: the sidecars are read on the driver (no
     // Spark job) and each kept file's sorted ordinals ship in its
-    // partition (scheme-insensitive match); both layouts arrive as
-    // deletion vectors. ABOVE it (or when the driver read cannot serve
-    // a sidecar) the partitions name the sidecars that reference their
-    // file, from the sidecar summaries — (sidecar, touched-file) pairs,
-    // metadata-class — and each task reads them itself
+    // partition; both layouts arrive as deletion vectors. ABOVE it (or
+    // when the driver read cannot serve a sidecar) the partitions name
+    // the sidecars that reference their file, from the sidecar
+    // summaries — (sidecar, touched-file) pairs, metadata-class — and
+    // each task reads them itself
     val positions =
       if (deletes.isEmpty) None else PositionDeletes.positionSet(spark, deletes)
     val taskSide = deletes.nonEmpty && positions.isEmpty
-    val deletedByFile: Map[String, Array[Long]] = positions match {
-      case None => Map.empty
-      case Some(set) =>
-        set.byFile.toSeq.groupBy { case (raw, _) => graft.Memo.normPath(raw) }
-          .map { case (norm, dvs) =>
-            norm -> graft.sources.PositionSet.ordinals(dvs.flatMap(_._2)) }
-    }
     val sidecarsByFile: Map[String, Array[SidecarSlice]] =
       if (!taskSide) Map.empty
-      else {
-        val refs = deletes.flatMap(sc =>
-          PositionDeletes.summary(spark, sc).perFile.keys.map(raw => (raw, sc)))
-        val lenOf: Map[String, Long] = deletes.distinct.map(p =>
-          p -> fsys.getFileStatus(new Path(p)).getLen).toMap
-        refs.groupBy { case (raw, _) => graft.Memo.normPath(raw) }
-          .map { case (norm, pairs) =>
-            norm -> pairs.groupBy(_._2).map { case (sc, ps) =>
-              SidecarSlice(sc, lenOf(sc), ps.map(_._1).distinct.toArray,
-                PositionDeletes.isDvSidecar(spark, sc))
-            }.toArray.sortBy(_.path)
-          }
-      }
+      else deletes.distinct.flatMap { sc =>
+        val slice = SidecarSlice(sc, fsys.getFileStatus(new Path(sc)).getLen,
+          PositionDeletes.isDvSidecar(spark, sc), TablePaths.ofSidecar(spark, sc))
+        PositionDeletes.summary(spark, sc).perFile.keys.map(_ -> slice)
+      }.groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).sortBy(_.path).toArray }
     RowIdentityScan.recordRoute(tablePath,
       if (deletes.isEmpty) "none" else if (taskSide) "task" else "driver")
     // serializable sidecar reader for the task route (null otherwise:
@@ -269,12 +244,13 @@ private[v2] final class RowIdentityScan(
         filters = Nil,
         options = options,
         hadoopConf = spark.sessionState.newHadoopConfWithOptions(options))
+    val tp = TablePaths(fsys, tablePath)
     val parts: Array[InputPartition] = files.map { f =>
       val len = fsys.getFileStatus(new Path(f)).getLen
-      val norm = graft.Memo.normPath(f)
-      RowIdentityPartition(f, RowIdentity.filePathString(fsys, f), len,
-        deletedByFile.getOrElse(norm, Array.emptyLongArray),
-        sidecarsByFile.getOrElse(norm, Array.empty))
+      RowIdentityPartition(f, tp.relativize(f), len,
+        positions.flatMap(_.byFile.get(TablePaths.fileId(f)))
+          .map(graft.sources.PositionSet.ordinals(_)).getOrElse(Array.emptyLongArray),
+        sidecarsByFile.getOrElse(f, Array.empty))
         : InputPartition
     }.toArray
     new RowIdentityBatch(readerFor, sidecarReaderFor, dvReaderFor, plan, dataTypes, posIdx, parts)
@@ -332,28 +308,29 @@ private[v2] final class RowIdentityReader(
   private val inner = readerFor(PartitionedFile(
     InternalRow.empty, SparkPath.fromPathString(part.file), 0L, part.length,
     Array.empty[String], 0L, part.length))
-  // the exact string the V1 `_metadata.file_path` column would carry —
-  // sidecar entries written from this value anti-join cleanly on read
-  private val fileUtf8 = UTF8String.fromString(part.emitPath)
+  // the file's recorded entry: a sidecar written from this value
+  // resolves back to the file (TablePaths)
+  private val fileUtf8 = UTF8String.fromString(part.entry)
   private var current: InternalRow = null
 
   // task-route deleted set: read the sidecars that reference THIS file
-  // (driver-pruned) and keep the ordinals recorded under its raw
-  // spellings. Memory ∝ one file's outstanding deletions — the whole
-  // point of the route. Driver-route partitions carry the array ready.
+  // (driver-pruned) and keep the ordinals of the rows whose entry
+  // resolves to it, each distinct entry resolved once. Memory ∝ one
+  // file's outstanding deletions — the whole point of the route.
+  // Driver-route partitions carry the array ready.
   private val deleted: Array[Long] =
     if (part.sidecars.isEmpty) part.deleted
     else {
       val buf = new scala.collection.mutable.ArrayBuilder.ofLong
       part.sidecars.foreach { sc =>
-        val want: Set[UTF8String] =
-          sc.raw.iterator.map(UTF8String.fromString).toSet
+        val mine = scala.collection.mutable.HashMap.empty[UTF8String, Boolean]
         val it = (if (sc.isDv) dvReaderFor else sidecarReaderFor)(
           PartitionedFile(
             InternalRow.empty, SparkPath.fromPathString(sc.path), 0L,
             sc.length, Array.empty[String], 0L, sc.length))
         try it.foreach { r =>
-          if (want.contains(r.getUTF8String(0))) {
+          val e = r.getUTF8String(0)
+          if (mine.getOrElseUpdate(e.clone(), sc.names(e.toString, part.file))) {
             if (sc.isDv)
               buf ++= graft.sources.DeleteVectors.decode(r.getBinary(2))
             else buf += r.getLong(1)

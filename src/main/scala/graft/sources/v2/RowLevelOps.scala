@@ -360,7 +360,7 @@ private[v2] final class SnapshotReplaceBatchWrite(
     if (added.isEmpty && removedRowCount(spark, removed) == 0L) return
     FileStats.record(spark, op.path, added)
     Snapshots.replaceFiles(spark, op.path, op.pin().version,
-      removed.map(graft.Memo.normPath).toSet, added,
+      removed.toSet, added,
       s"sql-${op.command.toString.toLowerCase}", Seq(new Path(dataDir)))
     ()
   }

@@ -168,7 +168,6 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     */
   private def load(ident: Identifier, extra: Map[String, String]): Table = {
     val path = tablePath(ident)
-    promoteRenameStage(new Path(path)) // heal a crash mid-rename (no-op otherwise)
     // `VERSION AS OF '<name>'`: immutable TAGS win the name; otherwise a
     // registered long-lived BRANCH resolves to its own table at head —
     // the Iceberg branch-read surface through plain SQL
@@ -396,8 +395,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
                 val fsys = new Path(parentPath).getFileSystem(
                   sp.sparkContext.hadoopConfiguration)
                 Snapshots.dataFiles(sp, parentPath, asOf).map { f =>
-                  val norm = graft.Memo.normPath(f)
-                  val nRows: Any = detail.get(norm)
+                  val nRows: Any = detail.get(f)
                     .flatMap(_.values.headOption).map(d => Long.box(d.rows)).orNull
                   val size: Long =
                     try fsys.getFileStatus(new Path(f)).getLen
@@ -554,7 +552,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     // or the all-files-tagged guard would disable the key-grouped scan
     // for the table's whole life (appends carry the anchor forever);
     // it is empty, so bucket 0 is as true as any. Stats recording is
-    // deferred past the move: the sidecar keys by absolute path, so a
+    // deferred past the move: the sidecar keys by the file's path, so a
     // pre-move record would be a permanent dead line parsed by every
     // FileStats load for the table's life.
     val empty = spark.createDataFrame(
@@ -959,122 +957,22 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
       s"graft-snapshot: cannot rename $src — it has registered " +
         s"branch(es) ${liveBranches.map(_._1).mkString(", ")}; publish or " +
         "drop them first (fast_forward / DROP on the branch table)")
-    // position-delete sidecars hold ABSOLUTE data-file paths in their
-    // rows, out of the manifest rewrite's reach: after the move every
-    // retained version that references one would silently serve its
-    // deleted rows again. Refuse until purge + vacuum have folded them.
-    val srcVersions = Snapshots.versions(spark, src.toString)
-    val withDeletes = srcVersions
-      .filter(v => Snapshots.manifestDeletes(spark, src.toString, v).nonEmpty)
-    require(withDeletes.isEmpty,
-      s"graft-snapshot: cannot rename $src — version(s) " +
-        s"${withDeletes.mkString(", ")} reference position-delete sidecars; " +
-        "fold them first (CALL purge_deletes, then vacuum — vacuum expires " +
-        "the versions that reference the sidecars, so time travel to them " +
-        "is lost)")
+    // every path the table records under its own root is root-relative
+    // (TablePaths), so the move carries the whole table — manifests,
+    // sidecars, stats — and keeps each manifest's mtime (TIMESTAMP AS
+    // OF). Lines written before the relative rule would be stranded:
+    // refuse, naming the versions, instead of serving stale reads
+    val stranded = Snapshots.absoluteUnderRoot(spark, src.toString)
+    require(stranded.isEmpty,
+      s"graft-snapshot: cannot rename $src — version(s) ${stranded.mkString(", ")} " +
+        "record absolute paths under the table root (written before paths were " +
+        "recorded root-relative); rewrite them first (compact or purge_deletes, " +
+        "then vacuum — vacuum expires those versions, so time travel to them is lost)")
     fs.mkdirs(dst.getParent)
-    // Manifests (and the stats sidecars' path keys) hold ABSOLUTE file
-    // paths, so a rename must rewrite them against the new root. The
-    // rewrite is staged BEFORE the directory move, under
-    // <src>/_rename_stage (readers ignore it — manifests resolve by
-    // the strict manifest-v<N>.json name, stats by the stats- prefix):
-    //  * a crash before the move leaves the source table fully intact
-    //    (a stale stage is rebuilt on retry);
-    //  * the move carries the complete stage along atomically;
-    //  * promotion after the move is idempotent, and a crash mid-
-    //    promotion SELF-HEALS — load() promotes any remaining staged
-    //    files before resolving (the staged content is already correct
-    //    for the new root).
-    // Promotion restores each manifest's commit-time mtime (recorded in
-    // the stage) and replaces through the FileSystem so checksum
-    // sidecars (.crc) never go stale.
-    val stage = new Path(src, RenameStageDir)
-    fs.delete(stage, true)
-    fs.mkdirs(stage)
-    val srcRoot = graft.Memo.normPath(src.toString)
-    val dstRoot = graft.Memo.normPath(dst.toString)
-    def readText(pth: Path): String = Snapshots.readSide(fs, pth).getOrElse(
-      throw new java.io.FileNotFoundException(s"$pth vanished during rename"))
-    def writeText(pth: Path, text: String): Unit =
-      require(Snapshots.writeSide(fs, pth, text, replace = true),
-        s"concurrent rename of $src")
-    val mtimes = new StringBuilder
-    srcVersions.foreach { v =>
-      val mf = new Path(s"$src/manifest-v$v.json")
-      // each manifest's mtime IS its commit time (TIMESTAMP AS OF
-      // resolves on it) — record it in the stage so promotion can
-      // restore it even after a crash-and-heal
-      mtimes.append(s"manifest-v$v.json\t${fs.getFileStatus(mf).getModificationTime}\n")
-      writeText(new Path(stage, s"manifest-v$v.json"),
-        readText(mf).replace(srcRoot, dstRoot))
-    }
-    writeText(new Path(stage, "mtimes.tsv"), mtimes.toString)
-    // stats sidecars key each line by b64(absolute path): without the
-    // rewrite, every pre-rename file would silently stop pruning forever
-    // (stats lookups miss, 'files without stats always survive')
-    val statsDir = new Path(src, "stats")
-    if (fs.exists(statsDir)) {
-      import graft.sources.FileStats.{b64, unb64}
-      fs.listStatus(statsDir).filter(_.getPath.getName.startsWith("stats-"))
-        .foreach { st =>
-          val moved = readText(st.getPath).split("\n", -1).map { line =>
-            if (line.isEmpty) line
-            else {
-              val f = line.split("\t", -1)
-              if (f.nonEmpty && f(0).nonEmpty)
-                f(0) = b64(unb64(f(0)).replace(srcRoot, dstRoot))
-              f.mkString("\t")
-            }
-          }.mkString("\n")
-          writeText(new Path(stage, st.getPath.getName), moved)
-        }
-    }
     require(fs.rename(src, dst), s"rename $src -> $dst failed")
     // the source path may be re-created later with the same version
     // numbers — its cached metadata memos must not survive the rename
     graft.Memo.invalidateTable(src.toString)
-    promoteRenameStage(dst)
-  }
-
-  private val RenameStageDir = "_rename_stage"
-
-  /** Promote a rename's staged manifest/stats rewrites over the live
-    * files — idempotent, re-entrant, and called from load() so a crash
-    * mid-promotion heals on the table's next access.
-    */
-  private def promoteRenameStage(table: Path): Unit = {
-    val stage = new Path(table, RenameStageDir)
-    if (!fs.exists(stage)) return
-    val mtimeFile = new Path(stage, "mtimes.tsv")
-    val mtimes: Map[String, Long] =
-      Snapshots.readSide(fs, mtimeFile).toSeq.flatMap(_.split("\n").filter(_.nonEmpty))
-        .map { line =>
-          val Array(n, t) = line.split("\t", 2)
-          n -> t.toLong
-        }.toMap
-    // hidden names are the side-file writer's in-flight tmp files
-    fs.listStatus(stage).map(_.getPath.getName)
-      .filter(n => n != "mtimes.tsv" && !n.startsWith(".")).foreach { name =>
-      val staged = new Path(stage, name)
-      val target =
-        if (name.startsWith("manifest-")) new Path(table, name)
-        else new Path(new Path(table, "stats"), name)
-      // delete through the FileSystem first — it removes the stale
-      // checksum sidecar (.crc) a raw nio replace would leave behind
-      // (LocalFileSystem then fails every read with ChecksumException).
-      // A crash between delete and move heals on the next load: the
-      // staged file is still here and the move simply succeeds.
-      fs.delete(target, false)
-      if (fs.getScheme == "file")
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(staged.toUri.getPath),
-          java.nio.file.Paths.get(target.toUri.getPath),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else require(fs.rename(staged, target),
-        s"rename promotion failed for $name")
-      mtimes.get(name).foreach(t => fs.setTimes(target, t, -1))
-    }
-    fs.delete(stage, true)
   }
 
   /** The in-flight side of an atomic CTAS/RTAS: collects the query's

@@ -1286,10 +1286,9 @@ private[v2] object MetadataAgg {
   def exactRowCount(spark: SparkSession, table: String,
       files: Seq[String]): java.util.OptionalLong = {
     val detail = FileStats.loadDetail(spark, table)
-    val normed = files.map(graft.Memo.normPath)
-    if (normed.forall(detail.contains))
+    if (files.forall(detail.contains))
       java.util.OptionalLong.of(
-        normed.map(f => detail(f).values.headOption.map(_.rows).getOrElse(0L)).sum)
+        files.map(f => detail(f).values.headOption.map(_.rows).getOrElse(0L)).sum)
     else java.util.OptionalLong.empty()
   }
 
@@ -1304,9 +1303,8 @@ private[v2] object MetadataAgg {
     if (funcs.isEmpty) return None
     val schema = resolved.table.schema
     val detail = FileStats.loadDetail(spark, resolved.path)
-    val normed = resolved.files.map(graft.Memo.normPath)
-    if (!normed.forall(detail.contains)) return None
-    val perFile = normed.map(detail)
+    if (!resolved.files.forall(detail.contains)) return None
+    val perFile = resolved.files.map(detail)
 
     def single(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {

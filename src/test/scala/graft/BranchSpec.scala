@@ -152,4 +152,38 @@ class BranchSpec extends SparkTestBase {
     assert(ids(t) === ((1L to 10L) ++ Seq(301L, 400L)))
     Snapshots.drop(spark, b)
   }
+
+  test("branch-staged MOR delete over branch-staged data publishes") {
+    val t = freshParent("mor")
+    Snapshots.deleteWhereMor(spark, t, col("id") === 2L) // a parent sidecar the fork carries
+    val b = s"${new java.io.File(t).getParent}/stage"
+    Snapshots.fork(spark, t, b)
+    Snapshots.commit((11L to 20L).map(i => (i, i * 10L)).toDF("id", "v"), b)
+    // one sidecar over branch-staged data, one over fork-carried parent
+    // data, one over both
+    Snapshots.deleteWhereMor(spark, b, col("id") === 15L)
+    Snapshots.deleteWhereMor(spark, b, col("id") === 5L)
+    Snapshots.deleteWhereMor(spark, b, col("id").isin(3L, 12L))
+    val staged = ids(b)
+    assert(staged === ((1L to 20L).filterNot(Set(2L, 3L, 5L, 12L, 15L))))
+    val history = Snapshots.versions(spark, t).map(v => v -> ids(t, Some(v)))
+    // a staged dir name the parent already holds refuses before anything moves
+    val stagedDir = new java.io.File(s"$b/data").listFiles().head.getName
+    val clash = new java.io.File(s"$t/data/$stagedDir")
+    assert(clash.mkdirs())
+    val e = intercept[IllegalArgumentException](Snapshots.fastForward(spark, t, b))
+    assert(e.getMessage.contains("already exists"), e.getMessage)
+    assert(ids(b) === staged)
+    assert(clash.delete())
+    val v = Snapshots.fastForward(spark, t, b, dropBranch = false)
+    // every parent version reads as before, the published one as the branch did
+    assert(Snapshots.versions(spark, t).map(w => w -> ids(t, Some(w))) ===
+      (history :+ (v -> staged)))
+    assert(ids(b) === staged)
+    assert(Snapshots.changeFeed(spark, t, v - 1, v).as[(Long, Long, String)].collect()
+      .map(r => (r._1, r._3)).sorted.toSeq ===
+      Seq((3L, "delete"), (5L, "delete")) ++
+        (11L to 20L).filterNot(Set(12L, 15L)).map(_ -> "insert"))
+    Snapshots.drop(spark, b)
+  }
 }

@@ -20,6 +20,9 @@ import org.scalacheck.rng.Seed
   * surface must return the same multiset under both routes, and on
   * each route every change feed must equal the naive diff of two whole
   * snapshot reads ([[NaiveFeed]]), which shares none of its algebra.
+  * Each history is also drawn a table root: a plain one, or one whose
+  * path URL-encodes (a space, a literal `%41`), so the recorded paths
+  * and `_metadata.file_path` spell it differently.
   */
 class DeleteRouteEquivalenceSpec extends SparkTestBase {
 
@@ -28,14 +31,17 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
-  private lazy val wh = {
-    val dir = Files.createTempDirectory("graftroutes").toString
-    spark.conf.set("spark.sql.catalog.route_cat",
-      classOf[graft.sources.v2.SnapshotCatalog].getName)
-    spark.conf.set("spark.sql.catalog.route_cat.warehouse", dir)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS route_cat.ns")
-    dir
-  }
+  /** Table roots a history is drawn under, by the catalog holding them. */
+  private val Roots = Seq("route_cat" -> "plain", "route_cat_sp" -> "a b",
+    "route_cat_pct" -> "c%41d")
+
+  private lazy val warehouses: Map[String, String] = Roots.map { case (cat, dir) =>
+    val wh = Files.createTempDirectory("graftroutes").toString + "/" + dir
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.v2.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    cat -> wh
+  }.toMap
 
   private val Bounds = Seq("graft.snapshot.deleteBroadcastBytes",
     "graft.snapshot.eqDeleteBroadcastBytes", "graft.snapshot.addVMapLiteralMaxFiles")
@@ -98,14 +104,14 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   private def frame(rows: Rows): DataFrame =
     rows.toDF("k1", "k2", "v")
 
-  /** Apply `ops` to the catalog table `name`; returns its path. Ops whose
-    * contract refuses outstanding equality deletes (a MOR delete, a
-    * merge) or a different key set (an upsert) purge them first.
+  /** Apply `ops` to the table `name` of catalog `cat`; returns its path.
+    * Ops whose contract refuses outstanding equality deletes (a MOR
+    * delete, a merge) or a different key set (an upsert) purge them
+    * first.
     */
-  private def play(name: String, ops: Seq[Op]): String = {
-    wh
-    spark.sql(s"CREATE TABLE route_cat.ns.$name (k1 BIGINT, k2 STRING, v BIGINT)")
-    val t = s"$wh/ns/$name"
+  private def play(cat: String, name: String, ops: Seq[Op]): String = {
+    val t = s"${warehouses(cat)}/ns/$name"
+    spark.sql(s"CREATE TABLE $cat.ns.$name (k1 BIGINT, k2 STRING, v BIGINT)")
     def eqKeys: Option[Set[String]] = Snapshots.eqDeleteFiles(spark, t).headOption.map(_ =>
       spark.read.parquet(Snapshots.eqDeleteFiles(spark, t).head._2).columns.toSet)
     ops.foreach {
@@ -149,8 +155,8 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
     vs.map(v => s"read v$v" -> multiset(Snapshots.read(spark, t, Some(v)))) ++
     Seq("read" -> multiset(Snapshots.read(spark, t)),
       "readWhere" -> multiset(Snapshots.readWhere(spark, t, col("v") % 3 =!= 0)),
-      "sql" -> multiset(spark.sql(s"SELECT * FROM route_cat.ns.$name")),
-      "sql where" -> multiset(spark.sql(s"SELECT k2, v FROM route_cat.ns.$name WHERE k1 < 20")),
+      "sql" -> multiset(spark.sql(s"SELECT * FROM $name")),
+      "sql where" -> multiset(spark.sql(s"SELECT k2, v FROM $name WHERE k1 < 20")),
       "feed" -> multiset(Snapshots.changeFeed(spark, t, first, vs.last))) ++
       vs.sliding(2).collect { case Seq(a, b) =>
         s"feed $a..$b" -> multiset(Snapshots.changeFeed(spark, t, a, b)) }
@@ -174,6 +180,8 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
 
   test("every read surface agrees between the scan-predicate and the anti-join route") {
     val histories = samples(history, 6, 4100L)
+    val cats = samples(Gen.oneOf(Roots.map(_._1)), 6, 4202L)
+    assert(cats.toSet === Roots.map(_._1).toSet)
     // the sample covers every op kind and ends with both kinds outstanding
     val kinds = histories.flatten.map(_.getClass.getSimpleName).toSet
     assert(kinds === Set("Append", "MorDelete", "Upsert", "Merge", "PurgeDeletes$", "PurgeEq$",
@@ -181,22 +189,23 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
     assert(histories.flatten.collect { case d: MorDelete => d.v1 }.toSet === Set(true, false))
     var outstanding = (0, 0)
     histories.zipWithIndex.foreach { case (ops, i) =>
-      val name = s"h$i"
-      val t = play(name, ops)
+      val name = s"${cats(i)}.ns.h$i"
+      val t = play(cats(i), s"h$i", ops)
       // a position sidecar counts while it references a live file: a
       // COW merge carries one whose files it rewrote away
-      val live = Snapshots.dataFiles(spark, t).map(Memo.normPath).toSet
+      val live = Snapshots.dataFiles(spark, t).toSet
       val dels = Snapshots.deleteFiles(spark, t).filter(d =>
-        PositionDeletes.referencedDataFiles(spark, Seq(d)).exists(f => live(Memo.normPath(f))))
+        PositionDeletes.referencedDataFiles(spark, Seq(d)).exists(live))
       val eqs = Snapshots.eqDeleteFiles(spark, t)
       outstanding = (outstanding._1 + dels.size.sign, outstanding._2 + eqs.size.sign)
       val predicate = surfaces(name, t)
       val oracle = antiJoinRoute(surfaces(name, t))
       predicate.zip(oracle).foreach { case ((what, got), (_, want)) =>
-        assert(got === want, s"history $i ($ops): $what differs")
+        assert(got === want, s"history $i under ${cats(i)} ($ops): $what differs")
       }
-      assert(feedsOffNaive(t).isEmpty, s"history $i ($ops), predicate route")
-      assert(antiJoinRoute(feedsOffNaive(t)).isEmpty, s"history $i ($ops), anti-join route")
+      assert(feedsOffNaive(t).isEmpty, s"history $i under ${cats(i)} ($ops), predicate route")
+      assert(antiJoinRoute(feedsOffNaive(t)).isEmpty,
+        s"history $i under ${cats(i)} ($ops), anti-join route")
       // each route really ran: the default read plans the predicates,
       // the forced one none
       val plan = planOf(Snapshots.read(spark, t))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions.col
 /** [[graft.Memo]]: the bound holds under overfill without losing
   * answers, racing loaders of one key agree, a failed load leaves
   * nothing, and DROP / RENAME leave no registered memo holding an entry
-  * under the freed table root.
+  * under the freed table root (RENAME moving the whole table, sidecars
+  * and history included).
   */
 class MemoSpec extends SparkTestBase {
 
@@ -127,16 +128,31 @@ class MemoSpec extends SparkTestBase {
 
   test("after RENAME no registered memo holds an entry under the source root") {
     val t = populate("renamed")
-    // position-delete sidecars hold absolute paths: a rename refuses
-    // until purge + vacuum have folded them out of every version
-    val refused = intercept[Exception](
-      spark.sql("ALTER TABLE memo_cat.ns.renamed RENAME TO ns.renamed_to"))
-    assert(refused.getMessage.contains("position-delete sidecars"), refused.getMessage)
-    Snapshots.purgeEqDeletes(spark, t)
-    Snapshots.purgeDeletes(spark, t)
-    Snapshots.vacuum(spark, t, keepVersions = 1)
+    // a MOR sidecar, a SQL merge-on-read sidecar, an equality sidecar and
+    // the whole history move with the directory: every version and every
+    // per-step feed reads the same at the new root
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def snapshot(path: String): Seq[Seq[String]] = {
+      val vs = Snapshots.versions(spark, path)
+      vs.map(v => multiset(Snapshots.read(spark, path, Some(v)))) ++
+        vs.zip(vs.tail).map { case (a, b) => multiset(Snapshots.changeFeed(spark, path, a, b)) } :+
+        multiset(Snapshots.changeFeedByVersion(spark, path, vs.head, vs.last))
+    }
+    // stats pruning skips the files whose id range excludes 1
+    def pruned(path: String): (Int, Int) = {
+      val files = Snapshots.dataFiles(spark, path)
+      (graft.sources.FileStats.prune(spark, path, files, col("id") === 1L).size, files.size)
+    }
+    assert(Snapshots.deleteFiles(spark, t).nonEmpty && Snapshots.eqDeleteFiles(spark, t).nonEmpty)
+    val before = snapshot(t)
+    val (kept, total) = pruned(t)
+    assert(kept >= 1 && kept < total, s"kept $kept of $total")
     spark.sql("ALTER TABLE memo_cat.ns.renamed RENAME TO ns.renamed_to")
     assertNoneUnder(t)
+    val moved = s"$wh/ns/renamed_to"
+    assert(snapshot(moved) === before)
+    assert(pruned(moved) === ((kept, total)))
     assert(spark.sql("SELECT id, v FROM memo_cat.ns.renamed_to").as[(Long, String)]
       .collect().sortBy(_._1).toSeq === Seq((1L, "a"), (3L, "u"), (4L, "E")))
   }

@@ -256,24 +256,6 @@ class MorDeleteSpec extends SparkTestBase {
     assert(idsOf(Snapshots.read(spark, parent)).intersect(Seq(50L, 60L)).isEmpty)
   }
 
-  test("WAP: branch MOR delete over branch-staged data refuses until purge") {
-    val parent = freshDir("wapr")
-    val branch = parent + "-b"
-    Snapshots.commit((1L to 10L).toDF("id"), parent)
-    Snapshots.fork(spark, parent, branch)
-    Snapshots.commit((11L to 20L).toDF("id"), branch) // staged on branch
-    Snapshots.deleteWhereMor(spark, branch, col("id") === 15L) // targets staged file
-    val e = intercept[IllegalStateException] {
-      Snapshots.fastForward(spark, parent, branch)
-    }
-    assert(e.getMessage.contains("purge"))
-    // branch survives the refusal; purging clears the hazard
-    Snapshots.purgeDeletes(spark, branch)
-    val v = Snapshots.fastForward(spark, parent, branch)
-    assert(idsOf(Snapshots.read(spark, parent, Some(v))) ===
-      ((1L to 20L).filterNot(_ == 15L)))
-  }
-
   private lazy val wh = {
     val dir = java.nio.file.Files.createTempDirectory("morwh").toString
     spark.conf.set("spark.sql.catalog.mor_cat",
@@ -360,10 +342,10 @@ class MorDeleteSpec extends SparkTestBase {
     assert(r.getLong(1) === 3L)
     assert(graft.sources.DeleteVectors
       .decode(r.getAs[Array[Byte]](2)).toSeq === Seq(0L, 1L, 2L))
-    val dataNorm = Snapshots.dataFiles(spark, t)
-      .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
-    assert(dataNorm.contains(
-      new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath))
+    // the row records its data file root-relative
+    assert(r.getString(0).startsWith("data/"))
+    assert(Snapshots.dataFiles(spark, t).contains(
+      graft.sources.TablePaths(spark, t).resolve(r.getString(0))))
     // the conf pins the v1 one-row-per-position layout; the table then
     // carries BOTH layouts and every read resolves them together
     try {

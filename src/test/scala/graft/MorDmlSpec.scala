@@ -16,262 +16,272 @@ import graft.sources.Snapshots
   */
 class MorDmlSpec extends SparkTestBase {
 
-  private lazy val wh = {
-    val dir = Files.createTempDirectory("graftmordml").toString
-    spark.conf.set("spark.sql.catalog.md_cat",
-      classOf[graft.sources.v2.SnapshotCatalog].getName)
-    spark.conf.set("spark.sql.catalog.md_cat.warehouse", dir)
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS md_cat.ns")
-    dir
-  }
-
   private var n = 0
-  /** Fresh table with two single-file commits of disjoint id ranges:
-    * ids 1-4 (file A), ids 100-103 (file B).
-    */
-  private def freshTable(props: String): (String, String) = {
-    wh
-    n += 1
-    val name = s"m$n"
-    spark.sql(s"DROP TABLE IF EXISTS md_cat.ns.$name")
-    spark.sql(s"CREATE TABLE md_cat.ns.$name (id BIGINT, grp STRING, v BIGINT)" +
-      (if (props.isEmpty) "" else s" TBLPROPERTIES ($props)"))
-    spark.sql(s"INSERT INTO md_cat.ns.$name " +
-      "SELECT id, grp, v FROM VALUES (1,'a',10),(2,'a',20),(3,'b',30),(4,'b',40) " +
-      "AS x(id, grp, v) ORDER BY id")
-    spark.sql(s"INSERT INTO md_cat.ns.$name " +
-      "SELECT id, grp, v FROM VALUES (100,'c',1000),(101,'c',1010),(102,'d',1020),(103,'d',1030) " +
-      "AS x(id, grp, v) ORDER BY id")
-    (s"md_cat.ns.$name", s"$wh/ns/$name")
-  }
 
   private def rows(t: String): Seq[(Long, String, Long)] =
     spark.sql(s"SELECT * FROM $t ORDER BY id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
 
-  test("MOR UPDATE: no data file rewrites — sidecar + appended rows only") {
-    val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    val vBefore = Snapshots.versions(spark, path).last
-    spark.sql(s"UPDATE $t SET v = v + 5 WHERE grp = 'a'")
-    assert(rows(t) === Seq((1L, "a", 15L), (2L, "a", 25L), (3L, "b", 30L),
-      (4L, "b", 40L), (100L, "c", 1000L), (101L, "c", 1010L),
-      (102L, "d", 1020L), (103L, "d", 1030L)))
-    val after = Snapshots.dataFiles(spark, path).toSet
-    // EVERY prior file carries (the MOR invariant the COW path cannot
-    // give); the updated rows arrive as new files
-    assert(before.subsetOf(after), "a MOR UPDATE must never rewrite a file")
-    assert((after -- before).nonEmpty)
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
-    // time travel: pre-update version unaffected
-    assert(spark.sql(s"SELECT sum(v) FROM $t VERSION AS OF $vBefore")
-      .head().getLong(0) === 4160L)
-  }
+  // every case runs twice: under a plain warehouse, and once more under
+  // one whose path contains a space (a root that URL-encodes)
+  for ((cat, dirName, suffix) <- Seq(("md_cat", "", ""),
+      ("md_sp_cat", "/ware house", " (warehouse path with a space)"))) {
 
-  test("MOR UPDATE matches the COW UPDATE row-for-row") {
-    val (mor, _) = freshTable("'write.update.mode' = 'merge-on-read'")
-    val (cow, _) = freshTable("")
-    Seq(mor, cow).foreach(t =>
-      spark.sql(s"UPDATE $t SET v = v * 2, grp = concat(grp, '!') WHERE id % 2 = 0"))
-    assert(rows(mor) === rows(cow))
-  }
+    lazy val wh = {
+      val dir = Files.createTempDirectory("graftmordml").toString + dirName
+      spark.conf.set(s"spark.sql.catalog.$cat",
+        classOf[graft.sources.v2.SnapshotCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", dir)
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+      dir
+    }
 
-  test("MOR UPDATE leaves condition-NULL rows untouched") {
-    val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
-    spark.sql(s"INSERT INTO $t VALUES (50, NULL, 500)")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    spark.sql(s"UPDATE $t SET v = 0 WHERE grp = 'zzz'") // matches nothing
-    assert(Snapshots.dataFiles(spark, path).toSet === before)
-    assert(Snapshots.deleteFiles(spark, path).isEmpty)
-    spark.sql(s"UPDATE $t SET v = -1 WHERE grp < 'b'") // NULL grp survives
-    assert(rows(t).find(_._1 == 50L).get._3 === 500L)
-    assert(rows(t).find(_._1 == 1L).get._3 === -1L)
-  }
+    def test(name: String)(body: => Any): Unit = MorDmlSpec.this.test(name + suffix)(body)
 
-  test("MOR MERGE: upsert appends + sidecars, every prior file carries") {
-    val (t, path) = freshTable("'write.merge.mode' = 'merge-on-read'")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    spark.sql(s"""MERGE INTO $t USING (
-      SELECT * FROM VALUES (2, 'a', 999), (200, 'e', 2000) AS s(id, grp, v)
-    ) s ON $t.id = s.id
-      WHEN MATCHED THEN UPDATE SET *
-      WHEN NOT MATCHED THEN INSERT *""")
-    assert(rows(t) === Seq((1L, "a", 10L), (2L, "a", 999L), (3L, "b", 30L),
-      (4L, "b", 40L), (100L, "c", 1000L), (101L, "c", 1010L),
-      (102L, "d", 1020L), (103L, "d", 1030L), (200L, "e", 2000L)))
-    assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
-    // the sidecar records exactly the ONE matched row's position
-    assert(spark.read.parquet(Snapshots.deleteFiles(spark, path): _*)
-      .count() === 1L)
-  }
+    /** Fresh table with two single-file commits of disjoint id ranges:
+      * ids 1-4 (file A), ids 100-103 (file B).
+      */
+    def freshTable(props: String): (String, String) = {
+      wh
+      n += 1
+      val name = s"m$n"
+      spark.sql(s"DROP TABLE IF EXISTS $cat.ns.$name")
+      spark.sql(s"CREATE TABLE $cat.ns.$name (id BIGINT, grp STRING, v BIGINT)" +
+        (if (props.isEmpty) "" else s" TBLPROPERTIES ($props)"))
+      spark.sql(s"INSERT INTO $cat.ns.$name " +
+        "SELECT id, grp, v FROM VALUES (1,'a',10),(2,'a',20),(3,'b',30),(4,'b',40) " +
+        "AS x(id, grp, v) ORDER BY id")
+      spark.sql(s"INSERT INTO $cat.ns.$name " +
+        "SELECT id, grp, v FROM VALUES (100,'c',1000),(101,'c',1010),(102,'d',1020),(103,'d',1030) " +
+        "AS x(id, grp, v) ORDER BY id")
+      (s"$cat.ns.$name", s"$wh/ns/$name")
+    }
 
-  test("MOR MERGE with WHEN MATCHED DELETE") {
-    val (t, path) = freshTable("'write.merge.mode' = 'merge-on-read'")
-    spark.sql(s"""MERGE INTO $t USING (
-      SELECT * FROM VALUES (3, 0), (103, 0) AS s(id, z)
-    ) s ON $t.id = s.id
-      WHEN MATCHED THEN DELETE""")
-    assert(rows(t).map(_._1) === Seq(1L, 2L, 4L, 100L, 101L, 102L))
-    // one COMMIT's worth of sidecars (tasks may split them per file),
-    // recording exactly the two matched positions
-    val dels = Snapshots.deleteFiles(spark, path)
-    assert(dels.nonEmpty)
-    assert(spark.read.parquet(dels: _*).count() === 2L)
-  }
-
-  test("subquery DELETE routes by write.delete.mode: MOR writes a sidecar") {
-    val (t, path) = freshTable("'write.delete.mode' = 'merge-on-read'")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    spark.sql(s"DELETE FROM $t WHERE id IN (SELECT id FROM $t WHERE v >= 1020)")
-    assert(rows(t).map(_._1) === Seq(1L, 2L, 3L, 4L, 100L, 101L))
-    assert(Snapshots.dataFiles(spark, path).toSet === before)
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
-  }
-
-  test("stacked MOR DML runs on the live view; purge folds everything back") {
-    val (t, path) = freshTable(
-      "'write.update.mode' = 'merge-on-read', " +
-        "'write.delete.mode' = 'merge-on-read'")
-    spark.sql(s"DELETE FROM $t WHERE id = 1")
-    spark.sql(s"UPDATE $t SET v = v + 1 WHERE grp = 'a'") // only id=2 left in 'a'
-    spark.sql(s"UPDATE $t SET v = v + 1 WHERE grp = 'a'") // sees the updated row
-    assert(rows(t).find(_._1 == 2L).get._3 === 22L)
-    assert(rows(t).map(_._1) === Seq(2L, 3L, 4L, 100L, 101L, 102L, 103L))
-    assert(Snapshots.deleteFiles(spark, path).size === 3)
-    val cat = t.split('.').head
-    spark.sql(s"CALL $cat.system.purge_deletes(table => 'ns.${t.split('.').last}')")
-    assert(Snapshots.deleteFiles(spark, path).isEmpty)
-    assert(rows(t).find(_._1 == 2L).get._3 === 22L)
-    assert(rows(t).map(_._1) === Seq(2L, 3L, 4L, 100L, 101L, 102L, 103L))
-  }
-
-  test("over-threshold sidecars: the delta scan applies deletes task-side, no driver map") {
-    // round-8 judge finding: RowIdentityScan collected EVERY outstanding
-    // (file, pos) row to the driver with no size fallback — a
-    // delete-churn-heavy table OOM'd the driver during UPDATE/MERGE.
-    // Force the threshold under any real sidecar and drive stacked DML
-    // through the task-side route; same answers, route flag proves the
-    // driver map was never built.
-    import graft.sources.v2.RowIdentityScan
-    val (t, path) = freshTable(
-      "'write.update.mode' = 'merge-on-read', " +
-        "'write.merge.mode' = 'merge-on-read', " +
-        "'write.delete.mode' = 'merge-on-read'")
-    spark.sql(s"DELETE FROM $t WHERE id = 3") // seeds an outstanding sidecar
-    try {
-      spark.conf.set("graft.snapshot.deleteBroadcastBytes", "1")
+    test("MOR UPDATE: no data file rewrites — sidecar + appended rows only") {
+      val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      val vBefore = Snapshots.versions(spark, path).last
       spark.sql(s"UPDATE $t SET v = v + 5 WHERE grp = 'a'")
-      assert(RowIdentityScan.routeFor(path) === "task",
-        "an over-threshold sidecar set must route task-side")
-      spark.sql(s"MERGE INTO $t tgt USING (SELECT * FROM VALUES " +
-        "(2, 'a', 777), (200, 'e', 2000) AS s(id, grp, v)) s ON tgt.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-      assert(RowIdentityScan.routeFor(path) === "task")
-      assert(rows(t) === Seq((1L, "a", 15L), (2L, "a", 777L), (4L, "b", 40L),
-        (100L, "c", 1000L), (101L, "c", 1010L), (102L, "d", 1020L),
-        (103L, "d", 1030L), (200L, "e", 2000L)))
-    } finally spark.conf.unset("graft.snapshot.deleteBroadcastBytes")
-    // default threshold: the same shape stays on the driver route (the
-    // cheap path for the common few-MB sidecar case)
-    spark.sql(s"UPDATE $t SET v = 0 WHERE id = 4")
-    assert(RowIdentityScan.routeFor(path) === "driver")
-    assert(rows(t).find(_._1 == 4L).get._3 === 0L)
-  }
+      assert(rows(t) === Seq((1L, "a", 15L), (2L, "a", 25L), (3L, "b", 30L),
+        (4L, "b", 40L), (100L, "c", 1000L), (101L, "c", 1010L),
+        (102L, "d", 1020L), (103L, "d", 1030L)))
+      val after = Snapshots.dataFiles(spark, path).toSet
+      // EVERY prior file carries (the MOR invariant the COW path cannot
+      // give); the updated rows arrive as new files
+      assert(before.subsetOf(after), "a MOR UPDATE must never rewrite a file")
+      assert((after -- before).nonEmpty)
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+      // time travel: pre-update version unaffected
+      assert(spark.sql(s"SELECT sum(v) FROM $t VERSION AS OF $vBefore")
+        .head().getLong(0) === 4160L)
+    }
 
-  test("per-command routing: update MOR while delete stays COW") {
-    val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    spark.sql(s"UPDATE $t SET v = 0 WHERE id = 1")
-    assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
-    // plain DELETE keeps copy-on-write: the matched file rewrites, and
-    // because the hit file carried an outstanding sidecar the COW path
-    // resolves it first (deleteWhere runs on the live view)
-    spark.sql(s"DELETE FROM $t WHERE id = 2")
-    assert(rows(t).map(_._1) === Seq(1L, 3L, 4L, 100L, 101L, 102L, 103L))
-    assert(rows(t).find(_._1 == 1L).get._3 === 0L)
-  }
+    test("MOR UPDATE matches the COW UPDATE row-for-row") {
+      val (mor, _) = freshTable("'write.update.mode' = 'merge-on-read'")
+      val (cow, _) = freshTable("")
+      Seq(mor, cow).foreach(t =>
+        spark.sql(s"UPDATE $t SET v = v * 2, grp = concat(grp, '!') WHERE id % 2 = 0"))
+      assert(rows(mor) === rows(cow))
+    }
 
-  test("ALTER TABLE SET TBLPROPERTIES flips the mode after DDL") {
-    val (t, path) = freshTable("")
-    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
-      "('write.update.mode' = 'merge-on-read')")
-    val before = Snapshots.dataFiles(spark, path).toSet
-    spark.sql(s"UPDATE $t SET v = 1 WHERE id = 1")
-    assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
-    spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES ('write.update.mode')")
-    // a COW UPDATE refuses while sidecars are outstanding (the group
-    // rewrite would resurrect subtracted rows) — purge first
-    val refused = intercept[Exception] {
+    test("MOR UPDATE leaves condition-NULL rows untouched") {
+      val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
+      spark.sql(s"INSERT INTO $t VALUES (50, NULL, 500)")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      spark.sql(s"UPDATE $t SET v = 0 WHERE grp = 'zzz'") // matches nothing
+      assert(Snapshots.dataFiles(spark, path).toSet === before)
+      assert(Snapshots.deleteFiles(spark, path).isEmpty)
+      spark.sql(s"UPDATE $t SET v = -1 WHERE grp < 'b'") // NULL grp survives
+      assert(rows(t).find(_._1 == 50L).get._3 === 500L)
+      assert(rows(t).find(_._1 == 1L).get._3 === -1L)
+    }
+
+    test("MOR MERGE: upsert appends + sidecars, every prior file carries") {
+      val (t, path) = freshTable("'write.merge.mode' = 'merge-on-read'")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      spark.sql(s"""MERGE INTO $t USING (
+        SELECT * FROM VALUES (2, 'a', 999), (200, 'e', 2000) AS s(id, grp, v)
+      ) s ON $t.id = s.id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *""")
+      assert(rows(t) === Seq((1L, "a", 10L), (2L, "a", 999L), (3L, "b", 30L),
+        (4L, "b", 40L), (100L, "c", 1000L), (101L, "c", 1010L),
+        (102L, "d", 1020L), (103L, "d", 1030L), (200L, "e", 2000L)))
+      assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+      // the sidecar records exactly the ONE matched row's position
+      assert(spark.read.parquet(Snapshots.deleteFiles(spark, path): _*)
+        .count() === 1L)
+    }
+
+    test("MOR MERGE with WHEN MATCHED DELETE") {
+      val (t, path) = freshTable("'write.merge.mode' = 'merge-on-read'")
+      spark.sql(s"""MERGE INTO $t USING (
+        SELECT * FROM VALUES (3, 0), (103, 0) AS s(id, z)
+      ) s ON $t.id = s.id
+        WHEN MATCHED THEN DELETE""")
+      assert(rows(t).map(_._1) === Seq(1L, 2L, 4L, 100L, 101L, 102L))
+      // one COMMIT's worth of sidecars (tasks may split them per file),
+      // recording exactly the two matched positions
+      val dels = Snapshots.deleteFiles(spark, path)
+      assert(dels.nonEmpty)
+      assert(spark.read.parquet(dels: _*).count() === 2L)
+    }
+
+    test("subquery DELETE routes by write.delete.mode: MOR writes a sidecar") {
+      val (t, path) = freshTable("'write.delete.mode' = 'merge-on-read'")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      spark.sql(s"DELETE FROM $t WHERE id IN (SELECT id FROM $t WHERE v >= 1020)")
+      assert(rows(t).map(_._1) === Seq(1L, 2L, 3L, 4L, 100L, 101L))
+      assert(Snapshots.dataFiles(spark, path).toSet === before)
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+    }
+
+    test("stacked MOR DML runs on the live view; purge folds everything back") {
+      val (t, path) = freshTable(
+        "'write.update.mode' = 'merge-on-read', " +
+          "'write.delete.mode' = 'merge-on-read'")
+      spark.sql(s"DELETE FROM $t WHERE id = 1")
+      spark.sql(s"UPDATE $t SET v = v + 1 WHERE grp = 'a'") // only id=2 left in 'a'
+      spark.sql(s"UPDATE $t SET v = v + 1 WHERE grp = 'a'") // sees the updated row
+      assert(rows(t).find(_._1 == 2L).get._3 === 22L)
+      assert(rows(t).map(_._1) === Seq(2L, 3L, 4L, 100L, 101L, 102L, 103L))
+      assert(Snapshots.deleteFiles(spark, path).size === 3)
+      val cat = t.split('.').head
+      spark.sql(s"CALL $cat.system.purge_deletes(table => 'ns.${t.split('.').last}')")
+      assert(Snapshots.deleteFiles(spark, path).isEmpty)
+      assert(rows(t).find(_._1 == 2L).get._3 === 22L)
+      assert(rows(t).map(_._1) === Seq(2L, 3L, 4L, 100L, 101L, 102L, 103L))
+    }
+
+    test("over-threshold sidecars: the delta scan applies deletes task-side, no driver map") {
+      // round-8 judge finding: RowIdentityScan collected EVERY outstanding
+      // (file, pos) row to the driver with no size fallback — a
+      // delete-churn-heavy table OOM'd the driver during UPDATE/MERGE.
+      // Force the threshold under any real sidecar and drive stacked DML
+      // through the task-side route; same answers, route flag proves the
+      // driver map was never built.
+      import graft.sources.v2.RowIdentityScan
+      val (t, path) = freshTable(
+        "'write.update.mode' = 'merge-on-read', " +
+          "'write.merge.mode' = 'merge-on-read', " +
+          "'write.delete.mode' = 'merge-on-read'")
+      spark.sql(s"DELETE FROM $t WHERE id = 3") // seeds an outstanding sidecar
+      try {
+        spark.conf.set("graft.snapshot.deleteBroadcastBytes", "1")
+        spark.sql(s"UPDATE $t SET v = v + 5 WHERE grp = 'a'")
+        assert(RowIdentityScan.routeFor(path) === "task",
+          "an over-threshold sidecar set must route task-side")
+        spark.sql(s"MERGE INTO $t tgt USING (SELECT * FROM VALUES " +
+          "(2, 'a', 777), (200, 'e', 2000) AS s(id, grp, v)) s ON tgt.id = s.id " +
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+        assert(RowIdentityScan.routeFor(path) === "task")
+        assert(rows(t) === Seq((1L, "a", 15L), (2L, "a", 777L), (4L, "b", 40L),
+          (100L, "c", 1000L), (101L, "c", 1010L), (102L, "d", 1020L),
+          (103L, "d", 1030L), (200L, "e", 2000L)))
+      } finally spark.conf.unset("graft.snapshot.deleteBroadcastBytes")
+      // default threshold: the same shape stays on the driver route (the
+      // cheap path for the common few-MB sidecar case)
+      spark.sql(s"UPDATE $t SET v = 0 WHERE id = 4")
+      assert(RowIdentityScan.routeFor(path) === "driver")
+      assert(rows(t).find(_._1 == 4L).get._3 === 0L)
+    }
+
+    test("per-command routing: update MOR while delete stays COW") {
+      val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      spark.sql(s"UPDATE $t SET v = 0 WHERE id = 1")
+      assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+      // plain DELETE keeps copy-on-write: the matched file rewrites, and
+      // because the hit file carried an outstanding sidecar the COW path
+      // resolves it first (deleteWhere runs on the live view)
+      spark.sql(s"DELETE FROM $t WHERE id = 2")
+      assert(rows(t).map(_._1) === Seq(1L, 3L, 4L, 100L, 101L, 102L, 103L))
+      assert(rows(t).find(_._1 == 1L).get._3 === 0L)
+    }
+
+    test("ALTER TABLE SET TBLPROPERTIES flips the mode after DDL") {
+      val (t, path) = freshTable("")
+      spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+        "('write.update.mode' = 'merge-on-read')")
+      val before = Snapshots.dataFiles(spark, path).toSet
+      spark.sql(s"UPDATE $t SET v = 1 WHERE id = 1")
+      assert(before.subsetOf(Snapshots.dataFiles(spark, path).toSet))
+      spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES ('write.update.mode')")
+      // a COW UPDATE refuses while sidecars are outstanding (the group
+      // rewrite would resurrect subtracted rows) — purge first
+      val refused = intercept[Exception] {
+        spark.sql(s"UPDATE $t SET v = 2 WHERE id = 1")
+      }
+      assert(refused.getMessage.contains("purge_deletes"))
+      spark.sql(s"CALL $cat.system.purge_deletes(table => 'ns.${t.split('.').last}')")
       spark.sql(s"UPDATE $t SET v = 2 WHERE id = 1")
+      assert(Snapshots.deleteFiles(spark, path).isEmpty) // COW adds no sidecar
+      assert(rows(t).find(_._1 == 1L).get._3 === 2L)
     }
-    assert(refused.getMessage.contains("purge_deletes"))
-    spark.sql(s"CALL md_cat.system.purge_deletes(table => 'ns.${t.split('.').last}')")
-    spark.sql(s"UPDATE $t SET v = 2 WHERE id = 1")
-    assert(Snapshots.deleteFiles(spark, path).isEmpty) // COW adds no sidecar
-    assert(rows(t).find(_._1 == 1L).get._3 === 2L)
-  }
 
-  test("row-identity metadata columns resolve in plain queries") {
-    val (t, path) = freshTable("")
-    val df = spark.sql(s"SELECT id, __gr_file, __gr_pos FROM $t ORDER BY id")
-    val got = df.collect()
-    assert(got.length === 8)
-    // two commits = two files; ordinals restart per file
-    assert(df.select("__gr_file").distinct().count() === 2)
-    val byFile = got.groupBy(_.getString(1))
-    byFile.values.foreach { rs =>
-      assert(rs.map(_.getLong(2)).sorted.toSeq === (0L until rs.length).toSeq)
+    test("row-identity metadata columns resolve in plain queries") {
+      val (t, path) = freshTable("")
+      val df = spark.sql(s"SELECT id, __gr_file, __gr_pos FROM $t ORDER BY id")
+      val got = df.collect()
+      assert(got.length === 8)
+      // two commits = two files; ordinals restart per file
+      assert(df.select("__gr_file").distinct().count() === 2)
+      val byFile = got.groupBy(_.getString(1))
+      byFile.values.foreach { rs =>
+        assert(rs.map(_.getLong(2)).sorted.toSeq === (0L until rs.length).toSeq)
+      }
+      // __gr_file carries the file's root-relative entry — what a
+      // position sidecar records — resolving to the manifest's files
+      val entries = got.map(_.getString(1)).toSet
+      assert(entries.forall(_.startsWith("data/")), entries)
+      val tp = graft.sources.TablePaths(spark, path)
+      assert(entries.map(tp.resolve).subsetOf(Snapshots.dataFiles(spark, path).toSet))
+      // hidden from SELECT *
+      assert(!spark.sql(s"SELECT * FROM $t").columns.exists(
+        graft.sources.v2.RowIdentity.isIdentity))
     }
-    // __gr_file carries the exact _metadata.file_path shape
-    val v1Paths = spark.read.parquet(Snapshots.dataFiles(spark, path): _*)
-      .select(org.apache.spark.sql.functions.col("_metadata.file_path"))
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(got.map(_.getString(1)).toSet === v1Paths)
-    // hidden from SELECT *
-    assert(!spark.sql(s"SELECT * FROM $t").columns.exists(
-      graft.sources.v2.RowIdentity.isIdentity))
-  }
 
-  test("identity columns subtract outstanding sidecars natively") {
-    val (t, path) = freshTable("'write.delete.mode' = 'merge-on-read'")
-    spark.sql(s"DELETE FROM $t WHERE id IN (1, 100)")
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
-    val got = spark.sql(s"SELECT id, __gr_pos FROM $t ORDER BY id").collect()
-    assert(got.map(_.getLong(0)).toSeq === Seq(2L, 3L, 4L, 101L, 102L, 103L))
-    // position 0 of each file is deleted; survivors keep ORIGINAL ordinals
-    assert(got.map(_.getLong(1)).toSeq === Seq(1L, 2L, 3L, 1L, 2L, 3L))
-  }
+    test("identity columns subtract outstanding sidecars natively") {
+      val (t, path) = freshTable("'write.delete.mode' = 'merge-on-read'")
+      spark.sql(s"DELETE FROM $t WHERE id IN (1, 100)")
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+      val got = spark.sql(s"SELECT id, __gr_pos FROM $t ORDER BY id").collect()
+      assert(got.map(_.getLong(0)).toSeq === Seq(2L, 3L, 4L, 101L, 102L, 103L))
+      // position 0 of each file is deleted; survivors keep ORIGINAL ordinals
+      assert(got.map(_.getLong(1)).toSeq === Seq(1L, 2L, 3L, 1L, 2L, 3L))
+    }
 
-  test("identity columns + filters: file pruning keeps counts right") {
-    val (t, _) = freshTable("")
-    val one = spark.sql(
-      s"SELECT __gr_file FROM $t WHERE id = 101").collect()
-    assert(one.length === 1)
-    // a filter matching only file A prunes file B's scan but not its rows
-    assert(spark.sql(s"SELECT count(distinct __gr_file) FROM $t WHERE id <= 4")
-      .head().getLong(0) === 1L)
-  }
+    test("identity columns + filters: file pruning keeps counts right") {
+      val (t, _) = freshTable("")
+      val one = spark.sql(
+        s"SELECT __gr_file FROM $t WHERE id = 101").collect()
+      assert(one.length === 1)
+      // a filter matching only file A prunes file B's scan but not its rows
+      assert(spark.sql(s"SELECT count(distinct __gr_file) FROM $t WHERE id <= 4")
+        .head().getLong(0) === 1L)
+    }
 
-  test("change feed across a MOR UPDATE emits the delete+insert pair") {
-    val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
-    val v = Snapshots.versions(spark, path).last
-    spark.sql(s"UPDATE $t SET v = v + 7 WHERE id = 3")
-    val feed = Snapshots.changeFeed(spark, path, v, v + 1)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"),
-        r.getAs[String]("_change_type"))).sortBy(x => (x._1, x._3))
-    assert(feed.toSeq === Seq((3L, 30L, "delete"), (3L, 37L, "insert")))
-  }
+    test("change feed across a MOR UPDATE emits the delete+insert pair") {
+      val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
+      val v = Snapshots.versions(spark, path).last
+      spark.sql(s"UPDATE $t SET v = v + 7 WHERE id = 3")
+      val feed = Snapshots.changeFeed(spark, path, v, v + 1)
+        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"),
+          r.getAs[String]("_change_type"))).sortBy(x => (x._1, x._3))
+      assert(feed.toSeq === Seq((3L, 30L, "delete"), (3L, 37L, "insert")))
+    }
 
-  test("MOR UPDATE on an ALTER-evolved table serves added columns as NULLs") {
-    val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
-    spark.sql(s"ALTER TABLE $t ADD COLUMNS (note STRING)")
-    spark.sql(s"UPDATE $t SET note = 'hot', v = v + 1 WHERE id = 100")
-    val r = spark.sql(s"SELECT id, v, note FROM $t WHERE id IN (100, 101) ORDER BY id")
-      .collect()
-    assert(r(0).getLong(1) === 1001L && r(0).getString(2) === "hot")
-    assert(r(1).getLong(1) === 1010L && r(1).isNullAt(2))
-    assert(Snapshots.deleteFiles(spark, path).size === 1)
+    test("MOR UPDATE on an ALTER-evolved table serves added columns as NULLs") {
+      val (t, path) = freshTable("'write.update.mode' = 'merge-on-read'")
+      spark.sql(s"ALTER TABLE $t ADD COLUMNS (note STRING)")
+      spark.sql(s"UPDATE $t SET note = 'hot', v = v + 1 WHERE id = 100")
+      val r = spark.sql(s"SELECT id, v, note FROM $t WHERE id IN (100, 101) ORDER BY id")
+        .collect()
+      assert(r(0).getLong(1) === 1001L && r(0).getString(2) === "hot")
+      assert(r(1).getLong(1) === 1010L && r(1).isNullAt(2))
+      assert(Snapshots.deleteFiles(spark, path).size === 1)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 /** Plan auditor: prints formatted physical plans for the headline queries
   * so scan pushdown / broadcast choices / codegen spans can be reviewed
-  * (run: sbt "runMain graft.Plans [queryName ...]").
+  * (run: sbt "Test/runMain graft.Plans [queryName ...]").
   */
 object Plans {
   def main(args: Array[String]): Unit = {

@@ -231,9 +231,8 @@ class SqlRowLevelSpec extends SparkTestBase {
         .filter(_.getPath.getName.startsWith("part-"))
         .map(_.getPath.toString).toSeq, dir)
     }
-    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val v = Snapshots.replaceFiles(spark, path, pinned,
-      hit.map(norm).toSet, newFiles, "sql-update-test", Nil)
+      hit.toSet, newFiles, "sql-update-test", Nil)
     // both the replacement AND the interleaved append are visible
     val got = Snapshots.read(spark, path, Some(v))
       .select("id").as[Long].collect().toSet

@@ -134,13 +134,11 @@ class WapHardeningSpec extends SparkTestBase {
     // vanishes, so its rename fails after the first already moved
     val manifest = scala.io.Source.fromFile(
       s"$branch/manifest-v3.json").getLines().drop(1).toSeq
-    // branch-LOCAL dirs only (fork-point lines reference the parent's
-    // data dirs and are never relocated)
-    val bPrefix = new org.apache.hadoop.fs.Path(branch).toUri.getPath + "/data/"
-    val ordered = manifest
-      .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
-      .filter(_.startsWith(bPrefix))
-      .map(_.stripPrefix(bPrefix).takeWhile(_ != '/')).distinct
+    // branch-LOCAL dirs only: the root-relative lines (fork-point lines
+    // reference the parent's data dirs by absolute path and are never
+    // relocated)
+    val ordered = manifest.filter(_.startsWith("data/"))
+      .map(_.stripPrefix("data/").takeWhile(_ != '/')).distinct
     assert(ordered.length === 2)
     val victim = new java.io.File(s"$branch/data/${ordered(1)}")
     assert(victim.exists())

@@ -92,7 +92,7 @@ class WriteOrderSpec extends SparkTestBase {
     assert(after.size > 1, "rewrite should produce multiple ranged files")
     val stats = FileStats.load(spark, path)
     val ranges = after.flatMap(f =>
-      stats.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
+      stats.get(f)
         .flatMap(_.get("k"))).map(r =>
       (r.min.get.asInstanceOf[Long], r.max.get.asInstanceOf[Long]))
     val sortedR = ranges.sortBy(_._1)
@@ -137,7 +137,7 @@ class WriteOrderSpec extends SparkTestBase {
     val after = Snapshots.dataFiles(spark, path, None)
     val stats = FileStats.load(spark, path)
     val ranges = after.flatMap(f =>
-      stats.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
+      stats.get(f)
         .flatMap(_.get("k"))).map(r =>
       (r.min.get.asInstanceOf[Long], r.max.get.asInstanceOf[Long]))
       .sortBy(_._1)
