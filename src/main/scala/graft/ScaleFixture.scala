@@ -73,7 +73,7 @@ object ScaleFixture {
   /** The two-point scaling-curve subset — run again at factor 32 for
     * the second-decade ratio. One representative per scale-critical family:
     * the linear-by-nature full scan (q1), the restructured sketch audit
-    * (q73), COW merge (q71), covariance explode (s9), in-row pair gen
+    * (q73), MOR merge (q71), covariance explode (s9), in-row pair gen
     * (q64), banded hamming join (d6), the two graph iterators (q72,
     * q67), IVF+PQ (s13), and LSH-pair connected components (s10).
     * Cheap-first so a tight budget truncates from the expensive end.

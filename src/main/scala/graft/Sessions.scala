@@ -28,6 +28,11 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // Spark's generated-class cache (default 100 entries) is smaller
+      // than one DML round's working set (~110 distinct classes: append,
+      // MOR delete, merge, upsert, reads, feed, maintain), so every
+      // round recompiled ~60 evicted classes and ran them JIT-cold
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

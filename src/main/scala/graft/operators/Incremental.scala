@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *    granular: only appended files are read, ref intent: lab05's
   *    filename-watermark incrementality, dags/fuel_ingest_dag.py:92-111,
   *    done properly with manifests);
-  *  - copy-on-write MERGE upsert (the dbt incremental delete+insert of
-  *    magic_shop/models/marts/fct_orders.sql:9-16, at file granularity);
+  *  - merge-on-read MERGE upsert (the dbt incremental delete+insert of
+  *    magic_shop/models/marts/fct_orders.sql:9-16, at row granularity);
   *  - partial-aggregate maintenance (base + delta merge == full
   *    recompute, the materialized-view refresh identity);
   *  - incremental dedup of a new batch against an indexed corpus (the
@@ -140,12 +140,12 @@ object Incremental {
         max("mx").as("max_price"))
   }
 
-  /** q71: copy-on-write MERGE upsert on the snapshot table. The base
+  /** q71: merge-on-read MERGE upsert on the snapshot table. The base
     * commit range-partitions documents by doc_id into 8 files; the
     * upsert touches doc_id <= 50 (one file's key range) plus three
-    * brand-new rows — so the merge rewrites ONE data file and carries
-    * the other seven into the new manifest untouched (asserted in
-    * SnapshotsSpec). The oracle applies the same upsert relationally to
+    * brand-new rows — so the merge's deletion vector names ONE data
+    * file, all eight carry into the new manifest, and the update rows
+    * append (the shape SnapshotsSpec asserts). The oracle applies the same upsert relationally to
     * the raw table; the final-state aggregate must match exactly.
     */
   val qMergeUpsert: QuerySpec = QuerySpec.sql(
@@ -227,8 +227,9 @@ object Incremental {
     * each user's open interval at the boundary (same tracked value →
     * extend, keeping the original valid_from; different → close at the
     * first new change; unseen user → plain insert), and publish through
-    * one [[Snapshots.merge]] on the (user, valid_from) surrogate key so
-    * only files containing touched keys rewrite. Batch events:
+    * one [[Snapshots.merge]] on the (user, valid_from) surrogate key, a
+    * deletion vector over the touched rows plus the appended batch.
+    * Batch events:
     * (user_id, event_id, us, event_type).
     */
   private[graft] def scd2Apply(s: SparkSession, root: String,
@@ -271,20 +272,19 @@ object Incremental {
     * valid_to moves, valid_from keeps) or closes at the first new
     * change, and the batch's own runs insert — all through one
     * `Snapshots.merge` on the (user, valid_from) surrogate key, so
-    * only files containing touched keys rewrite (COW). The oracle
-    * recomputes every interval from the FULL event history, so a
+    * only the touched rows die (by position) and no file rewrites. The
+    * oracle recomputes every interval from the FULL event history, so a
     * boundary-stitch mistake (lost extension, off-by-one close, a
     * dropped open row) fails the hash gate: incremental == recompute
     * for slowly-changing dimensions.
     *
     * Scale shape: the apply's per-batch work is (batch runs) ⋈ (open
-    * rows), and the REWRITE is file-pruned — only data files containing
-    * a stitched key are rewritten, history files carry forward in the
-    * manifest untouched. The open-row probe does scan the dimension's
-    * narrow interval columns (at 100 TB you'd additionally partition
-    * the table by a user-id bucket so the probe prunes files too — the
-    * commit already range-partitions by user_id to make rewrites
-    * key-local). The arrival replay is the lab05 filename-watermark
+    * rows), and the commit rewrites nothing — a stitched key's old row
+    * dies by position, every history file carries forward in the
+    * manifest. The open-row probe does scan the dimension's narrow
+    * interval columns (at 100 TB you'd additionally partition the table
+    * by a user-id bucket so the probe prunes files too — the commit
+    * already range-partitions by user_id to keep the probe key-local). The arrival replay is the lab05 filename-watermark
     * intent done transactionally.
     */
   val qScd2Merge: QuerySpec = QuerySpec.sql(
@@ -2101,7 +2101,7 @@ object Incremental {
     *   v1 commit even-key orders (amount = DECIMAL(18,4) of
     *   o_totalprice, so the incremental sums are EXACT) → CREATE MV
     *   (group by o_orderstatus; n = count(*), amount = sum(amount)),
-    *   full-computed at v1 → v2 append odd keys → v3 COW MERGE upsert
+    *   full-computed at v1 → v2 append odd keys → v3 MOR MERGE upsert
     *   (keys %7==3 → status 'U1', amount+1000) → v4 MOR DELETE
     *   (keys %10==0) → refresh folds ONLY the v1→v4 change feed into
     *   the stored groups (cost ∝ touched files + MV size, never ∝

@@ -685,7 +685,8 @@ object Snapshots {
     * files containing matches rewrite, [[deleteWhere]]) or
     * `merge-on-read` (position-delete sidecars, [[deleteWhereMor]]).
     * SQL `DELETE FROM` on a catalog table consults this; the Scala API
-    * stays explicit (callers pick the method). Declared via
+    * does not (a Scala delete picks its method, and [[merge]] is always
+    * merge-on-read). Declared via
     * TBLPROPERTIES ('write.delete.mode') at DDL time or ALTER TABLE SET
     * TBLPROPERTIES after.
     */
@@ -1633,8 +1634,8 @@ object Snapshots {
     * a later compaction rewrote them away — the manifests in [from, to]
     * are retained (the range validated against live versions), and
     * vacuum never reclaims a file a retained manifest references. A
-    * step that CHANGES rows — overwrite, COW DML, MOR delete, equality
-    * upsert — still refuses loudly rather than silently misreporting;
+    * step that CHANGES rows — overwrite, COW DML, MOR delete or merge,
+    * equality upsert — still refuses loudly rather than silently misreporting;
     * that's [[changeFeed]]'s job.
     */
   def changes(spark: SparkSession, table: String, from: Long, to: Long): DataFrame = {
@@ -1643,8 +1644,8 @@ object Snapshots {
       else if (s.maintenance) Seq.empty
       else if (s.deletesChanged)
         throw new IllegalArgumentException(
-          s"history v${s.from} -> v${s.to} includes a merge-on-read DELETE — not " +
-            "append-only; use changeFeed")
+          s"history v${s.from} -> v${s.to} includes a merge-on-read DELETE or " +
+            "MERGE — not append-only; use changeFeed")
       else if (s.eqChanged)
         throw new IllegalArgumentException(
           s"history v${s.from} -> v${s.to} includes an equality-delete upsert — " +
@@ -1681,7 +1682,7 @@ object Snapshots {
   }
 
   /** Row-level CHANGE FEED between committed versions `from` and `to`,
-    * valid across ARBITRARY DML history — append, COW merge, delete,
+    * valid across ARBITRARY DML history — append, merge, delete,
     * overwrite, compaction, z-order, MERGE-ON-READ sidecars of BOTH
     * forms (position and equality) — where `changes` (the append-only
     * fast path) refuses. Emits the snapshot-to-snapshot multiset diff
@@ -1697,8 +1698,8 @@ object Snapshots {
     * same physical rows at both ends; only their liveness can differ,
     * and only if a sidecar in the symmetric difference of the two ends'
     * sidecar sets reaches it — the TOUCHED files T ⊆ C (position: the
-    * changed sidecars' referenced files; equality: the key-hit probe
-    * over in-scope carried files). With
+    * changed sidecars' referenced files; equality: the in-scope carried
+    * files the sidecar keys can reach by stats, [[eqReach]]). With
     *   gone = the from-live rows of T that a sidecar only at `to` kills,
     *   back = the to-live rows of T that a sidecar only at `from` kills,
     * and U the rows live at both ends,
@@ -1713,8 +1714,10 @@ object Snapshots {
     * tagged directly, with no aggregation: a MOR delete step is its
     * killed pre-images, a restore across one the rows it brings back.
     * Untouched carried files are never read, so a small DML on a large
-    * table costs the files it touched; a COW merge's rewritten files
-    * still enter the diff whole (R and A).
+    * table costs the files it touched: a merge (merge-on-read) feeds its
+    * killed pre-images against its appended rows; only a copy-on-write
+    * rewrite (SQL COW DML, [[deleteWhere]]) enters the diff whole (R
+    * and A).
     */
   def changeFeed(spark: SparkSession, table: String, from: Long,
       to: Long): DataFrame = {
@@ -1792,13 +1795,10 @@ object Snapshots {
       else {
         s.carried.filter(PositionDeletes.referencedDataFiles(spark, changedDeletes).toSet)
       }
-    val changedEq = s.eqOnlyFrom ++ s.eqOnlyTo
-    val affectedEq =
-      if (changedEq.isEmpty || s.carried.isEmpty) Seq.empty[String]
-      else {
-        eqHitFiles(spark, table, s.to,
-          s.carried.filterNot(affected.toSet), s.toDeletes, changedEq)
-      }
+    // equality: every carried file the changed sidecars can reach by
+    // stats goes straight into the kill filter, which is exact
+    val affectedEq = eqReach(spark, table, s.to,
+      s.carried.filterNot(affected.toSet), s.eqOnlyFrom ++ s.eqOnlyTo)
     val touched = affected ++ affectedEq
     // add-versions resolve at `to` for both ends: a file's add version
     // is its first manifest appearance, the same from either end
@@ -1914,21 +1914,6 @@ object Snapshots {
       .select((cols.map(col) :+ col("_change_type")): _*)
   }
 
-  /** Copy-on-write MERGE (upsert) into the latest snapshot by `key`:
-    * rows whose key matches an update row are replaced, update keys
-    * absent from the table are inserted. Only the data files that
-    * actually CONTAIN a matched key are rewritten — every other file
-    * carries into the new manifest verbatim, so a small upsert into a
-    * huge table rewrites a handful of files, not the table (the
-    * Iceberg/Delta COW shape). The touched-file probe is a broadcast
-    * semi-join over the update keys that collects only file paths
-    * (bounded by the file count, never row count).
-    *
-    * Publishes optimistically at `latest + 1`; a concurrent commit
-    * between the read and the publish fails the rename and aborts the
-    * merge (serializable-writer semantics — the caller retries against
-    * the new snapshot).
-    */
   /** Read data files for a rewrite/probe with mergeSchema: on an
     * evolved table a single footer's schema would silently drop (or
     * fail on) columns other files carry.
@@ -1949,7 +1934,7 @@ object Snapshots {
       case None => readFiles(spark, files)
     }
 
-  /** Above this many manifest entries, merge/deleteWhere keep their
+  /** Above this many manifest entries, deleteWhere keeps its
     * touched-file algebra DISTRIBUTED (the probe's matched paths are
     * deduped and joined in Spark; only the hit list reaches the
     * driver). Below it, the driver-side Set is strictly faster — no
@@ -2156,29 +2141,51 @@ object Snapshots {
     (files, dataDir)
   }
 
+  /** MERGE (upsert) into the latest snapshot by `key`, MERGE-ON-READ:
+    * rows whose key matches an update row are replaced, update keys
+    * absent from the table are inserted, and no data file is rewritten.
+    * The matched rows' positions become one deletion-vector sidecar
+    * ([[positionSidecar]], [[deleteWhereMor]]'s writer) and the update
+    * rows append as new data files, so the commit costs the probe scan
+    * of the key-range files plus the batch, and the step's change feed
+    * is the killed pre-images against the appended rows. The sidecars
+    * pile up one per merge until [[maintain]], [[purgeDeletes]] or
+    * [[compact]] folds them.
+    *
+    * Publishes with append-rebase: a concurrent writer that rewrote a
+    * hit file, or an interleaved append carrying one of the update keys,
+    * aborts the merge (the caller retries against the new snapshot);
+    * other appends and disjoint MOR deletes rebase freely.
+    */
   def merge(spark: SparkSession, table: String, updates: DataFrame, key: String): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, max, min, sum, when}
+    import org.apache.spark.sql.{GraftShim, Row}
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, lit, max, min, sum, when}
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     // one materialization serves the dup-check, the bounds, the probe,
-    // and the rewrite (updates would otherwise recompute per action —
+    // and the append (updates would otherwise recompute per action —
     // 4x the source cost per mergeSink micro-batch). A caller that
     // already checkpointed (mergeSink does) is not re-materialized.
     val u = org.apache.spark.sql.GraftShim.logicalPlan(updates) match {
       case _: org.apache.spark.sql.execution.LogicalRDD => updates
       case _ => updates.localCheckpoint()
     }
-    // one job answers both input-contract checks — a NULL key can never
-    // match a table row (rejecting loudly beats silently inserting an
-    // unmatchable row), and MERGE is undefined when two source rows
-    // target one key (Delta/Iceberg's "multiple source rows matched") —
-    // AND the key bounds the touched-file probe scans by (folding the
-    // former separate min/max job into the same aggregation)
-    val contract = u.groupBy(col(key)).agg(count(lit(1)).as("n"))
+    // one aggregation answers both input-contract checks — a NULL key
+    // can never match a table row (rejecting loudly beats silently
+    // inserting an unmatchable row), and MERGE is undefined when two
+    // source rows target one key (Delta/Iceberg's "multiple source rows
+    // matched") — AND gives the key bounds the probe prunes by and the
+    // key list it matches against. The coalesce keeps the global fold in
+    // the grouping's reduce task (no second exchange, so 2 jobs), and
+    // the keys reach the driver once, the envelope a broadcast of them
+    // already had.
+    val contract = u.groupBy(col(key)).agg(count(lit(1)).as("n")).coalesce(1)
       .agg(
         coalesce(sum(when(col(key).isNull, col("n"))), lit(0L)).as("nulls"),
         count(when(col(key).isNotNull && col("n") > 1, lit(1))).as("dups"),
-        min(col(key)).as("lo"), max(col(key)).as("hi"))
+        min(col(key)).as("lo"), max(col(key)).as("hi"), collect_list(col(key)))
       .head()
     require(contract.getLong(0) == 0,
       s"merge updates contain ${contract.getLong(0)} NULL value(s) of key " +
@@ -2186,13 +2193,12 @@ object Snapshots {
     require(contract.getLong(1) == 0,
       s"merge updates contain ${contract.getLong(1)} duplicate value(s) of key '$key'")
     val src = vs.last
-    requireNoEqDeletes(spark, table, "merge (copy-on-write upsert)", src)
+    requireNoEqDeletes(spark, table, "merge (merge-on-read upsert)", src)
     val files = manifestFiles(spark, table, src)
     // schema contract up front: MERGE carries the table's shape. The
-    // hit-file path would fail loudly in unionByName, but the hit-EMPTY
-    // path (no key matched) would otherwise commit the updates frame
-    // verbatim — silently mixing two physical layouts in one manifest,
-    // the exact corruption strictAppendSchema blocks on the append path.
+    // update rows append verbatim, so a mismatched frame would silently
+    // mix two physical layouts in one manifest — the exact corruption
+    // strictAppendSchema blocks on the append path.
     if (files.nonEmpty) {
       def sig(st: org.apache.spark.sql.types.StructType) =
         st.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
@@ -2201,51 +2207,48 @@ object Snapshots {
         s"merge updates schema ${u.schema} does not match the table's " +
           s"committed schema $committed")
     }
-    // touched-file probe: restrict the scan to the updates' key RANGE
-    // first — parquet row-group min/max stats then skip files whose key
-    // span cannot contain a match — and collect only file paths
-    // probe and rewrite both run on the LIVE view: a row an unpurged
-    // MOR delete already subtracted must neither trigger a rewrite nor
-    // be resurrected by one
-    val dels = manifestDeletes(spark, table, src)
-    val bounds = org.apache.spark.sql.Row(contract.get(2), contract.get(3))
-    // manifest-level skipping BEFORE the probe scan (deleteWhereMor's
-    // rule): files whose recorded key range cannot overlap the updates'
-    // bounds never open — on a 100 TB write-ordered table the probe's
-    // task list is the key-range files, not the manifest (conservative:
-    // files without stats survive into the scan)
+    // the probe runs on the LIVE view (a row an unpurged MOR delete
+    // already subtracted must not be killed twice) restricted to the
+    // updates' key range: manifest stats skip files whose recorded key
+    // range cannot overlap (conservative: files without stats survive),
+    // parquet row-group stats the rest
+    val inRange = col(key).between(lit(contract.get(2)), lit(contract.get(3)))
     val candidates =
-      if (files.isEmpty || bounds.isNullAt(0)) Seq.empty[String]
-      else FileStats.prune(spark, table, files,
-        col(key).between(lit(bounds.get(0)), lit(bounds.get(1))))
-    val (hit, keep) =
-      if (candidates.isEmpty) (Seq.empty[String], files)
-      else partitionByProbe(spark, files,
-        liveView(spark, table, candidates, dels,
-          readTableFiles(spark, table, _), fileColumn = Some("__file"))
-          .filter(col(key).between(lit(bounds.get(0)), lit(bounds.get(1))))
-          .join(broadcast(u.select(col(key))), Seq(key), "left_semi")
-          .select("__file"))
-    // survivors of the hit files (non-matched keys) + every update row
-    // (replacements and inserts look identical from here)
-    val rewritten =
-      if (hit.isEmpty) u
-      else liveView(spark, table, hit, dels, readTableFiles(spark, table, _))
-        .join(broadcast(u.select(col(key))), Seq(key), "left_anti")
-        .unionByName(u)
-    val (newFiles, dataDir) = writeData(rewritten, table)
+      if (files.isEmpty || contract.isNullAt(2)) Seq.empty[String]
+      else FileStats.prune(spark, table, files, inRange)
+    val dels = manifestDeletes(spark, table, src)
+    // the key match: an in-scan set predicate (no job) when the key
+    // type has JVM-exact equality ([[EqKeySet.supports]]), else a
+    // broadcast semi-join of the key list
+    val keyList = contract.getSeq[Any](4)
+    val keySchema = u.select(col(key)).schema
+    def matching(df: DataFrame): DataFrame =
+      if (EqKeySet.supports(keySchema.head.dataType))
+        df.filter(GraftShim.column(InSet(GraftShim.expression(col(key)),
+          keyList.map(CatalystTypeConverters.convertToCatalyst).toSet)))
+      else df.join(broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(keyList.map(Row(_)): _*), keySchema)), Seq(key), "left_semi")
+    val killed = positionSidecar(spark, table, candidates, dels)(
+      df => matching(df.filter(inRange)))
+    // every update row appends (replacements and inserts look identical
+    // from here); the matched pre-images die by position
+    val (newFiles, dataDir) = writeData(u, table)
     // rebase conflict test: an interleaved append carrying one of OUR
     // update keys would coexist with the merged row (duplicate key) —
     // that interleaving must abort; appends of other keys rebase freely
     def appendsConflict(appended: Seq[String]): Boolean =
-      appended.nonEmpty && !bounds.isNullAt(0) && {
-        readTableFiles(spark, table, appended)
-          .filter(col(key).between(lit(bounds.get(0)), lit(bounds.get(1))))
-          .join(broadcast(u.select(col(key))), Seq(key), "left_semi")
+      appended.nonEmpty && !contract.isNullAt(2) &&
+        matching(readTableFiles(spark, table, appended).filter(inRange))
           .limit(1).count() > 0
-      }
-    publishRebase(spark, table, src, files, hit.toSet, newFiles,
-      "merge", Seq(dataDir), conflictsWith = appendsConflict)
+    val (sidecars, hit, delDir) = killed match {
+      case Some((sc, h, d)) => (sc, h, Seq(d))
+      case None => (Seq.empty[String], Seq.empty[String], Seq.empty[Path])
+    }
+    // a concurrent writer that rewrote a hit file aborts: the positions
+    // would no longer name the rows this merge replaces
+    publishRebase(spark, table, src, files, Set.empty, newFiles,
+      "merge", dataDir +: delDir, conflictsWith = appendsConflict,
+      addedDeletes = sidecars, requireDataPresent = hit.toSet)
   }
 
   /** Copy-on-write DELETE: publish a new snapshot without the rows
@@ -2328,7 +2331,7 @@ object Snapshots {
     */
   def deleteWhereMor(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, udf}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val src = vs.last
@@ -2339,39 +2342,50 @@ object Snapshots {
     // files whose stats cannot match never open (conservative — files
     // without stats survive)
     val candidates = FileStats.prune(spark, table, files, predicate)
-    if (candidates.isEmpty) return src
-    val dels = manifestDeletes(spark, table, src)
-    // the probe runs on the LIVE view (already-deleted positions are
-    // excluded, so sidecars never accumulate duplicate entries) and
-    // keeps the row-identity columns this delete is about to record
-    val scan = PositionDeletes.withRowIdentity(
-      readTableFiles(spark, table, candidates))
+    // SQL delete semantics: predicate NULL = survive, so only TRUE rows
+    // are recorded
+    positionSidecar(spark, table, candidates, manifestDeletes(spark, table, src))(
+      _.filter(coalesce(predicate, lit(false)))) match {
+      case None => src // nothing matched: no version bump
+      case Some((sidecars, touched, delDir)) =>
+        publishRebase(spark, table, src, files, Set.empty, Seq.empty,
+          "mor-delete", Seq(delDir), addedDeletes = sidecars,
+          requireDataPresent = touched.toSet)
+    }
+  }
+
+  /** Record the rows `matching` keeps of `candidates`' live view under
+    * `dels` as ONE position sidecar under `deletes/<uuid>` — the writer
+    * of both Scala merge-on-read DMLs ([[deleteWhereMor]], [[merge]]).
+    * The probe runs on the LIVE view, so already-deleted positions never
+    * enter a second sidecar, and each row is recorded under its file's
+    * entry ([[TablePaths.relativizeId]] of `_metadata.file_path`).
+    * Returns the sidecar files, the data files they reference and the
+    * dir to reclaim if the publish aborts; None, with nothing left on
+    * disk, when no row matched.
+    */
+  private def positionSidecar(spark: SparkSession, table: String,
+      candidates: Seq[String], dels: Seq[String])(
+      matching: DataFrame => DataFrame): Option[(Seq[String], Seq[String], Path)] = {
+    import org.apache.spark.sql.functions.{col, udf}
+    if (candidates.isEmpty) return None
+    val scan = PositionDeletes.withRowIdentity(readTableFiles(spark, table, candidates))
     val live = if (dels.isEmpty) scan
       else PositionDeletes.live(spark, scan, dels, keepIdentity = true)
-    // SQL delete semantics: predicate NULL = survive, so only TRUE rows
-    // are recorded, each under its file's recorded entry
     val tp = TablePaths(spark, table)
     val entry = udf((id: String) => tp.relativizeId(id))
-    val matched = live
-      .filter(coalesce(predicate, lit(false)))
+    val matched = matching(live)
       .select(entry(col(PositionDeletes.MetaFile)).as(PositionDeletes.FileCol),
         col(PositionDeletes.MetaPos).as(PositionDeletes.PosCol))
-    // ONE pass: encode + write the sidecar straight off the probe scan.
-    // The former localCheckpoint + distinct-collect pair re-materialized
-    // the matched set just to learn the touched-file list — which the
-    // written sidecar itself records, readable back on the driver. The
-    // delete runs the write's 2 jobs and no other.
+    // ONE pass, 2 jobs: encode + write the sidecar straight off the
+    // probe scan. DELETION-VECTOR layout (default): one row per touched
+    // data file, its positions roaring/RLE-encoded ([[DeleteVectors]]),
+    // ~2 B/position where the v1 one-row-per-position layout measured
+    // ~4 B plus a path string per row; the per-file groupBy holds one
+    // FILE's positions per task. `false` keeps the v1 layout (both read
+    // forever — dispatch is the footer schema).
     val f = fs(spark, table)
     val delDir = new Path(s"$table/deletes/${java.util.UUID.randomUUID}")
-    // DELETION-VECTOR sidecar (default): one row per touched data file,
-    // its positions roaring/RLE-encoded ([[DeleteVectors]]) — the
-    // round-9 read-tax table measured the v1 one-row-per-position
-    // layout at ~4 B/position on disk plus a path string per row; the
-    // DV collapses range deletes to bytes/run and scattered ones to
-    // ~2 B/position, raising the broadcast envelope accordingly. The
-    // per-file groupBy holds one FILE's positions per task (the same
-    // memory class as reading the file). `false` keeps the v1 layout
-    // (both read forever — dispatch is the footer schema).
     if (spark.conf.get("graft.snapshot.deleteVectorWrite", "true").toBoolean) {
       import spark.implicits._
       matched.as[(String, Long)].groupByKey(_._1)
@@ -2388,18 +2402,11 @@ object Snapshots {
     val sidecars = f.listStatus(delDir).toSeq
       .filter(_.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
-    // the touched-file set (the publish conflict guard + the read
-    // path's delete scope) reads back from the sidecar just written —
-    // a driver read of a KB-scale file, no job, and the call itself
-    // fills the sidecar-summary memo the first read needs
-    val touchedFiles = PositionDeletes.referencedDataFiles(spark, sidecars)
-    if (touchedFiles.isEmpty) { // nothing matched: no version bump
-      f.delete(delDir, true)
-      return src
-    }
-    publishRebase(spark, table, src, files, Set.empty, Seq.empty,
-      "mor-delete", Seq(delDir), addedDeletes = sidecars,
-      requireDataPresent = touchedFiles.toSet)
+    // the touched files read back from the sidecar on the driver (no
+    // job), filling the summary memo the first read needs
+    val touched = PositionDeletes.referencedDataFiles(spark, sidecars)
+    if (touched.isEmpty) { f.delete(delDir, true); None }
+    else Some((sidecars, touched, delDir))
   }
 
   /** Fold outstanding position-delete sidecars back into plain data
@@ -2516,6 +2523,102 @@ object Snapshots {
       addedEqDeletes = sidecars, requireDataPresent = files.toSet)
   }
 
+  /** `eqs` grouped by key set. Sidecars in one feed range can carry
+    * DIFFERENT key sets — legal when the range spans a purge boundary
+    * (upsertEq's shared-key invariant holds per VERSION, not per range):
+    * a blind union of their frames would throw on mismatched columns and
+    * key on the wrong set, so each group is handled on its own.
+    */
+  private def eqGroups(spark: SparkSession,
+      eqs: Seq[(Long, String)]): Seq[Seq[(Long, String)]] =
+    eqs.groupBy(e => eqSidecarKeys(spark, e._2)).values.toSeq
+
+  /** The files among `candidates` that the equality sidecars `eqs` can
+    * reach: added at or before some sidecar's scope and, per key set,
+    * kept by an IN list of the sidecar keys through [[FileStats]] ranges
+    * and blooms. Driver-side only — the keys are read there, no job — so
+    * it is a superset of the files a key actually hits: the change
+    * feed's kill filter is exact over it, and [[purgeEqDeletes]]' probe
+    * narrows it to its rewrite set.
+    */
+  private def eqReach(spark: SparkSession, table: String, v: Long,
+      candidates: Seq[String], eqs: Seq[(Long, String)]): Seq[String] =
+    if (eqs.isEmpty || candidates.isEmpty) Nil
+    else eqGroups(spark, eqs).flatMap(eqReachOneKeySet(spark, table, v, candidates, _)).distinct
+
+  private def eqReachOneKeySet(spark: SparkSession, table: String, v: Long,
+      candidates: Seq[String], eqs: Seq[(Long, String)]): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    val addV = fileAddVersions(spark, table, v)
+    val maxScope = eqs.map(_._1).max
+    // unknown files (never in a retained manifest) fall IN scope
+    val inScope = candidates.filter(p => addV.getOrElse(p, 0L) <= maxScope)
+    // STATS-PRUNED reach: while the key sets fit the IN-list cap, an IN
+    // predicate per key column prunes the in-scope files through
+    // FileStats ranges + blooms before any row is read — on a
+    // write-ordered (or bloom-specced) table only the key-range files
+    // survive. Per-column lists are conservative for composite keys (a
+    // file must contain SOME value of EACH column to possibly match);
+    // an oversized or NULL-bearing list, a key type the driver read does
+    // not decode exactly, or any failure keeps every in-scope file. Below
+    // the candidate floor the stats walk costs more than it saves.
+    val inListCap = spark.conf
+      .get("graft.snapshot.eqProbeInListMaxKeys", "65536").toInt
+    val minCandidates = spark.conf
+      .get("graft.snapshot.eqProbeMinCandidates", "64").toInt
+    if (inListCap <= 0 || inScope.size < minCandidates || !eqFits(spark, eqs)) inScope
+    else try {
+      val keys = eqKeyColumns(spark, eqs)
+      val vals = keys.map(_ => scala.collection.mutable.HashSet.empty[Any])
+      eqs.foreach { case (_, p) =>
+        val sch = FooterSchemas.of(spark, p)
+        val types = keys.map(k => sch(k).dataType)
+        if (!types.forall(EqKeySet.supports)) return inScope
+        PositionDeletes.readOnDriver(spark, p)(PositionDeletes.eachRow(_, keys) { g =>
+          types.indices.foreach(i => vals(i) += org.apache.spark.sql.catalyst
+            .CatalystTypeConverters.convertToScala(EqKeySet.value(types(i), g, i), types(i)))
+        })
+      }
+      keys.zip(vals).foldLeft(inScope) { case (cand, (k, vs)) =>
+        if (cand.isEmpty || vs.size > inListCap || vs.contains(null)) cand
+        else FileStats.prune(spark, table, cand, col(k).isin(vs.toSeq: _*))
+      }
+    } catch { case scala.util.control.NonFatal(_) => inScope }
+  }
+
+  /** The files among `candidates` whose LIVE rows match a key of `eqs`
+    * under that key's version scope — [[purgeEqDeletes]]' rewrite set:
+    * one scan of the reachable files ([[eqReach]]), position deletes
+    * resolved first so dead rows cannot hit.
+    */
+  private def eqHitFiles(spark: SparkSession, table: String, v: Long,
+      candidates: Seq[String], dels: Seq[String],
+      eqs: Seq[(Long, String)]): Seq[String] = {
+    import org.apache.spark.sql.functions.broadcast
+    if (eqs.isEmpty || candidates.isEmpty) return Nil
+    val addV = fileAddVersions(spark, table, v)
+    eqGroups(spark, eqs).flatMap { g =>
+      val reach = eqReachOneKeySet(spark, table, v, candidates, g)
+      if (reach.isEmpty) Nil
+      else {
+        val keys = eqKeyColumns(spark, g)
+        val withV = withAddVersions(spark, table,
+          liveView(spark, table, reach, dels, readTableFiles(spark, table, _),
+            fileColumn = Some(EqFileCol)),
+          EqFileCol, reach, addV)
+        val hits = eqKeySet(spark, g, keys, withV.schema) match {
+          case Some(set) => withV.filter(eqKeyDeleted(keys, set))
+          case None =>
+            val eqFrame = eqSideFrame(spark, g)
+            withV.join(broadcast(eqFrame), eqJoinCond(withV, eqFrame, keys), "left_semi")
+        }
+        val hitIds = hits
+          .select(EqFileCol).distinct().collect().map(_.getString(0)).toSet
+        reach.filter(p => hitIds(TablePaths.fileId(p)))
+      }
+    }.distinct
+  }
+
   /** Fold outstanding EQUALITY deletes back into plain data files: an
     * exact probe finds the in-scope files that CONTAIN a matching key;
     * only those rewrite (through the fully-resolved view, so position
@@ -2525,116 +2628,6 @@ object Snapshots {
     * stream's read-side tax — cost ∝ the bytes of key-hit files,
     * batched across every upsert since the last purge.
     */
-  /** The candidate files whose LIVE rows match any of `eqs`' keys under
-    * that key's version scope — the EXACT key-hit probe shared by
-    * [[purgeEqDeletes]] (its rewrite set) and the equality-aware
-    * [[changeFeed]] (its affected-carried set). Cost: one scan of the
-    * in-scope candidates (position deletes resolved first so dead rows
-    * can't hit); the returned list is file-count bounded.
-    */
-  /** Memo of the key-hit probe's result. Sound because every input is
-    * immutable content: data files and sidecars live under UUID dirs
-    * and are never rewritten in place, and (table, v) pins the add-
-    * version map. The probe is a full (small) Spark job that the feed
-    * walk re-runs on every plan of the same range — a streaming CDF
-    * consumer polls it per micro-batch, q112 re-probes exactly q111's
-    * step — so repeat plans should pay a map lookup, not a scan.
-    */
-  private[graft] val eqHitMemo =
-    graft.Memo[(String, Long, String), Seq[String]](1024)(k => Seq(k._1))
-
-  /** SHA-256 over the joined sorted input lists — the memo key carries
-    * this digest instead of the Seq values themselves: each retained
-    * entry would otherwise hold up to ~10⁶ path strings (the round-11
-    * advice's unbounded-memory class), where the digest is 64 hex chars
-    * with the same collision-free-in-practice lookup.
-    */
-  private def eqHitDigest(parts: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    parts.foreach { p => md.update(p.getBytes("UTF-8")); md.update(0.toByte) }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  private def eqHitFiles(spark: SparkSession, table: String, v: Long,
-      candidates: Seq[String], dels: Seq[String],
-      eqs: Seq[(Long, String)]): Seq[String] = {
-    if (eqs.isEmpty || candidates.isEmpty) return Nil
-    // the retained-version list is in the key (addVMemo's rule): a
-    // history mutation between probes shifts fileAddVersions' floor
-    val key = (table, v, eqHitDigest(
-      versions(spark, table).map(_.toString) ++ Seq("|") ++
-        candidates.sorted ++ Seq("|") ++ dels.sorted ++ Seq("|") ++
-        eqs.sortBy(_._2).map(e => s"${e._1}:${e._2}")))
-    // sidecars in ONE probe can carry DIFFERENT key sets — legal when
-    // the probe spans a purge boundary (upsertEq's shared-key invariant
-    // holds per VERSION, not per feed range): a blind union of their
-    // frames would throw on mismatched columns and key on the wrong
-    // set. Probe each key set independently; union the hits.
-    eqHitMemo(key) {
-      eqs.groupBy(e => eqSidecarKeys(spark, e._2))
-        .values.flatMap(g =>
-          eqHitFilesOneKeySet(spark, table, v, candidates, dels, g))
-        .toSeq.distinct
-    }
-  }
-
-  private def eqHitFilesOneKeySet(spark: SparkSession, table: String,
-      v: Long, candidates: Seq[String], dels: Seq[String],
-      eqs: Seq[(Long, String)]): Seq[String] = {
-    import org.apache.spark.sql.functions.broadcast
-    val addV = fileAddVersions(spark, table, v)
-    val maxScope = eqs.map(_._1).max
-    val inScope0 = candidates.filter(p => addV.getOrElse(p, 0L) <= maxScope)
-    if (inScope0.isEmpty) return Nil
-    val keys = eqKeyColumns(spark, eqs)
-    val eqFrame = eqSideFrame(spark, eqs)
-    // STATS-PRUNED probe: the sidecar key sets are broadcast-size by
-    // the read path's own envelope, so when they stay under the IN-list
-    // cap an IN predicate per key column prunes the in-scope candidates
-    // through FileStats ranges + blooms BEFORE any row is read — on a
-    // write-ordered (or bloom-specced) table the probe then opens only
-    // the key-range files, not every in-scope file. Per-column lists
-    // are conservative for composite keys (a file must contain SOME
-    // value of EACH column to possibly match); any failure, oversized
-    // list, or absent stats keeps every candidate.
-    // ...and a candidate-count floor: below it the stats walk + the
-    // key-collect job cost more than the full probe saves (measured at
-    // sf0.1/32 files: pruned 1.18 s vs unpruned 0.92 s — the prune's
-    // win is file-count-unbounded, its loss a small constant)
-    val inListCap = spark.conf
-      .get("graft.snapshot.eqProbeInListMaxKeys", "65536").toInt
-    val minCandidates = spark.conf
-      .get("graft.snapshot.eqProbeMinCandidates", "64").toInt
-    val inScope =
-      if (inListCap <= 0 || inScope0.size < minCandidates) inScope0
-      else try {
-        import org.apache.spark.sql.functions.col
-        keys.foldLeft(inScope0) { (cand, k) =>
-          if (cand.isEmpty) cand
-          else {
-            val vals = eqFrame.select(k).distinct()
-              .limit(inListCap + 1).collect().map(_.get(0))
-            if (vals.length > inListCap || vals.contains(null)) cand
-            else FileStats.prune(spark, table, cand,
-              col(k).isin(vals.toIndexedSeq: _*))
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => inScope0 }
-    if (inScope.isEmpty) return Nil
-    val withV = withAddVersions(spark, table,
-      liveView(spark, table, inScope, dels, readTableFiles(spark, table, _),
-        fileColumn = Some(EqFileCol)),
-      EqFileCol, inScope, addV)
-    val hits = eqKeySet(spark, eqs, keys, withV.schema) match {
-      case Some(set) => withV.filter(eqKeyDeleted(keys, set))
-      case None =>
-        withV.join(broadcast(eqFrame), eqJoinCond(withV, eqFrame, keys), "left_semi")
-    }
-    val hitIds = hits
-      .select(EqFileCol).distinct().collect().map(_.getString(0)).toSet
-    inScope.filter(p => hitIds(TablePaths.fileId(p)))
-  }
-
   def purgeEqDeletes(spark: SparkSession, table: String): Long = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")

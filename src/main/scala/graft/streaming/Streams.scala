@@ -136,8 +136,9 @@ object Streams {
     * stats prune it to the files the batch could touch — the same
     * pruning merge itself uses).
     *
-    * Copy-on-write: each merge rewrites only the files containing
-    * matched keys. Replay safety comes from upsert algebra, not
+    * Merge-on-read: each merge writes a deletion vector for the
+    * matched rows and appends the batch, rewriting no file (the
+    * vectors pile up until maintenance folds them). Replay safety comes from upsert algebra, not
     * tokens: re-merging the same batch maps the table to the same
     * state (equal sequence numbers re-apply idempotently; an extra
     * no-op version in history, never a wrong row).

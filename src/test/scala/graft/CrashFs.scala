@@ -124,33 +124,43 @@ final class CrashFs extends SchemeLocalFs("crash") {
   * manifest claim staged under `dir` lose — the instant the writer
   * creates its tmp manifest for version N, a rival `manifest-v<N>.json`
   * appears (carrying version N-1's entries, or none for N = 1), exactly
-  * what a concurrent writer winning the version would leave. One shot.
+  * what a concurrent writer winning the version would leave. With a
+  * `rival` the version is won by that writer instead, run right there
+  * (a real concurrent commit: an append, a compaction). One shot.
   */
 object RaceFsHook {
   @volatile private var armedDir: Option[String] = None
+  @volatile private var rival: Option[() => Unit] = None
   @volatile var occupied: Option[Long] = None
 
   private val TmpManifest = """\.manifest-v([0-9]+)\.json\..+\.tmp""".r
 
-  def arm(dir: String): Unit = {
+  def arm(dir: String, rivalWriter: Option[() => Unit] = None): Unit = {
     occupied = None
+    rival = rivalWriter
     armedDir = Some(new Path(dir).toUri.getPath)
   }
 
-  def disable(): Unit = armedDir = None
+  def disable(): Unit = { armedDir = None; rival = None }
 
   private[graft] def staged(p: Path): Unit = (armedDir, p.getName) match {
     case (Some(d), TmpManifest(n)) if p.getParent.toUri.getPath == d =>
       armedDir = None
       val v = n.toLong
-      val prev = java.nio.file.Paths.get(d, s"manifest-v${v - 1}.json")
-      val entries =
-        if (java.nio.file.Files.exists(prev)) {
-          val t = new String(java.nio.file.Files.readAllBytes(prev), "UTF-8")
-          t.dropWhile(_ != '\n')
-        } else "\n"
-      java.nio.file.Files.write(java.nio.file.Paths.get(d, s"manifest-v$v.json"),
-        s"v$v$entries".getBytes("UTF-8"))
+      rival match {
+        case Some(writer) =>
+          rival = None
+          writer()
+        case None =>
+          val prev = java.nio.file.Paths.get(d, s"manifest-v${v - 1}.json")
+          val entries =
+            if (java.nio.file.Files.exists(prev)) {
+              val t = new String(java.nio.file.Files.readAllBytes(prev), "UTF-8")
+              t.dropWhile(_ != '\n')
+            } else "\n"
+          java.nio.file.Files.write(java.nio.file.Paths.get(d, s"manifest-v$v.json"),
+            s"v$v$entries".getBytes("UTF-8"))
+      }
       occupied = Some(v)
     case _ => ()
   }

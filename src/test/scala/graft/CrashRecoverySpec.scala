@@ -178,7 +178,24 @@ class CrashRecoverySpec extends SparkTestBase {
   }
 
   test("merge (rebase publish with a conflict check) survives a crash at every step") {
-    val pts = sweep("merge")(r => Snapshots.commit(df(1 to 4), r): Unit) {
+    // the merge writes two dirs, the update rows under data/ and the
+    // deletion vector under deletes/, and a crash can strand either: once
+    // the retry has published, gc reclaims every dir no manifest
+    // references, and exactly one sidecar dir (the published one) stays
+    def bothReclaimed(r: String): Unit = {
+      Snapshots.gc(spark, r, graceMs = -60000L): Unit
+      val referenced = Snapshots.versions(spark, r).flatMap(v =>
+        Snapshots.dataFiles(spark, r, Some(v)) ++ Snapshots.deleteFiles(spark, r, Some(v)))
+      val f = new org.apache.hadoop.fs.Path(r)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val dirs = Seq("data", "deletes").map(new org.apache.hadoop.fs.Path(r, _))
+        .filter(f.exists).flatMap(f.listStatus(_)).map(_.getPath.toString)
+      dirs.foreach(d => assert(referenced.exists(_.startsWith(d + "/")),
+        s"orphaned $d after a crashed merge and its retry"))
+      assert(dirs.count(_.contains("/deletes/")) === 1, s"sidecar dirs under $r: $dirs")
+    }
+    val pts = sweep("merge", finalCheck = bothReclaimed)(
+      r => Snapshots.commit(df(1 to 4), r): Unit) {
       r => Snapshots.merge(spark, r,
         Seq((2L, "B!"), (9L, "i")).toDF("id", "v"), "id"): Unit
     }

@@ -192,7 +192,7 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
       val name = s"${cats(i)}.ns.h$i"
       val t = play(cats(i), s"h$i", ops)
       // a position sidecar counts while it references a live file: a
-      // COW merge carries one whose files it rewrote away
+      // restore can carry one whose files it undid
       val live = Snapshots.dataFiles(spark, t).toSet
       val dels = Snapshots.deleteFiles(spark, t).filter(d =>
         PositionDeletes.referencedDataFiles(spark, Seq(d)).exists(live))

@@ -83,19 +83,24 @@ class JobBudgetSpec extends SparkTestBase {
     assert(eqRows.find(_._1 == "U").map(_._2) === Some(2000L))
   }
 
-  test("a MOR delete runs at most 2 jobs, a merge over its sidecar at most 8") {
+  test("a MOR delete runs at most 2 jobs, a merge over its sidecar at most 6") {
     val t = table("dml")
     Snapshots.deleteWhereMor(spark, t, col("id") % 11 === 0)
     val (_, del) = jobs(Snapshots.deleteWhereMor(spark, t, col("id") % 13 === 0))
     assert(del <= 2, s"MOR delete ran $del jobs")
     val updates = ((1L to 1500L) ++ (40001L to 40500L)).map(i => (i, "M", i)).toDF("id", "st", "v")
-    val (_, merge) = jobs(Snapshots.merge(spark, t, updates, "id"))
-    assert(merge <= 8, s"merge ran $merge jobs")
+    val (v, merge) = jobs(Snapshots.merge(spark, t, updates, "id"))
+    assert(merge <= 6, s"merge ran $merge jobs")
+    // merge-on-read: one sidecar more, no data file removed
+    assert(Snapshots.deleteFiles(spark, t).size === 3)
+    assert(Snapshots.dataFiles(spark, t, Some(v - 1)).toSet
+      .subsetOf(Snapshots.dataFiles(spark, t).toSet))
   }
 
-  // Feed budgets. The upsert and endpoint feeds each spend two jobs on
-  // the key-hit probe (which carried files an equality sidecar reaches)
-  // and two on the diff.
+  // Feed budgets. Which carried files a changed sidecar reaches is
+  // decided on the driver (position: the sidecars' referenced files;
+  // equality: add-version scope and stats), so a feed runs only the
+  // jobs of its diff.
 
   test("a per-step MOR-delete feed runs at most 1 job") {
     val t = table("feedmor")
@@ -107,16 +112,32 @@ class JobBudgetSpec extends SparkTestBase {
     assert(n <= 1, s"MOR-delete feed ran $n jobs")
   }
 
-  test("a per-step equality-upsert feed runs at most 4 jobs") {
+  test("a per-step equality-upsert feed runs at most 2 jobs") {
     val t = table("feedeq")
     val v = Snapshots.upsertEq(spark, t,
       (1L to 2000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
     val (rows, n) = jobs(Snapshots.changeFeedByVersion(spark, t, v - 1, v).collect())
     assert(rows.length === 4000)
-    assert(n <= 4, s"upsert feed ran $n jobs")
+    assert(n <= 2, s"upsert feed ran $n jobs")
   }
 
-  test("an endpoint feed across append, MOR delete, merge and upsert runs at most 4 jobs") {
+  test("a per-step merge feed runs at most 2 jobs") {
+    val t = table("feedmerge")
+    Snapshots.deleteWhereMor(spark, t, col("id") % 7 === 0)
+    // 1..1000 hit the seeded file (every 7th already deleted), 40001..
+    // 40200 are new keys
+    val v = Snapshots.merge(spark, t,
+      ((1L to 1000L) ++ (40001L to 40200L)).map(i => (i, "M", i)).toDF("id", "st", "v"), "id")
+    val (rows, n) = jobs(Snapshots.changeFeed(spark, t, v - 1, v)
+      .select("id", "_change_type").as[(Long, String)].collect())
+    val replaced = (1L to 1000L).filter(_ % 7 != 0)
+    assert(rows.filter(_._2 == "delete").map(_._1).sorted.toSeq === replaced)
+    assert(rows.filter(_._2 == "insert").map(_._1).sorted.toSeq ===
+      (1L to 1000L) ++ (40001L to 40200L))
+    assert(n <= 2, s"merge feed ran $n jobs")
+  }
+
+  test("an endpoint feed across append, MOR delete, merge and upsert runs at most 2 jobs") {
     val t = table("feedmix")
     val from = Snapshots.versions(spark, t).last
     Snapshots.commit((50001L to 50500L).map(i => (i, "A", i)).toDF("id", "st", "v")
@@ -128,6 +149,6 @@ class JobBudgetSpec extends SparkTestBase {
       (19001L to 21000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
     val (rows, n) = jobs(Snapshots.changeFeed(spark, t, from, to).collect())
     assert(rows.nonEmpty)
-    assert(n <= 4, s"endpoint feed ran $n jobs")
+    assert(n <= 2, s"endpoint feed ran $n jobs")
   }
 }

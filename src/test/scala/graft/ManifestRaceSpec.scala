@@ -12,6 +12,9 @@ import graft.sources.Snapshots
   *
   *  - head-replacing publishes (commit, bucketed commit, RTAS,
   *    restore) and the rebase publish (merge) retry onto N+1;
+  *  - a merge that loses to a rewrite of a file it kills rows in, or to
+  *    an append carrying one of its keys, aborts and reclaims both dirs
+  *    it wrote;
   *  - CTAS, whose table must not exist, fails with TableAlreadyExists;
   *  - the one-shot claims fail loudly: fork ("concurrently created")
   *    and fastForward, which rolls its moved dirs back to the branch.
@@ -44,9 +47,11 @@ class ManifestRaceSpec extends SparkTestBase {
     Option(d.listFiles).toSeq.flatten.filter(_.isDirectory).map(_.getName).toSet
   }
 
-  /** Run `op` against `t` with the next claim under `claimDir` lost. */
-  private def losing[A](claimDir: String)(op: => A): A = {
-    RaceFsHook.arm(claimDir)
+  /** Run `op` against `t` with the next claim under `claimDir` lost,
+    * to `rival` when one is given.
+    */
+  private def losing[A](claimDir: String, rival: Option[() => Unit] = None)(op: => A): A = {
+    RaceFsHook.arm(claimDir, rival)
     try op finally RaceFsHook.disable()
   }
 
@@ -81,6 +86,41 @@ class ManifestRaceSpec extends SparkTestBase {
       // the rival's version stays intact in history
       assert(rows(t, Some(head + 1)) === rows(t, Some(head)))
     }
+  }
+
+  /** A merge of keys 2 (in the seeded file) and 9 that loses its claim
+    * to `rival` and must abort with `message`, reclaiming both dirs it
+    * wrote (the update rows and the deletion vector): the head is the
+    * rival's version and `data/` holds only committed dirs.
+    */
+  private def mergeAborts(name: String, rival: String => Unit, message: String,
+      want: Seq[(Long, String)]): Unit = {
+    val t = s"race:$root/$name"
+    Snapshots.commit(df(1 to 4), t)
+    Snapshots.commit(df(5 to 8), t)
+    val e = intercept[IllegalStateException](losing(t, Some(() => rival(t)))(
+      Snapshots.merge(spark, t, Seq((2L, "B"), (9L, "i")).toDF("id", "v"), "id")))
+    assert(e.getMessage.contains(message), e.getMessage)
+    assert(RaceFsHook.occupied === Some(3L))
+    assert(Snapshots.versions(spark, t) === Seq(1L, 2L, 3L))
+    assert(rows(t) === want)
+    val committed = Snapshots.versions(spark, t)
+      .flatMap(v => Snapshots.dataFiles(spark, t, Some(v)))
+      .map(p => new org.apache.hadoop.fs.Path(p).getParent.getName).toSet
+    assert(dirs(s"$t/data") === committed)
+    assert(dirs(s"$t/deletes").isEmpty)
+  }
+
+  test("merge aborts when a concurrent compaction rewrote its hit file") {
+    mergeAborts("mergecompact", t => Snapshots.compact(spark, t, 1): Unit,
+      "concurrent writer rewrote files targeted by merge", expected(1 to 8))
+  }
+
+  test("merge aborts when an interleaved append carries one of its keys") {
+    mergeAborts("mergeappend",
+      t => Snapshots.commit(Seq((9L, "rival")).toDF("id", "v"), t): Unit,
+      "concurrent append touches rows read by merge",
+      (expected(1 to 8) :+ ((9L, "rival"))).sortBy(_._1))
   }
 
   test("RTAS loses the manifest claim and retries onto the next version") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *    usable at a 10⁵-entry manifest (the 100 TB @ 128 MB/file shape is
   *    ~10⁶; 10⁵ in-spec keeps the suite fast while exercising the same
   *    code paths: parse, history, restore, vacuum reference-counting);
-  *  - merge/deleteWhere's touched-file split has two routes (driver Set
+  *  - deleteWhere's touched-file split has two routes (driver Set
   *    below `graft.snapshot.distributedProbeThreshold`, Spark join
   *    above) that must produce identical tables.
   */
@@ -51,7 +51,7 @@ class ManifestScaleSpec extends SparkTestBase {
     assert(sec < 30.0, f"manifest algebra over 10^5 entries took $sec%.1f s")
   }
 
-  test("merge and deleteWhere: distributed probe route == driver-set route") {
+  test("deleteWhere: distributed probe route == driver-set route") {
     def build(tag: String): String = {
       val t = freshDir(tag)
       Snapshots.commit((1L to 400L).toDF("id").withColumn("v", col("id") % 17)
@@ -59,9 +59,8 @@ class ManifestScaleSpec extends SparkTestBase {
       t
     }
     def apply(t: String): Unit = {
-      Snapshots.merge(spark, t,
-        Seq((7L, 700L), (401L, 4010L)).toDF("id", "v"), "id")
       Snapshots.deleteWhere(spark, t, col("id") % 5 === 0)
+      Snapshots.deleteWhere(spark, t, col("id") === 7L)
     }
     val a = build("setroute")
     apply(a) // default threshold: driver-set route
@@ -74,8 +73,8 @@ class ManifestScaleSpec extends SparkTestBase {
     val rb = Snapshots.read(spark, b).orderBy("id", "v")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(ra === rb, "the two probe routes must publish identical tables")
-    assert(ra.contains((7L, 700L)) && ra.contains((401L, 4010L)))
-    assert(!ra.exists(_._1 % 5 == 0))
+    assert(ra.size === 400 - 80 - 1)
+    assert(!ra.exists(r => r._1 % 5 == 0 || r._1 == 7L))
     assert(Snapshots.versions(spark, a) === Snapshots.versions(spark, b))
   }
 }

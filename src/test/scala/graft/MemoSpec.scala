@@ -82,7 +82,6 @@ class MemoSpec extends SparkTestBase {
     "delete side" -> PositionDeletes.sideMemo,
     "add versions" -> Snapshots.addVMemo,
     "eq key sets" -> Snapshots.eqKeySetMemo,
-    "eq hits" -> Snapshots.eqHitMemo,
     "delta scan routes" -> RowIdentityScan.routes)
 
   /** A catalog table with an append, a MOR delete (DV sidecar), a

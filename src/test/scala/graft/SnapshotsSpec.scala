@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Snapshots
+import graft.sources.{PositionDeletes, Snapshots}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
@@ -284,14 +284,18 @@ class SnapshotsSpec extends SparkTestBase {
     val s3 = Snapshots.read(spark, t, asOf = Some(3L))
     assert(s3.exceptAll(s1).count() === inserts.size)
     assert(s1.exceptAll(s3).count() === deletes.size)
-    // carried files cancel algebraically AND are never opened: the
-    // feed's input files are exactly the manifests' symmetric difference
+    // carried files cancel algebraically AND are never opened, unless
+    // the merge's sidecar kills rows in one (its pre-image of id 5 is
+    // read from there): the feed's input files are the manifests'
+    // symmetric difference plus that one file
     def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val m1 = Snapshots.dataFiles(spark, t, Some(1L)).map(norm).toSet
     val m3 = Snapshots.dataFiles(spark, t, Some(3L)).map(norm).toSet
-    val touched = (m1 diff m3) ++ (m3 diff m1)
-    val carried = m1 intersect m3
-    assert(carried.nonEmpty) // the layout really leaves carried files
+    val killedIn = PositionDeletes.referencedDataFiles(spark,
+      Snapshots.deleteFiles(spark, t, Some(3L))).map(norm).toSet
+    val touched = (m1 diff m3) ++ (m3 diff m1) ++ (killedIn intersect m3)
+    val carried = (m1 intersect m3) diff killedIn
+    assert(carried.nonEmpty) // the layout really leaves untouched carried files
     val in = feed.inputFiles.map(norm).toSet
     assert(in.nonEmpty && in.subsetOf(touched))
     // append-only ranges agree with the fast-path changes()
@@ -493,7 +497,7 @@ class SnapshotsSpec extends SparkTestBase {
       (1L to 4L).map(i => (i, None, "delete")))
   }
 
-  test("merge() is copy-on-write: only files containing matched keys rewrite") {
+  test("merge() is merge-on-read: every file carries, one sidecar names the hit file") {
     val t = tbl()
     // 8 range-partitioned files over ids 1..800
     Snapshots.commit((1 to 800).map(_.toLong).toDF("id")
@@ -510,22 +514,29 @@ class SnapshotsSpec extends SparkTestBase {
     assert(after.count() === 802)
     assert(after.filter(col("id") === 5L).select("v").head().getLong(0) === -1L)
     assert(after.filter(col("id") === 800L).select("v").head().getLong(0) === 8000L)
-    // COW proof at file granularity: v2 keeps 7 of v1's 8 data files
-    def files(ver: Long) = {
-      val fs = new org.apache.hadoop.fs.Path(t)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$t/manifest-v$ver.json"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().drop(1).toSet
-      finally in.close()
-    }
-    val kept = files(1L).intersect(files(2L))
-    assert(kept.size === 7, s"expected 7 carried files, got ${kept.size}")
+    // MOR proof at file granularity: v2 carries all 8 of v1's data files
+    // and adds the update rows' file; one deletion-vector sidecar names
+    // exactly the file holding ids 5..7, with exactly those 3 positions
+    val v1 = Snapshots.dataFiles(spark, t, Some(1L))
+    val v2 = Snapshots.dataFiles(spark, t, Some(2L))
+    assert(v1.size === 8 && v1.toSet.subsetOf(v2.toSet), "every v1 file carries")
+    val hitFile = v1.filter(f =>
+      spark.read.parquet(f).filter(col("id") === 5L).count() > 0)
+    val sidecars = Snapshots.deleteFiles(spark, t)
+    assert(sidecars.size === 1)
+    assert(PositionDeletes.isDvSidecar(spark, sidecars.head))
+    assert(PositionDeletes.summary(spark, sidecars.head).perFile ===
+      Map(hitFile.head -> 3L))
     assert(before.nonEmpty)
     // MERGE is undefined when two source rows target one key — refuse
     // loudly rather than writing both
     val ex = intercept[IllegalArgumentException](
       Snapshots.merge(spark, t, Seq((1L, 1L), (1L, 2L)).toDF("id", "v"), "id"))
     assert(ex.getMessage.contains("duplicate"))
+    // a merge that matches no key commits only its rows, with no sidecar
+    val v3 = Snapshots.merge(spark, t, Seq((9100L, 7L)).toDF("id", "v"), "id")
+    assert(Snapshots.deleteFiles(spark, t, Some(v3)) === sidecars)
+    assert(Snapshots.dataFiles(spark, t, Some(v3)).size === v2.size + 1)
   }
 
   test("streaming mergeSink converges to latest state per key; replay is state-idempotent") {

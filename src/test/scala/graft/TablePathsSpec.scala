@@ -28,7 +28,7 @@ class TablePathsSpec extends SparkTestBase {
         "FileStats.scala:record", "TablePaths.scala:movedTo"))
     assert(sites(".relativize(") === Set("Snapshots.scala:writeManifestBody",
       "DeltaRowLevelOps.scala:toBatch", "FileStats.scala:record", "FileStats.scala:carry"))
-    assert(sites(".relativizeId(") === Set("Snapshots.scala:deleteWhereMor"))
+    assert(sites(".relativizeId(") === Set("Snapshots.scala:positionSidecar"))
   }
 
   test("normPath names table roots only, never a data file or sidecar") {
