@@ -267,7 +267,8 @@ object Snapshots {
   }
 
   /** True iff version `v` is a ROW-PRESERVING maintenance rewrite
-    * (compaction or z-order): by the append-rebase publish contract its
+    * (compaction, z-order, a purge, bin-packing or [[maintain]]'s
+    * fused fold): by the append-rebase publish contract its
     * manifest carries exactly the head's rows in a new physical layout,
     * so a change-feed step across it is empty by construction — callers
     * skip the O(moved-bytes) diff that would prove it.
@@ -279,7 +280,7 @@ object Snapshots {
     token.exists(t =>
       t.startsWith("compact-of-v") || t.startsWith("zorder-of-v") ||
         t.startsWith("purge-of-v") || t.startsWith("purge-eq-of-v") ||
-        t.startsWith("binpack-of-v"))
+        t.startsWith("binpack-of-v") || t.startsWith("maintain-of-v"))
 
   /** The version already committed under `token`, if any — the replay
     * check behind exactly-once streaming publish.
@@ -1023,84 +1024,106 @@ object Snapshots {
     * appends and frequent micro-commits shed small files constantly,
     * and at 100 TB the whole-table [[compact]] is a full rewrite while
     * this touches exactly the small tail (cost ∝ small-file bytes).
+    * The tail is [[smallTail]]'s and the rewrite [[foldRewrite]]'s: the
+    * folded files read through their live view, and the position
+    * sidecars that referenced only folded (or dead) files drop.
     *
-    *  - Unbucketed tables fold all smalls together, coalesced to
-    *    ceil(smallBytes / targetBytes) outputs; a declared sort order
-    *    re-clusters them (writeData applies it, like every write).
-    *  - Bucketed tables fold smalls WITHIN each bucket (the tag is the
-    *    file's directory, so each bucket's replacement lands under its
-    *    own `__graft_bucket=N` dir and the all-files-tagged gate keeps
-    *    holding; buckets with fewer than `minInputFiles` smalls carry).
-    *  - Concurrent appends rebase in; anything that REMOVED a chosen
-    *    file (DML, another maintenance op) aborts loudly and reclaims.
-    *
-    * File sizes come from one driver listing — file-COUNT envelope,
-    * like every manifest-algebra op. Returns the new version, or the
-    * current one when there was nothing to fold.
+    * Concurrent appends rebase in; anything that REMOVED a chosen file
+    * (DML, another maintenance op) or deleted rows of one aborts loudly
+    * and reclaims. Returns the new version, or the current one when
+    * there was nothing to fold.
     */
   def binPack(spark: SparkSession, table: String,
-      targetBytes: Long = 128L << 20, minInputFiles: Int = 2): Long = {
+      targetBytes: Long = DefaultTargetBytes, minInputFiles: Int = 2): Long = {
     require(targetBytes > 0 && minInputFiles >= 2,
       s"binPack needs targetBytes > 0 and minInputFiles >= 2")
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"nothing to bin-pack in $table")
     val src = vs.last
     requireNoEqDeletes(spark, table, "binPack", src)
-    val srcFiles = manifestFiles(spark, table, src)
+    val smalls = smallTail(spark, table, manifestFiles(spark, table, src),
+      targetBytes, minInputFiles)
+    if (smalls.isEmpty) src
+    else foldRewrite(spark, table, src, smalls.toSet, targetBytes,
+      "binpack", s"binpack-of-v$src")
+  }
+
+  /** The default size a maintenance rewrite packs its outputs to. */
+  private val DefaultTargetBytes = 128L << 20
+
+  /** The small-file tail of `files`: those under `targetBytes`, when at
+    * least `minInputFiles` of them share a group. An unbucketed table is
+    * one group; a bucketed one groups by bucket tag (a bucket with fewer
+    * smalls carries, and so do untagged files). Sizes come from one
+    * driver listing; a file that cannot be stat-ed is not small.
+    */
+  private def smallTail(spark: SparkSession, table: String, files: Seq[String],
+      targetBytes: Long, minInputFiles: Int): Seq[String] = {
     val f = fs(spark, table)
-    val sized = srcFiles.flatMap { p =>
-      try Some(p -> f.getFileStatus(new Path(p)).getLen)
-      catch { case scala.util.control.NonFatal(_) => None }
+    val smalls = files.filter { p =>
+      try f.getFileStatus(new Path(p)).getLen < targetBytes
+      catch { case scala.util.control.NonFatal(_) => false }
     }
-    val smalls = sized.filter(_._2 < targetBytes)
-    val groups: Seq[(Option[Int], Seq[(String, Long)])] =
-      bucketSpec(spark, table) match {
-        case Some(_) =>
-          smalls.groupBy(s => bucketOfPath(s._1)).toSeq
-            .collect { case (Some(b), fs0) if fs0.size >= minInputFiles =>
-              (Some(b), fs0) }
-        case None if smalls.size >= minInputFiles => Seq((None, smalls))
-        case None => Nil
-      }
-    if (groups.isEmpty) return src
-    // folded members read through the LIVE view (a delete-bearing small
-    // file's subtracted rows must not resurrect in its replacement);
-    // sidecar lines carry — entries for folded paths go stale, which
-    // the anti-join treats as matching nothing, and a later purge or
-    // compaction drops them
-    val dels = manifestDeletes(spark, table, src)
+    bucketSpec(spark, table) match {
+      case Some(_) =>
+        smalls.groupBy(bucketOfPath).toSeq.sortBy(_._1).collect {
+          case (Some(_), g) if g.size >= minInputFiles => g }.flatten
+      case None if smalls.size >= minInputFiles => smalls
+      case None => Nil
+    }
+  }
+
+  /** The one maintenance rewrite behind [[maintain]], [[purgeEqDeletes]],
+    * [[purgeDeletes]] and [[binPack]]: the files `fold` of version
+    * `src` read once through the fully resolved view (position and
+    * equality sidecars applied, as [[read]] resolves them), bin-packed
+    * to ceil(bytes / targetBytes) outputs — per bucket on a bucketed
+    * table, each group under its own bucket directory so the layout
+    * stays fully tagged — and published as ONE append-rebase commit
+    * under `token`. The commit drops every equality line (each caller
+    * folds every file a key hits, or has none outstanding) and every
+    * position line whose referenced files are all folded or no longer
+    * live; an empty `fold` publishes only those drops. The rewrite is
+    * row-preserving, so `token` must be a maintenance token.
+    *
+    * The folded files read TABLE-AWARE and write id-stamped (through
+    * [[writeData]]): after a RENAME/DROP they resolve by id onto the
+    * declared names, and the replacements keep FieldIds' all-files-
+    * stamped invariant. A declared order re-clusters them, like every
+    * write.
+    */
+  private def foldRewrite(spark: SparkSession, table: String, src: Long,
+      fold: Set[String], targetBytes: Long, op: String, token: String): Long = {
+    val m = manifest(spark, table, src)
+    val live = m.files.toSet
+    val retired = m.deletes.filter(d => PositionDeletes.referencedDataFiles(spark, Seq(d))
+      .forall(p => fold(p) || !live(p)))
+    val members = m.files.filter(fold)
+    val groups: Seq[(Option[Int], Seq[String])] =
+      if (bucketSpec(spark, table).isEmpty) Seq((None, members))
+      else members.groupBy(bucketOfPath).toSeq.sortBy(_._1)
+    val f = fs(spark, table)
     val dataDir = new Path(s"$table/data/${java.util.UUID.randomUUID}")
-    val added = groups.flatMap { case (bucket, members) =>
-      val bytes = members.map(_._2).sum
+    val reader = readTableFiles(spark, table, _: Seq[String])
+    val added = groups.filter(_._2.nonEmpty).flatMap { case (bucket, files) =>
+      val bytes = files.map { p =>
+        try f.getFileStatus(new Path(p)).getLen
+        catch { case scala.util.control.NonFatal(_) => 0L }
+      }.sum
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val outDir = bucket match {
-        case Some(b) => new Path(dataDir, s"$BucketDir=$b")
-        case None    => dataDir
-      }
+      val resolved =
+        if (m.eqDeletes.isEmpty) liveView(spark, table, files, m.deletes, reader)
+        else applyEqDeletes(spark, table, src, files, m.deletes, m.eqDeletes, reader)
       // bucket-tagged files carry no bucket COLUMN (it lives in the
-      // path), so rereading member files and writing them under the
-      // same tag directory preserves the layout exactly.
-      // TABLE-AWARE read + explicit field-id stamp: after a RENAME/DROP
-      // the members must resolve by id onto the declared names, and the
-      // replacement files must carry footer ids like every other write
-      // (FieldIds' all-files-stamped invariant) — raw inference reads
-      // stale physical names and writes the replacements UNSTAMPED,
-      // after which id-matched reads of the table fail
-      val (packed, postPublish) = stampFieldIds(
-        liveView(spark, table, members.map(_._1), dels,
-          fs0 => readTableFiles(spark, table, fs0)).coalesce(n),
-        table, fullRewrite = false)
-      postPublish()
-      applySortSpec(packed, table, bucketed = false)
-        .write.options(bloomWriteOptions(spark, table))
-        .parquet(outDir.toString)
-      f.listStatus(outDir).toSeq
-        .filter(_.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString).sorted
+      // path), so writing a bucket's rows under the same tag directory
+      // preserves the layout exactly
+      writeData(resolved.coalesce(n), table, recordStats = false,
+        dir = Some(bucket.fold(dataDir)(b => new Path(dataDir, s"$BucketDir=$b"))))._1
     }
     FileStats.record(spark, table, added)
-    publishRebase(spark, table, src, srcFiles, groups.flatMap(_._2.map(_._1)).toSet, added,
-      "binpack", Seq(dataDir), token = Some(s"binpack-of-v$src"))
+    publishRebase(spark, table, src, m.files, members.toSet, added, op, Seq(dataDir),
+      token = Some(token), removedDeletes = retired.toSet,
+      removedEq = m.eqDeletes.map(_._2).toSet)
   }
 
   /** Transactional OPTIMIZE ZORDER BY (xCol, yCol): rewrite the CURRENT
@@ -2104,12 +2127,14 @@ object Snapshots {
     abort(s"$op starved after $attempt rebase attempts on $table")
   }
 
-  /** Write `df` as new data files under the table, returning their
-    * paths (sorted) and the directory for loss-reclaim.
+  /** Write `df` as new data files under the table (in `dir`, or a
+    * fresh directory under `data/`), returning their paths (sorted) and
+    * the directory for loss-reclaim.
     */
   private def writeData(df0: DataFrame, table: String,
       recordStats: Boolean = true,
-      applyDeclaredSort: Boolean = true): (Seq[String], Path) = {
+      applyDeclaredSort: Boolean = true,
+      dir: Option[Path] = None): (Seq[String], Path) = {
     // the post-publish hook runs EAGERLY here: the only state change
     // this path can produce is the CTAS/stageData birth init (every
     // other caller requires committed versions, where the hook is a
@@ -2118,7 +2143,7 @@ object Snapshots {
     // all-files-stamped invariant to misjudge
     val (df, postPublish) = stampFieldIds(df0, table, fullRewrite = false)
     postPublish()
-    val dataDir = new Path(s"$table/data/${java.util.UUID.randomUUID}")
+    val dataDir = dir.getOrElse(new Path(s"$table/data/${java.util.UUID.randomUUID}"))
     // applyDeclaredSort=false is for callers that ALREADY arranged an
     // explicit layout the declared order must not clobber (the z-order
     // rewrite's Morton clustering); everything else — appends, CTAS,
@@ -2621,63 +2646,42 @@ object Snapshots {
 
   /** Fold outstanding EQUALITY deletes back into plain data files: an
     * exact probe finds the in-scope files that CONTAIN a matching key;
-    * only those rewrite (through the fully-resolved view, so position
+    * only those rewrite ([[foldRewrite]], fully resolved, so position
     * deletes targeting them fold too); every other file carries by
-    * path, and the published manifest has no `E ` lines. No-op when
-    * none are outstanding. The maintenance op that caps the upsert
-    * stream's read-side tax — cost ∝ the bytes of key-hit files,
-    * batched across every upsert since the last purge.
+    * path, and the published manifest has no `E ` lines. Keys that
+    * match nothing (already purged rows, inserts-only upserts) rewrite
+    * nothing and only drop the lines. No-op when none are outstanding.
+    * The maintenance op that caps the upsert stream's read-side tax —
+    * cost ∝ the bytes of key-hit files, batched across every upsert
+    * since the last purge.
     */
   def purgeEqDeletes(spark: SparkSession, table: String): Long = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val src = vs.last
-    val eqs = manifestEqDeletes(spark, table, src)
-    if (eqs.isEmpty) return src
-    val files = manifestFiles(spark, table, src)
-    val dels = manifestDeletes(spark, table, src)
-    // exact hit probe: in-scope files whose LIVE rows match a key under
-    // that key's scope (semi-join twin of the read path's anti-join)
-    val hit: Seq[String] = eqHitFiles(spark, table, src, files, dels, eqs)
-    if (hit.isEmpty)
-      // keys match nothing (already purged rows, or inserts-only
-      // upserts): drop the E lines, rewrite nothing — row-preserving
-      return publishRebase(spark, table, src, files, Set.empty, Seq.empty,
-        "purge-eq", Seq.empty, token = Some(s"purge-eq-of-v$src"),
-        removedEq = eqs.map(_._2).toSet)
-    // rewrite ONLY the hit files, fully resolved (position + equality)
-    val resolvedHit = applyEqDeletes(spark, table, src, hit, dels, eqs,
-      readTableFiles(spark, table, _))
-    val (newFiles, dataDir) = writeData(resolvedHit, table)
-    publishRebase(spark, table, src, files, hit.toSet, newFiles,
-      "purge-eq", Seq(dataDir), token = Some(s"purge-eq-of-v$src"),
-      removedEq = eqs.map(_._2).toSet)
+    val m = manifest(spark, table, src)
+    if (m.eqDeletes.isEmpty) src
+    else foldRewrite(spark, table, src,
+      eqHitFiles(spark, table, src, m.files, m.deletes, m.eqDeletes).toSet,
+      DefaultTargetBytes, "purge-eq", s"purge-eq-of-v$src")
   }
 
+  /** Fold outstanding POSITION deletes back into plain data files: the
+    * live files the sidecars reference rewrite through their live view
+    * ([[foldRewrite]]) and every sidecar line drops; entries for files
+    * a later rewrite already replaced match nothing and rewrite
+    * nothing. No-op when none are outstanding.
+    */
   def purgeDeletes(spark: SparkSession, table: String): Long = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val src = vs.last
     requireNoEqDeletes(spark, table, "purgeDeletes", src)
-    val dels = manifestDeletes(spark, table, src)
-    if (dels.isEmpty) return src
-    val files = manifestFiles(spark, table, src)
-    // entries can reference files a later COW rewrite already replaced
-    // (stale, matching nothing) — purge only what still exists
-    val hit = files.filter(PositionDeletes.referencedDataFiles(spark, dels).toSet)
-    if (hit.isEmpty)
-      // every entry is stale: drop the sidecar lines, rewrite nothing
-      return publishRebase(spark, table, src, files, Set.empty, Seq.empty,
-        "purge-deletes", Seq.empty, token = Some(s"purge-of-v$src"),
-        removedDeletes = dels.toSet)
-    val (newFiles, dataDir) = writeData(
-      liveView(spark, table, hit, dels, readTableFiles(spark, table, _)),
-      table)
-    // row-preserving on RESOLVED views (the purge materializes exactly
-    // the live rows) — the token lets changeFeed skip the proof
-    publishRebase(spark, table, src, files, hit.toSet, newFiles,
-      "purge-deletes", Seq(dataDir), token = Some(s"purge-of-v$src"),
-      removedDeletes = dels.toSet)
+    val m = manifest(spark, table, src)
+    if (m.deletes.isEmpty) src
+    else foldRewrite(spark, table, src,
+      m.files.filter(PositionDeletes.referencedDataFiles(spark, m.deletes).toSet).toSet,
+      DefaultTargetBytes, "purge-deletes", s"purge-of-v$src")
   }
 
   /** Reclaim ORPHANED data files: files under `<table>/data/` that no
@@ -3247,23 +3251,33 @@ object Snapshots {
     * four knobs per table. Decision matrix (each step's threshold cites
     * its curve):
     *
-    *  1. EQUALITY sidecars outstanding → `purgeEqDeletes`. They add a
-    *     keyed scoped anti-join to every read AND block vacuum /
-    *     rename / fork (the add-version derivation must stay exact), so
-    *     any outstanding set is worth folding (round-8 eq-upsert
-    *     economics: purge cost ∝ key-HIT files only).
-    *  2. POSITION sidecars past the envelope → `purgeDeletes` when the
-    *     estimated DECODED delete side exceeds half
-    *     `graft.snapshot.deleteBroadcastBytes`. Below that the read tax
-    *     is join-shaped, not volume-shaped (round-9/10 read-tax curve:
-    *     ~2.4× flat once ANY sidecar exists, near-linear growth after),
-    *     so purging tiny sidecars buys little; past half the threshold
-    *     the broadcast envelope (a memory cap, not a latency knob) is
-    *     approaching and purge cost is still ∝ touched files.
-    *  3. SMALL-FILE tail → `binPack` when at least `minInputFiles`
-    *     files sit under `targetBytes` (cost ∝ small-file bytes only —
-    *     the continuous-ingest primitive; binPack's own no-op rules
-    *     make a re-run free).
+    * Steps 1-3 are FOLDS. Each picks its files at the head by its own
+    * rule, and their union is read once through the fully resolved
+    * view, bin-packed to ceil(bytes/target) outputs (per bucket) and
+    * published as ONE row-preserving commit ([[foldRewrite]], the
+    * rewrite of Iceberg's `rewrite_data_files`, which applies delete
+    * files while it bin-packs). The commit drops every equality line
+    * and every position line whose files are all rewritten or dead.
+    *
+    *  1. EQUALITY sidecars outstanding → fold the files a key hits
+    *     (`purgeEqDeletes`' set). They add a keyed scoped anti-join to
+    *     every read AND block vacuum / rename / fork (the add-version
+    *     derivation must stay exact), so any outstanding set is worth
+    *     folding (round-8 eq-upsert economics: cost ∝ key-HIT files
+    *     only). The hit probe scans only the reachable files steps 2-3
+    *     do not already rewrite — none when every file is small.
+    *  2. POSITION sidecars past the envelope → fold the files they
+    *     reference (`purgeDeletes`' set) when the estimated DECODED
+    *     delete side exceeds half `graft.snapshot.deleteBroadcastBytes`.
+    *     Below that the read tax is join-shaped, not volume-shaped
+    *     (round-9/10 read-tax curve: ~2.4× flat once ANY sidecar
+    *     exists, near-linear growth after), so folding tiny sidecars
+    *     buys little; past half the threshold the broadcast envelope (a
+    *     memory cap, not a latency knob) is approaching and the cost is
+    *     still ∝ touched files.
+    *  3. SMALL-FILE tail → fold it (`binPack`'s set) when at least
+    *     `minInputFiles` files sit under `targetBytes` (cost ∝
+    *     small-file bytes only — the continuous-ingest primitive).
     *  4. CLUSTERING DRIFT vs the declared write order → full re-sort
     *     `compact` into ceil(bytes/target) files when the DISORDER of
     *     the first declared sort column exceeds
@@ -3275,54 +3289,48 @@ object Snapshots {
     *     disjoint; a full re-sort is the one data-∝-table-bytes action
     *     here, so it fires only on real drift.
     *
-    * Returns one (action, detail, version) row per action taken; an
-    * already-maintained table returns NO rows (idempotence is the
-    * spec-pinned contract).
+    * Returns one (action, detail, version) row per action taken — the
+    * folds that fired (`purge_eq_deletes`, `purge_deletes`,
+    * `rewrite_small_files`, in that order) all carry the one version
+    * their rewrite published; an already-maintained table returns NO
+    * rows (idempotence is the spec-pinned contract).
     */
   def maintain(spark: SparkSession, table: String,
-      targetBytes: Long = 128L << 20,
+      targetBytes: Long = DefaultTargetBytes,
       minInputFiles: Int = 4): Seq[(String, String, Long)] = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"no committed snapshot in $table")
     val actions = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    // 1. equality sidecars
-    val eqs = manifestEqDeletes(spark, table, versions(spark, table).last)
-    if (eqs.nonEmpty) {
-      val v = purgeEqDeletes(spark, table)
-      actions += (("purge_eq_deletes", s"${eqs.size} sidecar(s) folded", v))
-    }
-    // 2. position sidecars vs the decoded-envelope threshold — the SAME
-    // estimate the read path routes on (PositionDeletes.
-    // decodedBytesEstimate: v1 by footer row count, v2 by the sidecar's
-    // exact per-file `card` column, saturating to Long.MaxValue on any
-    // read failure so a failure FORCES the purge rather than silently
-    // skipping it)
-    val dels = deleteFiles(spark, table)
-    if (dels.nonEmpty) {
-      val decoded = PositionDeletes.decodedBytesEstimate(spark, dels)
-      val threshold = spark.conf
-        .get("graft.snapshot.deleteBroadcastBytes", (64L << 20).toString).toLong
-      // decoded > threshold/2, written overflow-free (decoded saturates)
-      if (decoded > threshold / 2) {
-        val v = purgeDeletes(spark, table)
-        actions += (("purge_deletes",
-          s"${dels.size} sidecar(s), ~$decoded decoded bytes folded", v))
-      }
-    }
-    // 3. small-file tail
-    {
-      val f = fs(spark, table)
-      val files = dataFiles(spark, table)
-      val smalls = files.count { p =>
-        try f.getFileStatus(new Path(p)).getLen < targetBytes
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
-      if (smalls >= minInputFiles) {
-        val before = versions(spark, table).last
-        val v = binPack(spark, table, targetBytes, minInputFiles)
-        if (v != before)
-          actions += (("rewrite_small_files", s"$smalls small file(s)", v))
-      }
+    // 1-3. the folds, planned at the head: the small-file tail and the
+    // position fold first, so the equality probe skips their files
+    val src = vs.last
+    val m = manifest(spark, table, src)
+    val smalls = smallTail(spark, table, m.files, targetBytes, minInputFiles)
+    // the position fold's threshold is the SAME estimate the read path
+    // routes on (PositionDeletes.decodedBytesEstimate: v1 by footer row
+    // count, v2 by the sidecar's exact per-file `card` column,
+    // saturating to Long.MaxValue on any read failure so a failure
+    // FORCES the fold rather than silently skipping it)
+    val decoded = PositionDeletes.decodedBytesEstimate(spark, m.deletes)
+    val threshold = spark.conf
+      .get("graft.snapshot.deleteBroadcastBytes", (64L << 20).toString).toLong
+    // decoded > threshold/2, written overflow-free (decoded saturates)
+    val foldPositions = m.deletes.nonEmpty && decoded > threshold / 2
+    val positionHits =
+      if (foldPositions) m.files.filter(PositionDeletes.referencedDataFiles(spark, m.deletes).toSet)
+      else Nil
+    val taken = (smalls ++ positionHits).toSet
+    val eqHits = eqHitFiles(spark, table, src, m.files.filterNot(taken), m.deletes, m.eqDeletes)
+    val folds = Seq(
+      ("purge_eq_deletes", m.eqDeletes.nonEmpty, s"${m.eqDeletes.size} sidecar(s) folded"),
+      ("purge_deletes", foldPositions,
+        s"${m.deletes.size} sidecar(s), ~$decoded decoded bytes folded"),
+      ("rewrite_small_files", smalls.nonEmpty, s"${smalls.size} small file(s)"))
+      .filter(_._2)
+    if (folds.nonEmpty) {
+      val v = foldRewrite(spark, table, src, taken ++ eqHits, targetBytes,
+        "maintain", s"maintain-of-v$src")
+      actions ++= folds.map { case (action, _, detail) => (action, detail, v) }
     }
     // 4. clustering drift vs the declared write order (or, absent one,
     // the partition transform's source column — transform clustering is

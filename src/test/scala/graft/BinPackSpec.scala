@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.Snapshots
+import graft.sources.{PositionDeletes, Snapshots}
 import org.apache.spark.sql.functions._
 
 /** Selective small-files compaction (`Snapshots.binPack`, SQL
@@ -121,5 +121,42 @@ class BinPackSpec extends SparkTestBase {
     assert(nAfter < nBefore)
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.m.sp")
       .collect().head.getLong(0) === 4L)
+  }
+
+  test("a folded file's deletion vector drops; one that still kills rows of a carried file stays") {
+    val path = freshDir()
+    import spark.implicits._
+    // one LARGE file (carries) and four small ones (fold)
+    Snapshots.commit((0L until 20000L).map(i => (i, s"payload-$i" * 8))
+      .toDF("k", "v").coalesce(1), path)
+    (0 until 4).foreach(i => Snapshots.commit(
+      ((100000L + i * 10) until (100000L + i * 10 + 10)).map(k => (k, s"s$k"))
+        .toDF("k", "v").coalesce(1), path))
+    // a deletion vector over one small file only, then one over the
+    // large file and a small one
+    Snapshots.deleteWhereMor(spark, path, col("k").between(100000L, 100003L))
+    Snapshots.deleteWhereMor(spark, path, col("k") === 7L || col("k") === 100015L)
+    val Seq(smallOnly, mixed) = Snapshots.deleteFiles(spark, path)
+    assert(Seq(smallOnly, mixed).forall(PositionDeletes.isDvSidecar(spark, _)))
+    val want = Snapshots.read(spark, path).as[(Long, String)].collect().sorted.toSeq
+    assert(want.size === 20040 - 6)
+    val v = Snapshots.binPack(spark, path, targetBytes = 64L << 10)
+    assert(Snapshots.dataFiles(spark, path).size === 2)
+    assert(Snapshots.deleteFiles(spark, path) === Seq(mixed))
+    assert(Snapshots.read(spark, path).as[(Long, String)].collect().sorted.toSeq === want)
+    // every per-step feed equals the naive diff of two reads
+    val vs = Snapshots.versions(spark, path)
+    assert(vs.last === v)
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    vs.zip(vs.tail).foreach { case (a, b) =>
+      assert(multiset(Snapshots.changeFeed(spark, path, a, b)) ===
+        multiset(NaiveFeed(spark, path, a, b)), s"feed $a..$b")
+    }
+    assert(Snapshots.changeFeed(spark, path, v - 1, v).isEmpty)
+    // a purge drops the remaining line with the large file's rewrite
+    Snapshots.purgeDeletes(spark, path)
+    assert(Snapshots.deleteFiles(spark, path).isEmpty)
+    assert(Snapshots.read(spark, path).as[(Long, String)].collect().sorted.toSeq === want)
   }
 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * prefix of the mutation sequence is exercised — every manifest
   * writer (append, a first bucketed commit with its spec claim,
   * CTAS/RTAS, restore, fork+fastForward, and the rebase publishes:
-  * equality-delete upsert, MOR delete, merge, purge, compact), a side-
-  * file replace, vacuum and gc. Data-job
+  * equality-delete upsert, MOR delete, merge, purge, compact and
+  * maintain's fused fold), a side-file replace, vacuum and gc. Data-job
   * staging churn (`_temporary`/`_SUCCESS`) is excluded from the budget:
   * Spark's committer owns those crash windows, and a crash anywhere in
   * them is equivalent to the budget point at the job boundary (no
@@ -154,6 +154,39 @@ class CrashRecoverySpec extends SparkTestBase {
     assert(pts > 0)
   }
 
+  /** After a crashed op and its retry: gc reclaims every write root no
+    * manifest references, so each dir left under data/, deletes/ and
+    * eqdeletes/ holds a file some version lists.
+    */
+  private def noOrphanDirs(r: String): Unit = {
+    Snapshots.gc(spark, r, graceMs = -60000L): Unit
+    val referenced = Snapshots.versions(spark, r).flatMap(v =>
+      Snapshots.dataFiles(spark, r, Some(v)) ++ Snapshots.deleteFiles(spark, r, Some(v)) ++
+        Snapshots.eqDeleteFiles(spark, r, Some(v)).map(_._2))
+    val f = new org.apache.hadoop.fs.Path(r)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("data", "deletes", "eqdeletes").map(new org.apache.hadoop.fs.Path(r, _))
+      .filter(f.exists).flatMap(f.listStatus(_)).map(_.getPath.toString)
+      .foreach(d => assert(referenced.exists(_.startsWith(d + "/")), s"orphaned $d under $r"))
+  }
+
+  test("maintain (one fused fold commit) survives a crash at every step") {
+    // an equality sidecar, a deletion vector and a small-file tail: the
+    // three folds publish as one version, so a crash leaves the old
+    // head or the folded one, and gc reclaims a crashed attempt's dir
+    val pts = sweep("maintain", finalCheck = noOrphanDirs) { r =>
+      Snapshots.commit(df(1 to 4), r)
+      Snapshots.commit(df(5 to 8), r)
+      Snapshots.deleteWhereMor(spark, r, col("id") === 2)
+      Snapshots.upsertEq(spark, r, Seq((6L, "F!"), (9L, "i")).toDF("id", "v"), Seq("id")): Unit
+    } { r =>
+      val before = Snapshots.versions(spark, r).last
+      val a = Snapshots.maintain(spark, r, minInputFiles = 2)
+      assert(a.map(_._3).toSet.subsetOf(Set(before + 1)), s"$a over v$before")
+    }
+    assert(pts > 0)
+  }
+
   test("restore survives a crash at every step") {
     val pts = sweep("restore") { r =>
       Snapshots.commit(df(1 to 4), r)
@@ -183,16 +216,11 @@ class CrashRecoverySpec extends SparkTestBase {
     // the retry has published, gc reclaims every dir no manifest
     // references, and exactly one sidecar dir (the published one) stays
     def bothReclaimed(r: String): Unit = {
-      Snapshots.gc(spark, r, graceMs = -60000L): Unit
-      val referenced = Snapshots.versions(spark, r).flatMap(v =>
-        Snapshots.dataFiles(spark, r, Some(v)) ++ Snapshots.deleteFiles(spark, r, Some(v)))
-      val f = new org.apache.hadoop.fs.Path(r)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dirs = Seq("data", "deletes").map(new org.apache.hadoop.fs.Path(r, _))
-        .filter(f.exists).flatMap(f.listStatus(_)).map(_.getPath.toString)
-      dirs.foreach(d => assert(referenced.exists(_.startsWith(d + "/")),
-        s"orphaned $d after a crashed merge and its retry"))
-      assert(dirs.count(_.contains("/deletes/")) === 1, s"sidecar dirs under $r: $dirs")
+      noOrphanDirs(r)
+      val deletes = new org.apache.hadoop.fs.Path(r, "deletes")
+      val dirs = deletes.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(deletes).map(_.getPath.toString).toSeq
+      assert(dirs.size === 1, s"sidecar dirs under $r: $dirs")
     }
     val pts = sweep("merge", finalCheck = bothReclaimed)(
       r => Snapshots.commit(df(1 to 4), r): Unit) {

@@ -16,10 +16,11 @@ import org.scalacheck.rng.Seed
   * history mixes appends, MOR deletes in both sidecar layouts (stacked
   * on one file, spread over several, leaving others untouched),
   * equality upserts on a long, a string and a composite key over data
-  * rows with NULL keys, merges, both purges and restores; every read
-  * surface must return the same multiset under both routes, and on
-  * each route every change feed must equal the naive diff of two whole
-  * snapshot reads ([[NaiveFeed]]), which shares none of its algebra.
+  * rows with NULL keys, merges, both purges, maintains (some forced to
+  * fold position sidecars) and restores; every read surface must
+  * return the same multiset under both routes, and on each route every
+  * change feed must equal the naive diff of two whole snapshot reads
+  * ([[NaiveFeed]]), which shares none of its algebra.
   * Each history is also drawn a table root: a plain one, or one whose
   * path URL-encodes (a space, a literal `%41`), so the recorded paths
   * and `_metadata.file_path` spell it differently.
@@ -90,8 +91,16 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   /** Which earlier commit a restore undoes (see `play`). */
   private val restore: Gen[Op] = Gen.chooseNum(1, 4).map(Restore)
 
+  /** A maintain over a small-file threshold of 2-4 files; some force
+    * the position fold by a delete bound of 16 bytes.
+    */
+  private val maintain: Gen[Op] = for {
+    minInputFiles <- Gen.chooseNum(2, 4); foldPositions <- Gen.oneOf(true, false)
+  } yield Maintain(minInputFiles, foldPositions)
+
   private val op: Gen[Op] = Gen.frequency(3 -> append, 4 -> morDelete, 4 -> upsert,
-    2 -> merge, 1 -> Gen.const(PurgeDeletes), 1 -> Gen.const(PurgeEq), 1 -> restore)
+    2 -> merge, 1 -> Gen.const(PurgeDeletes), 1 -> Gen.const(PurgeEq), 1 -> restore,
+    2 -> maintain)
 
   /** Half the histories end by undoing their latest sidecar commit, so
     * the final step brings the rows it killed back to life.
@@ -133,6 +142,12 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
         if (eqKeys.nonEmpty) Snapshots.purgeEqDeletes(spark, t)
         Snapshots.purgeDeletes(spark, t)
       case PurgeEq => Snapshots.purgeEqDeletes(spark, t)
+      case Maintain(minInputFiles, foldPositions) =>
+        val bound = "graft.snapshot.deleteBroadcastBytes"
+        try {
+          if (foldPositions) spark.conf.set(bound, "16")
+          Snapshots.maintain(spark, t, minInputFiles = minInputFiles)
+        } finally spark.conf.unset(bound)
       case Restore(back) =>
         // undo the back-th latest commit that added a sidecar (the
         // oldest, when there are fewer), so the rows its sidecar killed
@@ -185,7 +200,9 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
     // the sample covers every op kind and ends with both kinds outstanding
     val kinds = histories.flatten.map(_.getClass.getSimpleName).toSet
     assert(kinds === Set("Append", "MorDelete", "Upsert", "Merge", "PurgeDeletes$", "PurgeEq$",
-      "Restore"))
+      "Restore", "Maintain"))
+    assert(histories.flatten.collect { case m: Maintain => m.foldPositions }.toSet ===
+      Set(true, false))
     assert(histories.flatten.collect { case d: MorDelete => d.v1 }.toSet === Set(true, false))
     var outstanding = (0, 0)
     histories.zipWithIndex.foreach { case (ops, i) =>
@@ -270,4 +287,5 @@ object DeleteRouteEquivalenceSpec {
   private case object PurgeDeletes extends Op
   private case object PurgeEq extends Op
   private final case class Restore(back: Int) extends Op
+  private final case class Maintain(minInputFiles: Int, foldPositions: Boolean) extends Op
 }

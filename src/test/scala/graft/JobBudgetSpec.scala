@@ -151,4 +151,50 @@ class JobBudgetSpec extends SparkTestBase {
     assert(rows.nonEmpty)
     assert(n <= 2, s"endpoint feed ran $n jobs")
   }
+
+  // Maintenance budgets. maintain plans its folds on the driver and
+  // rewrites their union once; the equality probe runs only over files
+  // the rewrite does not already take.
+
+  test("maintain on the benchmark round's shape runs at most 1 job") {
+    val t = table("maintainmix")
+    Snapshots.deleteWhereMor(spark, t, col("id") % 7 === 0 && col("st") === "O")
+    Snapshots.merge(spark, t,
+      ((1L to 1000L) ++ (40001L to 40200L)).map(i => (i, "M", i)).toDF("id", "st", "v"), "id")
+    Snapshots.upsertEq(spark, t,
+      (19001L to 21000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
+    // an equality sidecar, two deletion vectors and a small-file tail
+    assert(Snapshots.eqDeleteFiles(spark, t).size === 1)
+    assert(Snapshots.deleteFiles(spark, t).size === 2)
+    assert(Snapshots.dataFiles(spark, t).size >= 4)
+    val want = agg(Snapshots.read(spark, t))
+    val before = Snapshots.versions(spark, t).last
+    val (actions, n) = jobs(Snapshots.maintain(spark, t))
+    assert(actions.map(_._1) === Seq("purge_eq_deletes", "rewrite_small_files"))
+    assert(actions.map(_._3).toSet === Set(before + 1))
+    assert(Snapshots.versions(spark, t).last === before + 1)
+    assert(Snapshots.eqDeleteFiles(spark, t).isEmpty && Snapshots.deleteFiles(spark, t).isEmpty)
+    assert(agg(Snapshots.read(spark, t)) === want)
+    assert(n <= 1, s"maintain ran $n jobs")
+  }
+
+  test("an equality-only maintain over a file at the target runs at most 3 jobs, its probe included") {
+    val t = table("maintaineq")
+    Snapshots.upsertEq(spark, t,
+      (1L to 2000L).map(i => (i, "U", -i)).toDF("id", "st", "v"), Seq("id"))
+    val f = new org.apache.hadoop.fs.Path(t).getFileSystem(sc.hadoopConfiguration)
+    val sizes = Snapshots.dataFiles(spark, t).map(p =>
+      p -> f.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sortBy(_._2)
+    // only the seeded file reaches the target: it is no small-file
+    // candidate, so only the probe (2 jobs) can put it in the rewrite
+    val target = sizes.last._2
+    val want = agg(Snapshots.read(spark, t))
+    val (actions, n) = jobs(Snapshots.maintain(spark, t, targetBytes = target))
+    assert(actions.map(_._1) === Seq("purge_eq_deletes"))
+    assert(!Snapshots.dataFiles(spark, t).contains(sizes.last._1))
+    assert(Snapshots.dataFiles(spark, t).toSet.intersect(sizes.map(_._1).toSet) ===
+      sizes.init.map(_._1).toSet)
+    assert(agg(Snapshots.read(spark, t)) === want)
+    assert(n <= 3, s"equality-only maintain ran $n jobs")
+  }
 }

@@ -49,7 +49,8 @@ class MaintainSpec extends SparkTestBase {
   test("position sidecars: purge only past half the decoded-envelope threshold") {
     wh
     val t = s"$wh/ns/posm"
-    Snapshots.commit((1L to 1000L).map(i => (i, i * 10L)).toDF("id", "v"), t)
+    // one file, so no small-file tail folds the sidecar's file away
+    Snapshots.commit((1L to 1000L).map(i => (i, i * 10L)).toDF("id", "v").coalesce(1), t)
     Snapshots.deleteWhereMor(spark, t, col("id") <= 3)
     // tiny sidecar, default threshold: the read tax is join-shaped here
     // (round-9 curve) — maintain deliberately leaves it alone
@@ -106,15 +107,22 @@ class MaintainSpec extends SparkTestBase {
     Snapshots.deleteWhereMor(spark, t, col("id") % 10 === 3)
     assert(Snapshots.deleteFiles(spark, t).nonEmpty)
     Snapshots.upsertEq(spark, t, Seq((100L, -1L)).toDF("id", "v"), Seq("id"))
+    val want = Snapshots.read(spark, t).as[(Long, Long)].collect().sorted.toSeq
+    val before = Snapshots.versions(spark, t).last
     val a = try {
       spark.conf.set("graft.snapshot.deleteBroadcastBytes", "16")
       actions("stack")
     } finally spark.conf.unset("graft.snapshot.deleteBroadcastBytes")
-    val kinds = a.map(_._1)
-    assert(kinds.indexOf("purge_eq_deletes") >= 0 && kinds.indexOf("purge_deletes") >= 0)
-    assert(kinds.indexOf("purge_eq_deletes") < kinds.indexOf("purge_deletes"))
-    // versions strictly increase across the chain
-    assert(a.map(_._2) === a.map(_._2).sorted)
+    // every fold fired, in the matrix's order, and all three rode one
+    // published version
+    assert(a.map(_._1) === Seq("purge_eq_deletes", "purge_deletes", "rewrite_small_files"))
+    assert(a.map(_._2).toSet === Set(before + 1))
+    assert(Snapshots.versions(spark, t).last === before + 1)
+    assert(Snapshots.isMaintenanceCommit(spark, t, before + 1))
+    assert(Snapshots.eqDeleteFiles(spark, t).isEmpty && Snapshots.deleteFiles(spark, t).isEmpty)
+    assert(Snapshots.dataFiles(spark, t).size === 1)
+    assert(Snapshots.read(spark, t).as[(Long, Long)].collect().sorted.toSeq === want)
+    assert(Snapshots.changeFeed(spark, t, before, before + 1).isEmpty)
     assert(actions("stack").isEmpty)
   }
 

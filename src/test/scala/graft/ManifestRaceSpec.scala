@@ -15,6 +15,9 @@ import graft.sources.Snapshots
   *  - a merge that loses to a rewrite of a file it kills rows in, or to
   *    an append carrying one of its keys, aborts and reclaims both dirs
   *    it wrote;
+  *  - maintain's one fused fold commit rebases over an append, and
+  *    aborts and reclaims its rewrite when a MOR delete lands on a file
+  *    it rewrote;
   *  - CTAS, whose table must not exist, fails with TableAlreadyExists;
   *  - the one-shot claims fail loudly: fork ("concurrently created")
   *    and fastForward, which rolls its moved dirs back to the branch.
@@ -121,6 +124,54 @@ class ManifestRaceSpec extends SparkTestBase {
       t => Snapshots.commit(Seq((9L, "rival")).toDF("id", "v"), t): Unit,
       "concurrent append touches rows read by merge",
       (expected(1 to 8) :+ ((9L, "rival"))).sortBy(_._1))
+  }
+
+  /** A table whose maintain folds a deletion vector, an equality
+    * sidecar when `upsert`, and its small-file tail in one rewrite of
+    * every file.
+    */
+  private def maintained(name: String, upsert: Boolean): String = {
+    val t = s"race:$root/$name"
+    Snapshots.commit(df(1 to 4), t)
+    Snapshots.commit(df(5 to 8), t)
+    Snapshots.deleteWhereMor(spark, t, org.apache.spark.sql.functions.col("id") === 2L)
+    if (upsert)
+      Snapshots.upsertEq(spark, t, Seq((3L, "v3"), (9L, "v9")).toDF("id", "v"), Seq("id"))
+    t
+  }
+
+  test("maintain's fused commit rebases over an interleaved append") {
+    val t = maintained("maintainappend", upsert = true)
+    val head = Snapshots.versions(spark, t).last
+    val actions = losing(t, Some(() => Snapshots.commit(df(20 to 21), t): Unit))(
+      Snapshots.maintain(spark, t, minInputFiles = 2))
+    assert(RaceFsHook.occupied === Some(head + 1))
+    // one version for every fold, landed over the rival's append
+    assert(actions.map(_._1) === Seq("purge_eq_deletes", "rewrite_small_files"))
+    assert(actions.map(_._3).toSet === Set(head + 2))
+    assert(rows(t) === expected(1 to 1, 3 to 9, 20 to 21))
+    assert(Snapshots.dataFiles(spark, t).toSet
+      .intersect(Snapshots.dataFiles(spark, t, Some(head + 1)).toSet).size === 1)
+    assert(Snapshots.eqDeleteFiles(spark, t).isEmpty && Snapshots.deleteFiles(spark, t).isEmpty)
+  }
+
+  test("maintain aborts and reclaims when an interleaved MOR delete hits a file it rewrites") {
+    // no equality sidecar: a MOR delete refuses while one is outstanding
+    val t = maintained("maintainmor", upsert = false)
+    val head = Snapshots.versions(spark, t).last
+    val e = intercept[IllegalStateException](losing(t, Some(() =>
+        Snapshots.deleteWhereMor(spark, t, org.apache.spark.sql.functions.col("id") === 6L): Unit))(
+      Snapshots.maintain(spark, t, minInputFiles = 2)))
+    assert(e.getMessage.contains("concurrent MOR delete targets files rewritten by maintain"),
+      e.getMessage)
+    assert(RaceFsHook.occupied === Some(head + 1))
+    assert(Snapshots.versions(spark, t).last === head + 1)
+    assert(rows(t) === expected(1 to 1, 3 to 5, 7 to 8))
+    // the rewrite's dir is gone: data/ holds only committed dirs
+    val committed = Snapshots.versions(spark, t)
+      .flatMap(v => Snapshots.dataFiles(spark, t, Some(v)))
+      .map(p => new org.apache.hadoop.fs.Path(p).getParent.getName).toSet
+    assert(dirs(s"$t/data") === committed)
   }
 
   test("RTAS loses the manifest claim and retries onto the next version") {
