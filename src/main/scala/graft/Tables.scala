@@ -77,23 +77,24 @@ object Tables {
       catch { case scala.util.control.NonFatal(_) => 0L }
     }.sum
 
-  /** Shuffle width for a seam over `bytes` of compressed input: one
-    * partition per `graft.seam.shuffleTargetBytes` (default 2 MB
+  /** Compressed input bytes per seam shuffle partition: 2 MB
     * compressed ≈ 6-10 MB in flight — small enough that compute-heavy
     * per-round scans over the checkpointed seam still parallelize, the
-    * measured optimum for the q67 rounds at sf0.1), at least 1, capped
-    * by `graft.seam.maxShufflePartitions`. Grows with the DATA —
-    * sf0.1's graph seam gets ~7, the 64× tier ~400, a cluster-scale
-    * input thousands — instead of pinning the session's core-count
-    * width onto kilobyte-scale shuffles (guide §2: scale-adaptive
-    * partitioning, and §2.2: fewer, larger partitions).
+    * measured optimum for the q67 rounds at sf0.1.
     */
-  def seamShuffleWidth(spark: SparkSession, bytes: Long): Int = {
-    val target = spark.conf
-      .get("graft.seam.shuffleTargetBytes", (2L << 20).toString).toLong
-    val maxP = spark.conf
-      .get("graft.seam.maxShufflePartitions", "8192").toInt
-    math.max(1L, math.min(maxP.toLong,
-      (bytes + target - 1) / math.max(1L, target))).toInt
-  }
+  private val SeamShuffleTargetBytes = 2L << 20
+
+  /** The widest seam shuffle. */
+  private val SeamMaxShufflePartitions = 8192L
+
+  /** Shuffle width for a seam over `bytes` of compressed input: one
+    * partition per [[SeamShuffleTargetBytes]], at least 1, at most
+    * [[SeamMaxShufflePartitions]]. Grows with the DATA — sf0.1's graph
+    * seam gets ~7, the 64× tier ~400, a cluster-scale input thousands —
+    * instead of pinning the session's core-count width onto
+    * kilobyte-scale shuffles (fewer, larger partitions).
+    */
+  def seamShuffleWidth(bytes: Long): Int =
+    math.max(1L, math.min(SeamMaxShufflePartitions,
+      (bytes + SeamShuffleTargetBytes - 1) / SeamShuffleTargetBytes)).toInt
 }

@@ -1131,7 +1131,7 @@ object Analytic {
     * not narrower, plans.
     */
   private def graphSeamConf(s: SparkSession, dir: String): Map[String, String] =
-    Map("spark.sql.shuffle.partitions" -> Tables.seamShuffleWidth(s,
+    Map("spark.sql.shuffle.partitions" -> Tables.seamShuffleWidth(
       Tables.bytesOf(s, dir, "lineitem", "orders")).toString)
 
   private def purchaseEdgesShareDst(s: SparkSession, dir: String): DataFrame =

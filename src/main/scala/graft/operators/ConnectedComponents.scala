@@ -71,7 +71,7 @@ object ConnectedComponents {
     val widthConf = "spark.sql.shuffle.partitions"
     val prevWidth = spark.conf.getOption(widthConf)
     if (!converged) spark.conf.set(widthConf,
-      graft.Tables.seamShuffleWidth(spark, edges0 * 16L).toString)
+      graft.Tables.seamShuffleWidth(edges0 * 16L).toString)
     var i = 0
     try {
       while (i < maxRounds && !converged) {

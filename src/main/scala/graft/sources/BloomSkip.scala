@@ -40,15 +40,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (the same contract as FileStats).
   *
   * Scale envelope: the probe is one bounded metadata read per
-  * SURVIVING candidate. Below
-  * `graft.snapshot.bloomProbeDistributedThreshold` (default 1024)
+  * SURVIVING candidate. Up to [[DistributedThreshold]] (1024)
   * candidates the driver loops; above it the probe fans out as a Spark
   * job over the path list (executors open only footers+bloom headers),
   * so a 10⁶-file table costs one short metadata stage, never a
-  * driver-side file-count loop. IN lists longer than
-  * `graft.snapshot.bloomProbeMaxValues` (default 256) skip bloom
-  * probing entirely — cost is values × blocks per file, and a long IN
-  * is a join's job, not a bloom's.
+  * driver-side file-count loop. IN lists longer than [[MaxValues]]
+  * (256) skip bloom probing entirely — cost is values × blocks per
+  * file, and a long IN is a join's job, not a bloom's.
   */
 object BloomSkip {
 
@@ -70,26 +68,30 @@ object BloomSkip {
     }
   }
 
+  /** The most candidates the driver probes itself. */
+  private val DistributedThreshold = 1024
+
+  /** The longest IN list a bloom probe takes. */
+  private val MaxValues = 256
+
   /** The subset of `files` that MAY contain rows matching the
     * conjunctive `exprs`, per their parquet bloom filters. Only
     * equality/IN conjuncts over columns in the table's bloom spec
     * participate; everything else is ignored (other pruning layers own
-    * those shapes).
+    * those shapes). More than `distributedThreshold` files probe in a
+    * Spark job, the rest on the driver.
     */
-  private[sources] def prune(spark: SparkSession, table: String,
-      files: Seq[String], exprs: Seq[Expression]): Seq[String] = {
+  private[graft] def prune(spark: SparkSession, table: String,
+      files: Seq[String], exprs: Seq[Expression],
+      distributedThreshold: Int = DistributedThreshold): Seq[String] = {
     if (files.isEmpty || exprs.isEmpty) return files
     val spec = Snapshots.bloomSpec(spark, table)
     if (spec.isEmpty) return files
-    val maxValues = spark.conf
-      .get("graft.snapshot.bloomProbeMaxValues", "256").toInt
-    val probes = probesOf(exprs, spec.keySet, maxValues)
+    val probes = probesOf(exprs, spec.keySet)
     if (probes.isEmpty) return files
-    val threshold = spark.conf
-      .get("graft.snapshot.bloomProbeDistributedThreshold", "1024").toInt
     val hconf = spark.sparkContext.hadoopConfiguration
     val kept =
-      if (files.size <= threshold)
+      if (files.size <= distributedThreshold)
         files.filter(f => mayContain(hconf, f, probes))
       else {
         val sc = spark.sparkContext
@@ -110,8 +112,8 @@ object BloomSkip {
     * domain (Long/Int/Double/Float/UTF8String); translation to the
     * file's physical domain happens per column chunk.
     */
-  private def probesOf(exprs: Seq[Expression], cols: Set[String],
-      maxValues: Int): Seq[(String, Seq[Any])] = {
+  private def probesOf(exprs: Seq[Expression],
+      cols: Set[String]): Seq[(String, Seq[Any])] = {
     def unwrap(e: Expression): Expression = e match {
       case c: Cast if Cast.canUpCast(c.child.dataType, c.dataType) =>
         unwrap(c.child)
@@ -138,7 +140,7 @@ object BloomSkip {
             case _ => Nil
           }
         }
-      case In(a, vs) if vs.nonEmpty && vs.length <= maxValues =>
+      case In(a, vs) if vs.nonEmpty && vs.length <= MaxValues =>
         attr(a) match {
           case Some(n) =>
             val lits = vs.flatMap(lit)
@@ -150,7 +152,7 @@ object BloomSkip {
       // the optimizer converts IN lists past inSetConversionThreshold
       // (10) to InSet — values are already in the Catalyst domain
       case is: InSet
-          if is.hset.nonEmpty && is.hset.size <= maxValues &&
+          if is.hset.nonEmpty && is.hset.size <= MaxValues &&
             !is.hset.contains(null) =>
         attr(is.child) match {
           case Some(n) => Seq(n -> is.hset.toSeq)

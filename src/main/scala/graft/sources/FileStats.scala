@@ -451,6 +451,9 @@ object FileStats {
       case LessThan(a, b)           => test(a, b, '<') && test(b, a, '>')
       case LessThanOrEqual(a, b)    => test(a, b, '≤') && test(b, a, '≥')
       case In(a, vs) => vs.exists(v => test(a, v, '='))
+      // an IN list past the optimizer's inSetConversionThreshold (10)
+      // arrives as InSet, its values already in the Catalyst domain
+      case InSet(a, hset) => hset.exists(v => test(a, Literal(v, a.dataType), '='))
       case IsNull(a) => attrName(a).flatMap(ranges.get)
         .forall(r => r.hasNulls || r.allNulls)
       case IsNotNull(a) => attrName(a).flatMap(ranges.get)

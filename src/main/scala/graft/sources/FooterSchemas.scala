@@ -84,8 +84,7 @@ object FooterSchemas {
     * common internal reads (DML probes, feed steps, sidecars) touch
     * few files or hit the memo and stay on the driver path.
     */
-  private def maxDriverReads(spark: SparkSession): Int =
-    spark.conf.get("graft.snapshot.footerSchemaMaxDriverReads", "4096").toInt
+  private val MaxDriverReads = 4096
 
   /** The schema every file in `files` agrees on — None when any two
     * differ, any footer fails to read driver-side, or more footers than
@@ -97,7 +96,7 @@ object FooterSchemas {
       if (files.isEmpty) None
       else {
         val missing = files.filterNot(memo.contains)
-        if (missing.size > maxDriverReads(spark)) return None
+        if (missing.size > MaxDriverReads) return None
         // parallel cold opens: footer round-trips dominate on remote
         // storage, and they are independent — a bounded pool fetches
         // them concurrently into the memo (any failure → fallback)

@@ -486,15 +486,13 @@ object Snapshots {
         // protects. Footer-only driver read; the retry path is rare.
         strictSchema.foreach { want =>
           if (base.nonEmpty) {
-            def sig(s: org.apache.spark.sql.types.StructType) =
-              s.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
             // an ALTER-extended table's committed shape IS the declared
             // schema (old footers legitimately lack the added columns)
             val committed = declaredSchema(spark, table)
               .orElse(FooterSchemas.uniform(spark, base))
               .getOrElse(
                 spark.read.option("mergeSchema", "true").parquet(base: _*).schema)
-            if (sig(committed) != sig(want)) {
+            if (!sameColumns(committed, want)) {
               // no orphaned layout-mismatched files
               fs(spark, table).delete(dataDir, true)
               throw new IllegalStateException(
@@ -1003,7 +1001,6 @@ object Snapshots {
         // compaction doubles as both purges
         publishRebase(spark, table, src, srcFiles, srcFiles.toSet,
           newFiles, "compact", Seq(dataDir), token = Some(s"compact-of-v$src"),
-          removedDeletes = manifestDeletes(spark, table, src).toSet,
           removedEq = manifestEqDeletes(spark, table, src).map(_._2).toSet)
       } catch {
         // the ADOPTION init must not outlive a failed rewrite: the old
@@ -1081,10 +1078,11 @@ object Snapshots {
     * table, each group under its own bucket directory so the layout
     * stays fully tagged — and published as ONE append-rebase commit
     * under `token`. The commit drops every equality line (each caller
-    * folds every file a key hits, or has none outstanding) and every
-    * position line whose referenced files are all folded or no longer
-    * live; an empty `fold` publishes only those drops. The rewrite is
-    * row-preserving, so `token` must be a maintenance token.
+    * folds every file a key hits, or has none outstanding) and, by
+    * [[publishRebase]]'s retire rule, every position line whose
+    * referenced files are all folded or no longer live; an empty `fold`
+    * publishes only those drops. The rewrite is row-preserving, so
+    * `token` must be a maintenance token.
     *
     * The folded files read TABLE-AWARE and write id-stamped (through
     * [[writeData]]): after a RENAME/DROP they resolve by id onto the
@@ -1095,9 +1093,6 @@ object Snapshots {
   private def foldRewrite(spark: SparkSession, table: String, src: Long,
       fold: Set[String], targetBytes: Long, op: String, token: String): Long = {
     val m = manifest(spark, table, src)
-    val live = m.files.toSet
-    val retired = m.deletes.filter(d => PositionDeletes.referencedDataFiles(spark, Seq(d))
-      .forall(p => fold(p) || !live(p)))
     val members = m.files.filter(fold)
     val groups: Seq[(Option[Int], Seq[String])] =
       if (bucketSpec(spark, table).isEmpty) Seq((None, members))
@@ -1122,8 +1117,7 @@ object Snapshots {
     }
     FileStats.record(spark, table, added)
     publishRebase(spark, table, src, m.files, members.toSet, added, op, Seq(dataDir),
-      token = Some(token), removedDeletes = retired.toSet,
-      removedEq = m.eqDeletes.map(_._2).toSet)
+      token = Some(token), removedEq = m.eqDeletes.map(_._2).toSet)
   }
 
   /** Transactional OPTIMIZE ZORDER BY (xCol, yCol): rewrite the CURRENT
@@ -1188,7 +1182,6 @@ object Snapshots {
       publishRebase(spark, table, src, srcFiles, srcFiles.toSet,
         newFiles, "zorder", Seq(dataDir),
         token = Some(s"zorder-of-v$src:$xCol,$yCol"),
-        removedDeletes = manifestDeletes(spark, table, src).toSet,
         removedEq = manifestEqDeletes(spark, table, src).map(_._2).toSet)
     }
   }
@@ -1937,6 +1930,17 @@ object Snapshots {
       .select((cols.map(col) :+ col("_change_type")): _*)
   }
 
+  /** True when `a` and `b` carry the same columns — names and types,
+    * in any order (parquet resolves by name): the schema contract of
+    * every write into a committed table.
+    */
+  private[graft] def sameColumns(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType): Boolean = {
+    def sig(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
+    sig(a) == sig(b)
+  }
+
   /** Read data files for a rewrite/probe with mergeSchema: on an
     * evolved table a single footer's schema would silently drop (or
     * fail on) columns other files carry.
@@ -1955,49 +1959,6 @@ object Snapshots {
     declaredSchema(spark, table) match {
       case Some(s) => spark.read.schema(s).parquet(files: _*)
       case None => readFiles(spark, files)
-    }
-
-  /** Above this many manifest entries, deleteWhere keeps its
-    * touched-file algebra DISTRIBUTED (the probe's matched paths are
-    * deduped and joined in Spark; only the hit list reaches the
-    * driver). Below it, the driver-side Set is strictly faster — no
-    * extra job. See the driver-memory envelope note on
-    * [[partitionByProbe]].
-    */
-  private def distributedProbeThreshold(spark: SparkSession): Int =
-    spark.conf.get("graft.snapshot.distributedProbeThreshold", "65536").toInt
-
-  /** Split the manifest's `files` into (hit, keep) by the probe's
-    * `__file` column (the `_metadata.file_path` of each row the
-    * operation must rewrite, matched against [[TablePaths.fileId]]). Driver-memory envelope, stated once for
-    * the whole manifest algebra: every table operation holds the
-    * CURRENT FILE LIST on the driver (the manifest is a driver-written
-    * file — ~150 B/path, so a 100 TB table at 128 MB/file is ~10⁶
-    * entries ≈ 150 MB; file-COUNT linear, never row linear). What this
-    * split controls is the ADDITIONAL footprint: below the threshold a
-    * second Set of every probed path; above it the dedup+intersection
-    * run as a join and only the HIT list (files that must rewrite —
-    * for a selective DML a handful; at worst no more than the list
-    * already held) lands back on the driver.
-    */
-  private def partitionByProbe(spark: SparkSession, files: Seq[String],
-      probe: DataFrame): (Seq[String], Seq[String]) =
-    if (files.lengthCompare(distributedProbeThreshold(spark)) <= 0) {
-      // per-partition dedup + driver-side union instead of distinct():
-      // the distinct's exchange is a whole extra AQE stage job, while a
-      // file's rows are scan-contiguous so the per-partition sets sum
-      // to ~O(touched files) — the same driver envelope as the Set below
-      import spark.implicits._
-      val touched = probe.as[String]
-        .mapPartitions(it => it.toSet.iterator)
-        .collect().toSet
-      files.partition(f => touched(TablePaths.fileId(f)))
-    } else {
-      import spark.implicits._
-      val hit = files.map(f => (f, TablePaths.fileId(f))).toDF("orig", "__file")
-        .join(probe.distinct(), Seq("__file"), "left_semi")
-        .select("orig").collect().map(_.getString(0)).toSet
-      files.partition(hit)
     }
 
   /** Group-replacement commit for the SQL row-level write path (UPDATE /
@@ -2043,7 +2004,10 @@ object Snapshots {
     *  - `conflictsWith(appendedFiles)` (op-specific: merge checks the
     *    interleaved appends for its own update keys) → abort likewise;
     *  - otherwise the interleaved commits were benign appends: publish
-    *    (head files − removed + added) at head+1.
+    *    (head files − removed + added) at head+1, with the head's
+    *    position-delete (`D`) lines minus those that reference no
+    *    published file, plus `addedDeletes`. That retire rule is the one
+    *    place a rewrite's stale sidecars leave the manifest.
     * Without the rebase, a merge whose data pass is slower than the
     * table's commit cadence loses EVERY race and starves — the
     * metadata-only retry makes the contention window microseconds.
@@ -2057,7 +2021,6 @@ object Snapshots {
       srcFiles: Seq[String], removed: Set[String], added: Seq[String],
       op: String, reclaimOnAbort: Seq[Path], token: Option[String] = None,
       conflictsWith: Seq[String] => Boolean = _ => false,
-      removedDeletes: Set[String] = Set.empty,
       addedDeletes: Seq[String] = Nil,
       requireDataPresent: Set[String] = Set.empty,
       removedEq: Set[String] = Set.empty,
@@ -2103,7 +2066,14 @@ object Snapshots {
           abort(s"concurrent MOR delete targets files rewritten by $op on $table")
       }
       val fileList = cur.filterNot(removed) ++ added
-      val deleteList = curDeletes.filterNot(removedDeletes) ++ addedDeletes
+      // a `D` line retires once none of the files it references is
+      // published: every rewrite reads its files through the live view,
+      // so their deleted rows are already gone (sidecar summaries are
+      // memoized — no job)
+      val published = fileList.toSet
+      val deleteList = curDeletes.filter(d =>
+        PositionDeletes.referencedDataFiles(spark, Seq(d)).exists(published)) ++
+        addedDeletes
       val v = base + 1
       // a NEW equality delete's scope is pinned at publish time to the
       // version it lands over: after a rebase past interleaved appends,
@@ -2225,10 +2195,8 @@ object Snapshots {
     // mix two physical layouts in one manifest — the exact corruption
     // strictAppendSchema blocks on the append path.
     if (files.nonEmpty) {
-      def sig(st: org.apache.spark.sql.types.StructType) =
-        st.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
       val committed = readTableFiles(spark, table, files).schema
-      require(sig(committed) == sig(u.schema),
+      require(sameColumns(committed, u.schema),
         s"merge updates schema ${u.schema} does not match the table's " +
           s"committed schema $committed")
     }
@@ -2306,13 +2274,26 @@ object Snapshots {
     // without stats, or predicate shapes the evaluator does not
     // recognize, survive into the scan)
     val candidates = FileStats.prune(spark, table, files, predicate)
-    val (hit, keep) =
-      if (candidates.isEmpty) (Seq.empty[String], files)
-      else partitionByProbe(spark, files,
-        liveView(spark, table, candidates, dels,
-          readTableFiles(spark, table, _), fileColumn = Some("__file"))
-          .filter(predicate)
-          .select(col("__file")))
+    // the hit files: each probe partition dedups the `_metadata.file_path`
+    // of its matching rows and the driver unions the sets. A distinct()
+    // would add an exchange, a whole extra AQE stage job; a file's rows
+    // are scan-contiguous, so the per-partition sets sum to ~O(touched
+    // files). Driver-memory envelope, stated once for the whole manifest
+    // algebra: every table operation holds the CURRENT FILE LIST on the
+    // driver (the manifest is a driver-written file — ~150 B/path, so a
+    // 100 TB table at 128 MB/file is ~10⁶ entries ≈ 150 MB; file-COUNT
+    // linear, never row linear); the probe adds only the touched paths.
+    val hit =
+      if (candidates.isEmpty) Seq.empty[String]
+      else {
+        import spark.implicits._
+        val touched = liveView(spark, table, candidates, dels,
+            readTableFiles(spark, table, _), fileColumn = Some("__file"))
+          .filter(predicate).select(col("__file")).as[String]
+          .mapPartitions(it => it.toSet.iterator)
+          .collect().toSet
+        candidates.filter(f => touched(TablePaths.fileId(f)))
+      }
     val (newFiles, reclaim) =
       if (hit.isEmpty) (Seq.empty[String], Seq.empty[Path])
       else {
@@ -2403,27 +2384,23 @@ object Snapshots {
       .select(entry(col(PositionDeletes.MetaFile)).as(PositionDeletes.FileCol),
         col(PositionDeletes.MetaPos).as(PositionDeletes.PosCol))
     // ONE pass, 2 jobs: encode + write the sidecar straight off the
-    // probe scan. DELETION-VECTOR layout (default): one row per touched
+    // probe scan, in the DELETION-VECTOR layout: one row per touched
     // data file, its positions roaring/RLE-encoded ([[DeleteVectors]]),
     // ~2 B/position where the v1 one-row-per-position layout measured
     // ~4 B plus a path string per row; the per-file groupBy holds one
-    // FILE's positions per task. `false` keeps the v1 layout (both read
-    // forever — dispatch is the footer schema).
+    // FILE's positions per task. v1 sidecars of older tables still read
+    // (dispatch is the footer schema).
+    import spark.implicits._
     val f = fs(spark, table)
     val delDir = new Path(s"$table/deletes/${java.util.UUID.randomUUID}")
-    if (spark.conf.get("graft.snapshot.deleteVectorWrite", "true").toBoolean) {
-      import spark.implicits._
-      matched.as[(String, Long)].groupByKey(_._1)
-        .mapGroups { (file, it) =>
-          val arr = it.map(_._2).toArray
-          (file, arr.length.toLong, DeleteVectors.encode(arr))
-        }
-        .toDF(PositionDeletes.FileCol, DeleteVectors.CardCol,
-          DeleteVectors.DvCol)
-        .coalesce(1).write.parquet(delDir.toString)
-    } else
-      // one sidecar file: a selective delete's positions are tiny
-      matched.coalesce(1).write.parquet(delDir.toString)
+    matched.as[(String, Long)].groupByKey(_._1)
+      .mapGroups { (file, it) =>
+        val arr = it.map(_._2).toArray
+        (file, arr.length.toLong, DeleteVectors.encode(arr))
+      }
+      .toDF(PositionDeletes.FileCol, DeleteVectors.CardCol,
+        DeleteVectors.DvCol)
+      .coalesce(1).write.parquet(delDir.toString)
     val sidecars = f.listStatus(delDir).toSeq
       .filter(_.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted
@@ -2434,16 +2411,9 @@ object Snapshots {
     else Some((sidecars, touched, delDir))
   }
 
-  /** Fold outstanding position-delete sidecars back into plain data
-    * files: ONLY the data files the sidecars reference are rewritten
-    * (with their deleted positions dropped); every untouched file
-    * carries by path, and the published manifest has no `D ` lines.
-    * This is the maintenance op that caps MOR's read-side tax — cost ∝
-    * the bytes of delete-bearing files, exactly the COW work the MOR
-    * delete deferred, now batched across every delete since the last
-    * purge (Iceberg's rewrite_position_deletes + rewrite_data_files
-    * shape). No-op (no version bump) when no sidecar is outstanding.
-    */
+  /** The most batch rows one [[upsertEq]] data file holds. */
+  private val UpsertEqRowsPerFile = 1L << 18
+
   /** STREAMING-UPSERT commit via EQUALITY DELETES (Iceberg v2's second
     * delete form — the Flink-CDC-into-Iceberg shape): replace any
     * existing row whose `keys` match a batch row and append the batch,
@@ -2514,10 +2484,8 @@ object Snapshots {
     // schema contract (merge's): the batch carries the table's shape
     val files = manifestFiles(spark, table, src)
     if (files.nonEmpty) {
-      def sig(st: org.apache.spark.sql.types.StructType) =
-        st.fields.map(fl => (fl.name, fl.dataType)).sortBy(_._1).toSeq
       val committed = readTableFiles(spark, table, files).schema
-      require(sig(committed) == sig(u.schema),
+      require(sameColumns(committed, u.schema),
         s"upsertEq batch schema ${u.schema} does not match the table's " +
           s"committed schema $committed")
     }
@@ -2528,10 +2496,8 @@ object Snapshots {
     // count (manifest size, footer reads, purge probes) becomes the
     // real 100 TB cost. Bound the batch's file count by its rows (the
     // contract scan already counted them); binPack still owns the tail.
-    val rowsPerFile = spark.conf
-      .get("graft.snapshot.upsertEqRowsPerFile", (1L << 18).toString).toLong
     val nFiles = math.max(1L, math.min(u.rdd.getNumPartitions.toLong,
-      (contract.getLong(2) + rowsPerFile - 1) / rowsPerFile)).toInt
+      (contract.getLong(2) + UpsertEqRowsPerFile - 1) / UpsertEqRowsPerFile)).toInt
     val uw = if (nFiles < u.rdd.getNumPartitions) u.coalesce(nFiles) else u
     val (newFiles, dataDir) = writeData(uw, table)
     val eqDir = new Path(s"$table/eqdeletes/${java.util.UUID.randomUUID}")
@@ -2571,6 +2537,14 @@ object Snapshots {
     if (eqs.isEmpty || candidates.isEmpty) Nil
     else eqGroups(spark, eqs).flatMap(eqReachOneKeySet(spark, table, v, candidates, _)).distinct
 
+  /** Fewer in-scope files than this skip [[eqReach]]'s stats walk: it
+    * costs more than it saves.
+    */
+  private val EqProbeMinCandidates = 64
+
+  /** The longest per-column key list [[eqReach]] prunes with. */
+  private val EqProbeInListMaxKeys = 65536
+
   private def eqReachOneKeySet(spark: SparkSession, table: String, v: Long,
       candidates: Seq[String], eqs: Seq[(Long, String)]): Seq[String] = {
     import org.apache.spark.sql.functions.col
@@ -2587,11 +2561,7 @@ object Snapshots {
     // an oversized or NULL-bearing list, a key type the driver read does
     // not decode exactly, or any failure keeps every in-scope file. Below
     // the candidate floor the stats walk costs more than it saves.
-    val inListCap = spark.conf
-      .get("graft.snapshot.eqProbeInListMaxKeys", "65536").toInt
-    val minCandidates = spark.conf
-      .get("graft.snapshot.eqProbeMinCandidates", "64").toInt
-    if (inListCap <= 0 || inScope.size < minCandidates || !eqFits(spark, eqs)) inScope
+    if (inScope.size < EqProbeMinCandidates || !eqFits(spark, eqs)) inScope
     else try {
       val keys = eqKeyColumns(spark, eqs)
       val vals = keys.map(_ => scala.collection.mutable.HashSet.empty[Any])
@@ -2605,7 +2575,7 @@ object Snapshots {
         })
       }
       keys.zip(vals).foldLeft(inScope) { case (cand, (k, vs)) =>
-        if (cand.isEmpty || vs.size > inListCap || vs.contains(null)) cand
+        if (cand.isEmpty || vs.size > EqProbeInListMaxKeys || vs.contains(null)) cand
         else FileStats.prune(spark, table, cand, col(k).isin(vs.toSeq: _*))
       }
     } catch { case scala.util.control.NonFatal(_) => inScope }
@@ -3244,6 +3214,9 @@ object Snapshots {
     next
   }
 
+  /** The clustering disorder above which [[maintain]] re-sorts. */
+  private val MaxDisorder = 0.5
+
   /** AUTOMATED MAINTENANCE POLICY — `CALL cat.system.maintain(table)`:
     * inspect the manifest state and apply the maintenance the measured
     * economics (PLANS.md curves) say the table needs, in order. The
@@ -3280,11 +3253,10 @@ object Snapshots {
     *     small-file bytes only — the continuous-ingest primitive).
     *  4. CLUSTERING DRIFT vs the declared write order → full re-sort
     *     `compact` into ceil(bytes/target) files when the DISORDER of
-    *     the first declared sort column exceeds
-    *     `graft.maintain.disorder` (default 0.5): disorder = fraction
-    *     of files (sorted by range min) whose range overlaps the next
-    *     file's — 0 on a freshly clustered table, ~1 on round-robin
-    *     ingest. Threshold at 0.5 because the SPJ/pruning crossover
+    *     the first declared sort column exceeds [[MaxDisorder]] (0.5):
+    *     disorder = fraction of files (sorted by range min) whose range
+    *     overlaps the next file's — 0 on a freshly clustered table,
+    *     ~1 on round-robin ingest. Threshold at 0.5 because the SPJ/pruning crossover
     *     (PLANS.md) shows range-pruning pays once files are mostly
     *     disjoint; a full re-sort is the one data-∝-table-bytes action
     *     here, so it fires only on real drift.
@@ -3356,8 +3328,7 @@ object Snapshots {
             case _ => false
           }
           val disorder = overlaps.toDouble / (files.length - 1)
-          val limit = spark.conf.get("graft.maintain.disorder", "0.5").toDouble
-          if (disorder > limit) {
+          if (disorder > MaxDisorder) {
             val f = fs(spark, table)
             val totalBytes = files.map { p =>
               try f.getFileStatus(new Path(p)).getLen

@@ -41,22 +41,19 @@ import org.apache.spark.sql.internal.SQLConf
   * attributes. The rule only ANNOTATES the operation (the key columns
   * it found); the plan is returned unchanged.
   *
-  * Knobs:
-  *  - `graft.snapshot.runtimeGroupFilterAuto` (default true) — master
-  *    switch for this rule's annotation.
+  * Settings:
   *  - `graft.snapshot.runtimeGroupFilterColumns` — the explicit opt-in
   *    from round 6; when set it wins outright (no size guard: the user
   *    asserted selectivity).
   *  - `spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled`
-  *    — Spark's own master switch for the subquery; honored implicitly
-  *    (the downstream rule checks it).
+  *    — Spark's own master switch for the subquery, and so for this
+  *    rule's effect: `false` keeps every MERGE full COW (the downstream
+  *    rule checks it).
   */
 object AutoRuntimeGroupFilter extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (plan.isInstanceOf[Command] &&
-        conf.getConfString("graft.snapshot.runtimeGroupFilterAuto", "true")
-          .toBoolean) {
+    if (plan.isInstanceOf[Command]) {
       plan.foreach {
         case rd: ReplaceData => annotate(rd)
         case _ => ()

@@ -50,14 +50,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     sidecars are skipped, so stacked MOR DML never records a
   *     position twice.
   *  2. the DELTA WRITE ([[SnapshotDeltaBatchWrite]]) — each task
-  *     streams deletes into a position-delete sidecar and
+  *     writes its deletes as one deletion-vector sidecar and streams
   *     updates/inserts into new data files (both through the same
   *     [[SnapshotParquetWriter]] the COW write uses), and the driver
   *     publishes one manifest commit: all prior files carried, new
   *     data files appended, new sidecars added as `D ` lines.
   *  3. the CONFLICT contract — the publish refuses if a concurrent
   *     writer rewrote any file the new positions target (the rebase's
-  *     `requireDataPresentNorm`, same serializable-writer rule as the
+  *     `requireDataPresent`, same serializable-writer rule as the
   *     Scala-API [[Snapshots.deleteWhereMor]]).
   *
   * Routing: `write.update.mode` / `write.merge.mode` / subquery-DELETE
@@ -412,9 +412,7 @@ private[v2] final class SnapshotDeltaOperation(
         // empty and its data writer never materializes
         if (info.schema().nonEmpty) {
           val committed = pin().table.schema
-          def sig(s: StructType) =
-            s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-          require(sig(committed) == sig(info.schema()),
+          require(Snapshots.sameColumns(committed, info.schema()),
             s"graft-snapshot $path: mor-$cmd write schema " +
               s"${info.schema()} does not match committed schema $committed")
         }
@@ -494,18 +492,14 @@ private[v2] final class SnapshotDeltaBatchWrite(op: SnapshotDeltaOperation,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     // appended data files keep the table's field-id assignment (the
-    // position sidecar keeps its own name-keyed schema — sidecar reads
-    // are name-matched; see SnapshotDeltaWriter.del()). The deletion-
-    // vector write decision is captured HERE, on the driver, so every
-    // task writes the same sidecar layout.
+    // deletion-vector sidecar keeps its own name-keyed schema — sidecar
+    // reads are name-matched)
     new SnapshotDeltaWriterFactory(dataDir, delDir,
       graft.sources.FieldIds.load(SparkSession.active, op.path)
         .map(graft.sources.FieldIds.attach(_, rowSchema))
         .getOrElse(rowSchema).json,
       SnapshotReplaceBatchWrite.parquetWriteConf() ++
-        Snapshots.bloomWriteOptions(SparkSession.active, op.path),
-      dvWrite = SparkSession.active.conf
-        .get("graft.snapshot.deleteVectorWrite", "true").toBoolean)
+        Snapshots.bloomWriteOptions(SparkSession.active, op.path))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -533,28 +527,26 @@ private[v2] final class SnapshotDeltaBatchWrite(op: SnapshotDeltaOperation,
 }
 
 private[v2] final class SnapshotDeltaWriterFactory(dataDir: String,
-    delDir: String, rowSchemaJson: String, conf: Map[String, String],
-    dvWrite: Boolean) extends DeltaWriterFactory {
+    delDir: String, rowSchemaJson: String, conf: Map[String, String])
+    extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new SnapshotDeltaWriter(dataDir, delDir, rowSchemaJson, conf,
-      partitionId, taskId, dvWrite)
+      partitionId, taskId)
 }
 
 /** Per-task delta writer: updates/inserts stream into a data parquet
   * file (lazily created, so a task with no matches contributes
-  * nothing). Deletes take one of two sidecar layouts, decided on the
-  * driver: DELETION VECTORS (default — matched ordinals buffer per
-  * data file and flush as one roaring/RLE row per file at commit;
-  * task memory ∝ the task's matched rows, the same class as its scan)
-  * or the v1 one-row-per-position stream. The `id` rows arrive
-  * projected in rowId() order = (file_path, pos).
+  * nothing). Deletes buffer their ordinals per data file and flush at
+  * commit as one DELETION-VECTOR row per file (roaring/RLE); task
+  * memory ∝ the task's matched rows, the same class as its scan. The
+  * `id` rows arrive projected in rowId() order = (file_path, pos).
   */
 private[v2] final class SnapshotDeltaWriter(dataDir: String, delDir: String,
     rowSchemaJson: String, conf: Map[String, String],
-    partitionId: Int, taskId: Long, dvWrite: Boolean = false)
+    partitionId: Int, taskId: Long)
     extends DeltaWriter[InternalRow] {
 
-  // DV route: per-file ordinal buffers, flushed at commit
+  // per-file ordinal buffers, flushed at commit
   private val dvBuf =
     new scala.collection.mutable.LinkedHashMap[
       String, scala.collection.mutable.ArrayBuilder.ofLong]()
@@ -564,7 +556,7 @@ private[v2] final class SnapshotDeltaWriter(dataDir: String, delDir: String,
       new scala.collection.mutable.ArrayBuilder.ofLong) += id.getLong(1)
 
   private var dataW: SnapshotParquetWriter = null
-  private var delW: SnapshotParquetWriter = null
+  private var dvW: SnapshotParquetWriter = null
 
   private def data(): SnapshotParquetWriter = {
     if (dataW == null)
@@ -573,19 +565,12 @@ private[v2] final class SnapshotDeltaWriter(dataDir: String, delDir: String,
     dataW
   }
 
-  private def del(): SnapshotParquetWriter = {
-    if (delW == null)
-      delW = new SnapshotParquetWriter(delDir, PositionDeletes.schema.json,
-        conf, partitionId, taskId)
-    delW
-  }
-
   override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    if (dvWrite) bufferDelete(id) else del().write(id)
+    bufferDelete(id)
 
   override def update(metadata: InternalRow, id: InternalRow,
       row: InternalRow): Unit = {
-    if (dvWrite) bufferDelete(id) else del().write(id)
+    bufferDelete(id)
     data().write(row)
   }
 
@@ -596,7 +581,7 @@ private[v2] final class SnapshotDeltaWriter(dataDir: String, delDir: String,
     if (dvBuf.nonEmpty) {
       val w = new SnapshotParquetWriter(delDir,
         graft.sources.DeleteVectors.schema.json, conf, partitionId, taskId)
-      delW = w
+      dvW = w
       dvBuf.foreach { case (file, b) =>
         val arr = b.result()
         w.write(new GenericInternalRow(Array[Any](
@@ -611,16 +596,16 @@ private[v2] final class SnapshotDeltaWriter(dataDir: String, delDir: String,
         case SnapshotFilesMessage(fs) => fs
         case _ => Nil
       }
-    SnapshotDeltaMessage(files(dataW), files(delW))
+    SnapshotDeltaMessage(files(dataW), files(dvW))
   }
 
   override def abort(): Unit = {
     if (dataW != null) dataW.abort()
-    if (delW != null) delW.abort()
+    if (dvW != null) dvW.abort()
   }
 
   override def close(): Unit = {
     if (dataW != null) dataW.close()
-    if (delW != null) delW.close()
+    if (dvW != null) dvW.close()
   }
 }

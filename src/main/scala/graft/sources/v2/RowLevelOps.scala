@@ -62,9 +62,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     SOURCE fits the broadcast threshold, and
   *     `graft.snapshot.runtimeGroupFilterColumns=<k1,k2>` remains the
   *     explicit override (it wins outright — the user asserted
-  *     selectivity). `graft.snapshot.runtimeGroupFilterAuto=false`
-  *     restores the round-6 opt-in-only behavior. An IN list larger
-  *     than `graft.snapshot.runtimeGroupFilterMaxKeys` (default 64k)
+  *     selectivity). Spark's own
+  *     `spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled=false`
+  *     turns the filter off. An IN list larger than
+  *     `RuntimeGroupFilterMaxKeys` (64k)
   *     collapses to its [min,max] bounds before file pruning — O(1)
   *     per file instead of O(keys), keeping full pruning power on
   *     range-clustered layouts.
@@ -107,16 +108,17 @@ private[v2] final class SnapshotRowLevelOperation(
     pinned
   }
 
+  // the longest runtime IN list pruned value by value
+  private val RuntimeGroupFilterMaxKeys = 65536
+
   private[v2] def applyRuntimeFilter(exprs: Seq[Expression]): Unit =
     if (exprs.nonEmpty) {
       val spark = SparkSession.active
-      val maxKeys = spark.conf
-        .get("graft.snapshot.runtimeGroupFilterMaxKeys", "65536").toInt
       // an oversized IN would cost O(keys) per candidate file in
       // FileStats.mayMatch; its [min,max] hull is O(1) per file and
       // keeps full pruning power on range-clustered layouts
       val shaped = exprs.map {
-        case in @ In(a, vs) if vs.length > maxKeys &&
+        case in @ In(a, vs) if vs.length > RuntimeGroupFilterMaxKeys &&
             vs.forall(_.isInstanceOf[Literal]) =>
           try {
             val ord = org.apache.spark.sql.catalyst.util.TypeUtils
@@ -143,9 +145,7 @@ private[v2] final class SnapshotRowLevelOperation(
       override def build(): Write = {
         def toBatch0: BatchWrite = {
           val committed = pin().table.schema
-          def sig(s: StructType) =
-            s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-          require(sig(committed) == sig(info.schema),
+          require(Snapshots.sameColumns(committed, info.schema),
             s"graft-snapshot $path: row-level ${cmd} write schema " +
               s"${info.schema} does not match committed schema $committed")
           new SnapshotReplaceBatchWrite(SnapshotRowLevelOperation.this,
@@ -230,12 +230,8 @@ private[v2] final class RowLevelScanBuilder(op: SnapshotRowLevelOperation,
     val explicit = spark.conf
       .get("graft.snapshot.runtimeGroupFilterColumns", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val auto =
-      if (explicit.nonEmpty) Nil // explicit opt-in wins outright
-      else if (spark.conf
-          .get("graft.snapshot.runtimeGroupFilterAuto", "true").toBoolean)
-        op.autoKeyCols
-      else Nil
+    val auto = if (explicit.nonEmpty) Nil // explicit opt-in wins outright
+      else op.autoKeyCols
     val keyCols = (explicit ++ auto).distinct
       .filter(c => resolved.table.schema.fieldNames.contains(c))
     if (keyCols.isEmpty)

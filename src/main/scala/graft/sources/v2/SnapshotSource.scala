@@ -1185,9 +1185,7 @@ private[graft] class SnapshotTable(path: String, tableSchema: StructType,
                 else Snapshots.versions(spark, path).lastOption.map { _ =>
                   val committed = Snapshots.read(spark, path).schema
                   val got = data.schema
-                  def sig(s: StructType) =
-                    s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-                  require(sig(committed) == sig(got),
+                  require(Snapshots.sameColumns(committed, got),
                     s"graft-snapshot $path: append schema $got does not match " +
                       s"committed schema $committed (append cannot evolve the " +
                       "schema; use mode(\"overwrite\") to replace it)")

@@ -113,23 +113,20 @@ class BloomSkipSpec extends SparkTestBase {
   }
 
   test("distributed probe route keeps exactly the driver route's files") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
+    import org.apache.spark.sql.types.LongType
     val path = freshDir()
     buildStriped(path)
     val files = Snapshots.dataFiles(spark, path, None)
-    def keptWith(threshold: String): Seq[String] = {
-      spark.conf.set("graft.snapshot.bloomProbeDistributedThreshold", threshold)
-      try {
-        BloomSkip.lastBloomPrune = None
-        Snapshots.readWhere(spark, path, col("k") === 777L).collect(): Unit
-        val kept = BloomSkip.lastBloomPrune.get
-        assert(kept._2 === files.size)
-        Seq.fill(kept._1)("") // only the count is observable; compare counts
-      } finally spark.conf.unset("graft.snapshot.bloomProbeDistributedThreshold")
+    val k = AttributeReference("k", LongType)()
+    Seq(Seq(EqualTo(k, Literal(777L))),
+        Seq(In(k, Seq(Literal(5L), Literal(6L), Literal(9000L))))).foreach { exprs =>
+      val driver = BloomSkip.prune(spark, path, files, exprs)
+      // a threshold of 0 sends every candidate through the Spark job
+      val dist = BloomSkip.prune(spark, path, files, exprs, distributedThreshold = 0)
+      assert(dist === driver, s"driver and distributed bloom probes must agree on $exprs")
+      assert(driver.nonEmpty && driver.size < files.size, s"$exprs kept $driver")
     }
-    val driver = keptWith("1024")
-    val dist = keptWith("1") // force the Spark-job route
-    assert(driver.size === dist.size,
-      "driver and distributed bloom probes must agree")
   }
 
   test("SQL UPDATE on a point key rewrites only bloom-hit files") {

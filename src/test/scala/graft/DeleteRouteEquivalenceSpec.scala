@@ -14,9 +14,11 @@ import org.scalacheck.rng.Seed
   * `eqDeleteBroadcastBytes` to 0, with the add-version map joined
   * instead of inlined by `addVMapLiteralMaxFiles` 0). Each generated
   * history mixes appends, MOR deletes in both sidecar layouts (stacked
-  * on one file, spread over several, leaving others untouched),
-  * equality upserts on a long, a string and a composite key over data
-  * rows with NULL keys, merges, both purges, maintains (some forced to
+  * on one file, spread over several, leaving others untouched; the v1
+  * layout written by [[V1Sidecar]]), copy-on-write deletes (which
+  * retire the sidecars of the files they rewrite), equality upserts on
+  * a long, a string and a composite key over data rows with NULL keys,
+  * merges, both purges, maintains (some forced to
   * fold position sidecars) and restores; every read surface must
   * return the same multiset under both routes, and on each route every
   * change feed must equal the naive diff of two whole snapshot reads
@@ -75,6 +77,10 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
     v1 <- Gen.oneOf(true, false)
   } yield MorDelete(mod, rem, maxK, v1)
 
+  private val cowDelete: Gen[Op] = for {
+    mod <- Gen.chooseNum(3, 7); maxK <- Gen.chooseNum(5L, 40L)
+  } yield CowDelete(mod, maxK)
+
   /** NULL- and duplicate-free on `keys` (upsertEq's and merge's contract). */
   private def keyedRows(keys: Seq[String]): Gen[Rows] = for {
     n <- Gen.chooseNum(1, 12); rows <- Gen.listOfN(n, Gen.zip(
@@ -100,7 +106,7 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
 
   private val op: Gen[Op] = Gen.frequency(3 -> append, 4 -> morDelete, 4 -> upsert,
     2 -> merge, 1 -> Gen.const(PurgeDeletes), 1 -> Gen.const(PurgeEq), 1 -> restore,
-    2 -> maintain)
+    2 -> maintain, 2 -> cowDelete)
 
   /** Half the histories end by undoing their latest sidecar commit, so
     * the final step brings the rows it killed back to life.
@@ -113,10 +119,13 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   private def frame(rows: Rows): DataFrame =
     rows.toDF("k1", "k2", "v")
 
+  /** Copy-on-write deletes that rewrote a file a sidecar referenced. */
+  private var retiringDeletes = 0
+
   /** Apply `ops` to the table `name` of catalog `cat`; returns its path.
-    * Ops whose contract refuses outstanding equality deletes (a MOR
-    * delete, a merge) or a different key set (an upsert) purge them
-    * first.
+    * Ops whose contract refuses outstanding equality deletes (a MOR or
+    * copy-on-write delete, a merge) or a different key set (an upsert)
+    * purge them first.
     */
   private def play(cat: String, name: String, ops: Seq[Op]): String = {
     val t = s"${warehouses(cat)}/ns/$name"
@@ -127,11 +136,14 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
       case Append(rows, files) => Snapshots.commit(frame(rows).repartition(files), t)
       case MorDelete(mod, rem, maxK, v1) =>
         if (eqKeys.nonEmpty) Snapshots.purgeEqDeletes(spark, t)
-        try {
-          spark.conf.set("graft.snapshot.deleteVectorWrite", (!v1).toString)
-          Snapshots.deleteWhereMor(spark, t,
-            col("v") % mod === rem && (col("k1") <= maxK || col("k1").isNull))
-        } finally spark.conf.unset("graft.snapshot.deleteVectorWrite")
+        val p = col("v") % mod === rem && (col("k1") <= maxK || col("k1").isNull)
+        if (v1) V1Sidecar.deleteWhere(spark, t, p) else Snapshots.deleteWhereMor(spark, t, p)
+      case CowDelete(mod, maxK) =>
+        if (eqKeys.nonEmpty) Snapshots.purgeEqDeletes(spark, t)
+        val referenced = PositionDeletes.referencedDataFiles(spark,
+          Snapshots.deleteFiles(spark, t)).toSet.intersect(Snapshots.dataFiles(spark, t).toSet)
+        Snapshots.deleteWhere(spark, t, col("v") % mod === 1 && col("k1") <= maxK)
+        if (!referenced.subsetOf(Snapshots.dataFiles(spark, t).toSet)) retiringDeletes += 1
       case Upsert(keys, rows) =>
         if (eqKeys.exists(_ != keys.toSet)) Snapshots.purgeEqDeletes(spark, t)
         Snapshots.upsertEq(spark, t, frame(rows), keys)
@@ -194,13 +206,16 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   }
 
   test("every read surface agrees between the scan-predicate and the anti-join route") {
-    val histories = samples(history, 6, 4100L)
+    // a seed whose six histories cover every op kind, run copy-on-write
+    // deletes over files a sidecar references and end with both sidecar
+    // kinds outstanding (the coverage asserts below)
+    val histories = samples(history, 6, 4594L)
     val cats = samples(Gen.oneOf(Roots.map(_._1)), 6, 4202L)
     assert(cats.toSet === Roots.map(_._1).toSet)
     // the sample covers every op kind and ends with both kinds outstanding
     val kinds = histories.flatten.map(_.getClass.getSimpleName).toSet
-    assert(kinds === Set("Append", "MorDelete", "Upsert", "Merge", "PurgeDeletes$", "PurgeEq$",
-      "Restore", "Maintain"))
+    assert(kinds === Set("Append", "MorDelete", "CowDelete", "Upsert", "Merge", "PurgeDeletes$",
+      "PurgeEq$", "Restore", "Maintain"))
     assert(histories.flatten.collect { case m: Maintain => m.foldPositions }.toSet ===
       Set(true, false))
     assert(histories.flatten.collect { case d: MorDelete => d.v1 }.toSet === Set(true, false))
@@ -232,6 +247,7 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
       assert(!forced.contains("position_deleted") && !forced.contains("eq_key_deleted"))
     }
     assert(outstanding._1 >= 2 && outstanding._2 >= 2, s"histories ending with sidecars: $outstanding")
+    assert(retiringDeletes > 0, "no copy-on-write delete rewrote a file a sidecar referenced")
   }
 
   test("a double key takes the anti-join: -0.0 and NaN match as SQL equality says") {
@@ -254,10 +270,7 @@ class DeleteRouteEquivalenceSpec extends SparkTestBase {
   test("a v1 sidecar small on disk but over the bound decoded takes the anti-join") {
     val t = Files.createTempDirectory("graftroutes-v1").toString + "/t"
     Snapshots.commit((1L to 20000L).toDF("id").coalesce(1), t)
-    try {
-      spark.conf.set("graft.snapshot.deleteVectorWrite", "false")
-      Snapshots.deleteWhereMor(spark, t, col("id") % 2 === 0)
-    } finally spark.conf.unset("graft.snapshot.deleteVectorWrite")
+    V1Sidecar.deleteWhere(spark, t, col("id") % 2 === 0)
     val Seq(sidecar) = Snapshots.deleteFiles(spark, t)
     val f = new org.apache.hadoop.fs.Path(sidecar)
     val onDisk = f.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(f).getLen
@@ -282,6 +295,7 @@ object DeleteRouteEquivalenceSpec {
   private sealed trait Op
   private final case class Append(rows: Rows, files: Int) extends Op
   private final case class MorDelete(mod: Int, rem: Int, maxK: Long, v1: Boolean) extends Op
+  private final case class CowDelete(mod: Int, maxK: Long) extends Op
   private final case class Upsert(keys: Seq[String], rows: Rows) extends Op
   private final case class Merge(rows: Rows) extends Op
   private case object PurgeDeletes extends Op

@@ -255,38 +255,43 @@ class EqDeleteSpec extends SparkTestBase {
       (9L, "i", "insert")))
   }
 
-  test("pruned purge probe (IN-list over FileStats) ≡ unpruned; hit set stays key-range") {
-    def mk(tag: String): String = {
-      val t = freshDir(tag)
-      Snapshots.setSortSpec(spark, t, Seq("id"))
-      Snapshots.commit(spark.range(0, 1000)
-        .selectExpr("id", "CAST(id AS STRING) AS v")
-        .repartitionByRange(8, col("id")), t)
-      Snapshots.upsertEq(spark, t,
-        spark.range(900, 950).selectExpr("id", "'up' AS v"), Seq("id"))
-      t
+  /** `body`'s records read from data sources, over every job it ran. */
+  private def recordsRead(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
     }
-    val t1 = mk("prune1")
-    val before1 = Snapshots.dataFiles(spark, t1).toSet
-    // force the prune path despite the small fixture (the floor exists
-    // because the walk only pays off past ~64 candidates)
-    spark.conf.set("graft.snapshot.eqProbeMinCandidates", "0")
-    try Snapshots.purgeEqDeletes(spark, t1)
-    finally spark.conf.unset("graft.snapshot.eqProbeMinCandidates")
-    val t2 = mk("prune2")
-    val before2 = Snapshots.dataFiles(spark, t2).toSet
-    spark.conf.set("graft.snapshot.eqProbeInListMaxKeys", "0")
-    try Snapshots.purgeEqDeletes(spark, t2)
-    finally spark.conf.unset("graft.snapshot.eqProbeInListMaxKeys")
-    def state(t: String) = Snapshots.read(spark, t).select("id", "v")
-      .as[(Long, String)].collect().toSet
-    assert(state(t1) === state(t2))
-    assert(state(t1).count(_._2 == "up") === 50)
-    // both routes rewrite the same files: only the key-range tail was
-    // hit, the range-clustered head carries by path on both
-    assert((before1 intersect Snapshots.dataFiles(spark, t1).toSet).size ===
-      (before2 intersect Snapshots.dataFiles(spark, t2).toSet).size)
-    assert((before1 intersect Snapshots.dataFiles(spark, t1).toSet).nonEmpty)
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.TestBus.drain(sc); n.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("pruned purge probe (IN-list over FileStats) ≡ unpruned; hit set stays key-range") {
+    // 80 range-clustered files: past the probe's 64-candidate floor, so
+    // an IN list of the sidecar keys prunes the reach through FileStats
+    val t = freshDir("prune")
+    Snapshots.commit(spark.range(0, 1000)
+      .selectExpr("id", "CAST(id AS STRING) AS v")
+      .repartitionByRange(80, col("id")), t)
+    val before = Snapshots.dataFiles(spark, t)
+    assert(before.size === 80)
+    Snapshots.upsertEq(spark, t,
+      spark.range(900, 950).selectExpr("id", "'up' AS v"), Seq("id"))
+    // the unpruned probe's rewrite set: every file holding a batch key
+    def ids(f: String): Set[Long] = spark.read.parquet(f).select("id").as[Long].collect().toSet
+    val holding = before.filter(ids(_).exists(i => i >= 900L && i < 950L)).toSet
+    val read = recordsRead(Snapshots.purgeEqDeletes(spark, t))
+    assert(Snapshots.eqDeleteFiles(spark, t).isEmpty)
+    assert(rows(t) === (0L until 1000L).map(i =>
+      (i, if (i >= 900L && i < 950L) "up" else i.toString)))
+    // only the key-range files rewrote; the head carries by path
+    assert(before.toSet -- Snapshots.dataFiles(spark, t) === holding)
+    // and only they were read: probe plus rewrite stay far under one
+    // pass over the table's 1000 rows
+    assert(read < 500L, s"the purge read $read rows")
   }
 
   test("vacuum after purge reference-counts eq sidecars out; gc spares live ones") {

@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
   *    usable at a 10⁵-entry manifest (the 100 TB @ 128 MB/file shape is
   *    ~10⁶; 10⁵ in-spec keeps the suite fast while exercising the same
   *    code paths: parse, history, restore, vacuum reference-counting);
-  *  - deleteWhere's touched-file split has two routes (driver Set
-  *    below `graft.snapshot.distributedProbeThreshold`, Spark join
-  *    above) that must produce identical tables.
+  *  - deleteWhere's touched-file split (per-partition path sets
+  *    unioned on the driver) rewrites exactly the files holding a match.
   */
 class ManifestScaleSpec extends SparkTestBase {
 
@@ -51,30 +50,23 @@ class ManifestScaleSpec extends SparkTestBase {
     assert(sec < 30.0, f"manifest algebra over 10^5 entries took $sec%.1f s")
   }
 
-  test("deleteWhere: distributed probe route == driver-set route") {
-    def build(tag: String): String = {
-      val t = freshDir(tag)
-      Snapshots.commit((1L to 400L).toDF("id").withColumn("v", col("id") % 17)
-        .repartition(8), t)
-      t
-    }
-    def apply(t: String): Unit = {
-      Snapshots.deleteWhere(spark, t, col("id") % 5 === 0)
-      Snapshots.deleteWhere(spark, t, col("id") === 7L)
-    }
-    val a = build("setroute")
-    apply(a) // default threshold: driver-set route
-    val b = build("joinroute")
-    spark.conf.set("graft.snapshot.distributedProbeThreshold", "1")
-    try apply(b) // every manifest bigger than 1 file: join route
-    finally spark.conf.unset("graft.snapshot.distributedProbeThreshold")
-    val ra = Snapshots.read(spark, a).orderBy("id", "v")
+  test("deleteWhere rewrites exactly the files holding a match") {
+    val t = freshDir("deletewhere")
+    Snapshots.commit((1L to 400L).toDF("id").withColumn("v", col("id") % 17)
+      .repartition(8), t)
+    val files = Snapshots.dataFiles(spark, t)
+    def ids(f: String): Set[Long] = spark.read.parquet(f).select("id").as[Long].collect().toSet
+    val holding7 = files.filter(ids(_).contains(7L))
+    assert(holding7.size === 1)
+    Snapshots.deleteWhere(spark, t, col("id") === 7L)
+    // the file holding id 7 is the only one rewritten; the rest carry
+    val after = Snapshots.dataFiles(spark, t)
+    assert(after.toSet.intersect(files.toSet) === files.toSet - holding7.head)
+    assert(after.size === files.size)
+    Snapshots.deleteWhere(spark, t, col("id") % 5 === 0)
+    val rows = Snapshots.read(spark, t).orderBy("id", "v")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val rb = Snapshots.read(spark, b).orderBy("id", "v")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(ra === rb, "the two probe routes must publish identical tables")
-    assert(ra.size === 400 - 80 - 1)
-    assert(!ra.exists(r => r._1 % 5 == 0 || r._1 == 7L))
-    assert(Snapshots.versions(spark, a) === Snapshots.versions(spark, b))
+    assert(rows === (1L to 400L).filter(i => i % 5 != 0 && i != 7L).map(i => (i, i % 17)))
+    assert(Snapshots.versions(spark, t) === Seq(1L, 2L, 3L))
   }
 }

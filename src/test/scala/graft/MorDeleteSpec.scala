@@ -330,7 +330,7 @@ class MorDeleteSpec extends SparkTestBase {
       .head().getLong(0) === 1L)
   }
 
-  test("sidecar layouts: v2 deletion vector by default, v1 rows under the conf; both read together") {
+  test("sidecar layouts: v2 written, v1 of older tables; both read together") {
     val t = freshDir("sidecar")
     Snapshots.commit((0L to 99L).toDF("id").coalesce(1), t)
     Snapshots.deleteWhereMor(spark, t, col("id") < 3)
@@ -346,12 +346,9 @@ class MorDeleteSpec extends SparkTestBase {
     assert(r.getString(0).startsWith("data/"))
     assert(Snapshots.dataFiles(spark, t).contains(
       graft.sources.TablePaths(spark, t).resolve(r.getString(0))))
-    // the conf pins the v1 one-row-per-position layout; the table then
-    // carries BOTH layouts and every read resolves them together
-    try {
-      spark.conf.set("graft.snapshot.deleteVectorWrite", "false")
-      Snapshots.deleteWhereMor(spark, t, col("id") >= 97)
-    } finally spark.conf.unset("graft.snapshot.deleteVectorWrite")
+    // a v1 one-row-per-position sidecar, as older tables carry; the
+    // table then holds BOTH layouts and every read resolves them together
+    V1Sidecar.deleteWhere(spark, t, col("id") >= 97)
     val both = Snapshots.deleteFiles(spark, t)
     assert(both.size === 2)
     val v1 = both.filterNot(graft.sources.PositionDeletes.isDvSidecar(spark, _))
@@ -362,6 +359,34 @@ class MorDeleteSpec extends SparkTestBase {
     Snapshots.purgeDeletes(spark, t)
     assert(Snapshots.deleteFiles(spark, t).isEmpty)
     assert(idsOf(Snapshots.read(spark, t)) === (3L to 96L))
+  }
+
+  test("copy-on-write deleteWhere over a deletion-vector file retires its sidecar") {
+    val t = freshDir("cowretire")
+    Snapshots.commit((0L until 100L).map(i => (i, i % 7)).toDF("id", "v").coalesce(1), t)
+    Snapshots.commit((100L until 200L).map(i => (i, i % 7)).toDF("id", "v").coalesce(1), t)
+    // a deletion vector on the first file, then a COW delete that
+    // rewrites that file (and only it) through its live view
+    Snapshots.deleteWhereMor(spark, t, col("id") < 10)
+    assert(Snapshots.deleteFiles(spark, t).size === 1)
+    Snapshots.deleteWhere(spark, t, col("id") === 50L)
+    assert(Snapshots.deleteFiles(spark, t).isEmpty)
+    assert(Snapshots.dataFiles(spark, t).size === 2)
+    val want = (10L until 200L).filterNot(_ == 50L)
+    assert(idsOf(Snapshots.read(spark, t)) === want)
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val vs = Snapshots.versions(spark, t)
+    assert(vs.map(v => idsOf(Snapshots.read(spark, t, Some(v)))) ===
+      Seq(0L until 100L, 0L until 200L, 10L until 200L, want))
+    ((vs.head, vs.last) +: vs.zip(vs.tail)).foreach { case (a, b) =>
+      assert(multiset(Snapshots.changeFeed(spark, t, a, b)) ===
+        multiset(NaiveFeed(spark, t, a, b)), s"feed $a..$b")
+    }
+    // a later MOR delete on the carried file leaves exactly its own line
+    Snapshots.deleteWhereMor(spark, t, col("id") === 150L)
+    assert(Snapshots.deleteFiles(spark, t).size === 1)
+    assert(idsOf(Snapshots.read(spark, t)) === want.filterNot(_ == 150L))
   }
 
   test("run-heavy DV routes by exact cardinality, not sidecar bytes; maintain purges it") {

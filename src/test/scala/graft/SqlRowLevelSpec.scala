@@ -156,20 +156,21 @@ class SqlRowLevelSpec extends SparkTestBase {
     assert(before.toSet.intersect(after.toSet).size === 1,
       "runtime group filter should have kept file B out of the rewrite")
 
-    // control: with auto mode ALSO off, the same MERGE shape rewrites
-    // every file (the round-6 opt-in-only behavior)
+    // control: with Spark's row-level group filter off, the same MERGE
+    // shape rewrites every file
     val (t2, path2) = freshTable()
     val before2 = Snapshots.dataFiles(spark, path2, None)
-    spark.conf.set("graft.snapshot.runtimeGroupFilterAuto", "false")
+    val groupFilter = "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
+    spark.conf.set(groupFilter, "false")
     try spark.sql(
       s"""MERGE INTO $t2 USING (
          |  SELECT 2 AS id, 'rg' AS grp, CAST(7 AS BIGINT) AS v) AS s
          |ON $t2.id = s.id
          |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    finally spark.conf.unset("graft.snapshot.runtimeGroupFilterAuto")
+    finally spark.conf.unset(groupFilter)
     val after2 = Snapshots.dataFiles(spark, path2, None)
     assert(before2.toSet.intersect(after2.toSet).isEmpty,
-      "with auto and opt-in both off a MERGE is a full COW rewrite")
+      "with the group filter off a MERGE is a full COW rewrite")
   }
 
   test("auto runtime group filter: default-on for a broadcast-size MERGE source") {

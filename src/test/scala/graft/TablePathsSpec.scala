@@ -111,10 +111,7 @@ class TablePathsSpec extends SparkTestBase {
     Snapshots.merge(spark, t, Seq((10L, -1L), (901L, 1L)).toDF("id", "v"), "id")
     // MOR deletes in both sidecar layouts
     Snapshots.deleteWhereMor(spark, t, col("id") === 20L)
-    try {
-      spark.conf.set("graft.snapshot.deleteVectorWrite", "false")
-      Snapshots.deleteWhereMor(spark, t, col("id") === 21L)
-    } finally spark.conf.unset("graft.snapshot.deleteVectorWrite")
+    V1Sidecar.deleteWhere(spark, t, col("id") === 21L)
     // SQL merge-on-read DML
     spark.sql(s"ALTER TABLE $q SET TBLPROPERTIES ('write.update.mode' = 'merge-on-read', " +
       "'write.delete.mode' = 'merge-on-read', 'write.merge.mode' = 'merge-on-read')")
