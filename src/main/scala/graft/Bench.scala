@@ -4,16 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", "graft.plans.GraftPlannerExtensions")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Sessions.tune(s)
-    }
+    def newSession(): SparkSession = Sessions.local(cpus.toInt, "graft-bench")
     var spark = newSession()
     var restarts = 0
     // one fatal query must not poison the rest of the bench: an

@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
+    val builder = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -33,7 +33,11 @@ object Sessions {
       // MOR delete, merge, upsert, reads, feed, maintain), so every
       // round recompiled ~60 evicted classes and ran them JIT-cold
       .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
+    // the `file:` filesystems that set permissions without forking
+    // `chmod` (sources.GraftLocalFs): builder configs, because
+    // FileSystem.get caches the first `file:` instance per JVM
+    for ((k, v) <- sources.GraftLocalFs.HadoopConfs) builder.config(s"spark.hadoop.$k", v)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
@@ -48,8 +52,8 @@ object Sessions {
     spark
   }
 
-  /** Apply graft defaults to an externally-built session (driver-owned
-    * sessions in Verify/Bench): runtime-settable confs plus the graft
+  /** Apply graft defaults to a session, `local`'s or one a caller built
+    * itself: runtime-settable confs plus the graft
     * planner/optimizer hooks (experimental.* is the post-construction
     * registration point; builder-owned sessions would use
     * .withExtensions(new plans.GraftPlannerExtensions)).

@@ -4,18 +4,23 @@
     python3 tools/ab.py --workload dml_mix --pairs 10 --seeds 11-20 \
         --parent HEAD~1 --change HEAD --dir /tmp/ab
 
-Exports the two trees with `git archive` (`--change WORKTREE` copies the
-working tree's tracked and untracked, non-ignored files instead) into
-`<dir>/parent` and `<dir>/change`, updating an earlier export in place,
-then runs `perfbench/run.py` once per
-side for every pair, the side that goes first alternating from pair to
-pair, pair i taking the i-th seed of the range. Each tree keeps its own
-build outputs and `perfbench/.work/`, so the build is paid once per tree
-and redone only when its sources change.
+Exports each of the two trees with `git archive` (`--change WORKTREE`
+copies the working tree's tracked and untracked, non-ignored files
+instead) into both directories `<dir>/a` and `<dir>/b`, as
+`<dir>/{a,b}/{parent,change}`, updating an earlier export in place. Then
+it runs `perfbench/run.py` once per side for every pair, pair i taking the
+i-th seed of the range. From pair to pair the directories swap commits
+(even pairs run the parent from `a` and the change from `b`, odd pairs the
+reverse), and the side that goes first alternates every two pairs, so
+directory and order are balanced against the commit. Each of the four
+trees keeps its own build outputs and `perfbench/.work/`, so the build is
+paid once per tree and redone only when its sources change.
 
 Prints, per end-to-end metric of BENCHMARK.json: both medians, the
 change's delta, the parent's interquartile range, and how many pairs the
-change won (strictly better in the metric's direction). Then each pair's
+change won (strictly better in the metric's direction); then, per metric,
+the median of all runs from each directory whichever commit it held, so a
+directory effect shows as its own number. Then each pair's
 seed, order and CPU steal share per run (from the `env` line that
 run.py prints, read from /proc/stat around the run); pairs whose two
 steal shares differ by more than `--steal-margin` are flagged, since host
@@ -35,6 +40,8 @@ import tarfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKTREE = "WORKTREE"
+# the two export directories; each holds a build of both commits
+DIRS = ("a", "b")
 
 
 def git(*args, binary=False):
@@ -125,7 +132,7 @@ def main():
     ap.add_argument("--seeds", default="11-20", help="inclusive range LO-HI, one seed per pair")
     ap.add_argument("--parent", default="HEAD~1", help="git revision")
     ap.add_argument("--change", default="HEAD", help=f"git revision, or {WORKTREE}")
-    ap.add_argument("--dir", required=True, help="where the two trees and the logs go")
+    ap.add_argument("--dir", required=True, help="where the four trees and the logs go")
     ap.add_argument("--seconds", type=float, default=None,
                     help="run window (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--steal-margin", type=float, default=0.05,
@@ -138,23 +145,27 @@ def main():
     seeds = seed_range(args.seeds)
     if len(seeds) < args.pairs:
         sys.exit(f"--seeds {args.seeds} gives {len(seeds)} seeds for {args.pairs} pairs")
-    trees = {side: os.path.join(args.dir, side) for side in ("parent", "change")}
-    export(args.parent, trees["parent"])
-    export(args.change, trees["change"])
+    revs = {"parent": args.parent, "change": args.change}
+    for d in DIRS:
+        for side, rev in revs.items():
+            export(rev, os.path.join(args.dir, d, side))
     logs = os.path.join(args.dir, "logs")
     os.makedirs(logs, exist_ok=True)
 
     runs = []
     for i in range(args.pairs):
         seed = seeds[i]
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        order = ("parent", "change") if (i // 2) % 2 == 0 else ("change", "parent")
+        dirs = {"parent": DIRS[i % 2], "change": DIRS[1 - i % 2]}
         pair = {"pair": i + 1, "seed": seed, "first": order[0]}
         for side in order:
             log = os.path.join(logs, f"{args.workload}-pair{i + 1}-{side}.log")
-            metrics, correct, steal = run_once(trees[side], args.workload, seed, seconds, log)
-            pair[side] = {"metrics": metrics, "correct": correct, "steal_share": steal}
-            print(f"pair {i + 1} seed {seed} {side:6s} correct={correct} steal={steal}",
-                  flush=True)
+            tree = os.path.join(args.dir, dirs[side], side)
+            metrics, correct, steal = run_once(tree, args.workload, seed, seconds, log)
+            pair[side] = {"metrics": metrics, "correct": correct, "steal_share": steal,
+                          "dir": dirs[side]}
+            print(f"pair {i + 1} seed {seed} {side:6s} dir={dirs[side]} correct={correct} "
+                  f"steal={steal}", flush=True)
         runs.append(pair)
 
     summary = {}
@@ -174,6 +185,15 @@ def main():
                          "gap_exceeds_iqr": abs(mc - mp) > q3 - q1}
         print(f"  {name:16s} {mp:10.4g} {mc:10.4g} {delta:+8.1%} {q3 - q1:11.4g} "
               f"{wins:>3d}/{len(runs)}")
+    print(f"\n  by directory, both commits: {'metric':16s} {'a':>10s} {'b':>10s} {'b vs a':>8s}")
+    for m in bench["end_to_end"]:
+        name = m["name"]
+        by_dir = {d: statistics.median(r[s]["metrics"][name] for r in runs
+                                       for s in ("parent", "change") if r[s]["dir"] == d)
+                  for d in DIRS}
+        summary[name]["dir_median"] = by_dir
+        rel = (by_dir["b"] - by_dir["a"]) / by_dir["a"] if by_dir["a"] else 0.0
+        print(f"  {'':27s} {name:16s} {by_dir['a']:10.4g} {by_dir['b']:10.4g} {rel:+8.1%}")
     print(f"\n  {'pair':>4s} {'seed':>5s} {'first':>7s} {'steal parent':>13s} "
           f"{'steal change':>13s}")
     flagged = []
